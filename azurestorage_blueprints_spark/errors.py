@@ -68,9 +68,3 @@ class AlreadyExistsError(EngineError):
 
     exit_code = 204
 
-
-def exit_code_for(exc: BaseException) -> int:
-    """CLI adapter: map an exception to the reference's exit-code table."""
-    if isinstance(exc, EngineError):
-        return exc.exit_code
-    return 1

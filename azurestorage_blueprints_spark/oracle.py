@@ -72,16 +72,6 @@ def _canon_frame(df: pd.DataFrame) -> list[tuple]:
     ]
 
 
-def canon_check(df: pd.DataFrame) -> list[tuple]:
-    """Run a result frame through the driver-equivalent canonicalizer.
-
-    Raises (TypeError) on list-valued cells — used by the test suite to
-    assert every registered query, including rows-only ones, survives
-    the driver's pandas path.
-    """
-    return _canon_frame(df)
-
-
 def compare(spark_df: DataFrame, con: duckdb.DuckDBPyConnection, sql: str) -> None:
     """Assert Spark result == DuckDB oracle result (raises AssertionError).
 

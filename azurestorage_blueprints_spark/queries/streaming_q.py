@@ -15,25 +15,36 @@ about emission timing, not final values, so it stays rows-only.
 
 Scale posture: watermarks bound state; ``maxFilesPerTrigger`` paces
 replay; swapping the file source for Kafka/EventHubs touches only
-``read_events_stream``.
+``_file_stream``.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from azurestorage_blueprints_spark.queries import register
 from azurestorage_blueprints_spark.queries.relational import _dec
-from azurestorage_blueprints_spark.streaming.windows import run_to_memory
+from azurestorage_blueprints_spark.streaming.windows import (
+    run_foreach_batch,
+    run_to_memory,
+    streaming_dedup,
+)
 from azurestorage_blueprints_spark.tables import table
 
-#: staging dirs keyed by sf_dir — events are written once per process
-_STAGED: dict[str, str] = {}
+#: staged (dir, schema) keyed by source and sf_dir — each replay source
+#: is written once per process
+_STAGED: dict[str, tuple[str, T.StructType]] = {}
+#: per-process root of every staged source and foreachBatch output;
+#: removed at interpreter exit, never per query, because the returned
+#: DataFrames read it lazily
+_REPLAY_ROOT: str | None = None
 
 # Watermarks demand TIMESTAMP (LTZ); the engine's event time is NTZ.
 # Convert through epoch-integer arithmetic in BOTH directions — a plain
@@ -52,36 +63,71 @@ def _ltz_to_ntz(name: str) -> F.Column:
     return F.expr(f"timestampadd(MICROSECOND, unix_micros({name}), {_NTZ_EPOCH})")
 
 
-def _stage_events(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
-    """Write events as ``n_chunks`` time-ordered parquet files so the
-    file source replays them as watermark-respecting micro-batches."""
-    if sf_dir in _STAGED:
-        return _STAGED[sf_dir]
-    out = tempfile.mkdtemp(prefix="spark_stream_events_")
-    ev = table(spark, sf_dir, "events").withColumn("ts", _ntz_to_ltz("ts"))
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    span = (hi - lo) / n_chunks
+def _replay_root() -> str:
+    global _REPLAY_ROOT
+    if _REPLAY_ROOT is None:
+        _REPLAY_ROOT = tempfile.mkdtemp(prefix="spark_stream_")
+    return _REPLAY_ROOT
+
+
+@atexit.register
+def _remove_replay_root() -> None:
+    global _REPLAY_ROOT
+    if _REPLAY_ROOT is not None:
+        shutil.rmtree(_REPLAY_ROOT, ignore_errors=True)
+    _REPLAY_ROOT = None
+    _STAGED.clear()
+
+
+def _stage_source(spark: SparkSession, sf_dir: str, source: str) -> tuple[str, T.StructType]:
+    """Write a replay source as 4 key-ordered parquet chunks so the file
+    source replays them as micro-batches; returns (dir, schema).
+
+    ``events``: every event, split into equal ``ts`` spans (so batches
+    respect the watermark's bounded lateness). ``documents`` /
+    ``vectors``: the ARRIVAL slice (``id % 10 == 0`` — the incremental-
+    split convention), split into equal id ranges. The append-mode rungs
+    depend on these chunk boundaries."""
+    key = f"{source}::{sf_dir}"
+    if key in _STAGED:
+        return _STAGED[key]
+    n_chunks = 4
+    if source == "events":
+        col = "ts"
+        d = table(spark, sf_dir, "events").withColumn("ts", _ntz_to_ltz("ts"))
+    else:
+        name, col, payload = {
+            "documents": ("documents", "doc_id", "text"),
+            "vectors": ("embeddings", "vec_id", "embedding"),
+        }[source]
+        d = table(spark, sf_dir, name).filter(F.col(col) % 10 == 0).select(col, payload)
+    lo, hi = d.agg(F.min(col), F.max(col)).first()
+    if source == "events":
+        span = (hi - lo) / n_chunks
+    else:
+        span = max(1, (int(hi) - int(lo) + n_chunks) // n_chunks)
+    out = tempfile.mkdtemp(prefix=f"{source}_", dir=_replay_root())
     for i in range(n_chunks):
-        upper = lo + (i + 1) * span
-        chunk = ev.filter(
-            (F.col("ts") >= lo + i * span)
-            & ((F.col("ts") < upper) if i < n_chunks - 1 else F.lit(True))
+        chunk = d.filter(
+            (F.col(col) >= lo + i * span)
+            # last chunk is unbounded above: a strict < max bound would
+            # drop the max-key row(s) from the replay
+            & ((F.col(col) < lo + (i + 1) * span) if i < n_chunks - 1 else F.lit(True))
         )
         chunk.coalesce(1).write.mode("overwrite").parquet(os.path.join(out, f"c{i}"))
-    _STAGED[sf_dir] = out
-    return out
+    _STAGED[key] = (out, spark.read.parquet(os.path.join(out, "c0")).schema)
+    return _STAGED[key]
 
 
-def _events_stream(spark: SparkSession, staged: str) -> DataFrame:
-    """File-source stream over the staged chunks (one file per
-    micro-batch), schema taken from the staged files themselves so the
-    NTZ timestamp type is preserved end-to-end."""
-    schema = spark.read.parquet(os.path.join(staged, "c0")).schema
+def _file_stream(spark: SparkSession, staged: tuple[str, T.StructType]) -> DataFrame:
+    """File-source stream over staged chunks (one file per micro-batch),
+    with the schema read from the staged files when they were written."""
+    path, schema = staged
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
-        .parquet(staged)
+        .parquet(path)
     )
 
 
@@ -100,8 +146,7 @@ def _events_stream(spark: SparkSession, staged: str) -> DataFrame:
     "this shares q_ts_tumbling_window's oracle.",
 )
 def q_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events(spark, sf_dir)
-    stream = _events_stream(spark, staged)
+    stream = _file_stream(spark, _stage_source(spark, sf_dir, "events"))
     agg = (
         stream.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
@@ -111,7 +156,7 @@ def q_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("bucket"), "event_type", "n", "sum_value")
     )
-    out = run_to_memory(agg, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
+    out = run_to_memory(agg, output_mode="complete")
     return out.select(
         _ltz_to_ntz("bucket").alias("bucket"), "event_type", "n", "sum_value"
     )
@@ -140,15 +185,14 @@ def q_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "batch gaps-and-islands answer.",
 )
 def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events(spark, sf_dir)
-    stream = _events_stream(spark, staged)
+    stream = _file_stream(spark, _stage_source(spark, sf_dir, "events"))
     agg = (
         stream.withWatermark("ts", "30 minutes")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select("user_id", F.col("w.start").alias("session_start"), "n_events")
     )
-    out = run_to_memory(agg, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
+    out = run_to_memory(agg, output_mode="complete")
     return out.select(
         "user_id", _ltz_to_ntz("session_start").alias("session_start"), "n_events"
     )
@@ -159,14 +203,13 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # append-mode emission timing is not SQL-expressible
     doc="Streaming exact dedup: dropDuplicates(event_id) under a 30-minute "
     "watermark (bounded state — the 100 TB requirement), append mode. "
-    "Returns per-type counts of the deduplicated stream; uniqueness is "
-    "asserted in tests/test_streaming.py.",
+    "Returns per-type counts of the deduplicated stream; uniqueness of its "
+    "streaming_dedup step is asserted in "
+    "tests/test_streaming.py::test_streaming_dedup_drops_replayed_files.",
 )
 def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events(spark, sf_dir)
-    stream = _events_stream(spark, staged)
-    deduped = stream.withWatermark("ts", "30 minutes").dropDuplicates(["event_id"])
-    out = run_to_memory(deduped, f"t_{uuid.uuid4().hex[:12]}", output_mode="append")
+    stream = _file_stream(spark, _stage_source(spark, sf_dir, "events"))
+    out = run_to_memory(streaming_dedup(stream), output_mode="append")
     return out.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -186,8 +229,7 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     "complete-mode finite replay shares q_ts_sliding_window's oracle.",
 )
 def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events(spark, sf_dir)
-    stream = _events_stream(spark, staged)
+    stream = _file_stream(spark, _stage_source(spark, sf_dir, "events"))
     agg = (
         stream.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "30 minutes", "15 minutes").alias("w"))
@@ -197,7 +239,7 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("window_start"), "n", "sum_value")
     )
-    out = run_to_memory(agg, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
+    out = run_to_memory(agg, output_mode="complete")
     return out.select(
         _ltz_to_ntz("window_start").alias("window_start"), "n", "sum_value"
     )
@@ -222,8 +264,7 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "complete-mode finite replay equals the batch three-way-join answer.",
 )
 def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events(spark, sf_dir)
-    stream = _events_stream(spark, staged)
+    stream = _file_stream(spark, _stage_source(spark, sf_dir, "events"))
     dim = (
         table(spark, sf_dir, "customer")
         .join(
@@ -240,7 +281,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(_dec("value")).cast("double").alias("sum_value"),
         )
     )
-    return run_to_memory(agg, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
+    return run_to_memory(agg, output_mode="complete")
 
 
 @register(
@@ -261,15 +302,12 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from azurestorage_blueprints_spark.streaming.windows import run_foreach_batch
-
-    staged = _stage_events(spark, sf_dir)
-    stream = _events_stream(spark, staged)
+    stream = _file_stream(spark, _stage_source(spark, sf_dir, "events"))
     agg = stream.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(_dec("value")).cast("double").alias("sum_value"),
     )
-    out_dir = tempfile.mkdtemp(prefix="spark_stream_incr_")
+    out_dir = tempfile.mkdtemp(prefix="incr_", dir=_replay_root())
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(out_dir)
@@ -306,9 +344,9 @@ def q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "DuckDB counts boundary crossings.",
 )
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events(spark, sf_dir)
+    staged = _stage_source(spark, sf_dir, "events")
     clicks = (
-        _events_stream(spark, staged)
+        _file_stream(spark, staged)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -318,7 +356,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("click_ts", "30 minutes")
     )
     buys = (
-        _events_stream(spark, staged)
+        _file_stream(spark, staged)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -338,7 +376,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         (F.unix_micros("buy_ts") - F.unix_micros("click_ts")).alias("lag_us"),
     )
-    return run_to_memory(joined, f"t_{uuid.uuid4().hex[:12]}", output_mode="append")
+    return run_to_memory(joined, output_mode="append")
 
 
 @register(
@@ -369,15 +407,14 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    staged = _stage_events(spark, sf_dir)
-    stream = _events_stream(spark, staged)
+    stream = _file_stream(spark, _stage_source(spark, sf_dir, "events"))
     agg = (
         stream.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
-    out = run_to_memory(agg, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
+    out = run_to_memory(agg, output_mode="complete")
     rnk = F.row_number().over(
         W.partitionBy("window_start").orderBy(F.desc("n"), "event_type")
     )
@@ -418,13 +455,8 @@ def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from azurestorage_blueprints_spark.streaming.stateful import running_user_cent_totals
 
-    staged = _stage_events(spark, sf_dir)
-    stream = _events_stream(spark, staged)
-    out = run_to_memory(
-        running_user_cent_totals(stream),
-        f"t_{uuid.uuid4().hex[:12]}",
-        output_mode="update",
-    )
+    stream = _file_stream(spark, _stage_source(spark, sf_dir, "events"))
+    out = run_to_memory(running_user_cent_totals(stream), output_mode="update")
     rn = F.row_number().over(W.partitionBy("user_id").orderBy(F.desc("n_events")))
     return (
         out.withColumn("rn", rn)
@@ -465,8 +497,7 @@ def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "micro-batch; state is O(event types).",
 )
 def q_stream_json_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = _stage_events(spark, sf_dir)
-    stream = _events_stream(spark, staged)
+    stream = _file_stream(spark, _stage_source(spark, sf_dir, "events"))
     raw = F.when(
         F.col("event_id") % 97 == 0,
         F.expr("substr(props, 1, length(props) - 2)"),
@@ -486,7 +517,7 @@ def q_stream_json_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint").alias("sum_k"),
         )
     )
-    out = run_to_memory(agg, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
+    out = run_to_memory(agg, output_mode="complete")
     return out
 
 # ---------------------------------------------------------------------------
@@ -501,31 +532,6 @@ def q_stream_json_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stream-static equi-join → a single aggregation.
 
 _SIG_M = 2147483647
-
-
-def _stage_documents(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
-    """Stage the ARRIVAL documents (doc_id % 10 == 0 — the
-    q_dedup_incremental batch definition) as n_chunks id-ranged parquet
-    files so the file source replays them as micro-batches."""
-    key = f"docs::{sf_dir}"
-    if key in _STAGED:
-        return _STAGED[key]
-    out = tempfile.mkdtemp(prefix="spark_stream_docs_")
-    d = (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 10 == 0)
-        .select("doc_id", "text")
-    )
-    lo, hi = d.agg(F.min("doc_id"), F.max("doc_id")).first()
-    span = max(1, (int(hi) - int(lo) + n_chunks) // n_chunks)
-    for i in range(n_chunks):
-        chunk = d.filter(
-            (F.col("doc_id") >= lo + i * span)
-            & ((F.col("doc_id") < lo + (i + 1) * span) if i < n_chunks - 1 else F.lit(True))
-        )
-        chunk.coalesce(1).write.mode("overwrite").parquet(os.path.join(out, f"c{i}"))
-    _STAGED[key] = out
-    return out
 
 
 def _rowlocal_bands(df: DataFrame) -> DataFrame:
@@ -612,14 +618,7 @@ def _stream_dedup_oracle() -> str:
 def q_stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from azurestorage_blueprints_spark.queries.dedup import _mhp_bands, _mhp_sig
 
-    staged = _stage_documents(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(staged, "c0")).schema
-    arrivals = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(staged)
-    )
+    arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))
     a_bands = _rowlocal_bands(arrivals)
     corpus = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 0)
     c_bands = _mhp_bands(_mhp_sig(corpus)).select(
@@ -637,7 +636,7 @@ def q_stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             "verdict"
         ),
     )
-    return run_to_memory(verdicted, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
+    return run_to_memory(verdicted, output_mode="complete")
 
 
 def _stream_substring_oracle() -> str:
@@ -682,14 +681,7 @@ def _stream_substring_oracle() -> str:
 def q_stream_substring_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from azurestorage_blueprints_spark.queries.dedup import _xsub_win_of
 
-    staged = _stage_documents(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(staged, "c0")).schema
-    arrivals = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(staged)
-    )
+    arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))
     a_win = _xsub_win_of(arrivals)
     corpus = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 0)
     standing = (
@@ -711,7 +703,7 @@ def q_stream_substring_incremental(spark: SparkSession, sf_dir: str) -> DataFram
         nd.alias("n_corpus_dup_windows"),
         (nd.cast("double") / n.cast("double")).alias("corpus_dup_frac"),
     )
-    return run_to_memory(agg, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
+    return run_to_memory(agg, output_mode="complete")
 
 
 def _stream_curation_oracle() -> str:
@@ -826,14 +818,7 @@ def q_stream_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pct_apply_score_col,
     )
 
-    staged = _stage_documents(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(staged, "c0")).schema
-    arrivals = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(staged)
-    )
+    arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))
     tk = tokens(F.col("text"))
     ints = arrivals.select(
         "doc_id",
@@ -892,32 +877,7 @@ def q_stream_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (s3.cast("double") / s2.cast("double")).alias("langid_retention"),
         (s4.cast("double") / s3.cast("double")).alias("classifier_retention"),
     )
-    return run_to_memory(agg, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
-
-
-def _stage_query_vectors(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
-    """Stage the ARRIVING query vectors (vec_id % 10 == 0 — the
-    incremental-split convention) as id-ranged parquet files so the
-    file source replays them as micro-batches."""
-    key = f"vecs::{sf_dir}"
-    if key in _STAGED:
-        return _STAGED[key]
-    out = tempfile.mkdtemp(prefix="spark_stream_vecs_")
-    d = (
-        table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % 10 == 0)
-        .select("vec_id", "embedding")
-    )
-    lo, hi = d.agg(F.min("vec_id"), F.max("vec_id")).first()
-    span = max(1, (int(hi) - int(lo) + n_chunks) // n_chunks)
-    for i in range(n_chunks):
-        chunk = d.filter(
-            (F.col("vec_id") >= lo + i * span)
-            & ((F.col("vec_id") < lo + (i + 1) * span) if i < n_chunks - 1 else F.lit(True))
-        )
-        chunk.coalesce(1).write.mode("overwrite").parquet(os.path.join(out, f"c{i}"))
-    _STAGED[key] = out
-    return out
+    return run_to_memory(agg, output_mode="complete")
 
 
 def _stream_ann_oracle() -> str:
@@ -1035,14 +995,7 @@ def q_stream_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()  # the index is built once, read by every micro-batch
     )
 
-    staged = _stage_query_vectors(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(staged, "c0")).schema
-    arrivals = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(staged)
-    )
+    arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "vectors"))
     arr = arrivals.select(
         F.col("vec_id").alias("q_id"),
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
@@ -1120,7 +1073,7 @@ def q_stream_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"cast(b.l2q as double) / {_PQ_ADC_QZ}").alias("approx_l2sq"),
         "n_candidates",
     )
-    result = run_to_memory(out, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
+    result = run_to_memory(out, output_mode="complete")
     wide.unpersist()
     return result
 
@@ -1196,14 +1149,7 @@ def q_stream_model_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         [([[cb[(s, j)] for j in range(_PQ_K)] for s in range(_PQ_M)],)],
         "cbm array<array<array<double>>>",
     )
-    staged = _stage_query_vectors(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(staged, "c0")).schema
-    arrivals = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(staged)
-    )
+    arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "vectors"))
     arr = arrivals.select(
         F.col("vec_id").alias("q_id"),
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
@@ -1230,7 +1176,7 @@ def q_stream_model_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"cast(sum(micro) as double) / (cast(count(1) as double) * {_PQ_DRIFT_QZ})"
         ).alias("mean_qerr"),
     )
-    return run_to_memory(agg, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
+    return run_to_memory(agg, output_mode="complete")
 
 
 #: size bound of the DEPLOYED perplexity-gate LM (r11, r10 verdict
@@ -1535,11 +1481,7 @@ def _stream_ppl_oracle() -> str:
     "q_knn_model_drift-style monitoring dictates.",
 )
 def q_stream_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return run_to_memory(
-        _ppl_gate_stream(spark, sf_dir),
-        f"t_{uuid.uuid4().hex[:12]}",
-        output_mode="complete",
-    )
+    return run_to_memory(_ppl_gate_stream(spark, sf_dir), output_mode="complete")
 
 
 def _ppl_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1591,14 +1533,7 @@ def _ppl_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         for c in caches:  # the frozen model is deployed; release the pre-pass caches
             c.unpersist()
 
-    staged = _stage_documents(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(staged, "c0")).schema
-    arrivals = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(staged)
-    )
+    arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))
     # stored language from the metadata store (stream-static, no hint);
     # the frozen model table IS provably bounded, so it broadcasts
     lang_store = d.select("doc_id", "lang")
@@ -1748,14 +1683,7 @@ def q_stream_conformal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         for c in caches:
             c.unpersist()
 
-    staged = _stage_documents(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(staged, "c0")).schema
-    arrivals = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(staged)
-    )
+    arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))
     lang_store = d.select("doc_id", "lang")
     arr = arrivals.join(lang_store, "doc_id").join(F.broadcast(consts), "lang")
     tk = tokens(F.col("text"))
@@ -1797,7 +1725,7 @@ def q_stream_conformal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("ce_milli").cast("bigint").alias("ce_total_milli"),
         )
     )
-    return run_to_memory(agg, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
+    return run_to_memory(agg, output_mode="complete")
 
 
 def _stream_dsir_oracle() -> str:
@@ -1922,14 +1850,7 @@ def q_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.lit(x).cast("bigint") for kv in sorted(model.items()) for x in kv]
     )
 
-    staged = _stage_documents(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(staged, "c0")).schema
-    arrivals = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(staged)
-    )
+    arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))
     # stored language from the metadata store (stream-static, no hint)
     arr = arrivals.join(d.select("doc_id", "lang"), "doc_id")
     tk = arr.select(
@@ -1980,7 +1901,7 @@ def q_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mean_log_importance"),
         )
     )
-    return run_to_memory(agg, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
+    return run_to_memory(agg, output_mode="complete")
 
 
 def _stream_mm_oracle() -> str:
@@ -2067,14 +1988,7 @@ _MM_GATE_MAX_CUTS = 1
 def q_stream_multimodal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from azurestorage_blueprints_spark.queries.llm_text import _SCENE_CUT_BITS
 
-    staged = _stage_query_vectors(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(staged, "c0")).schema
-    arrivals = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(staged)
-    )
+    arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "vectors"))
 
     def pack_decode_hash(batches):
         import numpy as np
@@ -2151,7 +2065,7 @@ def q_stream_multimodal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("max_d").cast("bigint").alias("max_hamming"),
         )
     )
-    return run_to_memory(agg, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
+    return run_to_memory(agg, output_mode="complete")
 
 
 def _stream_forget_oracle() -> str:
@@ -2193,8 +2107,7 @@ def _stream_forget_oracle() -> str:
 def q_stream_forget_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from azurestorage_blueprints_spark.queries.quality import _FORGET_MOD
 
-    staged = _stage_events(spark, sf_dir)
-    arrivals = _events_stream(spark, staged)
+    arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "events"))
     cohort = (
         table(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") % _FORGET_MOD == 0)
@@ -2214,7 +2127,7 @@ def q_stream_forget_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
         F.sum("cents").cast("bigint").alias("value_cents_total"),
     )
-    return run_to_memory(agg, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
+    return run_to_memory(agg, output_mode="complete")
 
 
 # ---------------------------------------------------------------------------
@@ -2309,14 +2222,7 @@ def q_stream_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang string, t1 bigint, t1_key bigint",
     )
 
-    staged = _stage_documents(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(staged, "c0")).schema
-    arrivals = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(staged)
-    )
+    arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))
     lang_store = d.select("doc_id", "lang")
     arr = arrivals.join(lang_store, "doc_id").join(F.broadcast(consts), "lang")
     nc = F.length("text").cast("bigint")
@@ -2338,7 +2244,7 @@ def q_stream_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n_chars").cast("bigint").alias("max_chars"),
         )
     )
-    return run_to_memory(agg, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete")
+    return run_to_memory(agg, output_mode="complete")
 
 
 def _stream_decon_oracle() -> str:
@@ -2397,14 +2303,7 @@ def _stream_decon_oracle() -> str:
 def q_stream_decontamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from azurestorage_blueprints_spark.functions.text import tokens, word_shingles
 
-    staged = _stage_documents(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(staged, "c0")).schema
-    arrivals = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(staged)
-    )
+    arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))
     a_sh = arrivals.select(
         "doc_id",
         F.explode(
@@ -2443,8 +2342,6 @@ def q_stream_decontamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame
         .otherwise(F.lit("clean"))
         .alias("verdict"),
     )
-    result = run_to_memory(
-        verdicted, f"t_{uuid.uuid4().hex[:12]}", output_mode="complete"
-    )
+    result = run_to_memory(verdicted, output_mode="complete")
     eval_sh.unpersist()
     return result

@@ -1,13 +1,13 @@
 """Custom stateful streaming operators via ``applyInPandasWithState``.
 
-Where the built-in windows (streaming/windows.py) cover time-bucketed
-aggregation, ``applyInPandasWithState`` is the escape hatch for
-operator semantics Spark has no primitive for: per-key mutable state
-carried across micro-batches with explicit timeout control. The state
-schema is declared up front, so Spark shuffles each key to a stable
-partition and snapshots state to the checkpoint — at 100 TB this is
-the same bounded-state story as watermarked windows, with state size
-= O(distinct keys), not O(events).
+Where the built-in windows cover time-bucketed aggregation,
+``applyInPandasWithState`` is the escape hatch for operator semantics
+Spark has no primitive for: per-key mutable state carried across
+micro-batches with explicit timeout control. The state schema is
+declared up front, so Spark shuffles each key to a stable partition and
+snapshots state to the checkpoint — at 100 TB this is the same
+bounded-state story as watermarked windows, with state size = O(distinct
+keys), not O(events).
 """
 
 from __future__ import annotations
@@ -17,42 +17,15 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-RUNNING_TOTALS_SCHEMA = "user_id bigint, n_events bigint, total_value double"
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Per-user lifetime running totals (count + value sum), updated
-    every micro-batch — the canonical custom-stateful shape: the
-    aggregate never expires, so no built-in window expresses it."""
-
-    def update(key, pdfs: Iterator, state: GroupState) -> Iterator:
-        import pandas as pd
-
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=RUNNING_TOTALS_SCHEMA,
-        stateStructType="n bigint, total double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 CENT_TOTALS_SCHEMA = "user_id bigint, n_events bigint, total_cents bigint"
 
 
 def running_user_cent_totals(events: DataFrame) -> DataFrame:
-    """Exact-integer twin of ``running_user_totals``: the running value
-    sum is kept in CENTS (``floor(v*100+0.5)``, the engine-wide exact
-    quantizer), so the per-key state is order-insensitive integers and
+    """Per-user lifetime running totals (count + value sum), updated
+    every micro-batch — the canonical custom-stateful shape: the
+    aggregate never expires, so no built-in window expresses it. The
+    running value sum is kept in CENTS (``floor(v*100+0.5)``, the
+    engine-wide exact quantizer), so the per-key state is order-insensitive integers and
     the final state equals the batch aggregate bit-for-bit — which is
     what lets the registry oracle-check a custom stateful operator
     instead of settling for a rows-only smoke test. The closure is

@@ -1,12 +1,6 @@
-"""Structured Streaming pipelines over the ``events`` schema.
-
-The batch time-series queries (queries/timeseries.py) use the very same
-window expressions; these builders attach them to a streaming source
-with watermarks so late data is handled the way a production pipeline
-needs. Tests drive them with a file source (parquet drops into a
-directory) + ``processAllAvailable`` for deterministic completion;
-production would swap the source for Kafka/EventHubs without touching
-the transformation.
+"""Structured Streaming building blocks shared by the streaming rungs
+(queries/streaming_q.py): the watermarked dedup step and the sinks that
+drive a finite replay to completion.
 
 Late-data contract:
 - aggregations carry ``withWatermark(ts, ...)`` so state is bounded —
@@ -19,61 +13,10 @@ Late-data contract:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+import os
+import uuid
 
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-
-def read_events_stream(spark: SparkSession, source_dir: str) -> DataFrame:
-    """File-based streaming source (one file = one micro-batch of events)."""
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-
-def tumbling_counts(events: DataFrame, window: str = "15 minutes", watermark: str = "30 minutes") -> DataFrame:
-    """Tumbling-window counts per event_type with bounded state."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
-        .select(F.col("w.start").alias("bucket"), "event_type", "n", "sum_value")
-    )
-
-
-def sliding_counts(events: DataFrame) -> DataFrame:
-    """Sliding 30-minute windows every 15 minutes."""
-    return (
-        events.withWatermark("ts", "30 minutes")
-        .groupBy(F.window("ts", "30 minutes", "15 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "n")
-    )
-
-
-def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Session windows per user (state merges as events arrive)."""
-    return (
-        events.withWatermark("ts", "30 minutes")
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id", F.col("w.start").alias("session_start"), "n_events"
-        )
-    )
+from pyspark.sql import DataFrame
 
 
 def streaming_dedup(events: DataFrame) -> DataFrame:
@@ -86,8 +29,8 @@ def streaming_dedup(events: DataFrame) -> DataFrame:
 #: (r10 verdict task 7): the replayed gates quote a 4-micro-batch
 #: TOTAL; this exposes each batch's batchId/durationMs so the
 #: "marginal cost is one micro-batch" claim is measured, not asserted
-#: (read by scripts/stream_batch_timing.py; zero effect on semantics —
-#: recentProgress is collected by Spark regardless).
+#: (zero effect on semantics — recentProgress is collected by Spark
+#: regardless).
 LAST_PROGRESS: list[dict] = []
 
 
@@ -100,19 +43,15 @@ LAST_PROGRESS: list[dict] = []
 #: (cores locally, hundreds on a cluster) multiply pure per-batch
 #: overhead: at 32 partitions a 4-batch replay commits 128 state files
 #: to move ~40 state rows. 4 partitions is sized to the state
-#: cardinality and stays fixed as cores scale — production ingest with
-#: high-cardinality keyed state (e.g. the dedup gate's event_id space)
-#: would raise it via the env knob to match throughput, which is why
-#: it is parameterised rather than derived from cores. The default was
-#: re-measured on a quiet box across 6 gates (3 light, 3 with real
-#: per-batch shuffle work) at 8/4/2/1: monotone ~0.3-0.6 s/gate better
-#: from 8 to 4 on EVERY gate, while 2 inverts on the gates whose
-#: batches do real shuffle work (ann_serving 3.78 vs 3.55 med) — 4 is
-#: the knee, keeping a little intra-batch parallelism headroom above
-#: the O(10-100)-row state.
-STREAM_SHUFFLE_PARTITIONS = int(
-    __import__("os").environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "4")
-)
+#: cardinality and stays fixed as cores scale. It was measured on a
+#: quiet box across 6 gates (3 light, 3 with real per-batch shuffle
+#: work) at 8/4/2/1: monotone ~0.3-0.6 s/gate better from 8 to 4 on
+#: EVERY gate, while 2 inverts on the gates whose batches do real
+#: shuffle work (ann_serving 3.78 vs 3.55 med) — 4 is the knee, keeping
+#: a little intra-batch parallelism headroom above the O(10-100)-row
+#: state. Production ingest with high-cardinality keyed state (e.g. the
+#: dedup gate's event_id space) would size it to its throughput.
+STREAM_SHUFFLE_PARTITIONS = 4
 
 #: base directory for the replay harness's EPHEMERAL checkpoints
 #: (r12, guide §1.2 fixed overheads): every micro-batch fsyncs the
@@ -124,15 +63,14 @@ STREAM_SHUFFLE_PARTITIONS = int(
 #: checkpoint. Production ingest durability is an EXPLICIT
 #: checkpointLocation on the query (the checkpoint-recovery test pins
 #: that path) and is unaffected by this knob.
-STREAM_CKPT_BASE = __import__("os").environ.get(
-    "SPARK_GRAFT_STREAM_CKPT_BASE",
-    "/dev/shm" if __import__("os").path.isdir("/dev/shm") else "",
+STREAM_CKPT_BASE = os.environ.get(
+    "SPARK_GRAFT_STREAM_CKPT_BASE", "/dev/shm" if os.path.isdir("/dev/shm") else ""
 )
 
 
-def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append") -> DataFrame:
+def run_to_memory(stream_df: DataFrame, output_mode: str = "append") -> DataFrame:
     """Drive a streaming DataFrame to completion against its current
-    source contents; results land in an in-memory table ``name``.
+    source contents; results land in a uniquely named in-memory table.
     Returns the materialized batch DataFrame.
 
     The session's shuffle-partition count is lowered to
@@ -145,6 +83,7 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append") 
     import tempfile
 
     spark = stream_df.sparkSession
+    name = f"t_{uuid.uuid4().hex[:12]}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     ckpt = (
@@ -173,7 +112,7 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append") 
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         if ckpt:
             shutil.rmtree(ckpt, ignore_errors=True)
-    return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
+    return spark.sql(f"SELECT * FROM {name}")
 
 
 def run_foreach_batch(stream_df: DataFrame, sink):

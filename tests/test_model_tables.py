@@ -134,7 +134,9 @@ def test_committed_models_match_present_datasets():
     if not os.path.isdir(local_sf1):
         committed_orphans = {e for e in committed_orphans if "_sf1_" not in e}
     assert not committed_orphans, (
-        f"stale model tables committed to the repo: {sorted(committed_orphans)}"
+        f"stale model tables committed to the repo: {sorted(committed_orphans)} "
+        "(or the local .localdata/sf1 predates the sf1 row-group change: "
+        "rebuild it with scripts/make_sf1.py)"
     )
 
 

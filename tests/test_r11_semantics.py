@@ -125,6 +125,20 @@ def test_no_forced_corpus_scale_broadcast_in_streaming_sources():
     )
 
 
+def test_streaming_sources_have_one_replay_path():
+    """Source-level pin of the single replay path: streaming_q.py has one
+    readStream call site, one staging function, and lets run_to_memory
+    name its own sink table."""
+    import re
+
+    import azurestorage_blueprints_spark.queries.streaming_q as m
+
+    src = inspect.getsource(m)
+    assert len(re.findall(r"\.readStream\b", src)) == 1
+    assert "uuid" not in src
+    assert re.findall(r"^def (_stage\w*)\(", src, re.M) == ["_stage_source"]
+
+
 def test_kn_bigram_heldout_exercises_backoff(spark, sf_dir):
     rows = REGISTRY["q_kn_bigram_perplexity"].fn(spark, sf_dir).collect()
     assert rows, "arrival slice must score"

@@ -1,85 +1,39 @@
-"""Structured Streaming tests: deterministic replay of the events table
-through file-source micro-batches, compared against the equivalent
-batch computation (the no-late-data case must agree exactly)."""
+"""Structured Streaming tests over the replay path the registered
+streaming rungs use (queries/streaming_q.py): events staged as
+time-ordered chunks, the shared file source, and the streaming sinks."""
 
 from __future__ import annotations
 
 import glob
+import os
 import shutil
+import subprocess
+import sys
 
-import pytest
 from pyspark.sql import functions as F
 
+from azurestorage_blueprints_spark.queries import streaming_q as SQ
 from azurestorage_blueprints_spark.streaming import windows as SW
 from azurestorage_blueprints_spark.tables import table
 
 
-@pytest.fixture()
-def stream_dir(spark, sf_dir, tmp_path):
-    """Events re-written as time-ordered parquet files → micro-batches
-    that respect the watermark's bounded-lateness assumption (a file
-    arriving entirely out of order would be *correctly* dropped as late
-    data, which is not what this equality test wants to measure)."""
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    ev = table(spark, sf_dir, "events").withColumn("ts", F.col("ts").cast("timestamp"))
-    ev = ev.orderBy("ts").cache()
-    lo = ev.agg(F.min("ts"), F.max("ts")).first()
-    span = (lo[1] - lo[0]) / 4
-    for i in range(4):
-        part = ev.filter(
-            (F.col("ts") >= lo[0] + i * span)
-            # last chunk is unbounded above: a strict < max(ts) bound
-            # would drop the max-timestamp event(s) from the replay
-            & ((F.col("ts") < lo[0] + (i + 1) * span) if i < 3 else F.lit(True))
-        )
-        part.coalesce(1).write.parquet(str(tmp_path / f"chunk{i}"))
-        pq = sorted(glob.glob(str(tmp_path / f"chunk{i}" / "part-*.parquet")))[0]
-        shutil.copy(pq, src / f"{i:04d}.parquet")
-    return str(src)
-
-
-def test_tumbling_counts_stream_equals_batch(spark, sf_dir, stream_dir):
-    stream = SW.read_events_stream(spark, stream_dir)
-    result = SW.run_to_memory(SW.tumbling_counts(stream), "t_tumbling")
-    batch = (
-        table(spark, sf_dir, "events")
-        .groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    got = {(r.bucket, r.event_type): r.n for r in result.collect()}
-    want = {(r.w.start, r.event_type): r.n for r in batch.collect()}
-    # append mode: windows past the watermark are emitted; every emitted
-    # window must agree exactly with the batch computation
-    assert got, "stream produced no finalized windows"
-    for k, n in got.items():
-        assert want.get(k) == n, f"window {k}: stream {n} != batch {want.get(k)}"
-
-
-def test_session_counts_stream(spark, stream_dir):
-    stream = SW.read_events_stream(spark, stream_dir)
-    result = SW.run_to_memory(SW.session_counts(stream), "t_sessions")
-    rows = result.collect()
-    assert rows, "no finalized sessions emitted"
-    assert all(r.n_events >= 1 for r in rows)
-
-
-def test_streaming_dedup_drops_replayed_files(spark, stream_dir, tmp_path):
-    # duplicate every source file → every event arrives twice
+def test_streaming_dedup_drops_replayed_files(spark, sf_dir, tmp_path):
+    # duplicate every staged chunk → every event arrives twice
+    path, schema = SQ._stage_source(spark, sf_dir, "events")
     dup_dir = tmp_path / "dup_src"
     dup_dir.mkdir()
-    for i, f in enumerate(sorted(glob.glob(f"{stream_dir}/*.parquet"))):
+    for i, f in enumerate(sorted(glob.glob(f"{path}/c*/part-*.parquet"))):
         shutil.copy(f, dup_dir / f"a{i}.parquet")
         shutil.copy(f, dup_dir / f"b{i}.parquet")
-    stream = SW.read_events_stream(spark, str(dup_dir))
-    result = SW.run_to_memory(SW.streaming_dedup(stream), "t_dedup")
+    stream = SQ._file_stream(spark, (str(dup_dir), schema))
+    result = SW.run_to_memory(SW.streaming_dedup(stream))
     ids = [r.event_id for r in result.collect()]
     assert len(ids) == len(set(ids)), "duplicate event_ids survived streaming dedup"
     assert len(ids) > 0
 
 
-def test_foreach_batch_sink_sees_all_rows(spark, stream_dir):
-    stream = SW.read_events_stream(spark, stream_dir)
+def test_foreach_batch_sink_sees_all_rows(spark, sf_dir):
+    stream = SQ._file_stream(spark, SQ._stage_source(spark, sf_dir, "events"))
     seen = []
     SW.run_foreach_batch(
         stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")),
@@ -91,33 +45,51 @@ def test_foreach_batch_sink_sees_all_rows(spark, stream_dir):
     assert sum(final.values()) > 0
 
 
-def test_stateful_running_totals(spark, sf_dir, stream_dir):
+def test_stateful_running_totals(spark, sf_dir):
     """applyInPandasWithState: per-user totals accumulated across
-    micro-batches must converge to the batch groupBy answer."""
-    from azurestorage_blueprints_spark.streaming.stateful import running_user_totals
+    micro-batches must equal the batch groupBy answer exactly."""
+    from azurestorage_blueprints_spark.streaming.stateful import running_user_cent_totals
 
-    stream = SW.read_events_stream(spark, stream_dir)
-    result = SW.run_to_memory(
-        running_user_totals(stream), "t_stateful", output_mode="update"
-    )
-    # update mode emits one row per (user, batch); the LAST emission per
-    # user carries the lifetime totals
+    stream = SQ._file_stream(spark, SQ._stage_source(spark, sf_dir, "events"))
+    result = SW.run_to_memory(running_user_cent_totals(stream), output_mode="update")
+    # update mode emits one row per (user, batch); n_events only grows,
+    # so the max-n_events emission per user carries the lifetime totals
     rows = result.collect()
     assert rows, "stateful operator emitted nothing"
     final = {}
-    for r in rows:  # memory sink appends in emission order
-        final[r.user_id] = (r.n_events, r.total_value)
+    for r in rows:
+        final[r.user_id] = max(final.get(r.user_id, (0, 0)), (r.n_events, r.total_cents))
+    cents = F.floor(F.col("value") * 100.0 + 0.5).cast("bigint")
     batch = {
-        r.user_id: (r.n, r.total)
+        r.user_id: (r.n, r.cents)
         for r in table(spark, sf_dir, "events")
         .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum(cents).alias("cents"))
         .collect()
     }
-    assert set(final) == set(batch)
-    for uid, (n, total) in final.items():
-        assert n == batch[uid][0], f"user {uid}: stream count {n} != batch {batch[uid][0]}"
-        assert abs(total - batch[uid][1]) < 1e-6 * max(1.0, abs(batch[uid][1]))
+    assert final == batch
+
+
+def test_replay_root_removed_at_exit(spark, sf_dir):
+    """Staged sources live under one per-process root that the exit
+    hook removes, together with the staging cache."""
+    path, _ = SQ._stage_source(spark, sf_dir, "events")
+    root = SQ._REPLAY_ROOT
+    assert root and path.startswith(root + os.sep)
+    SQ._remove_replay_root()
+    assert not os.path.exists(root)
+    assert not SQ._STAGED and SQ._REPLAY_ROOT is None
+    # the hook is registered with atexit: a fresh interpreter's root is
+    # gone once it exits
+    code = (
+        "from azurestorage_blueprints_spark.queries import streaming_q as m; "
+        "print(m._replay_root())"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, check=True
+    ).stdout.strip()
+    assert out and not os.path.exists(out)
 
 
 def test_gate_checkpoint_recovery(spark, sf_dir, tmp_path):
