@@ -26,7 +26,10 @@ Determinism contract (required for value-hash equality):
 
 from __future__ import annotations
 
+import atexit
+import glob
 import os
+import shutil
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -89,6 +92,15 @@ def _finalize_spill_dir() -> str:
     working directories."""
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     return os.path.join(os.path.dirname(pkg_root), "spark-warehouse", "finalize_spill")
+
+
+@atexit.register
+def _remove_finalize_spills() -> None:
+    """Remove this process's spilled reports. Not earlier: the scan that
+    :func:`finalize_bounded` returns reads its report until the process
+    exits. Keyed by pid, so a concurrent process keeps its own."""
+    for path in glob.glob(os.path.join(_finalize_spill_dir(), f"report_{os.getpid()}_*")):
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def finalize_bounded(result: DataFrame, *cached: DataFrame) -> DataFrame:

@@ -33,25 +33,9 @@ from azurestorage_blueprints_spark.oracle import (
 from azurestorage_blueprints_spark.queries import load_all
 
 
-#: sweep-scale skip list: queries whose ORACLE formulation is a
-#: documented correctness ANCHOR with super-linear cost (constant
-#: blocking key space), excluded only above the SF where the pair join
-#: leaves the tractable range. Key: query name → (min rows/sf marker,
-#: reason recorded in the artifact).
-SWEEP_SKIPS_ABOVE_SF01: dict[str, str] = {
-    # empty since r8: the SimHash rungs' 62/64-bit signatures + occupancy
-    # cap bound candidates at O(N*cap), so every rung runs at every sweep
-    # SF (r7 verdict task 1 closed the one documented skip)
-}
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_path_arg = sys.argv[2] if len(sys.argv) > 2 else None
-    # the anchor-rung skip list applies only to the >=sf1 stress sweeps,
-    # never to gate-SF artifacts (an explicit out-path alone used to
-    # imply it, which wrongly skipped the rung in a gate-SF refresh)
-    big_sweep = os.environ.get("SWEEP_BIG") == "1"
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
         .appName("oracle-local")
@@ -78,12 +62,9 @@ def main() -> int:
     out: dict[str, dict] = {}
     if os.environ.get("SWEEP_RESUME") == "1" and os.path.exists(path):
         def _keep(v: dict) -> bool:
-            # carry passes, rows-only rows, and documented skips; RETRY
-            # real errors (e.g. an ENOSPC from a previous run's spill)
-            e = v.get("err")
-            return bool(v.get("hash_match")) or e == "no_oracle" or (
-                e or ""
-            ).startswith("skipped_at_sweep_sf")
+            # carry passes and rows-only rows; RETRY real errors (e.g.
+            # an ENOSPC from a previous run's spill)
+            return bool(v.get("hash_match")) or v.get("err") == "no_oracle"
 
         with open(path) as f:
             out = {k: v for k, v in json.load(f).items() if k in registry and _keep(v)}
@@ -101,11 +82,6 @@ def main() -> int:
             "err": None,
         }
         tq = time.time()
-        if big_sweep and name in SWEEP_SKIPS_ABOVE_SF01:
-            row["err"] = SWEEP_SKIPS_ABOVE_SF01[name]
-            out[name] = row
-            print(f"[{i}/{len(registry)}] {name}: SKIP (documented anchor)", flush=True)
-            continue
         try:
             sdf = q.fn(spark, sf_dir)
             if q.oracle is None:
@@ -145,13 +121,10 @@ def main() -> int:
     # here could corrupt the very file SWEEP_RESUME reads if killed
     n_hash = sum(1 for r in out.values() if r["hash_match"])
     n_rows_only = sum(1 for r in out.values() if r["err"] == "no_oracle")
-    n_skip = sum(
-        1 for r in out.values() if r["err"] and r["err"].startswith("skipped_at_sweep_sf")
-    )
-    n_fail = len(out) - n_hash - n_rows_only - n_skip
+    n_fail = len(out) - n_hash - n_rows_only
     print(
         f"wrote {path}: {n_hash} hash-pass, {n_rows_only} rows-only, "
-        f"{n_skip} documented-skip, {n_fail} failures in {time.time() - t0:.0f}s"
+        f"{n_fail} failures in {time.time() - t0:.0f}s"
     )
     return 1 if n_fail else 0
 

@@ -24,6 +24,8 @@ without materializing the full plan — and asserts both halves.
 
 from __future__ import annotations
 
+import os
+
 from azurestorage_blueprints_spark.queries import (
     PERSIST_THROUGH_RETURN,
     REGISTRY,
@@ -115,6 +117,12 @@ def test_finalize_bounded_enforces_row_budget(spark, sf_dir, monkeypatch):
     ]
     assert sorted(map(tuple, out2.collect())) == base
     assert _cache_empty(spark), "spill route leaked cache"
+    # the report stays readable while the process runs; the exit hook
+    # removes it
+    spill = os.path.join(Q._finalize_spill_dir(), f"report_{os.getpid()}_{Q._FINALIZE_SEQ}")
+    assert os.path.isdir(spill)
+    Q._remove_finalize_spills()
+    assert not os.path.exists(spill)
 
 
 def test_semdedup_family_routes_through_finalize_bounded():
