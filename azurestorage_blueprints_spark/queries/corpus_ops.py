@@ -17,7 +17,8 @@ per token but aggregate immediately with map-side partial combine;
 the mixture/sampling queries add a single window over the per-source
 partitioning they already need. Nothing corpus-sized ever collects to
 the driver; the one driver round-trip in the module is _dsir_model's
-O(_DSIR_BUCKETS) count table (a documented model deploy, ≤ 256 rows).
+O(_DSIR_BUCKETS) count table (a documented model deploy, ≤ 256 rows,
+redeployed as folded SQL literals).
 """
 
 from __future__ import annotations
@@ -1260,6 +1261,15 @@ _DSIR_K = 200
 #: draw streams — distinct experiments must not share randomness
 _DSIR_GUMBEL_SALT = 424243
 
+#: one bucket's milli log-ratio (the ``lr`` CTE) as engine SQL, counts
+#: inlined by ``_dsir_model``; D-suffixed, since a bare ``1.0`` is
+#: decimal(2,1) in Spark SQL and would change what ``ln`` receives
+_DSIR_LR_SQL = (
+    f"CAST(round((ln(({{c_t}} + 1.0D) / ({{n_t}} + {_DSIR_BUCKETS}.0D))"
+    f" - ln(({{c_r}} + 1.0D) / ({{n_r}} + {_DSIR_BUCKETS}.0D)))"
+    f" * {_DSIR_QZ}.0D) AS BIGINT)"
+)
+
 # shared CTE prefix: per-document hashed-bigram features and the
 # milli-quantized per-bucket log importance ratio (DuckDB dialect;
 # the Spark side mirrors it expression-for-expression in DataFrame API
@@ -1377,65 +1387,50 @@ def _dsir_feats(docs: DataFrame) -> DataFrame:
     )
 
 
-def _dsir_model(spark: SparkSession, docs: DataFrame, with_unseen: bool = False) -> DataFrame:
-    """Fit the DSIR model over a document set: the O(_DSIR_BUCKETS)
-    (bucket, lr_milli) log-ratio table, mirroring the ``counts``/
+def _dsir_model(docs: DataFrame) -> tuple[list[tuple[int, str]], str]:
+    """Fit the DSIR model over a document set, mirroring the ``counts``/
     ``tots``/``lr`` CTEs of ``_DSIR_PREFIX_SQL``. BOTH multinomials
-    come out of ONE map-side-combined agg on the bucket key; the count
-    table is collected once (bounded: ≤ _DSIR_BUCKETS integer rows —
-    the documented driver-side model deploy, like the ppl gate's LM
-    map) so training scans the corpus exactly once, and the log-ratio
-    is computed over the resulting LocalRelation with ENGINE
-    expressions (never Python floats — Python round() is banker's,
-    Spark/DuckDB round is half-away). With ``with_unseen`` a sentinel
-    row (bucket = -1) carries the smoothed log-ratio of a bucket with
-    ZERO training mass — the back-off value an arrival-time scorer
-    uses for buckets the standing corpus never produced."""
+    come out of ONE map-side-combined agg on the bucket key, collected
+    once (bounded: ≤ _DSIR_BUCKETS integer rows — the documented
+    driver-side model deploy, like the ppl gate's LM map); the totals
+    are exact Python int sums. Returns ``(bucket, lr_milli SQL)`` pairs
+    sorted by bucket, plus the SQL of a bucket with ZERO training mass
+    — the back-off an arrival-time scorer uses for unseen buckets.
+    The engine evaluates each expression once per plan (constant
+    folding, or the analyzer for a VALUES table), so the log-ratio
+    stays ENGINE arithmetic (Python round() is banker's,
+    Spark/DuckDB round is half-away) and the deploy runs no job."""
     counts = _dsir_feats(docs).groupBy("bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("c_r"),
         F.sum(F.when(F.col("lang") == _DSIR_TARGET, 1).otherwise(0))
         .cast("bigint")
         .alias("c_t"),
-    )
-    local = spark.createDataFrame(
-        counts.collect(), "bucket bigint, c_r bigint, c_t bigint"
-    )
-    tots = local.agg(
-        F.sum("c_r").cast("bigint").alias("n_r"),
-        F.sum("c_t").cast("bigint").alias("n_t"),
-    )
-    b = float(_DSIR_BUCKETS)
+    ).collect()
+    n_r = sum(r.c_r for r in counts)
+    n_t = sum(r.c_t for r in counts)
 
-    def _lr_milli(c_t, c_r):
-        return F.round(
-            (
-                F.log((c_t + F.lit(1.0)) / (F.col("n_t") + F.lit(b)))
-                - F.log((c_r + F.lit(1.0)) / (F.col("n_r") + F.lit(b)))
-            )
-            * F.lit(float(_DSIR_QZ))
-        ).cast("bigint")
+    def lr(c_t: int, c_r: int) -> str:
+        return _DSIR_LR_SQL.format(c_t=c_t, c_r=c_r, n_t=n_t, n_r=n_r)
 
-    lr = local.crossJoin(F.broadcast(tots)).select(
-        "bucket", _lr_milli(F.col("c_t"), F.col("c_r")).alias("lr_milli")
-    )
-    if with_unseen:
-        unseen = tots.select(
-            F.lit(-1).cast("bigint").alias("bucket"),
-            _lr_milli(F.lit(0.0), F.lit(0.0)).alias("lr_milli"),
-        )
-        lr = lr.unionByName(unseen)
-    return lr
+    return sorted((r.bucket, lr(r.c_t, r.c_r)) for r in counts), lr(0, 0)
 
 
 def _dsir_importance_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document DSIR log importance weight (milli-quantized bigint),
     mirroring ``_DSIR_PREFIX_SQL`` expression-for-expression."""
     d = table(spark, sf_dir, "documents")
-    # lr is O(_DSIR_BUCKETS) rows at ANY corpus size — broadcast the
-    # model back onto the feature stream, never shuffle the stream
+    entries, _ = _dsir_model(d)
+    # O(_DSIR_BUCKETS) literal rows at ANY corpus size, evaluated into
+    # a LocalRelation at analysis: broadcast-join them (a literal-map
+    # lookup would scan the map per feature)
+    lr = spark.sql(
+        "SELECT * FROM VALUES "
+        + ", ".join(f"({b}L, {e})" for b, e in entries)
+        + " AS lr(bucket, lr_milli)"
+    )
     return (
         _dsir_feats(d)
-        .join(F.broadcast(_dsir_model(spark, d)), "bucket")
+        .join(F.broadcast(lr), "bucket")
         .groupBy("doc_id", "lang")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_feats"),
@@ -1468,9 +1463,10 @@ def _dsir_importance_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     "agg, keyed on doc_id. Driver traffic: exactly ONE bounded "
     "round-trip — _dsir_model collects the O(_DSIR_BUCKETS) count "
     "table (≤ 256 integer rows) and redeploys the log-ratio model as "
-    "a LocalRelation (its docstring documents the convention); nothing "
-    "corpus-sized crosses the driver. q_dsir_resample shares this "
-    "plan and the same single bounded collect.",
+    "ONE inline literal table (VALUES, evaluated at analysis; its "
+    "docstring documents the convention); nothing corpus-sized "
+    "crosses the driver. q_dsir_resample shares this plan and the "
+    "same single bounded collect.",
 )
 def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     imp = _dsir_importance_df(spark, sf_dir)
@@ -1501,7 +1497,7 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the weights, so the selection key is one exact bigint add. "
     "Shape (100 TB): everything before selection is the "
     "q_dsir_importance plan (one O(buckets) model agg + broadcast "
-    "rejoin); the top-k itself is ORDER BY + LIMIT — "
+    "literal model); the top-k itself is ORDER BY + LIMIT — "
     "TakeOrderedAndProject, per-partition heaps then a k-row merge, "
     "never a global sort or single-partition window. O(k) rows out at "
     "any corpus size.",

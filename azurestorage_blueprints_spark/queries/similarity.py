@@ -3504,9 +3504,10 @@ def _pca2_oracle() -> str:
     "vec_id co-partitions, map-side-combined agg); the covariance "
     "combine is double arithmetic (identical both engines), so there "
     "is NO int64 ceiling on corpus size; the 4096-cell model collects "
-    "once (the _dsir_model bounded-deploy convention) and the 8 "
-    "rounds run on the O(D^2) model, never the corpus. The driver "
-    "iteration uses only exact Python ints and IEEE divides in the "
+    "to the driver once (a bounded model deploy), the 8 power rounds "
+    "run there on the O(D^2) model, never the corpus, and the D-row "
+    "result returns as a LocalRelation. The driver iteration uses "
+    "only exact Python ints and IEEE divides in the "
     "oracle's expression order, so DuckDB's unrolled-CTE rerun "
     "re-certifies every round bit-for-bit.",
 )
@@ -3563,8 +3564,8 @@ def q_embed_pca_var_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("mq"),
     )
-    # bounded model deploy (the _dsir_model convention): O(D^2) = 4096
-    # integer cells cross the driver ONCE; the corpus never does
+    # bounded model deploy: O(D^2) = 4096 integer cells cross the
+    # driver ONCE and the power rounds run there; the corpus never does
     cells_local = {(r.i, r.j): int(r.mq) for r in mq_df.collect()}
     dd = _PCA2_D
     trace = sum(cells_local[(i, i)] for i in range(dd))

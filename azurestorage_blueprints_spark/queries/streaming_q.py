@@ -1807,13 +1807,15 @@ def _stream_dsir_oracle() -> str:
     "domain-targeting admission control a crawl pipeline runs at the "
     "door): a batch pre-pass fits the hashed-bigram target/raw "
     "log-ratio model on the STANDING corpus (doc_id % 10 != 0, target "
-    "= its 'en' slice), deploys it as a LITERAL in-plan map (the model "
-    "is provably O(_DSIR_BUCKETS) entries — no join, no shuffle, no "
-    "broadcast wait), then arrivals (doc_id % 10 == 0 replayed as "
+    "= its 'en' slice), deploys it as ONE map(...) SQL expression with "
+    "the counts inlined, which Catalyst folds to a LITERAL in-plan map "
+    "(the model is provably O(_DSIR_BUCKETS) entries — no join, no "
+    "shuffle, no broadcast wait, and one JVM call to build), then "
+    "arrivals (doc_id % 10 == 0 replayed as "
     "micro-batches) pick up their stored lang from the metadata store "
     "via a stream-static join and score ROW-LOCALLY: hash bigrams "
-    "in-array, fold the map lookups with the bucket=-1 back-off for "
-    "features the standing corpus never produced, admit iff the log "
+    "in-array, fold the map lookups with the folded unseen back-off "
+    "for features the standing corpus never produced, admit iff the log "
     "importance weight is positive (w > 1: looks more target than "
     "raw). The funnel report per (lang, admitted) aggregates in "
     "complete mode. Oracle: DuckDB retrains the model and rescores the "
@@ -1838,17 +1840,11 @@ def q_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = table(spark, sf_dir, "documents")
-    standing = d.filter(F.col("doc_id") % 10 != 0)
-    model = {
-        int(r.bucket): int(r.lr_milli)
-        for r in _dsir_model(spark, standing, with_unseen=True).collect()
-    }
-    unseen = model.pop(-1)
-    # deploy the frozen model as a literal map column: O(buckets)
-    # entries by construction, so it rides the PLAN, not a join
-    lrmap = F.create_map(
-        *[F.lit(x).cast("bigint") for kv in sorted(model.items()) for x in kv]
-    )
+    entries, unseen = _dsir_model(d.filter(F.col("doc_id") % 10 != 0))
+    # deploy the frozen model as ONE map expression: O(buckets) entries
+    # by construction, folded to a map literal once per plan, so it
+    # rides the PLAN, not a join
+    lrmap = F.expr("map(" + ", ".join(f"{b}L, {e}" for b, e in entries) + ")")
 
     arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))
     # stored language from the metadata store (stream-static, no hint)
@@ -1878,7 +1874,7 @@ def q_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bk"),
         F.lit(0).cast("bigint"),
         lambda acc, b: acc
-        + F.coalesce(F.element_at(lrmap, b), F.lit(unseen).cast("bigint")),
+        + F.coalesce(F.element_at(lrmap, b), F.expr(unseen)),
     )
     scored = bk.select(
         "lang",

@@ -13,6 +13,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from azurestorage_blueprints_spark.queries import load_all
@@ -429,6 +431,17 @@ def test_dsir_resample_upsamples_target_and_is_a_subset(spark, sf_dir):
     assert sel_en / len(sel) > n_en / n_all, (sel_en, len(sel), n_en, n_all)
 
 
+def _folded_dsir_model(spark, docs):
+    """``_dsir_model(docs)`` as the engine folds it: ``{bucket:
+    lr_milli}`` and the unseen back-off, as Python ints."""
+    from azurestorage_blueprints_spark.queries.corpus_ops import _dsir_model
+
+    entries, unseen = _dsir_model(docs)
+    exprs = [f"{e} AS e{i}" for i, (_, e) in enumerate(entries)]
+    vals = spark.sql(f"SELECT {', '.join(exprs)}, {unseen} AS unseen").first()
+    return dict(zip((b for b, _ in entries), vals[:-1])), vals[-1]
+
+
 def test_stream_dsir_gate_is_consistent_with_batch_importance(spark, sf_dir):
     """The ingest gate must agree with the batch scorer on the arrival
     slice: per-language doc counts tile the >=2-token arrivals exactly,
@@ -437,6 +450,8 @@ def test_stream_dsir_gate_is_consistent_with_batch_importance(spark, sf_dir):
     rung restricted to arrivals scored by the ARRIVAL-EXCLUDED model
     (so totals differ from q_dsir_importance, whose model sees all
     docs — equality is on the funnel's own books)."""
+    from azurestorage_blueprints_spark.queries.corpus_ops import _dsir_feats
+
     rows = REGISTRY["q_stream_dsir_gate"].fn(spark, sf_dir).collect()
     by = {(r.lang, r.admitted): r for r in rows}
     d = table(spark, sf_dir, "documents")
@@ -459,6 +474,41 @@ def test_stream_dsir_gate_is_consistent_with_batch_importance(spark, sf_dir):
             ), lang
     # the gate must admit SOMETHING and reject SOMETHING at this SF
     assert any(k[1] for k in by) and any(not k[1] for k in by)
+    # batch rescore of the arrivals under the standing-slice model,
+    # unseen buckets backed off: the funnel's books must match exactly
+    lr, unseen = _folded_dsir_model(spark, d.filter(F.col("doc_id") % 10 != 0))
+    imp: dict[tuple[int, str], int] = {}
+    for r in _dsir_feats(d.filter(F.col("doc_id") % 10 == 0)).collect():
+        imp[(r.doc_id, r.lang)] = imp.get((r.doc_id, r.lang), 0) + lr.get(r.bucket, unseen)
+    want: dict[tuple[str, bool], tuple[int, int]] = {}
+    for (_, lang), w in imp.items():
+        n, tot = want.get((lang, w > 0), (0, 0))
+        want[(lang, w > 0)] = (n + 1, tot + w)
+    assert {k: (r.n_docs, r.imp_total_milli) for k, r in by.items()} == want
+
+
+def test_stream_dsir_model_matches_oracle_entry_by_entry(spark, sf_dir):
+    """The funnel hash sees the deployed model only through per-document
+    sums (and the unseen back-off only where an arrival hits an unseen
+    bucket), so pin it entry by entry at sf0.01: every folded bucket
+    log-ratio and the unseen value must equal the oracle's
+    ``lr``/``unseen`` CTEs over the standing slice."""
+    from azurestorage_blueprints_spark.oracle import duckdb_connection
+    from azurestorage_blueprints_spark.queries.streaming_q import _stream_dsir_oracle
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    d = table(spark, sf, "documents")
+    lr, unseen = _folded_dsir_model(spark, d.filter(F.col("doc_id") % 10 != 0))
+    # the oracle up to its model CTEs (arrival scoring cut off)
+    head = _stream_dsir_oracle().split("afeats AS (")[0].rstrip().rstrip(",")
+    con = duckdb_connection(sf)
+    try:
+        want = dict(con.execute(f"{head} SELECT bucket, lr_milli FROM lr").fetchall())
+        (want_unseen,) = con.execute(f"{head} SELECT u FROM unseen").fetchone()
+    finally:
+        con.close()
+    assert len(lr) > 200 and lr == want
+    assert unseen == want_unseen
 
 
 def test_doremi_step_excess_positive_and_reweighting_monotone(spark, sf_dir):
