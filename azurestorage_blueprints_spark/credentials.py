@@ -33,10 +33,6 @@ from pyspark.sql import SparkSession
 
 from azurestorage_blueprints_spark.errors import IncorrectCredentialsError
 
-#: env var the reference reads the connection string from
-#: (``upload_file.py:199`` ``os.environ.get('AZURE_STORAGE_CONNECTION_STRING')``)
-CONNECTION_STRING_ENV = "AZURE_STORAGE_CONNECTION_STRING"
-
 _DEFAULT_SUFFIX = "core.windows.net"
 
 #: template override so tests (and non-Azure deployments) can point a

@@ -8,6 +8,9 @@ plus move's ``EXIT_CODE_AZURE_MOVE_ERROR``) and calls ``sys.exit`` from
 library code. The engine instead raises a typed exception hierarchy; a
 thin CLI adapter maps exceptions back to the reference's exit codes so
 pipeline orchestrators keep the same contract.
+
+Exit code 201 has no exception class: the reference declares it but
+never raises it, and no engine path or CLI mapping needs it.
 """
 
 from __future__ import annotations
@@ -36,13 +39,6 @@ class NoMatchesFoundError(EngineError):
     """
 
     exit_code = 200
-
-
-class InvalidFilePathError(EngineError):
-    """A source or destination path is invalid (ref exit code 201; dead
-    code in the reference — declared but never raised)."""
-
-    exit_code = 201
 
 
 class DeleteError(EngineError):

@@ -56,7 +56,6 @@ BLOCK_TAGS = frozenset(
 
 #: boilerplate thresholds (shared with the oracle fixture math)
 MIN_TOKENS = 5
-MAX_LINK_DENSITY_X2 = 1  # keep iff 2*link_chars <= n_chars
 
 
 class _BlockCollector(HTMLParser):

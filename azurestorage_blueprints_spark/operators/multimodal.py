@@ -115,13 +115,6 @@ def _fake_decoder(b: bytes) -> tuple[str, int, int]:
 
 PIXELS_SCHEMA = "content_id bigint, width int, height int, pixels binary, ok boolean"
 
-#: magics of codec-backed formats that require an injected decoder.
-#: The set is now EMPTY for images: PPM is a header parse, PNG's
-#: DEFLATE is stdlib zlib (decode_png), GIF's LZW is hand-rolled
-#: (decode_gif), and baseline JPEG's Huffman+IDCT is hand-rolled
-#: (decode_jpeg — cross-validated against libjpeg within ±2).
-#: Progressive JPEG and MP3 remain the documented injected tier.
-_CODEC_MAGICS: dict[bytes, str] = {}
 _JPEG_MAGIC = b"\xff\xd8"
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"

@@ -7,6 +7,15 @@ semantics are SQL-expressible, a DuckDB oracle SQL string the driver
 cross-checks at sf0.01. Column names are aligned on both sides because
 the driver's comparator sorts columns by name before hashing.
 
+There are two ways in. :func:`register_sql` is the default when the
+oracle text runs verbatim on Spark: the SQL is the query, and ``fn`` is
+generated. :func:`register` decorates a DataFrame builder, kept where
+the Spark form must differ (engine-only functions, a physical strategy
+the builder pins, UDF/codec/streaming rungs) or where the builder was
+measured faster. For a SQL-form query the oracle check runs one text on
+two engines, so it checks Spark's execution but no hand translation;
+its ``test_r*_semantics`` property tests are the independent check.
+
 Determinism contract (required for value-hash equality):
 - order-sensitive double reductions (SUM/AVG over double) are computed
   through exact decimal arithmetic (cast→decimal→sum→cast to double)
@@ -29,11 +38,15 @@ from __future__ import annotations
 import atexit
 import glob
 import os
+import re
 import shutil
+import sys
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from azurestorage_blueprints_spark.tables import TABLE_NAMES, register_views
 
 
 @dataclass(frozen=True)
@@ -146,16 +159,41 @@ def finalize_bounded(result: DataFrame, *cached: DataFrame) -> DataFrame:
     return spark.read.schema(result.schema).parquet(path)
 
 
+def _add(query: Query) -> None:
+    if query.name in REGISTRY:
+        raise ValueError(f"duplicate query name {query.name!r}")
+    REGISTRY[query.name] = query
+
+
 def register(name: str, oracle: str | None = None, doc: str = ""):
-    """Decorator: add a query to the registry."""
+    """Decorator: add a query built by a DataFrame function."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        if name in REGISTRY:
-            raise ValueError(f"duplicate query name {name!r}")
-        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+        _add(Query(name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or "")))
         return fn
 
     return deco
+
+
+def register_sql(name: str, oracle: str, doc: str) -> None:
+    """Add a query whose oracle SQL is also its Spark form.
+
+    The generated ``fn`` registers temp views for the base tables the
+    SQL names (whole-word match, so an extra match only costs one view)
+    over the caller's ``sf_dir`` on every call — views are never cached
+    across calls because ``sf_dir`` changes within a session — and
+    returns ``spark.sql(oracle)``. ``fn.__module__`` is the registering
+    module, so :func:`load_all` groups it with its family.
+    """
+    views = tuple(t for t in TABLE_NAMES if re.search(rf"\b{t}\b", oracle, re.IGNORECASE))
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_views(spark, sf_dir, views)
+        return spark.sql(oracle)
+
+    fn.__module__ = sys._getframe(1).f_globals["__name__"]
+    fn.__name__ = fn.__qualname__ = name
+    _add(Query(name=name, fn=fn, oracle=oracle, doc=doc))
 
 
 #: names registered in the CURRENT round (update each round): these sort

@@ -13,11 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from azurestorage_blueprints_spark.queries import register
+from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
 
-@register(
+register_sql(
     "q_funnel_sequence",
     oracle="""
     WITH per_user AS (
@@ -38,26 +38,6 @@ from azurestorage_blueprints_spark.tables import table
     "user via conditional MIN aggregation, then ordering predicates — no "
     "self-joins, no window; one shuffle on user_id, then a scalar reduce.",
 )
-def q_funnel_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = table(spark, sf_dir, "events")
-
-    def first_touch(kind: str):
-        return F.min(F.when(F.col("event_type") == kind, F.col("ts"))).alias(f"t_{kind}")
-
-    per_user = e.groupBy("user_id").agg(
-        first_touch("view"), first_touch("click"), first_touch("purchase")
-    )
-    return per_user.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.count("t_view").alias("n_view"),
-        F.count(F.when(F.col("t_view") < F.col("t_click"), 1)).alias("n_view_then_click"),
-        F.count(
-            F.when(
-                (F.col("t_view") < F.col("t_click")) & (F.col("t_click") < F.col("t_purchase")),
-                1,
-            )
-        ).alias("n_full_funnel"),
-    )
 
 
 @register(
@@ -118,7 +98,7 @@ def q_agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_window_distribution_rank",
     oracle="""
     SELECT doc_id, lang,
@@ -135,22 +115,9 @@ def q_agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the partition key; ties broken by the unique doc_id so ranks are "
     "cross-engine deterministic.",
 )
-def q_window_distribution_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    d = table(spark, sf_dir, "documents")
-    w = W.partitionBy("lang").orderBy("n_chars", "doc_id")
-    wf = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    return d.select(
-        "doc_id",
-        "lang",
-        F.percent_rank().over(w).alias("pr"),
-        F.cume_dist().over(w).alias("cd"),
-        F.nth_value("n_chars", 3).over(wf).alias("third_smallest"),
-    )
 
 
-@register(
+register_sql(
     "q_event_transitions",
     oracle="""
     WITH seq AS (
@@ -180,30 +147,6 @@ def q_window_distribution_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is O(|event_type|^2) — the transition matrix of a trillion events "
     "is still a handful of rows.",
 )
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    e = table(spark, sf_dir, "events")
-    seq = e.select(
-        "event_type",
-        F.lag("event_type")
-        .over(W.partitionBy("user_id").orderBy("ts", "event_id"))
-        .alias("prev_type"),
-    )
-    trans = (
-        seq.filter(F.col("prev_type").isNotNull())
-        .groupBy(F.col("prev_type").alias("from_type"), F.col("event_type").alias("to_type"))
-        .agg(F.count(F.lit(1)).alias("n_transitions"))
-    )
-    return trans.select(
-        "from_type",
-        "to_type",
-        "n_transitions",
-        (
-            F.col("n_transitions").cast("double")
-            / F.sum("n_transitions").over(W.partitionBy("from_type")).cast("double")
-        ).alias("p_transition"),
-    )
 
 
 @register(
@@ -388,7 +331,7 @@ _BOUNCE_SQL_ORACLE = """
 """
 
 
-@register(
+register_sql(
     "q_session_bounce_rate",
     oracle=_BOUNCE_SQL_ORACLE,
     doc="Daily bounce rate: the share of 30-minute-gap sessions that "
@@ -401,27 +344,6 @@ _BOUNCE_SQL_ORACLE = """
     "single final divide. At 100 TB the day-keyed agg sees only "
     "session rows — orders of magnitude fewer than events.",
 )
-def q_session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    ev = table(spark, sf_dir, "events").withColumn(
-        "ep", F.expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
-    )
-    w = W.partitionBy("user_id").orderBy("ts")
-    gap = F.col("ep") - F.lag("ep").over(w)
-    is_start = F.when(gap.isNull() | (gap > 30 * 60 * 1_000_000), 1).otherwise(0)
-    wcum = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    sess = ev.withColumn("sid", F.sum(is_start).over(wcum))
-    per_session = sess.groupBy("user_id", "sid").agg(
-        F.min("ts").cast("date").alias("session_day"),
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-    )
-    bounce = F.when(F.col("n_events") == 1, 1).otherwise(0)
-    return per_session.groupBy("session_day").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_sessions"),
-        F.sum(bounce).cast("bigint").alias("n_bounces"),
-        (F.sum(bounce).cast("double") / F.count(F.lit(1))).alias("bounce_rate"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from azurestorage_blueprints_spark.queries import register
+from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
 #: whitespace tokenizer (Spark column expr) — twin of the DuckDB
@@ -628,7 +628,7 @@ _TEMP_MIX_SQL = f"""
 """
 
 
-@register(
+register_sql(
     "q_mixture_temperature_resample",
     oracle=_TEMP_MIX_SQL,
     doc="Temperature-scaled source mixture (alpha = 0.5): the "
@@ -645,9 +645,6 @@ _TEMP_MIX_SQL = f"""
     "(row-level deterministic sampling): this is the allocation-"
     "planning step those two execute. O(sources) rows move at any SF.",
 )
-def q_mixture_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_TEMP_MIX_SQL)
 
 
 @register(
@@ -954,7 +951,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 # as bigints, one divide by 2 * n_ref * n_cur at the end — plus the
 # per-source share deltas that tell the operator WHICH source moved.
 
-@register(
+register_sql(
     "q_mixture_drift_tv",
     oracle="""
     WITH halves AS (
@@ -994,39 +991,6 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hash-agg on source is the only fact-scale work; the windows run "
     "over O(sources) rows.",
 )
-def q_mixture_drift_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    d = table(spark, sf_dir, "documents")
-    halves = d.groupBy("source").agg(
-        F.sum(F.when(F.col("doc_id") % 2 == 0, F.col("n_chars")).otherwise(0))
-        .cast("bigint")
-        .alias("c_ref"),
-        F.sum(F.when(F.col("doc_id") % 2 == 1, F.col("n_chars")).otherwise(0))
-        .cast("bigint")
-        .alias("c_cur"),
-    )
-    w = W.partitionBy()
-    tot = halves.select(
-        "source",
-        "c_ref",
-        "c_cur",
-        F.sum("c_ref").over(w).cast("bigint").alias("n_ref"),
-        F.sum("c_cur").over(w).cast("bigint").alias("n_cur"),
-    )
-    cross = F.abs(F.col("c_ref") * F.col("n_cur") - F.col("c_cur") * F.col("n_ref"))
-    return tot.select(
-        "source",
-        "c_ref",
-        "c_cur",
-        cross.cast("bigint").alias("cross_abs"),
-        (F.col("c_ref").cast("double") / F.col("n_ref").cast("double")).alias("ref_share"),
-        (F.col("c_cur").cast("double") / F.col("n_cur").cast("double")).alias("cur_share"),
-        (
-            F.sum(cross).over(w).cast("double")
-            / (F.lit(2.0) * F.col("n_ref").cast("double") * F.col("n_cur").cast("double"))
-        ).alias("tv_distance"),
-    ).orderBy("source")
 
 
 #: PMI collocation extraction: minimum bigram count (rare pairs have
@@ -1185,7 +1149,7 @@ _CURRICULUM_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_mixture_curriculum",
     oracle=_CURRICULUM_SQL,
     doc="Curriculum mixture schedule: the per-phase LANGUAGE-mixture plan "
@@ -1205,9 +1169,6 @@ _CURRICULUM_SQL = """
     "join, per-phase window over O(langs) rows — O(langs x phases) "
     "rows move at any corpus size.",
 )
-def q_mixture_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_CURRICULUM_SQL)
 
 
 # ---------------------------------------------------------------------------

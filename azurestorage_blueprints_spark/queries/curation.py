@@ -26,7 +26,7 @@ from azurestorage_blueprints_spark.functions.text import (
     word_set_occurrences,
     word_shingles,
 )
-from azurestorage_blueprints_spark.queries import finalize_bounded, register
+from azurestorage_blueprints_spark.queries import finalize_bounded, register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
 #: email pattern in the Java-regex ∩ RE2 common subset (no lookahead)
@@ -804,7 +804,7 @@ def q_html_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is bit-exact.
 
 
-@register(
+register_sql(
     "q_text_encoding_screen",
     oracle="""
     WITH fx AS (
@@ -858,59 +858,6 @@ def q_html_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     "map-side-combined hash-agg on source — no shuffle wider than the "
     "source cardinality, length()/replace() all JVM-side.",
 )
-def q_text_encoding_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    moji = " Ã¢â‚¬â„¢"  # 8 chars incl. leading space
-    t = F.concat(
-        F.col("text"),
-        F.when(
-            F.col("doc_id") % 7 == 0,
-            F.repeat(F.lit(moji), (F.col("doc_id") % 5).cast("int") + 1),
-        ).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 11 == 0, F.repeat(F.expr("char(27)"), 2)).otherwise(
-            F.lit("")
-        ),
-        F.when(
-            # NOT char(65533): Spark's char() wraps at 256 (chr(65533 % 256)
-            # = 'ý'), silently missing real U+FFFD — lit the code point.
-            F.col("doc_id") % 13 == 0, F.concat(F.lit(" "), F.lit("\ufffd"))
-        ).otherwise(F.lit("")),
-    )
-    fx = d.select("doc_id", "source", t.alias("t"))
-
-    def count_marker(marker_expr, width: int):
-        c = F.length(F.col("t")) - F.length(F.replace(F.col("t"), marker_expr))
-        return (c / width).cast("bigint") if width > 1 else c.cast("bigint")
-
-    m = fx.select(
-        "source",
-        count_marker(F.lit("\ufffd"), 1).alias("n_repl"),
-        count_marker(F.expr("char(27)"), 1).alias("n_ctrl"),
-        count_marker(F.lit("Ã¢â‚¬â„¢"), 8).alias("n_moji"),
-    )
-    v = m.withColumn(
-        "verdict",
-        F.when((F.col("n_repl") > 0) | (F.col("n_ctrl") > 0), F.lit("bad"))
-        .when(F.col("n_moji") > 0, F.lit("suspect"))
-        .otherwise(F.lit("clean")),
-    )
-    return (
-        v.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum((F.col("verdict") == "clean").cast("int")).cast("bigint").alias("n_clean"),
-            F.sum((F.col("verdict") == "suspect").cast("int")).cast("bigint").alias("n_suspect"),
-            F.sum((F.col("verdict") == "bad").cast("int")).cast("bigint").alias("n_bad"),
-            F.sum("n_repl").cast("bigint").alias("total_repl"),
-            F.sum("n_ctrl").cast("bigint").alias("total_ctrl"),
-            F.sum("n_moji").cast("bigint").alias("total_moji"),
-            (
-                F.sum((F.col("verdict") != "clean").cast("int")).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).alias("reject_share"),
-        )
-        .orderBy("source")
-    )
 
 
 # ---------------------------------------------------------------------------

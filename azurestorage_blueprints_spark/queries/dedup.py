@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from azurestorage_blueprints_spark.functions.text import tokens, word_shingles
 from azurestorage_blueprints_spark.functions.vectors import clamp_sim, dot, norm
-from azurestorage_blueprints_spark.queries import register
+from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
 # MinHash parameters: 16 bands x 4 rows = 64 permutations
@@ -40,7 +40,7 @@ _MH_A = [2 * i + 1 for i in range(1, _MH_PERMS + 1)]
 _MH_B = [3 * i + 7 for i in range(_MH_PERMS)]
 
 
-@register(
+register_sql(
     "q_dedup_exact",
     oracle="""
     SELECT lang, source,
@@ -53,12 +53,6 @@ _MH_B = [3 * i + 7 for i in range(_MH_PERMS)]
     "representative), duplicate count retained. dropDuplicates() compiles to the "
     "same plan but keeps an arbitrary row — min(doc_id) makes it reproducible.",
 )
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    return d.groupBy("lang", "source").agg(
-        F.min("doc_id").alias("kept_doc_id"),
-        F.count(F.lit(1)).alias("n_duplicates"),
-    )
 
 
 @register(
@@ -424,7 +418,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_pairs(sig).orderBy("a_id", "b_id")
 
 
-@register(
+register_sql(
     "q_dedup_levenshtein",
     oracle="""
     WITH a AS (SELECT doc_id, substr(text, 1, 120) AS t FROM documents),
@@ -441,17 +435,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "O(len^2) per pair, so it only ever runs on candidates, never all pairs; "
     "prefixes bound the cost.",
 )
-def q_dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    a = d.filter(F.col("doc_id") < 200).select(
-        F.col("doc_id").alias("a_id"), F.substring("text", 1, 120).alias("a_t")
-    )
-    b = d.select(F.col("doc_id").alias("b_id"), F.substring("text", 1, 120).alias("b_t"))
-    lev = F.levenshtein("a_t", "b_t")
-    return (
-        a.join(b, F.col("b_id") == F.col("a_id") + 20)
-        .select("a_id", "b_id", lev.alias("edit_dist"), (lev <= 40).alias("near_dup"))
-    )
 
 
 @register(

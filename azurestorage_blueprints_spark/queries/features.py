@@ -19,9 +19,8 @@ fact table, so the single-partition sort stays O(days) at any SF.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 
-from azurestorage_blueprints_spark.queries import register
+from azurestorage_blueprints_spark.queries import register_sql
 from azurestorage_blueprints_spark.tables import table
 
 #: smoothing pseudo-count for the target-mean prior (classic Bayesian
@@ -52,7 +51,7 @@ _TARGET_ENCODE_SQL = f"""
 """
 
 
-@register(
+register_sql(
     "q_target_encode",
     oracle=_TARGET_ENCODE_SQL,
     doc="Smoothed target encoding of a categorical feature (part brand "
@@ -66,10 +65,6 @@ _TARGET_ENCODE_SQL = f"""
     "inlined twice by Catalyst); raw and encoded means derive as "
     "doubles from identical exact inputs via shared expression text.",
 )
-def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    for t in ("lineitem", "part"):
-        table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_TARGET_ENCODE_SQL)
 
 
 _LAG_FEATURES_SQL = """
@@ -94,7 +89,7 @@ _LAG_FEATURES_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_ts_lag_features",
     oracle=_LAG_FEATURES_SQL,
     doc="Time-series lag/rolling feature matrix for the daily revenue "
@@ -111,6 +106,3 @@ _LAG_FEATURES_SQL = """
     "join q_calendar_spine's densification first when days can be "
     "missing, or lag-7 silently becomes 7-rows-ago.",
 )
-def q_ts_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_LAG_FEATURES_SQL)

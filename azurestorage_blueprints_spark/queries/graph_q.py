@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from azurestorage_blueprints_spark.queries import finalize_bounded, register
+from azurestorage_blueprints_spark.queries import finalize_bounded, register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
 #: rank scale: 1.0 == 10^12 (fixed-point)
@@ -170,7 +170,7 @@ def q_pagerank_fixedpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MIN_COOCCUR = 2
 
 
-@register(
+register_sql(
     "q_graph_triangles",
     oracle=f"""
     WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -209,37 +209,6 @@ _MIN_COOCCUR = 2
     "wedge enumeration by the ordered degree (the classic "
     "high-degree-vertex mitigation).",
 )
-def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a, b = li.alias("a"), li.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-    ).select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-    edges = (
-        pairs.groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= _MIN_COOCCUR)
-        .select("u", "v")
-    )
-    e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.v") == F.col("e2.u"))
-        .join(e3, (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")))
-        .select(F.col("e1.u").alias("a"), F.col("e1.v").alias("b"), F.col("e2.v").alias("c"))
-    )
-    membership = (
-        tri.select(F.col("a").alias("node"))
-        .union(tri.select(F.col("b").alias("node")))
-        .union(tri.select(F.col("c").alias("node")))
-    )
-    return (
-        membership.groupBy(F.col("node").alias("partkey"))
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-        .orderBy(F.desc("n_triangles"), "partkey")
-        .limit(20)
-    )
 
 
 #: BFS seed set (customer keys) and hop limit
@@ -333,7 +302,7 @@ _EDGE_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_graph_degree_dist",
     oracle=f"""
     WITH e0 AS ({_EDGE_SQL}),
@@ -354,22 +323,6 @@ _EDGE_SQL = """
     "operate on O(nodes) then O(distinct degree) rows. Nothing wider "
     "than the edge pair ever shuffles.",
 )
-def q_graph_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    e0 = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    cd = e0.groupBy("c").agg(F.count(F.lit(1)).cast("bigint").alias("degree"))
-    sd = e0.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("degree"))
-    hist = lambda df, side: (  # noqa: E731
-        df.groupBy("degree")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-        .select(F.lit(side).alias("side"), "degree", "n_nodes")
-    )
-    return hist(cd, "customer").unionAll(hist(sd, "supplier"))
 
 
 _CN_SQL = f"""

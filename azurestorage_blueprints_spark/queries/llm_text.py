@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from azurestorage_blueprints_spark.functions import text as X
-from azurestorage_blueprints_spark.queries import register
+from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
 
@@ -1456,7 +1456,7 @@ _RUNS_SQL = f"""
 """
 
 
-@register(
+register_sql(
     "q_stats_runs_test",
     oracle=_RUNS_SQL,
     doc="Wald-Wolfowitz runs test on the daily revenue's up/down move "
@@ -1473,9 +1473,6 @@ _RUNS_SQL = f"""
     "is a single ordered pass over the CALENDAR-bounded daily table "
     "— constant work at any corpus size.",
 )
-def q_stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_RUNS_SQL)
 
 
 # Cohen's kappa: chance-corrected agreement between the router and the

@@ -4,8 +4,8 @@ An analytics engine that ingests continuously needs the two classic
 table-maintenance shapes: applying a CDC/update batch to a dimension
 (MERGE INTO semantics — update matched, insert new, keep the rest) and
 building slowly-changing-dimension type-2 validity intervals from an
-event history. Both are expressed as pure DataFrame compositions — a
-full outer join for the merge, one `lead()` window for SCD2 — so
+event history. Both are plain relational plans — a full outer join
+for the merge, one `lead()` window for SCD2 — so
 Catalyst plans them like any relational query; on a real lakehouse the
 same plans feed `MERGE INTO` on a Delta/Iceberg sink.
 
@@ -21,11 +21,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from azurestorage_blueprints_spark.queries import register
+from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
 
-@register(
+register_sql(
     "q_merge_upsert",
     oracle="""
     WITH updates AS (
@@ -50,34 +50,6 @@ from azurestorage_blueprints_spark.tables import table
     "each row is classified update/insert/unchanged — exactly the row-level "
     "action split a Delta/Iceberg MERGE computes before writing.",
 )
-def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders")
-    updates = (
-        o.filter(F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp_ntz"))
-        .groupBy(
-            (
-                F.col("o_custkey")
-                + F.when(F.col("o_custkey") % 10 == 0, F.lit(100000)).otherwise(F.lit(0))
-            ).alias("key")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("spend"),
-        )
-    )
-    merged = cust.join(updates, cust["c_custkey"] == updates["key"], "full_outer")
-    action = (
-        F.when(F.col("key").isNull(), F.lit("unchanged"))
-        .when(F.col("c_custkey").isNull(), F.lit("inserted"))
-        .otherwise(F.lit("updated"))
-    )
-    return merged.groupBy(action.alias("action")).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.coalesce(F.col("spend"), F.lit(0.0)).cast("decimal(20,2)"))
-        .cast("double")
-        .alias("total_spend"),
-    )
 
 
 @register(
@@ -376,7 +348,7 @@ _PIT_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_scd2_point_in_time_join",
     oracle=_PIT_SQL,
     doc="Point-in-time (PIT) join against SCD2 validity intervals — the "
@@ -395,39 +367,6 @@ _PIT_SQL = """
     "versions per entity are few, so the residual scan is O(1) per "
     "fact row at any scale.",
 )
-def q_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sup = table(spark, sf_dir, "supplier")
-    flip = F.expr("date_add(CAST('1997-01-01' AS DATE), CAST(s_suppkey % 1000 AS INT))")
-    hist = sup.select(
-        "s_suppkey",
-        F.lit("1992-01-01").cast("date").alias("valid_from"),
-        flip.alias("valid_to"),
-        F.lit("standard").alias("tier"),
-    ).unionByName(
-        sup.select(
-            "s_suppkey",
-            flip.alias("valid_from"),
-            F.lit("2999-12-31").cast("date").alias("valid_to"),
-            F.lit("premium").alias("tier"),
-        )
-    )
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    fact = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        "l_suppkey",
-        "o_orderdate",
-        F.expr("CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)").alias("cents"),
-    )
-    joined = fact.join(
-        F.broadcast(hist),
-        (F.col("l_suppkey") == F.col("s_suppkey"))
-        & (F.col("o_orderdate") >= F.col("valid_from"))
-        & (F.col("o_orderdate") < F.col("valid_to")),
-    )
-    return joined.groupBy("tier").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_lines"),
-        F.expr("CAST(sum(CAST(cents AS DECIMAL(38,0))) AS BIGINT)").alias("revenue_cents"),
-    )
 
 
 def _hilbert_steps(bit_fmt: str) -> list[tuple[str, str, str]]:

@@ -16,9 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from azurestorage_blueprints_spark.queries import register
+from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
 #: minimum baskets containing a pair for it to be reported (support floor)
@@ -113,7 +112,7 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SESSION_GAP_MIN = 30
 
 
-@register(
+register_sql(
     "q_attribution_first_touch",
     oracle=f"""
     WITH ordered AS (
@@ -160,38 +159,6 @@ _SESSION_GAP_MIN = 30
     "windows share the (user_id) partitioning — one shuffle, two "
     "window passes, one final agg.",
 )
-def q_attribution_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = table(spark, sf_dir, "events")
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_ts = F.lag("ts").over(wu)
-    # NTZ minus NTZ is a day-time interval — pure integer arithmetic,
-    # independent of the session timezone (never cast NTZ through an
-    # epoch, which renders via the session zone)
-    is_start = (
-        prev_ts.isNull()
-        | ((F.col("ts") - prev_ts) > F.expr(f"INTERVAL {_SESSION_GAP_MIN} MINUTES"))
-    ).cast("int")
-    sessions = e.select(
-        "user_id", "ts", "event_type", "value", "event_id",
-        F.sum(is_start)
-        .over(wu.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("bigint")
-        .alias("session_no"),
-    )
-    ws = Window.partitionBy("user_id", "session_no").orderBy("ts", "event_id")
-    attributed = sessions.select(
-        "user_id",
-        "session_no",
-        F.first("event_type").over(ws).alias("first_touch"),
-        "value",
-    )
-    return attributed.groupBy("first_touch").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id", "session_no").alias("n_sessions"),
-        F.sum(F.expr("cast(round(value * 100.0) as bigint)"))
-        .cast("bigint")
-        .alias("value_cents"),
-    )
 
 
 @register(

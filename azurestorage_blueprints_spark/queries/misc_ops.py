@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from azurestorage_blueprints_spark.queries import finalize_bounded, register
+from azurestorage_blueprints_spark.queries import finalize_bounded, register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
 
@@ -97,7 +97,7 @@ def q_pandas_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_setop_except_all",
     oracle="""
     SELECT l_returnflag, l_linestatus FROM lineitem WHERE l_quantity <= 45
@@ -107,14 +107,9 @@ def q_pandas_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Bag difference (EXCEPT ALL): multiplicities subtract instead of "
     "set-collapse — exceptAll, not subtract().distinct().",
 )
-def q_setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    a = li.filter(F.col("l_quantity") <= 45).select("l_returnflag", "l_linestatus")
-    b = li.filter(F.col("l_quantity") > 20).select("l_returnflag", "l_linestatus")
-    return a.exceptAll(b)
 
 
-@register(
+register_sql(
     "q_setop_intersect_all",
     oracle="""
     SELECT l_returnflag, l_linestatus FROM lineitem WHERE l_quantity <= 30
@@ -124,11 +119,6 @@ def q_setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Bag intersection (INTERSECT ALL): per-row multiplicity is "
     "min(count_left, count_right).",
 )
-def q_setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    a = li.filter(F.col("l_quantity") <= 30).select("l_returnflag", "l_linestatus")
-    b = li.filter(F.col("l_quantity") > 15).select("l_returnflag", "l_linestatus")
-    return a.intersectAll(b)
 
 
 @register(
@@ -200,7 +190,7 @@ def q_array_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_histogram",
     oracle="""
     SELECT CAST(floor(o_totalprice / 50000.0) AS BIGINT) AS bucket,
@@ -214,14 +204,6 @@ def q_array_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "engines, unlike width_bucket dialects): one hash-agg, map-side "
     "combined — the distributed histogram primitive.",
 )
-def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    bucket = F.floor(F.col("o_totalprice") / 50000.0).cast("bigint")
-    return o.groupBy(bucket.alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("o_totalprice").cast("double").alias("lo"),
-        F.max("o_totalprice").cast("double").alias("hi"),
-    )
 
 
 @register(
@@ -577,7 +559,7 @@ _SKEW_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_skew_diagnose",
     oracle=_SKEW_SQL,
     doc="Join-key skew profiler — the planning step that sizes the salt "
@@ -593,9 +575,6 @@ _SKEW_SQL = """
     "with key tie-breaks. At 100 TB this is the query you run BEFORE "
     "the big join, on the count table, never the fact table.",
 )
-def q_skew_diagnose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_SKEW_SQL)
 
 
 _JSONQ_SQL_ORACLE = """
@@ -851,7 +830,7 @@ _HLLP_SQL = f"""
 """
 
 
-@register(
+register_sql(
     "q_sketch_hll_portable",
     oracle=_HLLP_SQL,
     doc="HyperLogLog distinct-count sketch, fully ORACLE-CHECKED: 64 "
@@ -874,6 +853,3 @@ _HLLP_SQL = f"""
     "combined (lang, bucket) max-agg — 64 rows per language at ANY "
     "corpus size; registers merge by MAX, the 100 TB property.",
 )
-def q_sketch_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_HLLP_SQL)

@@ -22,11 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from azurestorage_blueprints_spark.queries import register
+from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
 
-@register(
+register_sql(
     "q_dq_constraints",
     oracle="""
     SELECT 'unique_o_orderkey' AS check_name, 'orders' AS tbl,
@@ -74,82 +74,6 @@ from azurestorage_blueprints_spark.tables import table
     "anti-join count expressed so one join serves both counters); all "
     "integer arithmetic, so the report is value-hash exact.",
 )
-def q_dq_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table(spark, sf_dir, "orders")
-    customer = table(spark, sf_dir, "customer")
-    lineitem = table(spark, sf_dir, "lineitem")
-    events = table(spark, sf_dir, "events")
-
-    def report(name: str, tbl: str, df: DataFrame, violation) -> DataFrame:
-        return df.agg(
-            F.count(F.lit(1)).cast("bigint").alias("checked"),
-            F.sum(F.when(violation, 1).otherwise(0)).cast("bigint").alias("violations"),
-        ).select(
-            F.lit(name).alias("check_name"),
-            F.lit(tbl).alias("tbl"),
-            "checked",
-            "violations",
-        )
-
-    uniq = orders.agg(
-        F.count(F.lit(1)).cast("bigint").alias("checked"),
-        (F.count(F.lit(1)) - F.countDistinct("o_orderkey"))
-        .cast("bigint")
-        .alias("violations"),
-    ).select(
-        F.lit("unique_o_orderkey").alias("check_name"),
-        F.lit("orders").alias("tbl"),
-        "checked",
-        "violations",
-    )
-    # no broadcast hint on either FK side: a key-only dimension column
-    # broadcasts via AQE while it fits and degrades to a shuffled join
-    # when it doesn't — a hardcoded hint would OOM the build side at
-    # 100 TB dimension sizes
-    fk_oc = report(
-        "fk_orders_customer",
-        "orders",
-        orders.join(
-            customer.select("c_custkey"),
-            orders.o_custkey == F.col("c_custkey"),
-            "left",
-        ),
-        F.col("c_custkey").isNull(),
-    )
-    fk_lo = report(
-        "fk_lineitem_orders",
-        "lineitem",
-        lineitem.select("l_orderkey").join(
-            orders.select("o_orderkey"),
-            lineitem.l_orderkey == F.col("o_orderkey"),
-            "left",
-        ),
-        F.col("o_orderkey").isNull(),
-    )
-    nn_name = report(
-        "not_null_c_name", "customer", customer, F.col("c_name").isNull()
-    )
-    rng = report(
-        "range_l_quantity_1_50",
-        "lineitem",
-        lineitem,
-        (F.col("l_quantity") < 1) | (F.col("l_quantity") > 50),
-    )
-    dom = report(
-        "domain_o_orderstatus",
-        "orders",
-        orders,
-        ~F.col("o_orderstatus").isin("F", "O", "P"),
-    )
-    nn_val = report("not_null_value", "events", events, F.col("value").isNull())
-    return (
-        uniq.unionByName(fk_oc)
-        .unionByName(fk_lo)
-        .unionByName(nn_name)
-        .unionByName(rng)
-        .unionByName(dom)
-        .unionByName(nn_val)
-    )
 
 
 #: the forget cohort: a deterministic customer predicate standing in
@@ -157,7 +81,7 @@ def q_dq_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FORGET_MOD = 211
 
 
-@register(
+register_sql(
     "q_forget_manifest",
     oracle=f"""
     WITH cohort AS (
@@ -196,36 +120,6 @@ _FORGET_MOD = 211
     "walk powers corpus takedowns on the documents table "
     "(q_decontaminate shares the drop-list join shape).",
 )
-def q_forget_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = table(spark, sf_dir, "customer")
-    orders = table(spark, sf_dir, "orders")
-    lineitem = table(spark, sf_dir, "lineitem")
-    events = table(spark, sf_dir, "events")
-
-    cohort = customer.filter(F.col("c_custkey") % _FORGET_MOD == 0).select("c_custkey")
-    o = orders.join(
-        F.broadcast(cohort), orders.o_custkey == cohort.c_custkey, "left_semi"
-    ).select("o_orderkey")
-
-    def manifest(tbl: str, df: DataFrame, key: str) -> DataFrame:
-        return df.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_delete"),
-            F.min(key).cast("bigint").alias("min_key"),
-            F.max(key).cast("bigint").alias("max_key"),
-        ).select(F.lit(tbl).alias("tbl"), "n_delete", "min_key", "max_key")
-
-    li = lineitem.join(
-        F.broadcast(o), lineitem.l_orderkey == o.o_orderkey, "left_semi"
-    )
-    ev = events.join(
-        F.broadcast(cohort), events.user_id == cohort.c_custkey, "left_semi"
-    )
-    return (
-        manifest("customer", cohort, "c_custkey")
-        .unionByName(manifest("orders", o, "o_orderkey"))
-        .unionByName(manifest("lineitem", li, "l_orderkey"))
-        .unionByName(manifest("events", ev, "event_id"))
-    )
 
 
 # daily-volume anomaly screen: |today - trailing-7 mean| > 3 sigma as an
@@ -254,7 +148,7 @@ _DQ_ANOMALY_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_dq_anomaly_rules",
     oracle=_DQ_ANOMALY_SQL,
     doc="Data-quality volume-anomaly screen: flag any ingest day whose "
@@ -273,9 +167,6 @@ _DQ_ANOMALY_SQL = """
     "false, insufficient window), keeping the result a full audit "
     "report rather than a possibly-empty exception list.",
 )
-def q_dq_anomaly_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_DQ_ANOMALY_SQL)
 
 
 #: k-anonymity threshold: an equivalence class smaller than this is a
@@ -303,7 +194,7 @@ _KANON_SQL = f"""
 """
 
 
-@register(
+register_sql(
     "q_k_anonymity",
     oracle=_KANON_SQL,
     doc="k-anonymity / l-diversity release screen — the privacy "
@@ -324,39 +215,6 @@ _KANON_SQL = f"""
     "a 1-row total rides a broadcast cross join. O(distinct k) rows "
     "out at any scale.",
 )
-def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer")
-    classes = c.groupBy(
-        "c_nationkey",
-        "c_mktsegment",
-        F.floor(F.col("c_acctbal") / 1000.0).cast("bigint").alias("bal_bucket"),
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.countDistinct(F.when(F.col("c_acctbal") < 0.0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("l_div"),
-    )
-    tot = classes.agg(F.sum("k").cast("bigint").alias("n_total"))
-    return (
-        classes.crossJoin(F.broadcast(tot))
-        .groupBy("k")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_classes"),
-            F.sum("k").cast("bigint").alias("n_rows"),
-            F.min("l_div").cast("bigint").alias("min_l"),
-            (F.sum("k").cast("double") / F.max("n_total").cast("double")).alias(
-                "row_share"
-            ),
-        )
-        .select(
-            "k",
-            "n_classes",
-            "n_rows",
-            (F.col("k") < _KANON_K).alias("at_risk"),
-            "min_l",
-            "row_share",
-        )
-    )
 
 
 #: DP release parameters: epsilon-differential privacy for count
@@ -407,7 +265,7 @@ _DP_SQL = f"""
 """
 
 
-@register(
+register_sql(
     "q_dp_noisy_counts",
     oracle=_DP_SQL,
     doc="Differentially-private count release — the Laplace mechanism "
@@ -437,43 +295,6 @@ _DP_SQL = f"""
     "projection (O(groups), never row-scale); dimension join "
     "broadcasts. O(nations) rows out.",
 )
-def q_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer")
-    n = table(spark, sf_dir, "nation")
-    m31 = F.lit(2147483648).cast("bigint")
-    grp = (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name", F.col("n_nationkey").cast("bigint").alias("k"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("true_count"))
-    )
-    seeded = grp.select(
-        "n_name",
-        "true_count",
-        (((F.col("k") % m31) * F.lit(2654435761).cast("bigint") + F.lit(_DP_SALT)) % m31).alias("a"),
-    )
-    mix = "(CAST((a * a - (a * a) % 65536) / 65536 AS BIGINT) + a) % 2147483648"
-    for _ in range(2):
-        seeded = seeded.select("n_name", "true_count", F.expr(mix).alias("a"))
-    u = F.expr("((a * 2654435761) % 4294967296 + 0.5) / 4294967296.0")
-    noise_micro = F.round(
-        F.when(u < 0.5, F.lit(1.0)).otherwise(F.lit(-1.0))
-        * F.lit(1.0 / _DP_EPS)
-        * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(u - F.lit(0.5)))
-        * F.lit(1000000.0)
-    ).cast("bigint")
-    noised = seeded.select("n_name", "true_count", noise_micro.alias("noise_micro"))
-    released = F.greatest(
-        F.col("true_count")
-        + F.round(F.col("noise_micro").cast("double") / F.lit(1000000.0)).cast("bigint"),
-        F.lit(0).cast("bigint"),
-    )
-    return noised.select(
-        "n_name",
-        "true_count",
-        "noise_micro",
-        F.lit(float(_DP_EPS)).alias("epsilon"),
-        released.cast("bigint").alias("released_count"),
-    )
 
 
 #: t-closeness release thresholds: distinct-l floor and the max total

@@ -2,9 +2,11 @@
 
 Every category the reference lacks (joins, aggregations, grouping
 sets, window functions, sorts/limits, set ops, scalar functions,
-array/JSON functions) declared as oracle-checked queries. All plans
-are DataFrame-API (Catalyst-optimized); SQL is used only where the
-construct is SQL-native (GROUPING SETS).
+array/JSON functions) declared as oracle-checked queries. A query
+whose oracle SQL runs verbatim on Spark is registered with
+``register_sql``: that text is its Spark plan too, so Catalyst sees the
+whole query in one ``spark.sql`` call. DataFrame builders remain where
+the Spark form differs from the oracle text or measured faster.
 
 Scale notes baked into each plan:
 - dimension tables (region/nation/part/supplier/customer) are
@@ -19,11 +21,10 @@ Scale notes baked into each plan:
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from azurestorage_blueprints_spark.queries import register
-from azurestorage_blueprints_spark.tables import register_views, table
+from azurestorage_blueprints_spark.queries import register, register_sql
+from azurestorage_blueprints_spark.tables import table
 
 DEC = "decimal(12,2)"
 
@@ -42,10 +43,6 @@ def _one_minus(c: str) -> Column:
     return F.lit(1).cast("decimal(4,2)") - F.col(c).cast("decimal(4,2)")
 
 
-def _one_plus(c: str) -> Column:
-    return F.lit(1).cast("decimal(4,2)") + F.col(c).cast("decimal(4,2)")
-
-
 # revenue = l_extendedprice * (1 - l_discount), exact decimal
 def _revenue() -> Column:
     return _dec("l_extendedprice") * _one_minus("l_discount")
@@ -56,7 +53,7 @@ def _revenue() -> Column:
 # ---------------------------------------------------------------------------
 
 
-@register(
+register_sql(
     "q01_pricing_summary",
     # every decimal sum converts through the SINGLE-ROUNDING path
     # cast(cast(sum * 10^s AS BIGINT) AS DOUBLE) / 10^s.0 — a direct
@@ -86,31 +83,9 @@ def _revenue() -> Column:
     "bigint→double conversion so the hash holds at any volume within "
     "the 2^63 scaled-sum bound (~sf300 for sum_charge).",
 )
-def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-
-    def exact(dec_sum: Column, scale: int) -> Column:
-        m = 10 ** scale
-        return (dec_sum * m).cast("bigint").cast("double") / float(m)
-
-    cnt = F.count(F.lit(1))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp_ntz"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            exact(F.sum(_dec("l_quantity")), 2).alias("sum_qty"),
-            exact(F.sum(_dec("l_extendedprice")), 2).alias("sum_base_price"),
-            exact(F.sum(_revenue()), 4).alias("sum_disc_price"),
-            exact(F.sum(_revenue() * _one_plus("l_tax")), 6).alias("sum_charge"),
-            (exact(F.sum(_dec("l_quantity")), 2) / cnt).alias("avg_qty"),
-            (exact(F.sum(_dec("l_extendedprice")), 2) / cnt).alias("avg_price"),
-            (exact(F.sum(F.col("l_discount").cast("decimal(4,2)")), 2) / cnt).alias("avg_disc"),
-            cnt.alias("count_order"),
-        )
-    )
 
 
-@register(
+register_sql(
     "q06_forecast_revenue",
     oracle="""
     SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
@@ -123,25 +98,9 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="TPC-H Q6 shape: tight multi-predicate filter fully pushed to the parquet scan.",
 )
-def q06_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
-            & F.col("l_discount").between(0.03, 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.sum(_dec("l_extendedprice") * F.col("l_discount").cast("decimal(4,2)"))
-            .cast("double")
-            .alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
 
 
-@register(
+register_sql(
     "q_agg_distinct",
     oracle="""
     SELECT o_orderpriority,
@@ -152,16 +111,9 @@ def q06_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Distinct aggregation: multiple count(DISTINCT) in one hash-agg (Catalyst expand).",
 )
-def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.countDistinct("o_custkey").alias("n_customers"),
-        F.countDistinct("o_orderstatus").alias("n_statuses"),
-        F.count(F.lit(1)).alias("n_orders"),
-    )
 
 
-@register(
+register_sql(
     "q_agg_variance",
     oracle="""
     SELECT l_returnflag,
@@ -176,20 +128,9 @@ def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Variance via exact decimal moments (sum, sum-of-squares) — order-insensitive, "
     "unlike a naive stddev over doubles.",
 )
-def q_agg_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    s1 = F.sum(_dec("l_quantity")).cast("double")
-    s2 = F.sum(_dec("l_quantity") * _dec("l_quantity")).cast("double")
-    n = F.count(F.lit(1))
-    return li.groupBy("l_returnflag").agg(
-        n.alias("n"),
-        s1.alias("s1"),
-        s2.alias("s2"),
-        ((s2 - s1 * s1 / n) / (n - F.lit(1))).alias("variance"),
-    )
 
 
-@register(
+register_sql(
     "q_agg_median",
     oracle="""
     SELECT l_returnflag, median(l_quantity) AS median_qty,
@@ -199,13 +140,6 @@ def q_agg_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Exact median (quantities are integral doubles, so interpolation is exact in "
     "both engines).",
 )
-def q_agg_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.median("l_quantity").alias("median_qty"),
-        F.min("l_quantity").alias("min_qty"),
-        F.max("l_quantity").alias("max_qty"),
-    )
 
 
 @register(
@@ -227,7 +161,7 @@ def q_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+register_sql(
     "q_cube",
     oracle="""
     SELECT l_returnflag, l_linestatus,
@@ -237,14 +171,9 @@ def q_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="CUBE: all 2^k grouping combinations in one pass (Catalyst Expand).",
 )
-def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        _dsum("l_quantity", "sum_qty"), F.count(F.lit(1)).alias("n")
-    )
 
 
-@register(
+register_sql(
     "q_rollup",
     oracle="""
     SELECT o_orderpriority, o_orderstatus,
@@ -254,14 +183,9 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="ROLLUP: hierarchical subtotals priority → (priority,status) → grand total.",
 )
-def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    return o.rollup("o_orderpriority", "o_orderstatus").agg(
-        _dsum("o_totalprice", "sum_price"), F.count(F.lit(1)).alias("n")
-    )
 
 
-@register(
+register_sql(
     "q_grouping_sets",
     oracle="""
     SELECT l_returnflag, l_linestatus,
@@ -271,19 +195,9 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Explicit GROUPING SETS via Spark SQL (same Catalyst path as the DataFrame API).",
 )
-def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
-    )
 
 
-@register(
+register_sql(
     "q_pivot",
     oracle="""
     SELECT l_returnflag,
@@ -293,18 +207,6 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Pivot: one output column per pivoted value (conditional aggregation).",
 )
-def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .pivot("l_linestatus", ["F", "O"])
-        .agg(F.sum(_dec("l_quantity")))
-        .select(
-            "l_returnflag",
-            F.col("F").cast("double").alias("qty_f"),
-            F.col("O").cast("double").alias("qty_o"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -385,7 +287,7 @@ def q05_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q10_returned_items",
     oracle="""
     SELECT c.c_custkey, c.c_name, n.n_name,
@@ -400,20 +302,6 @@ def q05_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="TPC-H Q10 shape: returned-item revenue ranking, deterministic top-20.",
 )
-def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = table(spark, sf_dir, "nation")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.sum(_revenue()).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
 
 
 @register(
@@ -438,7 +326,7 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_join_semi",
     oracle="""
     SELECT c.c_mktsegment, count(*) AS n_customers
@@ -449,17 +337,9 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Left-semi join (EXISTS): probes without duplicating matched rows.",
 )
-def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
 
 
-@register(
+register_sql(
     "q_join_anti",
     oracle="""
     SELECT c.c_mktsegment, count(*) AS n_customers
@@ -472,17 +352,9 @@ def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dense synthetic data every customer has SOME order, so the unqualified "
     "predicate would be vacuously empty and test nothing).",
 )
-def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
 
 
-@register(
+register_sql(
     "q_join_left_outer",
     oracle="""
     SELECT c.c_custkey, count(o.o_orderkey) AS n_orders,
@@ -492,22 +364,9 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Left-outer join preserving customers with zero orders (count over nullable key).",
 )
-def q_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(
-            F.count("o_orderkey").alias("n_orders"),
-            F.coalesce(F.sum(_dec("o_totalprice")), F.lit(0).cast(DEC))
-            .cast("double")
-            .alias("total_spent"),
-        )
-    )
 
 
-@register(
+register_sql(
     "q_join_full_outer",
     oracle="""
     WITH cn AS (SELECT c_nationkey AS nk, count(*) AS n_customers FROM customer GROUP BY 1),
@@ -520,38 +379,18 @@ def q_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Full-outer join of two pre-aggregated sides (aggregate-then-join keeps the "
     "shuffle small at scale).",
 )
-def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cn = (
-        table(spark, sf_dir, "customer")
-        .groupBy(F.col("c_nationkey").alias("nk"))
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
-    sn = (
-        table(spark, sf_dir, "supplier")
-        .groupBy(F.col("s_nationkey").alias("nk"))
-        .agg(F.count(F.lit(1)).alias("n_suppliers"))
-    )
-    return cn.join(sn, cn.nk == sn.nk, "full_outer").select(
-        F.coalesce(cn.nk, sn.nk).alias("nationkey"),
-        F.coalesce("n_customers", F.lit(0)).alias("n_customers"),
-        F.coalesce("n_suppliers", F.lit(0)).alias("n_suppliers"),
-    )
 
 
-@register(
+register_sql(
     "q_join_cross",
     oracle="""
     SELECT r.r_name, n.n_name FROM region r CROSS JOIN nation n
     """,
     doc="Cross join (cartesian product) of two small dims — broadcast NLJ physically.",
 )
-def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = table(spark, sf_dir, "region")
-    n = table(spark, sf_dir, "nation")
-    return r.crossJoin(F.broadcast(n)).select("r_name", "n_name")
 
 
-@register(
+register_sql(
     "q_join_theta",
     oracle="""
     SELECT s.s_suppkey, count(*) AS n_poorer_customers
@@ -562,17 +401,6 @@ def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Theta join: equi-key (nationkey) as blocking + non-equi residual predicate — "
     "the equi part keeps the plan a hash join, not an NLJ.",
 )
-def q_join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = table(spark, sf_dir, "supplier")
-    c = table(spark, sf_dir, "customer")
-    return (
-        s.join(
-            c,
-            (s.s_nationkey == c.c_nationkey) & (s.s_acctbal > c.c_acctbal),
-        )
-        .groupBy("s_suppkey")
-        .agg(F.count(F.lit(1)).alias("n_poorer_customers"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -580,7 +408,7 @@ def q_join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+register_sql(
     "q_window_topk_per_group",
     oracle="""
     SELECT p_brand, p_partkey, p_retailprice, rn FROM (
@@ -592,17 +420,9 @@ def q_join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Top-k per group via ranking window — no global sort; each partition ranks "
     "locally after a hash shuffle on the group key.",
 )
-def q_window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = table(spark, sf_dir, "part")
-    w = W.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), "p_partkey")
-    return (
-        p.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("p_brand", "p_partkey", "p_retailprice", "rn")
-    )
 
 
-@register(
+register_sql(
     "q_window_running_sum",
     oracle="""
     SELECT o_custkey, o_orderkey,
@@ -614,21 +434,9 @@ def q_window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Running total per customer (cumulative frame); decimal arithmetic keeps the "
     "prefix sums exact.",
 )
-def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    w = (
-        W.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.sum(_dec("o_totalprice")).over(w).cast("double").alias("running_spend"),
-    )
 
 
-@register(
+register_sql(
     "q_window_lag_lead",
     oracle="""
     SELECT user_id, event_id, value,
@@ -640,20 +448,9 @@ def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="lag/lead analytics over an event stream ordered by (ts, id).",
 )
-def q_window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "user_id",
-        "event_id",
-        "value",
-        F.lag("value").over(w).alias("prev_value"),
-        F.lead("value").over(w).alias("next_value"),
-        (F.col("value") - F.coalesce(F.lag("value").over(w), F.lit(0.0))).alias("delta"),
-    )
 
 
-@register(
+register_sql(
     "q_window_ntile_rank",
     oracle="""
     SELECT c_custkey, c_acctbal,
@@ -665,20 +462,9 @@ def q_window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="ntile / rank / dense_rank over global windows with deterministic tie-breaks.",
 )
-def q_window_ntile_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer")
-    w = W.orderBy(F.desc("c_acctbal"), "c_custkey")
-    wseg = W.orderBy("c_mktsegment")
-    return c.select(
-        "c_custkey",
-        "c_acctbal",
-        F.ntile(4).over(w).alias("quartile"),
-        F.rank().over(wseg).alias("seg_rank"),
-        F.dense_rank().over(wseg).alias("seg_dense_rank"),
-    )
 
 
-@register(
+register_sql(
     "q_window_first_last",
     oracle="""
     SELECT DISTINCT c_mktsegment,
@@ -690,18 +476,6 @@ def q_window_ntile_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="first_value/last_value with an unbounded frame, deduplicated per group.",
 )
-def q_window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer")
-    w = (
-        W.partitionBy("c_mktsegment")
-        .orderBy(F.desc("c_acctbal"), "c_custkey")
-        .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    )
-    return c.select(
-        "c_mktsegment",
-        F.first("c_custkey").over(w).alias("richest_cust"),
-        F.last("c_custkey").over(w).alias("poorest_cust"),
-    ).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -709,7 +483,7 @@ def q_window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+register_sql(
     "q_topk_orders",
     oracle="""
     SELECT o_orderkey, o_totalprice, o_orderpriority
@@ -717,16 +491,9 @@ def q_window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Global top-k: Spark's TakeOrderedAndProject — per-partition heaps, no full sort.",
 )
-def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    return (
-        o.select("o_orderkey", "o_totalprice", "o_orderpriority")
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .limit(10)
-    )
 
 
-@register(
+register_sql(
     "q_setop_union",
     oracle="""
     SELECT nk, src FROM (
@@ -736,23 +503,9 @@ def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="UNION ALL of two distinct projections (tagged provenance).",
 )
-def q_setop_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = (
-        table(spark, sf_dir, "customer")
-        .select(F.col("c_nationkey").alias("nk"))
-        .distinct()
-        .withColumn("src", F.lit("customer"))
-    )
-    s = (
-        table(spark, sf_dir, "supplier")
-        .select(F.col("s_nationkey").alias("nk"))
-        .distinct()
-        .withColumn("src", F.lit("supplier"))
-    )
-    return c.unionByName(s)
 
 
-@register(
+register_sql(
     "q_setop_intersect",
     oracle="""
     SELECT c_nationkey AS nk FROM customer
@@ -761,13 +514,9 @@ def q_setop_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="INTERSECT (distinct): nations having both customers and suppliers.",
 )
-def q_setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk"))
-    s = table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nk"))
-    return c.intersect(s)
 
 
-@register(
+register_sql(
     "q_setop_except",
     oracle="""
     SELECT c_nationkey AS nk FROM customer
@@ -778,14 +527,6 @@ def q_setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     "supplier (the unqualified variant is vacuously empty — every nation "
     "has some supplier in this synthetic data).",
 )
-def q_setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk"))
-    s = (
-        table(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") > 8000)
-        .select(F.col("s_nationkey").alias("nk"))
-    )
-    return c.subtract(s)  # subtract == EXCEPT DISTINCT (exceptAll is bag difference)
 
 
 # ---------------------------------------------------------------------------
@@ -879,7 +620,7 @@ def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_math_funcs",
     oracle="""
     SELECT l_orderkey, l_linenumber,
@@ -895,22 +636,9 @@ def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Math scalars restricted to the IEEE-deterministic subset (sqrt is correctly "
     "rounded; no libm-dependent exp/log in oracle-checked paths).",
 )
-def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.abs(F.col("l_extendedprice") - F.col("l_quantity") * 1000.0).alias("abs_diff"),
-        F.floor("l_extendedprice").alias("price_floor"),
-        F.ceil("l_extendedprice").alias("price_ceil"),
-        F.sqrt("l_quantity").alias("qty_sqrt"),
-        (F.col("l_quantity") * F.col("l_quantity")).alias("qty_sq"),
-        (F.col("l_quantity").cast("bigint") % 7).alias("qty_mod7"),
-        F.signum(F.col("l_extendedprice") - 50000.0).alias("price_side"),
-    )
 
 
-@register(
+register_sql(
     "q_case_when",
     oracle="""
     SELECT CASE WHEN o_totalprice < 50000  THEN 'small'
@@ -923,18 +651,6 @@ def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="CASE WHEN bucketing feeding an aggregation.",
 )
-def q_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    band = (
-        F.when(F.col("o_totalprice") < 50000, "small")
-        .when(F.col("o_totalprice") < 150000, "medium")
-        .when(F.col("o_totalprice") < 300000, "large")
-        .otherwise("jumbo")
-    )
-    return (
-        o.groupBy(band.alias("price_band"))
-        .agg(F.count(F.lit(1)).alias("n_orders"), _dsum("o_totalprice", "total"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1194,7 +910,7 @@ def q_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_null_semantics",
     oracle="""
     WITH g AS (
@@ -1217,25 +933,3 @@ def q_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "join keys also hash-partition normally, so <=> joins shuffle like "
     "any equi-join at scale.",
 )
-def q_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    g = o.groupBy(
-        F.expr("nullif(o_orderstatus, 'O')").alias("maybe_status")
-    ).agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.count(F.expr("nullif(o_orderstatus, 'O')")).alias("n_counted"),
-    )
-    a, b = g.alias("a"), g.alias("b")
-    return (
-        a.join(b, F.col("a.maybe_status").eqNullSafe(F.col("b.maybe_status")))
-        .select(
-            F.col("a.maybe_status").alias("maybe_status"),
-            F.col("a.n_orders").alias("n_orders"),
-            F.col("a.n_counted").alias("n_counted"),
-            F.col("b.n_orders").alias("n_selfjoin"),
-            F.row_number()
-            .over(W.orderBy(F.col("a.maybe_status").asc_nulls_last()))
-            .cast("int")
-            .alias("rn_nulls_last"),
-        )
-    )

@@ -15,11 +15,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from azurestorage_blueprints_spark.queries import register
+from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
 
-@register(
+register_sql(
     "q_bool_bit_aggs",
     oracle="""
     SELECT o_orderpriority,
@@ -38,16 +38,6 @@ from azurestorage_blueprints_spark.tables import table
     "(partition, priority), constant-size regardless of row count. "
     "bit_xor over a key column is the classic distributed checksum.",
 )
-def q_bool_bit_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.expr("bool_and(o_totalprice > 1000.0)").alias("all_above_1k"),
-        F.expr("bool_or(o_orderstatus = 'F')").alias("any_finished"),
-        F.expr("bit_and(o_custkey)").cast("bigint").alias("key_bit_and"),
-        F.expr("bit_or(o_custkey)").cast("bigint").alias("key_bit_or"),
-        F.expr("bit_xor(o_custkey)").cast("bigint").alias("key_bit_xor"),
-        F.count(F.lit(1)).alias("n_orders"),
-    )
 
 
 @register(
@@ -137,7 +127,7 @@ def q_calendar_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SNAP_A, _SNAP_B = "1997-01-01", "1999-01-01"
 
 
-@register(
+register_sql(
     "q_snapshot_diff",
     oracle=f"""
     WITH snap_a AS (
@@ -166,40 +156,9 @@ _SNAP_A, _SNAP_B = "1997-01-01", "1999-01-01"
     "custkey — at 100 TB both sides are pre-aggregated BEFORE the "
     "join, so the shuffle carries one row per customer, not per order.",
 )
-def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-
-    def snap(cutoff: str) -> DataFrame:
-        return (
-            o.filter(F.col("o_orderdate") < F.lit(cutoff).cast("date"))
-            .groupBy("o_custkey")
-            .agg(F.count(F.lit(1)).alias("n_orders"))
-        )
-
-    a = snap(_SNAP_A).select(
-        F.col("o_custkey").alias("a_key"), F.col("n_orders").alias("a_n")
-    )
-    b = snap(_SNAP_B).select(
-        F.col("o_custkey").alias("b_key"), F.col("n_orders").alias("b_n")
-    )
-    joined = b.join(a, b.b_key == a.a_key, "left")
-    change = (
-        F.when(F.col("a_key").isNull(), F.lit("added"))
-        .when(F.col("b_n") > F.col("a_n"), F.lit("changed"))
-        .otherwise(F.lit("same"))
-        .alias("change_type")
-    )
-    return (
-        joined.select(change, "b_n", F.coalesce("a_n", F.lit(0)).alias("a_n0"))
-        .groupBy("change_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.sum(F.col("b_n") - F.col("a_n0")).cast("bigint").alias("order_delta"),
-        )
-    )
 
 
-@register(
+register_sql(
     "q_ts_multires_rollup",
     oracle="""
     SELECT event_type,
@@ -224,28 +183,9 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scan cost vs running per-resolution queries, and the output IS "
     "the rollup table you would persist.",
 )
-def q_ts_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from azurestorage_blueprints_spark.tables import register_views
-
-    register_views(spark, sf_dir, ("events",))
-    return spark.sql(
-        """
-        SELECT event_type,
-               CAST(ts AS DATE) AS day,
-               CAST(EXTRACT(hour FROM ts) AS BIGINT) AS hr,
-               CAST(GROUPING(CAST(EXTRACT(hour FROM ts) AS BIGINT)) AS BIGINT) AS is_day_level,
-               CAST(count(*) AS BIGINT) AS n_events,
-               CAST(SUM(CAST(ROUND(value * 100.0) AS BIGINT)) AS BIGINT) AS value_cents
-        FROM events
-        GROUP BY GROUPING SETS (
-          (event_type, CAST(ts AS DATE)),
-          (event_type, CAST(ts AS DATE), CAST(EXTRACT(hour FROM ts) AS BIGINT))
-        )
-        """
-    )
 
 
-@register(
+register_sql(
     "q_ratio_to_report",
     oracle="""
     WITH rev AS (
@@ -273,35 +213,6 @@ def q_ts_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "region key AFTER aggregation to 25 nation rows, so the window "
     "cost is nil at any input scale.",
 )
-def q_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    n = table(spark, sf_dir, "nation")
-    r = table(spark, sf_dir, "region")
-    rev = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
-        .agg(
-            F.sum(F.expr("cast(round(o_totalprice * 100.0) as bigint)"))
-            .cast("bigint")
-            .alias("nation_cents")
-        )
-    )
-    w = Window.partitionBy("region")
-    region_cents = F.sum("nation_cents").over(w).cast("bigint")
-    return rev.select(
-        "region",
-        "nation",
-        "nation_cents",
-        region_cents.alias("region_cents"),
-        (F.col("nation_cents").cast("double") / F.sum("nation_cents").over(w)).alias(
-            "revenue_share"
-        ),
-    )
 
 
 @register(
@@ -344,7 +255,7 @@ def q_stats_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_rfm_segmentation",
     oracle="""
     WITH rfm AS (
@@ -381,33 +292,6 @@ def q_stats_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sort is the cost; pre-aggregation (one row per customer) keeps "
     "it proportional to customers, never orders.",
 )
-def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    rfm = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy("c_custkey", "c_mktsegment")
-        .agg(
-            F.max("o_orderdate").alias("last_order"),
-            F.count(F.lit(1)).alias("freq"),
-            F.sum(F.expr("cast(round(o_totalprice * 100.0) as bigint)"))
-            .cast("bigint")
-            .alias("cents"),
-        )
-    )
-    seg = Window.partitionBy("c_mktsegment")
-    r = F.ntile(4).over(seg.orderBy("last_order", "c_custkey"))
-    f = F.ntile(4).over(seg.orderBy("freq", "c_custkey"))
-    m = F.ntile(4).over(seg.orderBy("cents", "c_custkey"))
-    return (
-        rfm.select(
-            "c_mktsegment", (r * 100 + f * 10 + m).cast("bigint").alias("rfm_segment")
-        )
-        .groupBy("c_mktsegment", "rfm_segment")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
 
 
 #: columns profiled by q_table_profile (name, typed min/max stringify
@@ -465,7 +349,7 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@register(
+register_sql(
     "q_weighted_median",
     oracle="""
     WITH w AS (
@@ -494,37 +378,13 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "The median is an actual data value, so the double is bit-exact "
     "across engines; weights stay integer.",
 )
-def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    li = table(spark, sf_dir, "lineitem")
-    wspec = (
-        W.partitionBy("l_returnflag")
-        .orderBy("l_extendedprice", "l_orderkey", "l_linenumber")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    wtot = W.partitionBy("l_returnflag")
-    w = li.select(
-        "l_returnflag",
-        "l_extendedprice",
-        F.sum(F.col("l_quantity").cast("bigint")).over(wspec).alias("cum"),
-        F.sum(F.col("l_quantity").cast("bigint")).over(wtot).alias("total"),
-    )
-    return (
-        w.filter(2 * F.col("cum") >= F.col("total"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.min("l_extendedprice").alias("w_median"),
-            F.min("total").cast("bigint").alias("total_weight"),
-        )
-    )
 
 
 #: equi-depth bucket count for the value-distribution histogram
 _EQUIDEPTH_BUCKETS = 8
 
 
-@register(
+register_sql(
     "q_histogram_equidepth",
     oracle=f"""
     WITH t AS (
@@ -548,21 +408,6 @@ _EQUIDEPTH_BUCKETS = 8
     "approx_percentile boundaries + one partitioned pass (the sketch "
     "rung exists as q_approx_percentile_sketch).",
 )
-def q_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    o = table(spark, sf_dir, "orders")
-    t = o.select(
-        "o_totalprice",
-        F.ntile(_EQUIDEPTH_BUCKETS)
-        .over(W.orderBy("o_totalprice", "o_orderkey"))
-        .alias("bucket"),
-    )
-    return t.groupBy("bucket").agg(
-        F.min("o_totalprice").alias("lo"),
-        F.max("o_totalprice").alias("hi"),
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-    )
 
 
 @register(
@@ -625,7 +470,7 @@ def q_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_mom_change",
     oracle="""
     WITH monthly AS (
@@ -648,25 +493,6 @@ def q_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     "single-partition ORDER BY is a non-issue at any scale; the "
     "fact-side cost is one hash-agg keyed on month.",
 )
-def q_mom_change(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    o = table(spark, sf_dir, "orders")
-    monthly = o.groupBy(
-        F.date_trunc("month", "o_orderdate").cast("timestamp_ntz").alias("month")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("revenue"),
-        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-    )
-    w = W.orderBy("month")
-    prev = F.lag("revenue").over(w)
-    return monthly.select(
-        "month",
-        "revenue",
-        "n_orders",
-        prev.alias("prev_revenue"),
-        ((F.col("revenue") - prev) / prev).alias("mom_change"),
-    )
 
 
 # average order value in cents, derived from exact integer moments and
@@ -677,7 +503,7 @@ _AVG_CENTS = (
 )
 
 
-@register(
+register_sql(
     "q_subquery_scalar",
     oracle=f"""
     SELECT o_orderpriority,
@@ -698,18 +524,6 @@ _AVG_CENTS = (
     "shared expression text, so the filter threshold is bit-identical "
     "on both engines.",
 )
-def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        f"""
-        SELECT o_orderpriority,
-               CAST(count(*) AS BIGINT) AS n_above,
-               CAST(min(({_AVG_CENTS})) AS DOUBLE) AS global_avg_cents
-        FROM orders
-        WHERE CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) > ({_AVG_CENTS})
-        GROUP BY o_orderpriority
-        """
-    )
 
 
 _CHURN_SQL = """
@@ -727,7 +541,7 @@ _CHURN_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_subquery_exists",
     oracle=_CHURN_SQL,
     doc="Correlated EXISTS / NOT EXISTS: customers who ordered in 1995 "
@@ -740,13 +554,9 @@ _CHURN_SQL = """
     "into broadcasts when a year's distinct custkey set is small, then "
     "an O(nations) agg.",
 )
-def q_subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    for t in ("customer", "nation", "orders"):
-        table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_CHURN_SQL)
 
 
-@register(
+register_sql(
     "q_join_null_safe",
     oracle="""
     WITH a AS (
@@ -770,20 +580,6 @@ def q_subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the fact scans shuffle on nothing wider than the status column "
     "with map-side partial aggregation.",
 )
-def q_join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    a = (
-        o.groupBy(F.nullif(F.col("o_orderstatus"), F.lit("P")).alias("k"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
-    )
-    b = (
-        li.groupBy(F.nullif(F.col("l_linestatus"), F.lit("O")).alias("k"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_lines"))
-    )
-    return a.join(b, a.k.eqNullSafe(b.k)).select(
-        a.k.alias("status_key"), "n_orders", "n_lines"
-    )
 
 
 @register(
@@ -848,13 +644,9 @@ def q_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # interpolated percentile from the two adjacent order statistics, exact
 # integer inputs -> one shared IEEE expression tree on both engines
 _PC_R = "(CAST(n - 1 AS DOUBLE) * 0.9)"
-_PC_VAL = (
-    f"(CAST(lo AS DOUBLE) + ({_PC_R} - floor({_PC_R}))"
-    " * (CAST(hi AS DOUBLE) - CAST(lo AS DOUBLE)))"
-)
 
 
-@register(
+register_sql(
     "q_percentile_cont",
     oracle=f"""
     WITH ranked AS (
@@ -896,40 +688,9 @@ _PC_VAL = (
     "(q_approx_percentile_sketch) and this query is its calibration "
     "oracle.",
 )
-def q_percentile_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    o = table(spark, sf_dir, "orders")
-    cents = F.expr("CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)")
-    w = W.partitionBy("o_orderpriority").orderBy(F.expr("floor(o_totalprice * 100.0 + 0.5)"))
-    ranked = o.select(
-        F.col("o_orderpriority").alias("grp"),
-        cents.alias("cents"),
-        F.row_number().over(w).cast("bigint").alias("rn"),
-        F.count(F.lit(1))
-        .over(W.partitionBy("o_orderpriority"))
-        .cast("bigint")
-        .alias("n"),
-    )
-    k_lo = F.expr(f"CAST(floor({_PC_R}) AS BIGINT) + 1")
-    k_hi = F.expr(f"CAST(ceil({_PC_R}) AS BIGINT) + 1")
-    picked = ranked.groupBy("grp", "n").agg(
-        F.min(F.when(F.col("rn") == k_lo, F.col("cents"))).alias("lo"),
-        F.min(F.when(F.col("rn") == k_hi, F.col("cents"))).alias("hi"),
-    )
-    return picked.select(
-        "grp",
-        "n",
-        "lo",
-        F.coalesce("hi", "lo").alias("hi"),
-        F.expr(
-            f"CAST(lo AS DOUBLE) + ({_PC_R} - floor({_PC_R}))"
-            " * (CAST(coalesce(hi, lo) AS DOUBLE) - CAST(lo AS DOUBLE))"
-        ).alias("p90_cents"),
-    )
 
 
-@register(
+register_sql(
     "q_cumulative_distinct",
     oracle="""
     WITH first_seen AS (
@@ -958,32 +719,6 @@ def q_percentile_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
     "combined), one O(nations x months) agg, one window over that "
     "table — the fact table never enters a window.",
 )
-def q_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    first_seen = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy(F.col("c_nationkey").alias("nationkey"), "o_custkey")
-        .agg(
-            F.min(
-                (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast("bigint")
-            ).alias("m")
-        )
-    )
-    monthly = first_seen.groupBy("nationkey", "m").agg(
-        F.count(F.lit(1)).cast("bigint").alias("new_customers")
-    )
-    wcum = (
-        W.partitionBy("nationkey").orderBy("m").rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return monthly.select(
-        "nationkey",
-        F.col("m").alias("month_index"),
-        "new_customers",
-        F.sum("new_customers").over(wcum).cast("bigint").alias("cum_customers"),
-    )
 
 
 @register(
@@ -1045,7 +780,7 @@ _MODE_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_agg_mode_deterministic",
     oracle=_MODE_SQL,
     doc="Deterministic MODE aggregate: engine-native mode() is "
@@ -1059,6 +794,3 @@ _MODE_SQL = """
     "tiny per-group top-1 window. The determinism-contract twin of "
     "q_arg_max for the most-frequent-value question.",
 )
-def q_agg_mode_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_MODE_SQL)

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from azurestorage_blueprints_spark.queries import register
+from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
 #: Knuth multiplicative constant (floor(2^32 / golden ratio)).
@@ -35,7 +35,7 @@ def _hash_mod(col: F.Column, mod: int) -> F.Column:
     return (col * F.lit(_KNUTH)) % F.lit(mod)
 
 
-@register(
+register_sql(
     "q_sample_hash",
     oracle="""
     SELECT o_orderpriority,
@@ -49,19 +49,9 @@ def _hash_mod(col: F.Column, mod: int) -> F.Column:
     "the key), aggregated per priority. Scale: the predicate is a pushed-down "
     "codegen filter — no shuffle, no rand() nondeterminism across retries.",
 )
-def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = table(spark, sf_dir, "orders")
-    return (
-        o.filter(_hash_mod(F.col("o_orderkey"), 1000) < 100)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("sum_price"),
-        )
-    )
 
 
-@register(
+register_sql(
     "q_sample_stratified",
     oracle="""
     SELECT lang,
@@ -76,17 +66,9 @@ def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "keeping 40% of the rest — the standard corpus-rebalancing move. Per-stratum "
     "rate is a CASE over the same hash; still a single scan, zero extra shuffle.",
 )
-def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    rate = F.when(F.col("lang") == "en", F.lit(100)).otherwise(F.lit(400))
-    return (
-        d.filter(_hash_mod(F.col("doc_id"), 1000) < rate)
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("total_chars"))
-    )
 
 
-@register(
+register_sql(
     "q_split_train_test",
     oracle="""
     SELECT CASE WHEN (doc_id * 2654435761) % 100 < 80 THEN 'train'
@@ -102,20 +84,9 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lands in the same split on every run, cluster, and scale factor subset — "
     "the property rand()-based splits lose on retry. One scan + one small agg.",
 )
-def q_split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    b = _hash_mod(F.col("doc_id"), 100)
-    split = (
-        F.when(b < 80, F.lit("train")).when(b < 90, F.lit("valid")).otherwise(F.lit("test"))
-    )
-    return d.groupBy(split.alias("split")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("n_chars").cast("double") / F.count(F.lit(1))).alias("avg_chars"),
-        F.countDistinct("lang").alias("n_langs"),
-    )
 
 
-@register(
+register_sql(
     "q_sample_exact_k",
     oracle="""
     SELECT count(*) AS n,
@@ -134,19 +105,9 @@ def q_split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     "single merge of k*partitions rows) — never a global sort, so it holds at "
     "any row count. Tie-broken by the unique key for cross-engine determinism.",
 )
-def q_sample_exact_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    sampled = d.orderBy(_hash_mod(F.col("doc_id"), 1 << 20), F.col("doc_id")).limit(200)
-    return sampled.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("n_chars").alias("total_chars"),
-        F.countDistinct("lang").alias("n_langs"),
-        F.min("doc_id").alias("min_id"),
-        F.max("doc_id").alias("max_id"),
-    )
 
 
-@register(
+register_sql(
     "q_interleave_weighted",
     oracle="""
     SELECT corpus, lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
@@ -164,22 +125,6 @@ def q_sample_exact_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mix is declared so every epoch (and every retry) draws the same rows. "
     "Two pushed-down scans, no shuffle until the final small agg.",
 )
-def q_interleave_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    h = _hash_mod(F.col("doc_id"), 1000)
-    curated = (
-        d.filter((F.col("source") < "src5") & (h < 900))
-        .select(F.lit("curated").alias("corpus"), "lang", "n_chars")
-    )
-    web = (
-        d.filter((F.col("source") >= "src5") & (h < 300))
-        .select(F.lit("web").alias("corpus"), "lang", "n_chars")
-    )
-    return (
-        curated.unionByName(web)
-        .groupBy("corpus", "lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("total_chars"))
-    )
 
 
 @register(
@@ -374,7 +319,7 @@ def q_ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select("h", v.alias("v_interp"))
 
 
-@register(
+register_sql(
     "q_sample_exact_k_stratified",
     oracle="""
     WITH ranked AS (
@@ -400,22 +345,6 @@ def q_ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     "skewed strata the rank is still per-partition-bounded — no global "
     "sort appears at any scale.",
 )
-def q_sample_exact_k_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(
-        _hash_mod(F.col("doc_id"), 1 << 20), F.col("doc_id")
-    )
-    return (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 30)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_chars").alias("total_chars"),
-            F.min("doc_id").alias("min_id"),
-            F.max("doc_id").alias("max_id"),
-        )
-    )
 
 
 #: Poisson(1) inverse-CDF thresholds scaled to 2^32 (floor(cdf * 2^32),
@@ -647,7 +576,7 @@ def q_stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # not probabilistically.
 
 
-@register(
+register_sql(
     "q_split_kfold_stratified",
     oracle="""
     WITH r AS (
@@ -682,31 +611,6 @@ def q_stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sized, so skew is bounded by corpus mix, salting unneeded. The "
     "5-row-per-stratum report is GROUP-BY sized, never collected.",
 )
-def q_split_kfold_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(
-        _hash_mod(F.col("doc_id"), 1 << 20), F.col("doc_id")
-    )
-    r = d.select(
-        "lang",
-        "n_chars",
-        ((F.row_number().over(w) - 1) % 5).cast("bigint").alias("fold"),
-    )
-    g = r.groupBy("lang", "fold").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n_chars").cast("bigint").alias("total_chars"),
-    )
-    ws = Window.partitionBy("lang")
-    return g.select(
-        "lang",
-        "fold",
-        "n_docs",
-        "total_chars",
-        F.sum("n_docs").over(ws).cast("bigint").alias("stratum_docs"),
-        (F.max("n_docs").over(ws) - F.min("n_docs").over(ws))
-        .cast("bigint")
-        .alias("fold_spread"),
-    ).orderBy("lang", "fold")
 
 
 #: temporal-split cutoffs (the leakage-safe holdout boundaries): train

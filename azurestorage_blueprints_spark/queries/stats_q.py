@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from azurestorage_blueprints_spark.queries import REGISTRY, register
+from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
 # OLS closed form over exact integer moments, spelled once and formatted
@@ -109,7 +109,7 @@ _CHISQ_TERM = (
 )
 
 
-@register(
+register_sql(
     "q_stats_chisq",
     oracle=f"""
     WITH cells AS (
@@ -138,28 +138,6 @@ _CHISQ_TERM = (
     "for the statistic. The 100 TB pass is the first agg only — partial "
     "aggregation collapses each partition to at most 15 cells.",
 )
-def q_stats_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    o = table(spark, sf_dir, "orders")
-    cells = o.groupBy("o_orderpriority", "o_orderstatus").agg(
-        F.count(F.lit(1)).alias("obs")
-    )
-    marg = cells.select(
-        "o_orderpriority",
-        "o_orderstatus",
-        "obs",
-        F.sum("obs").over(W.partitionBy("o_orderpriority")).alias("row_tot"),
-        F.sum("obs").over(W.partitionBy("o_orderstatus")).alias("col_tot"),
-        F.sum("obs").over(W.partitionBy()).alias("grand"),
-    )
-    return marg.select(
-        "o_orderpriority",
-        "o_orderstatus",
-        "obs",
-        F.expr(_EXPECTED).alias("expected"),
-        F.expr(_CHISQ_TERM).alias("chisq_term"),
-    )
 
 
 # Spearman rho over exact integer ranks, spelled once and formatted into
@@ -171,7 +149,7 @@ _RHO = (
 )
 
 
-@register(
+register_sql(
     "q_stats_spearman",
     oracle=f"""
     WITH spend AS (
@@ -211,40 +189,6 @@ _RHO = (
     "partitioning (one shuffle + sort), one moment hash-agg per nation "
     "— the shuffle carries O(nations) moment rows.",
 )
-def q_stats_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders")
-    spend = (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .groupBy("c_nationkey", "c_custkey", "c_acctbal")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("spend")
-        )
-    )
-    ranked = spend.select(
-        F.col("c_nationkey").alias("nationkey"),
-        F.rank()
-        .over(W.partitionBy("c_nationkey").orderBy("c_acctbal", "c_custkey"))
-        .cast("bigint")
-        .alias("rx"),
-        F.rank()
-        .over(W.partitionBy("c_nationkey").orderBy("spend", "c_custkey"))
-        .cast("bigint")
-        .alias("ry"),
-    )
-    m = ranked.groupBy("nationkey").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("rx").cast("bigint").alias("sx"),
-        F.sum("ry").cast("bigint").alias("sy"),
-        F.sum(F.col("rx") * F.col("ry")).cast("bigint").alias("sxy"),
-        F.sum(F.col("rx") * F.col("rx")).cast("bigint").alias("sxx"),
-        F.sum(F.col("ry") * F.col("ry")).cast("bigint").alias("syy"),
-    )
-    return m.select("nationkey", "n", F.expr(_RHO).alias("spearman_rho"))
 
 
 @register(
@@ -340,7 +284,7 @@ _W_MOMENTS = """
 """
 
 
-@register(
+register_sql(
     "q_stats_ttest_welch",
     oracle=f"""
     WITH m AS ({_W_MOMENTS})
@@ -360,20 +304,9 @@ _W_MOMENTS = """
     "partition to 5 moment rows before the only shuffle — O(priorities) "
     "rows move regardless of input size.",
 )
-def q_stats_ttest_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        f"""
-        WITH m AS ({_W_MOMENTS})
-        SELECT o_orderpriority, n1, n2,
-               {_WELCH_T} AS welch_t,
-               {_WELCH_DF} AS welch_df
-        FROM m
-        """
-    )
 
 
-@register(
+register_sql(
     "q_stats_ks_test",
     oracle="""
     WITH cells AS (
@@ -411,9 +344,6 @@ def q_stats_ttest_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cumsum over that small table, top-1 by exact key. The fact scan "
     "never shuffles more than the cell table.",
 )
-def q_stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(REGISTRY["q_stats_ks_test"].oracle)
 
 
 # Benford expected first-digit frequencies log10(1 + 1/d), inlined as
@@ -487,7 +417,7 @@ def q_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_gini_concentration",
     oracle="""
     WITH spend AS (
@@ -525,10 +455,6 @@ def q_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(one shuffle on custkey), one rank window partitioned by nation, "
     "one moment agg — the shuffle after ranking carries 3 exact columns.",
 )
-def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    for t in ("orders", "customer"):
-        table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(REGISTRY["q_gini_concentration"].oracle)
 
 
 # one-way ANOVA over milli-cent-quantized group means: group moments are
@@ -577,7 +503,7 @@ _ANOVA_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_stats_anova_oneway",
     oracle=_ANOVA_SQL,
     doc="One-way ANOVA F-statistic of customer account balance (cents) "
@@ -594,9 +520,6 @@ _ANOVA_SQL = """
     "hash-agg to k moment rows, then O(k) arithmetic; the shuffle "
     "carries 3 numbers per nation at 100 TB.",
 )
-def q_stats_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(_ANOVA_SQL)
 
 
 # Pearson autocorrelation of the daily-revenue series at lags 1 and 7,
@@ -645,7 +568,7 @@ _ACF_SQL = f"""
 """
 
 
-@register(
+register_sql(
     "q_stats_autocorr",
     oracle=_ACF_SQL,
     doc="Autocorrelation of the daily order-revenue series at lags 1 and "
@@ -660,9 +583,6 @@ _ACF_SQL = f"""
     "identical exact moments via shared expression text; sqrt is "
     "IEEE-correctly-rounded on both engines.",
 )
-def q_stats_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_ACF_SQL)
 
 
 # trimmed mean: drop the exact top/bottom 5% by deterministic rank
@@ -696,7 +616,7 @@ _TRIM_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_stats_trimmed_mean",
     oracle=_TRIM_SQL,
     doc="5% trimmed mean of order value per priority — the robust "
@@ -712,9 +632,6 @@ _TRIM_SQL = """
     "sizes the trim fences graduate to the quantile-sketch tier like "
     "percentile_cont does.",
 )
-def q_stats_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_TRIM_SQL)
 
 
 # Theil-Sen robust trend: median of pairwise slopes over the daily series.
@@ -920,7 +837,7 @@ _KENDALL_SQL = f"""
 """
 
 
-@register(
+register_sql(
     "q_stats_kendall_tau",
     oracle=_KENDALL_SQL,
     doc="Kendall tau-b rank correlation between daily revenue and daily "
@@ -938,9 +855,6 @@ _KENDALL_SQL = f"""
     "size — a constant, not a function of SF) rides the q_stats_theil_sen "
     "self-join discipline and collapses to a single 5-integer row.",
 )
-def q_stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_KENDALL_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1034,7 +948,7 @@ _BF_SQL = f"""
 {_BF_TAIL}"""
 
 
-@register(
+register_sql(
     "q_stats_levene_bf",
     oracle=_BF_SQL,
     doc="Brown-Forsythe test (median-based Levene) for homogeneity of "
@@ -1056,19 +970,6 @@ _BF_SQL = f"""
     "window cumsums over it (price-domain-bounded), a 5-row moment "
     "pivot — nothing wider than the cell table ever shuffles.",
 )
-def q_stats_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from azurestorage_blueprints_spark.queries import finalize_bounded
-
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    # materialize the cell table ONCE: as a single statement Catalyst
-    # inlines the cells CTE per reference and the fact table is
-    # scanned 4x (plan-gated in tests/test_plan_quality.py); the tail
-    # SQL is shared verbatim with the oracle, so the values — and the
-    # hash — are unchanged
-    cells = spark.sql(_BF_CELLS).persist()
-    cells.createOrReplaceTempView("bf_cells")
-    out = spark.sql("WITH cells AS (SELECT * FROM bf_cells),\n" + _BF_TAIL)
-    return finalize_bounded(out, cells)
 
 
 # ---------------------------------------------------------------------------
@@ -1129,7 +1030,7 @@ _WSR_SQL = f"""
 """
 
 
-@register(
+register_sql(
     "q_stats_wilcoxon_signed_rank",
     oracle=_WSR_SQL,
     doc="Wilcoxon signed-rank test of daily revenue against its 7-day "
@@ -1148,9 +1049,6 @@ _WSR_SQL = f"""
     "join, and cell agg runs on the O(days) table — constant work at "
     "ANY corpus size.",
 )
-def q_stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_WSR_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1165,7 +1063,7 @@ def q_stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # resolution anyone acts on.
 
 
-@register(
+register_sql(
     "q_stats_cramers_v",
     oracle=f"""
     WITH cells AS (
@@ -1213,51 +1111,6 @@ def q_stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one map-side-combined cell agg is the only fact-scale work, "
     "everything downstream is O(15) rows.",
 )
-def q_stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    o = table(spark, sf_dir, "orders")
-    cells = o.groupBy("o_orderpriority", "o_orderstatus").agg(
-        F.count(F.lit(1)).alias("obs")
-    )
-    marg = cells.select(
-        "o_orderpriority",
-        "o_orderstatus",
-        "obs",
-        F.sum("obs").over(W.partitionBy("o_orderpriority")).alias("row_tot"),
-        F.sum("obs").over(W.partitionBy("o_orderstatus")).alias("col_tot"),
-        F.sum("obs").over(W.partitionBy()).alias("grand"),
-    )
-    terms = marg.select(
-        "o_orderpriority",
-        "o_orderstatus",
-        "grand",
-        F.expr(f"CAST(floor(({_CHISQ_TERM}) * 1000000.0 + 0.5) AS BIGINT)").alias("term_u"),
-    )
-    agg = terms.agg(
-        F.max("grand").cast("bigint").alias("n"),
-        F.sum("term_u").cast("bigint").alias("chi2_u"),
-        F.countDistinct("o_orderpriority").cast("bigint").alias("r"),
-        F.countDistinct("o_orderstatus").cast("bigint").alias("c"),
-    )
-    return agg.select(
-        "n",
-        "chi2_u",
-        "r",
-        "c",
-        ((F.col("r") - 1) * (F.col("c") - 1)).cast("bigint").alias("dof"),
-        (F.col("chi2_u").cast("double") / F.lit(1000000.0)).alias("chi2"),
-        F.sqrt(
-            F.col("chi2_u").cast("double")
-            / F.lit(1000000.0)
-            / (
-                F.col("n").cast("double")
-                * F.when(F.col("r") < F.col("c"), F.col("r") - 1)
-                .otherwise(F.col("c") - 1)
-                .cast("double")
-            )
-        ).alias("cramers_v"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -5,8 +5,8 @@ session windows (the same ``F.window`` / ``F.session_window``
 expressions run under Structured Streaming — see
 ``azurestorage_blueprints_spark/streaming``), plus the custom
 operators Spark lacks natively: as-of join, banded range join, and
-gap-based sessionization — each built as a composition of DataFrame
-ops (no UDFs), with a DuckDB oracle.
+gap-based sessionization — each a composition of relational
+operators (no UDFs), with a DuckDB oracle.
 
 Scale posture: every operator shuffles once on ``user_id`` (or the
 window key) and computes per-partition; the as-of join is the
@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from azurestorage_blueprints_spark.queries import register
+from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
 DEC = "decimal(12,2)"
@@ -78,7 +78,7 @@ def q_ts_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_ts_session_window",
     oracle="""
     WITH marked AS (
@@ -98,25 +98,14 @@ def q_ts_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_events
     FROM sessions GROUP BY user_id, session_id
     """,
-    doc="Session window (30-minute gap) via F.session_window in batch; the oracle "
-    "derives identical sessions with the lag/gap/cumulative-sum formulation. "
-    "session_window end = last event + gap.",
+    doc="Session window (30-minute gap) by the lag/gap/cumulative-sum "
+    "formulation, which yields the sessions F.session_window builds: a new "
+    "session starts after a gap strictly longer than 30 minutes, and a "
+    "session ends at its last event + gap.",
 )
-def q_ts_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
 
 
-@register(
+register_sql(
     "q_ts_sessionize_ids",
     oracle="""
     WITH marked AS (
@@ -134,24 +123,6 @@ def q_ts_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Per-event session-ID assignment: lag-gap marker + running sum — the "
     "composition pattern for custom stateful operators in batch.",
 )
-def q_ts_sessionize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # epoch MICROSECONDS to match the oracle's full-precision interval
-    # comparison on sub-second timestamps (see q_event_paths)
-    ev = table(spark, sf_dir, "events").withColumn(
-        "ep", F.expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
-    )
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ep") - F.lag("ep").over(w)
-    is_start = F.when(gap.isNull() | (gap > 30 * 60 * 1_000_000), 1).otherwise(0)
-    wcum = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    return (
-        ev.withColumn("is_start", is_start)
-        .select(
-            "event_id",
-            "user_id",
-            F.sum("is_start").over(wcum).alias("session_id"),
-        )
-    )
 
 
 @register(
@@ -197,7 +168,7 @@ def q_ts_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "q_ts_range_join",
     oracle="""
     SELECT a.user_id, count(*) AS n_pairs
@@ -211,28 +182,6 @@ def q_ts_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "blocking key so the physical plan stays a hash join with a range residual, "
     "not a cartesian NLJ.",
 )
-def q_ts_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    a = ev.select(
-        F.col("user_id").alias("a_user"),
-        F.col("event_id").alias("a_id"),
-        F.col("ts").alias("a_ts"),
-    )
-    b = ev.select(
-        F.col("user_id").alias("b_user"),
-        F.col("event_id").alias("b_id"),
-        F.col("ts").alias("b_ts"),
-    )
-    pairs = a.join(
-        b,
-        (F.col("a_user") == F.col("b_user"))
-        & (F.col("a_id") < F.col("b_id"))
-        & (F.col("b_ts") >= F.col("a_ts"))
-        & (F.col("b_ts") <= F.col("a_ts") + F.expr("INTERVAL 10 MINUTES")),
-    )
-    return pairs.groupBy(F.col("a_user").alias("user_id")).agg(
-        F.count(F.lit(1)).alias("n_pairs")
-    )
 
 
 @register(
@@ -406,7 +355,7 @@ def q_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select("user_id", "event_id", "value", (num / den).alias("ewma"))
 
 
-@register(
+register_sql(
     "q_ts_zscore_anomaly",
     oracle="""
     WITH q AS (
@@ -441,31 +390,6 @@ def q_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     "user_id; O(1) state per row — the same computation "
     "applyInPandasWithState runs in the streaming form.",
 )
-def q_ts_zscore_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = table(spark, sf_dir, "events")
-    q = e.select(
-        "user_id",
-        "event_id",
-        "value",
-        "ts",
-        F.expr("CAST(floor(value * 1000.0 + 0.5) AS BIGINT)").alias("v3"),
-    )
-    w = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-16, -1)
-    stats = q.select(
-        "user_id",
-        "event_id",
-        "value",
-        "v3",
-        F.count("v3").over(w).alias("n"),
-        F.sum("v3").over(w).alias("s"),
-        F.sum(F.col("v3") * F.col("v3")).over(w).alias("q2"),
-    )
-    z = F.expr("CAST(v3 * n - s AS DOUBLE) / sqrt(CAST(n * q2 - s * s AS DOUBLE))")
-    return (
-        stats.filter((F.col("n") >= 8) & (F.col("n") * F.col("q2") - F.col("s") * F.col("s") > 0))
-        .select("user_id", "event_id", "value", z.alias("z"))
-        .filter(F.abs(F.col("z")) > 3.0)
-    )
 
 
 #: nearest-match tolerance for the bidirectional as-of join
@@ -653,7 +577,7 @@ _SNAIVE_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_ts_seasonal_naive_forecast",
     oracle=_SNAIVE_SQL,
     doc="Seasonal-naive forecast backtest (forecast = the value one "
@@ -671,9 +595,6 @@ _SNAIVE_SQL = """
     "(DuckDB decimals render as float64 there), exact past 1e16 "
     "cents/month.",
 )
-def q_ts_seasonal_naive_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_SNAIVE_SQL)
 
 
 # CUSUM changepoint: argmax of the exact integer cumulative deviation
@@ -710,7 +631,7 @@ _CUSUM_SQL = """
 """
 
 
-@register(
+register_sql(
     "q_ts_changepoint_cusum",
     oracle=_CUSUM_SQL,
     doc="CUSUM changepoint detection on the daily revenue series: the "
@@ -731,9 +652,6 @@ _CUSUM_SQL = """
     "comparison with a date tie-break. Only the reported mean-shift "
     "estimate divides to double via shared expression text.",
 )
-def q_ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_CUSUM_SQL)
 
 
 #: fixed campaign windows for the interval-overlap join (the events

@@ -27,8 +27,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 #: text/vector tables get a post-scan round-robin repartition: the test
 #: parquet files are single-row-group, so the scan stage is ONE task no
 #: matter how many cores exist — and the per-row work on these tables

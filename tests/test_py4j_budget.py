@@ -3,13 +3,15 @@
 Every ``F.*`` call or Column operator is one JVM round-trip, paid on
 every run whatever the data size. The DSIR ingest gate once spent about
 11,000 of them deploying a 256-entry model as Column literals; it now
-deploys the fitted model as one folded SQL expression. This gate keeps
-that tax from creeping back.
+deploys the fitted model as one folded SQL expression. A SQL-form query
+(``register_sql``) builds its whole plan with one ``spark.sql`` call.
+These gates keep that tax from creeping back.
 """
 
 from __future__ import annotations
 
 import pytest
+from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
 
 from azurestorage_blueprints_spark.queries import load_all
 
@@ -19,18 +21,23 @@ REGISTRY = load_all()
 #: sf0.001 (model fit, deploy, stream replay and collect)
 _DSIR_GATE_BUDGET = 2_000
 
+#: py4j commands a SQL-form query may send to build its plan (register
+#: the views it names, then one ``spark.sql``); the DataFrame builder it
+#: replaced sent about 875
+_SQL_BUILD_BUDGET = 25
+
 
 @pytest.fixture
 def py4j_calls(spark, monkeypatch):
-    """A one-element list counting every py4j command the driver sends
-    while the test runs; the gateway client is restored afterwards."""
+    """A list of every py4j command the driver sends while the test
+    runs; the gateway client is restored afterwards."""
     client = spark.sparkContext._gateway._gateway_client
     original = client.send_command
-    calls = [0]
+    calls: list[str] = []
 
-    def send_command(*args, **kwargs):
-        calls[0] += 1
-        return original(*args, **kwargs)
+    def send_command(command, *args, **kwargs):
+        calls.append(command)
+        return original(command, *args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", send_command)
     return calls
@@ -39,4 +46,13 @@ def py4j_calls(spark, monkeypatch):
 def test_stream_dsir_gate_stays_within_py4j_budget(spark, sf_dir, py4j_calls):
     rows = REGISTRY["q_stream_dsir_gate"].fn(spark, sf_dir).collect()
     assert rows
-    assert py4j_calls[0] < _DSIR_GATE_BUDGET, py4j_calls[0]
+    assert len(py4j_calls) < _DSIR_GATE_BUDGET, len(py4j_calls)
+
+
+def test_sql_form_query_builds_within_py4j_budget(spark, sf_dir, py4j_calls):
+    REGISTRY["q01_pricing_summary"].fn(spark, sf_dir)
+    # proxy detaches are garbage from earlier tests, released by py4j
+    # whenever the collector runs, not round-trips the build makes
+    detach = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+    calls = [c for c in py4j_calls if not c.startswith(detach)]
+    assert len(calls) <= _SQL_BUILD_BUDGET, len(calls)
