@@ -6,9 +6,10 @@ engine-specific), and the naive exact form —
 each group's whole corpus slice in ONE task, the constant-cardinality
 sort-window anti-pattern this repo retired from the CCNet family in
 r11-r12 (a 5-group column at 100 TB puts ~20 TB through each window
-task). This module generalizes that family's two-phase distributed
-selection (curation._ppl_thresholds, streaming_q._topv_keep) into a
-standalone relational operator:
+task). This module is the engine's one two-phase distributed selection;
+the CCNet thresholds (curation._ppl_thresholds, milli-nat logppl bins)
+and the capped-LM top-V cut (streaming_q._topv_keep, negated log bins
+of -count) call it with their own ``bin_of``:
 
 * phase 1 — ONE map-side-combined hash-agg histograms the value into
   order-preserving bins; a running count over the O(groups x bins)

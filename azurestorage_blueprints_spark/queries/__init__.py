@@ -138,21 +138,23 @@ def finalize_bounded(result: DataFrame, *cached: DataFrame) -> DataFrame:
     parquet write, never a driver row list), the caches are released,
     and the returned DataFrame is a scan of that table: same schema,
     same values, driver memory O(1). ``LAST_FINALIZE_ROUTE`` records
-    which path ran so tests can pin the contract.
+    which path ran so tests can pin the contract. The caches are
+    released even when the collect or the write raises.
     """
     global LAST_FINALIZE_ROUTE, _FINALIZE_SEQ
     spark = result.sparkSession
-    probe = result.limit(FINALIZE_ROW_BUDGET + 1).collect()
-    if len(probe) <= FINALIZE_ROW_BUDGET:
+    try:
+        probe = result.limit(FINALIZE_ROW_BUDGET + 1).collect()
+        if len(probe) <= FINALIZE_ROW_BUDGET:
+            LAST_FINALIZE_ROUTE = "collect"
+            return spark.createDataFrame(probe, result.schema)
+        _FINALIZE_SEQ += 1
+        path = os.path.join(_finalize_spill_dir(), f"report_{os.getpid()}_{_FINALIZE_SEQ}")
+        result.write.mode("overwrite").parquet(path)
+    finally:
+        # released on every route, a failed collect or write included
         for df in cached:
             df.unpersist()
-        LAST_FINALIZE_ROUTE = "collect"
-        return spark.createDataFrame(probe, result.schema)
-    _FINALIZE_SEQ += 1
-    path = os.path.join(_finalize_spill_dir(), f"report_{os.getpid()}_{_FINALIZE_SEQ}")
-    result.write.mode("overwrite").parquet(path)
-    for df in cached:
-        df.unpersist()
     LAST_FINALIZE_ROUTE = "spill"
     # read back with the ORIGINAL schema (parquet roundtrips every type
     # the report tier emits; the explicit schema pins nullability)

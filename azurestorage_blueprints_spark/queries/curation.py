@@ -26,6 +26,7 @@ from azurestorage_blueprints_spark.functions.text import (
     word_set_occurrences,
     word_shingles,
 )
+from azurestorage_blueprints_spark.operators.selection import exact_group_quantiles
 from azurestorage_blueprints_spark.queries import finalize_bounded, register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
@@ -1158,105 +1159,72 @@ def _ppl_logppl():
     return F.col("ce_micro").cast("double") / float(_PPL_QZ) / F.col("n_tokens")
 
 
-def _ppl_thresholds(docce: DataFrame, ks=None, with_n: bool = False) -> DataFrame:
-    """Exact per-language tercile thresholds as the k-th-smallest
-    (logppl, doc_id) pairs (k = ceil(n/3) and ceil(2n/3)) WITHOUT a
-    corpus-scale window partitioned by the constant-cardinality ``lang``
-    key — the two-phase distributed-selection plan shared VERBATIM by
-    the batch tercile rung (q_ccnet_perplexity_buckets) and the
-    streaming ingest gate (q_stream_perplexity_gate):
+def _doc_tokens(docs: DataFrame) -> DataFrame:
+    """The (doc_id, lang, token) stream of a documents slice."""
+    return docs.select("doc_id", "lang", F.explode(tokens(F.col("text"))).alias("token"))
 
-    * phase 1 — ONE corpus-scale hash-agg ``groupBy(lang, bin)``
-      (map-side combined) histograms logppl into milli-nat bins; the
-      running-count window that locates each k's boundary bin runs over
-      the O(langs × bins) histogram (≤ ~35k rows/lang at any corpus
-      size: logppl ≤ ln(N+V) ≈ 35 nats), never over the corpus;
-    * phase 2 — only the boundary bins' documents (an expected 1/bins
-      slice) are re-scanned and rank-windowed WITHIN (lang, bin) to
-      resolve the residual rank. The window key (lang, bin) is
-      value-dependent, not constant-cardinality; the degenerate
-      worst case (all docs in one bin) degrades to the sort this plan
-      exists to avoid, but real perplexity spreads over hundreds of
-      bins.
 
-    Exactness: binning is order-preserving in logppl and logppl ties
-    never straddle a bin, so global rank = (count in earlier bins) +
-    (rank within bin) — the DuckDB oracles may therefore compute the
-    same pairs with a free per-language sort and still agree
-    bit-for-bit. Input must carry (lang, doc_id, n_tokens, ce_micro);
-    returns O(langs) rows (lang, t1, t1_doc, t2, t2_doc).
+def _ppl_lm(lm: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Add-one-smoothed per-language unigram LM of a (lang, token, c)
+    vocab table: ``s`` (lang, token, c, smicro) holds each token's
+    surprisal ln((N_l + V_l) / (c + 1)) in micro-nats, ``oovtbl``
+    (lang, oov) the unseen-token mass ln(N_l + V_l)."""
+    tot = lm.groupBy("lang").agg(
+        F.sum("c").cast("bigint").alias("n_l"),
+        F.count(F.lit(1)).cast("bigint").alias("v_l"),
+    )
+    smicro = F.round(
+        F.log(
+            (F.col("n_l").cast("double") + F.col("v_l").cast("double"))
+            / (F.col("c").cast("double") + F.lit(1.0))
+        )
+        * F.lit(_PPL_QZ)
+    ).cast("bigint")
+    s = lm.join(F.broadcast(tot), "lang").select(
+        "lang", "token", "c", smicro.alias("smicro")
+    )
+    oovtbl = tot.select(
+        "lang",
+        F.round(F.log((F.col("n_l") + F.col("v_l")).cast("double")) * F.lit(_PPL_QZ))
+        .cast("bigint")
+        .alias("oov"),
+    )
+    return s, oovtbl
 
-    ``ks`` generalizes the rank list (r11, for the conformal rung):
-    a list of callables n_col -> k_col; default is the tercile pair
-    [ceil(n/3), ceil(2n/3)]. Output aliases are t{i}/t{i}_doc in list
-    order. Every k shares the SAME histogram and the SAME boundary-bin
-    rescan — still exactly two passes over docce regardless of len(ks).
 
-    ``with_n`` (r12, r11 ADVICE): also emit the per-language input
-    count as ``n_cal`` — it is already sitting in the histogram's
-    running totals, so a caller that needs n (the conformal rung's
-    calibration count) gets it for free instead of a third corpus
-    pass over docce.
-    """
+def _ppl_le(t: str):
+    """(logppl, doc_id) <=lex (``t``, ``t``_doc): the threshold compare
+    of every CCNet-family verdict."""
+    lp = _ppl_logppl()
+    return (lp < F.col(t)) | ((lp == F.col(t)) & (F.col("doc_id") <= F.col(f"{t}_doc")))
+
+
+def _ppl_thresholds(docce: DataFrame, ks=None) -> DataFrame:
+    """Exact per-language k-th-smallest (logppl, doc_id) pairs of a
+    (lang, doc_id, n_tokens, ce_micro) table: the two-phase selection
+    of :func:`operators.selection.exact_group_quantiles` over milli-nat
+    logppl bins, so no plan windows the corpus by the constant-
+    cardinality ``lang`` key. ``ks`` is a list of callables n -> k
+    (default: the terciles ceil(n/3), ceil(2n/3)). Returns O(langs)
+    rows (lang, n_cal, t1, t1_doc, ...) in ``ks`` order, ``n_cal`` being
+    the language's row count."""
     if ks is None:
         ks = [
             lambda n: F.ceil(n / 3.0).cast("bigint"),
             lambda n: F.ceil(n * 2.0 / 3.0).cast("bigint"),
         ]
-    logppl = _ppl_logppl()
-    binc = F.floor(logppl * F.lit(float(_PPL_BIN_QZ))).cast("bigint")
-    hist = docce.groupBy("lang", binc.alias("bin")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
-    wcum = (
-        Window.partitionBy("lang")
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = hist.select(
+    q = exact_group_quantiles(
+        docce,
         "lang",
-        "bin",
-        "cnt",
-        F.sum("cnt").over(wcum).alias("cum"),
-        F.sum("cnt").over(Window.partitionBy("lang")).alias("n"),
-    )
-    idx = range(1, len(ks) + 1)
-    kcols = {i: ks[i - 1](F.col("n")) for i in idx}
-    prev = F.col("cum") - F.col("cnt")
-    hits = {i: (F.col("cum") >= kcols[i]) & (prev < kcols[i]) for i in idx}
-    bound_aggs = []
-    for i in idx:
-        bound_aggs.append(F.max(F.when(hits[i], F.col("bin"))).alias(f"b{i}"))
-        bound_aggs.append(F.max(F.when(hits[i], kcols[i] - prev)).alias(f"r{i}"))
-    bound_aggs.append(F.max(F.col("n")).alias("_n_lang"))
-    bounds = cum.groupBy("lang").agg(*bound_aggs)
-    in_boundary = None
-    for i in idx:
-        cond = F.col("bin") == F.col(f"b{i}")
-        in_boundary = cond if in_boundary is None else (in_boundary | cond)
-    cand = (
-        docce.join(F.broadcast(bounds), "lang")
-        .withColumn("bin", binc)
-        .filter(in_boundary)
-    )
-    wrk = Window.partitionBy("lang", "bin").orderBy(logppl.asc(), F.col("doc_id").asc())
-    rcand = cand.select(
-        "lang",
+        _ppl_logppl(),
         "doc_id",
-        "bin",
-        "_n_lang",
-        *[c for i in idx for c in (f"b{i}", f"r{i}")],
-        logppl.alias("logppl"),
-        F.row_number().over(wrk).alias("rn"),
+        ks,
+        bin_of=lambda v: F.floor(v * F.lit(float(_PPL_BIN_QZ))).cast("bigint"),
     )
-    out_aggs = []
-    for i in idx:
-        at = (F.col("bin") == F.col(f"b{i}")) & (F.col("rn") == F.col(f"r{i}"))
-        out_aggs.append(F.max(F.when(at, F.col("logppl"))).alias(f"t{i}"))
-        out_aggs.append(F.max(F.when(at, F.col("doc_id"))).alias(f"t{i}_doc"))
-    if with_n:
-        out_aggs.append(F.max(F.col("_n_lang")).cast("bigint").alias("n_cal"))
-    return rcand.groupBy("lang").agg(*out_aggs)
+    names = {"n": "n_cal"}
+    for i in range(1, len(ks) + 1):
+        names.update({f"q{i}": f"t{i}", f"q{i}_key": f"t{i}_doc"})
+    return q.withColumnsRenamed(names)
 
 
 def _ppl_bucket():
@@ -1267,21 +1235,7 @@ def _ppl_bucket():
     ntile(3) ORDER BY (logppl, doc_id) because the ordering is total
     (doc_id unique) and k = ceil(n/3), ceil(2n/3) are exactly ntile's
     first two group boundaries."""
-    lp = _ppl_logppl()
-    return (
-        F.when(
-            (lp < F.col("t1"))
-            | ((lp == F.col("t1")) & (F.col("doc_id") <= F.col("t1_doc"))),
-            1,
-        )
-        .when(
-            (lp < F.col("t2"))
-            | ((lp == F.col("t2")) & (F.col("doc_id") <= F.col("t2_doc"))),
-            2,
-        )
-        .otherwise(3)
-        .cast("bigint")
-    )
+    return F.when(_ppl_le("t1"), 1).when(_ppl_le("t2"), 2).otherwise(3).cast("bigint")
 
 
 @register(
@@ -1364,20 +1318,10 @@ def _ppl_bucket():
 )
 def q_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", F.explode(tokens(F.col("text"))).alias("token"))
-    lm = tok.groupBy("lang", "token").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    tot = lm.groupBy("lang").agg(
-        F.sum("c").cast("bigint").alias("n_l"),
-        F.count(F.lit(1)).cast("bigint").alias("v_l"),
+    tok = _doc_tokens(d)
+    s, _ = _ppl_lm(
+        tok.groupBy("lang", "token").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    smicro = F.round(
-        F.log(
-            (F.col("n_l").cast("double") + F.col("v_l").cast("double"))
-            / (F.col("c").cast("double") + F.lit(1.0))
-        )
-        * F.lit(_PPL_QZ)
-    ).cast("bigint")
-    s = lm.join(F.broadcast(tot), "lang").select("lang", "token", smicro.alias("smicro"))
     # UNHINTED scoring join (r11): the LM side is vocab-sized (~N^0.6,
     # Heaps' law) — small enough that AQE broadcasts it at every test
     # SF, but NOT provably bounded, so the hint that would force a
@@ -1947,6 +1891,15 @@ _CONF_NUM = 9
 _CONF_DEN = 10
 
 
+def _conf_k(n):
+    """Calibration rank of a language with ``n`` calibration docs —
+    the rank list of both conformal rungs."""
+    return F.least(
+        F.ceil((n + 1) * _CONF_NUM / F.lit(float(_CONF_DEN))).cast("bigint"),
+        n.cast("bigint"),
+    )
+
+
 def _conformal_sql() -> str:
     qz = _PPL_QZ
     return f"""
@@ -2034,7 +1987,8 @@ def _conformal_sql() -> str:
     "threshold is the exact ceil((n+1)*(1-alpha))-th smallest "
     "(logppl, doc_id) calibration pair at alpha = 0.1 — found by the "
     "SAME two-phase distributed selection as the tercile rungs "
-    "(_ppl_thresholds with a custom rank list, no corpus-scale window "
+    "(_ppl_thresholds with a custom rank list, i.e. "
+    "operators/selection.exact_group_quantiles — no corpus-scale window "
     "on the lang key) — and the report measures the coverage that "
     "threshold actually delivers on the held-out arrival slice, next "
     "to the 0.9 target. The lexicographic (logppl, doc_id) compare "
@@ -2044,21 +1998,15 @@ def _conformal_sql() -> str:
     "scoring join — AQE decides); the selection is histogram + "
     "boundary-bin rescan over a PERSISTED caldoc (r12 — the selection "
     "phases and n_cal previously recomputed the corpus-scale scoring "
-    "three times; n_cal now rides the histogram's own totals via "
-    "with_n); finalize_bounded materializes the O(langs) report and "
+    "three times; n_cal is the selection's own per-language count); "
+    "finalize_bounded materializes the O(langs) report and "
     "releases the cache — the only driver traffic.",
 )
 def q_conformal_ppl_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     standing = d.filter(F.col("doc_id") % 10 != 0)
     arrivals = d.filter(F.col("doc_id") % 10 == 0)
-
-    def tokstream(docs):
-        return docs.select(
-            "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("token")
-        )
-
-    tok = tokstream(standing)
+    tok = _doc_tokens(standing)
     # the vocab table fans out into BOTH scoring joins (calibration and
     # test) and, through tot, the OOV table — persisted so the
     # corpus-scale tokenize+count runs once (r12, guide §2.4/§5; the
@@ -2069,24 +2017,7 @@ def q_conformal_ppl_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         .persist()
     )
-    tot = lm.groupBy("lang").agg(
-        F.sum("c").cast("bigint").alias("n_l"),
-        F.count(F.lit(1)).cast("bigint").alias("v_l"),
-    )
-    smicro = F.round(
-        F.log(
-            (F.col("n_l").cast("double") + F.col("v_l").cast("double"))
-            / (F.col("c").cast("double") + F.lit(1.0))
-        )
-        * F.lit(_PPL_QZ)
-    ).cast("bigint")
-    s = lm.join(F.broadcast(tot), "lang").select("lang", "token", smicro.alias("smicro"))
-    oovtbl = tot.select(
-        "lang",
-        F.round(F.log((F.col("n_l") + F.col("v_l")).cast("double")) * F.lit(_PPL_QZ))
-        .cast("bigint")
-        .alias("oovs"),
-    )
+    s, oovtbl = _ppl_lm(lm)
 
     def score(ts):
         return (
@@ -2095,7 +2026,7 @@ def q_conformal_ppl_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("doc_id", "lang")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-                F.sum(F.coalesce(F.col("smicro"), F.col("oovs")))
+                F.sum(F.coalesce(F.col("smicro"), F.col("oov")))
                 .cast("bigint")
                 .alias("ce_micro"),
             )
@@ -2103,27 +2034,19 @@ def q_conformal_ppl_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # caldoc fans out into the histogram pass AND its boundary-bin
     # rescan (r11 ADVICE: three corpus-scale recomputes with no
-    # persist); n_cal rides the histogram's own running totals
-    # (with_n) instead of a separate count pass, and finalize_bounded
-    # materializes the O(langs) report while the cache is hot, then
-    # releases it
+    # persist); n_cal comes with the thresholds instead of a separate
+    # count pass, and finalize_bounded materializes the O(langs) report
+    # while the cache is hot, then releases it
     caldoc = score(tok).persist()
-    testdoc = score(tokstream(arrivals))
-    kfn = lambda n: F.least(  # noqa: E731 — the shared rank-list convention
-        F.ceil((n + 1) * _CONF_NUM / F.lit(float(_CONF_DEN))).cast("bigint"),
-        n.cast("bigint"),
-    )
-    thr = _ppl_thresholds(caldoc, ks=[kfn], with_n=True)
-    lp = _ppl_logppl()
-    covered = (lp < F.col("t1")) | (
-        (lp == F.col("t1")) & (F.col("doc_id") <= F.col("t1_doc"))
-    )
+    testdoc = score(_doc_tokens(arrivals))
+    thr = _ppl_thresholds(caldoc, ks=[_conf_k])
+    covered = _ppl_le("t1")
     report = (
         testdoc.join(F.broadcast(thr), "lang")
         .groupBy(
             "lang",
             "n_cal",
-            kfn(F.col("n_cal")).alias("k"),
+            _conf_k(F.col("n_cal")).alias("k"),
             F.col("t1").alias("threshold"),
         )
         .agg(

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from azurestorage_blueprints_spark.queries import register
+from azurestorage_blueprints_spark.queries import finalize_bounded, register
 from azurestorage_blueprints_spark.queries.relational import _dec
 from azurestorage_blueprints_spark.streaming.windows import (
     run_foreach_batch,
@@ -1192,13 +1192,6 @@ def q_stream_model_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: tests/test_r11_semantics.py.
 _PPL_LM_TOPV = 24
 
-#: histogram granularity of the windowless top-V selection: token
-#: counts bin by floor(ln(c) * 1000) — order-preserving in c, and
-#: equal counts can never straddle a bin, the two properties the
-#: exactness argument needs. Bins per language are bounded by
-#: ln(c_max) * 1000 ~ 35k at ANY corpus size (c_max <= corpus tokens).
-_TOPV_BIN_QZ = 1000
-
 
 def _topv_keep(s: DataFrame, k_top: int) -> DataFrame:
     """EXACT top-``k_top``-per-language cut of the vocab table ``s``
@@ -1206,64 +1199,33 @@ def _topv_keep(s: DataFrame, k_top: int) -> DataFrame:
     constant-key sort-window over the vocab (r11 verdict "What's
     wrong" #1: ``row_number().over(partitionBy(lang))`` sorts a whole
     per-language vocab partition — ~N^0.6 rows by Heaps' law — in ONE
-    task at 100 TB). This is curation._ppl_thresholds' two-phase
-    distributed selection applied to counts:
+    task at 100 TB). The cut pair is the k-th smallest (-c, token) of
+    :func:`operators.selection.exact_group_quantiles`, binned by the
+    negated milli-log bin of c (monotone in -c). Keep predicate:
+    (-c, token) <=lex the cut pair; a language whose vocab <= k_top
+    has no cut and keeps its whole vocab — the DuckDB oracle keeps its
+    free row_number() spelling (_capped_lm_cte's sdep) and selects the
+    SAME set. Returns ``s`` filtered, same columns."""
+    from azurestorage_blueprints_spark.operators.selection import (
+        exact_group_quantiles,
+        log_bin,
+    )
 
-    * phase 1 — ONE hash-agg histograms the vocab into
-      cbin = floor(ln(c) * _TOPV_BIN_QZ) bins; the running count that
-      locates the k-th token's boundary bin runs over the
-      O(langs x bins) histogram (<= ~35k rows/lang at any corpus
-      size), never over the vocab;
-    * phase 2 — only the boundary bin's tokens (an expected 1/bins
-      slice) are re-ranked WITHIN (lang, cbin) by (c DESC, token ASC)
-      to resolve the residual rank into the exact cut pair
-      (c_cut, tok_cut).
-
-    Exactness: binning is order-preserving in c and equal counts never
-    straddle a bin, so global rank = (tokens in higher bins) + (rank
-    within bin) — the DuckDB oracle keeps its free row_number()
-    spelling (_capped_lm_cte's sdep) and still selects the SAME set.
-    Keep predicate: c > c_cut OR (c = c_cut AND token <= tok_cut);
-    a language whose vocab <= k_top produces no boundary bin and
-    keeps its whole vocab. Returns ``s`` filtered, same columns."""
-    from pyspark.sql import Window as W
-
-    cbin = F.floor(
-        F.log(F.col("c").cast("double")) * F.lit(float(_TOPV_BIN_QZ))
-    ).cast("bigint")
-    hist = s.groupBy("lang", cbin.alias("cbin")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
-    wcum = (
-        W.partitionBy("lang")
-        .orderBy(F.desc("cbin"))
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    cum = hist.select("lang", "cbin", "cnt", F.sum("cnt").over(wcum).alias("cum"))
-    k = F.lit(k_top).cast("bigint")
-    prev = F.col("cum") - F.col("cnt")
-    hit = (F.col("cum") >= k) & (prev < k)
-    bounds = cum.groupBy("lang").agg(
-        F.max(F.when(hit, F.col("cbin"))).alias("bb"),
-        F.max(F.when(hit, k - prev)).alias("rr"),
-    )
-    cand = (
-        s.join(F.broadcast(bounds), "lang")
-        .withColumn("cbin", cbin)
-        .filter(F.col("cbin") == F.col("bb"))
-    )
-    wrk = W.partitionBy("lang", "cbin").orderBy(F.desc("c"), F.col("token").asc())
-    cuts = (
-        cand.withColumn("rn", F.row_number().over(wrk))
-        .filter(F.col("rn") == F.col("rr"))
-        .select("lang", F.col("c").alias("c_cut"), F.col("token").alias("tok_cut"))
-    )
+    negc = -F.col("c")
+    cuts = exact_group_quantiles(
+        s,
+        "lang",
+        negc,
+        "token",
+        [lambda n: F.lit(k_top).cast("bigint")],
+        bin_of=lambda v: -log_bin(-v),
+    ).select("lang", "q1", "q1_key")
     return (
         s.join(F.broadcast(cuts), "lang", "left")
         .filter(
-            F.col("c_cut").isNull()
-            | (F.col("c") > F.col("c_cut"))
-            | ((F.col("c") == F.col("c_cut")) & (F.col("token") <= F.col("tok_cut")))
+            F.col("q1").isNull()
+            | (negc < F.col("q1"))
+            | ((negc == F.col("q1")) & (F.col("token") <= F.col("q1_key")))
         )
         .select(*s.columns)
     )
@@ -1275,9 +1237,8 @@ def _capped_lm_parts(spark: SparkSession, sf_dir: str):
     is the PERSISTED top-V deployed LM (O(V_cap x langs)), ``oovtbl``
     the PERSISTED O(langs) OOV-mass table, ``docce`` the PERSISTED
     standing corpus scored under the SAME capped model (feeds
-    threshold calibration), and ``caches`` every persisted handle.
-    Callers must unpersist each entry of ``caches`` after the deploy
-    collects.
+    threshold calibration), and ``caches`` every persisted handle, for
+    the caller's finalize_bounded deploy to release.
 
     Persist posture (r12 optimization, guide §2.4/§5): ``lm`` (the
     vocab table, ~N^0.6 rows by Heaps' law) fans out into the top-V
@@ -1290,45 +1251,23 @@ def _capped_lm_parts(spark: SparkSession, sf_dir: str):
     sf0.1). Persisting the two sublinear intermediates cuts the
     corpus passes to the 2 that are fundamental (one to count tokens,
     one to score documents)."""
-    from azurestorage_blueprints_spark.functions.text import tokens
-    from azurestorage_blueprints_spark.queries.curation import _PPL_QZ
+    from azurestorage_blueprints_spark.queries.curation import _doc_tokens, _ppl_lm
 
     d = table(spark, sf_dir, "documents")
-    standing = d.filter(F.col("doc_id") % 10 != 0)
-    tok = standing.select(
-        "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("token")
-    )
+    tok = _doc_tokens(d.filter(F.col("doc_id") % 10 != 0))
     lm = (
         tok.groupBy("lang", "token")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         .persist()
     )
-    tot = lm.groupBy("lang").agg(
-        F.sum("c").cast("bigint").alias("n_l"),
-        F.count(F.lit(1)).cast("bigint").alias("v_l"),
-    )
-    smicro = F.round(
-        F.log(
-            (F.col("n_l").cast("double") + F.col("v_l").cast("double"))
-            / (F.col("c").cast("double") + F.lit(1.0))
-        )
-        * F.lit(_PPL_QZ)
-    ).cast("bigint")
-    s = lm.join(F.broadcast(tot), "lang").select(
-        "lang", "token", "c", smicro.alias("smicro")
-    )
+    s, oovtbl = _ppl_lm(lm)
     # SIZE-BOUNDED deployment (constants doc at _PPL_LM_TOPV): the
     # top-V selection is the two-phase histogram cut (r12 — _topv_keep;
     # the r11 per-language rank form sorted a whole per-language
     # vocab partition in one task) — everything that crosses the driver
     # or a broadcast from here on is O(V_cap x langs) by construction
     s_dep = _topv_keep(s, _PPL_LM_TOPV).select("lang", "token", "smicro").persist()
-    oovtbl = tot.select(
-        "lang",
-        F.round(F.log((F.col("n_l") + F.col("v_l")).cast("double")) * F.lit(_PPL_QZ))
-        .cast("bigint")
-        .alias("oov"),
-    ).persist()
+    oovtbl = oovtbl.persist()
     docce = (
         tok.join(F.broadcast(oovtbl), "lang")
         .join(F.broadcast(s_dep), ["lang", "token"], "left")
@@ -1342,6 +1281,48 @@ def _capped_lm_parts(spark: SparkSession, sf_dir: str):
         .persist()
     )
     return d, s_dep, oovtbl, docce, [lm, docce, s_dep, oovtbl]
+
+
+def _capped_lm_arrivals(spark: SparkSession, sf_dir: str, ks=None) -> DataFrame:
+    """Shared deploy-and-score body of the capped-LM ingest gates:
+    trains the capped model (:func:`_capped_lm_parts`), freezes the
+    per-language thresholds at the ``ks`` ranks (curation._ppl_thresholds
+    — default terciles), deploys model + thresholds as one O(V_cap x
+    langs) constants table (built in the engine, materialized by
+    finalize_bounded, which also releases the pre-pass caches), and
+    returns the scored arrival stream (lang, doc_id, n_tokens,
+    ce_micro, t1, t1_doc, ...). Each arrival looks up its stored
+    language (stream-static metadata join, no hint — the metadata side
+    is corpus-scale) and folds its per-token surprisal row-locally with
+    element_at against the LM map; UNSEEN tokens take the add-one OOV
+    mass ln(N_lang+V_lang)."""
+    from azurestorage_blueprints_spark.functions.text import tokens
+    from azurestorage_blueprints_spark.queries.curation import _ppl_thresholds
+
+    d, s_dep, oovtbl, docce, caches = _capped_lm_parts(spark, sf_dir)
+    thr = _ppl_thresholds(docce, ks=ks)
+    lmmap = s_dep.groupBy("lang").agg(
+        F.map_from_entries(F.collect_list(F.struct("token", "smicro"))).alias("lmmap")
+    )
+    consts = finalize_bounded(thr.join(lmmap, "lang").join(oovtbl, "lang"), *caches)
+
+    arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))
+    arr = arrivals.join(d.select("doc_id", "lang"), "doc_id").join(
+        F.broadcast(consts), "lang"
+    )
+    tk = tokens(F.col("text"))
+    ce = F.aggregate(
+        tk,
+        F.lit(0).cast("bigint"),
+        lambda acc, t: acc + F.coalesce(F.element_at(F.col("lmmap"), t), F.col("oov")),
+    )
+    return arr.select(
+        "lang",
+        "doc_id",
+        F.size(tk).cast("bigint").alias("n_tokens"),
+        ce.alias("ce_micro"),
+        *[c for c in thr.columns if c.startswith("t")],
+    )
 
 
 def _capped_lm_cte() -> str:
@@ -1493,74 +1474,9 @@ def _ppl_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stops the stream mid-replay and restarts it from the same on-disk
     checkpoint — the state-store recovery property a production ingest
     restart actually depends on."""
-    from collections import defaultdict
+    from azurestorage_blueprints_spark.queries.curation import _ppl_bucket
 
-    from azurestorage_blueprints_spark.functions.text import tokens
-    from azurestorage_blueprints_spark.queries.curation import (
-        _PPL_QZ,
-        _ppl_thresholds,
-    )
-
-    # shared capped-LM training pre-pass (r11: O(V_cap x langs) deploy
-    # by construction — see _capped_lm_parts / _PPL_LM_TOPV docs)
-    d, s_dep, oovtbl, docce, caches = _capped_lm_parts(spark, sf_dir)
-    # frozen tercile thresholds: the k-th-smallest (logppl, doc_id)
-    # pairs via the two-phase distributed selection SHARED VERBATIM
-    # with the batch rung (curation._ppl_thresholds) — no corpus-scale
-    # window partitioned by the constant-cardinality lang key
-    thr = _ppl_thresholds(docce)
-    # deploy the frozen model: top-V LM map + OOV mass + tercile
-    # thresholds per language (all collects O(V_cap x langs) — a scorer
-    # loading a trained artifact, not a distributed join)
-    # try/finally: the pre-pass caches must release even when a deploy
-    # collect fails mid-way (r11 ADVICE — a success-path-only unpersist
-    # leaks the cached tables into the shared session)
-    try:
-        mp: dict[str, dict[str, int]] = defaultdict(dict)
-        for r in s_dep.collect():
-            mp[r.lang][r.token] = int(r.smicro)
-        oovm = {r.lang: int(r.oov) for r in oovtbl.collect()}
-        consts = spark.createDataFrame(
-            [
-                (t.lang, mp[t.lang], oovm[t.lang], float(t.t1), int(t.t1_doc),
-                 float(t.t2), int(t.t2_doc))
-                for t in thr.collect()
-            ],
-            "lang string, lmmap map<string,bigint>, oov bigint, "
-            "t1 double, t1_doc bigint, t2 double, t2_doc bigint",
-        )
-    finally:
-        for c in caches:  # the frozen model is deployed; release the pre-pass caches
-            c.unpersist()
-
-    arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))
-    # stored language from the metadata store (stream-static, no hint);
-    # the frozen model table IS provably bounded, so it broadcasts
-    lang_store = d.select("doc_id", "lang")
-    arr = arrivals.join(lang_store, "doc_id").join(F.broadcast(consts), "lang")
-    tk = tokens(F.col("text"))
-    ce = F.aggregate(
-        tk,
-        F.lit(0).cast("bigint"),
-        lambda acc, t: acc + F.coalesce(F.element_at(F.col("lmmap"), t), F.col("oov")),
-    )
-    scored = arr.select(
-        "lang",
-        "doc_id",
-        F.size(tk).cast("bigint").alias("n_tokens"),
-        ce.alias("ce_micro"),
-        "t1",
-        "t1_doc",
-        "t2",
-        "t2_doc",
-    )
-    lp = F.col("ce_micro").cast("double") / float(_PPL_QZ) / F.col("n_tokens")
-    bucket = (
-        F.when((lp < F.col("t1")) | ((lp == F.col("t1")) & (F.col("doc_id") <= F.col("t1_doc"))), 1)
-        .when((lp < F.col("t2")) | ((lp == F.col("t2")) & (F.col("doc_id") <= F.col("t2_doc"))), 2)
-        .otherwise(3)
-        .cast("bigint")
-    )
+    scored = _capped_lm_arrivals(spark, sf_dir)
     # funnel totals sum an exact per-doc MILLI rounding (r12): per-doc
     # ce stays micro-nat (threshold semantics untouched) while the
     # corpus-scale total gains 1000x int64 headroom — inside int64
@@ -1569,7 +1485,7 @@ def _ppl_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ce_mil = F.expr("(ce_micro + 500) div 1000")
     agg = (
         scored.select(
-            "lang", bucket.alias("bucket"), "n_tokens", ce_mil.alias("ce_milli")
+            "lang", _ppl_bucket().alias("bucket"), "n_tokens", ce_mil.alias("ce_milli")
         )
         .groupBy("lang", "bucket")
         .agg(
@@ -1632,8 +1548,8 @@ def _stream_conformal_oracle() -> str:
     "threshold at the door, flagging the weirdest ~10% of arrivals "
     "for review — the distribution-free alarm a crawl pipeline runs "
     "in front of the curation funnel): the SAME capped-LM pre-pass as "
-    "q_stream_perplexity_gate (_capped_lm_parts — top-V deploy, OOV "
-    "tail, O(V_cap x langs) collects by construction) calibrates the "
+    "q_stream_perplexity_gate (_capped_lm_arrivals — top-V deploy, OOV "
+    "tail, O(V_cap x langs) constants by construction) calibrates the "
     "per-language threshold at the exact ceil((n+1)(1-alpha))-th "
     "smallest standing (logppl, doc_id) pair (alpha = 0.1, via the "
     "shared _ppl_thresholds rank-list machinery — note the DEPLOYED "
@@ -1650,66 +1566,10 @@ def _stream_conformal_oracle() -> str:
     "O(V_cap x langs).",
 )
 def q_stream_conformal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections import defaultdict
+    from azurestorage_blueprints_spark.queries.curation import _conf_k, _ppl_le
 
-    from azurestorage_blueprints_spark.functions.text import tokens
-    from azurestorage_blueprints_spark.queries.curation import (
-        _CONF_DEN,
-        _CONF_NUM,
-        _PPL_QZ,
-        _ppl_thresholds,
-    )
-
-    d, s_dep, oovtbl, docce, caches = _capped_lm_parts(spark, sf_dir)
-    kfn = lambda n: F.least(  # noqa: E731 — the shared rank-list convention
-        F.ceil((n + 1) * _CONF_NUM / F.lit(float(_CONF_DEN))).cast("bigint"),
-        n.cast("bigint"),
-    )
-    thr = _ppl_thresholds(docce, ks=[kfn])
-    try:
-        mp: dict[str, dict[str, int]] = defaultdict(dict)
-        for r in s_dep.collect():
-            mp[r.lang][r.token] = int(r.smicro)
-        oovm = {r.lang: int(r.oov) for r in oovtbl.collect()}
-        consts = spark.createDataFrame(
-            [
-                (t.lang, mp[t.lang], oovm[t.lang], float(t.t1), int(t.t1_doc))
-                for t in thr.collect()
-            ],
-            "lang string, lmmap map<string,bigint>, oov bigint, "
-            "t1 double, t1_doc bigint",
-        )
-    finally:
-        for c in caches:
-            c.unpersist()
-
-    arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))
-    lang_store = d.select("doc_id", "lang")
-    arr = arrivals.join(lang_store, "doc_id").join(F.broadcast(consts), "lang")
-    tk = tokens(F.col("text"))
-    ce = F.aggregate(
-        tk,
-        F.lit(0).cast("bigint"),
-        lambda acc, t: acc + F.coalesce(F.element_at(F.col("lmmap"), t), F.col("oov")),
-    )
-    scored = arr.select(
-        "lang",
-        "doc_id",
-        F.size(tk).cast("bigint").alias("n_tokens"),
-        ce.alias("ce_micro"),
-        "t1",
-        "t1_doc",
-    )
-    lp = F.col("ce_micro").cast("double") / float(_PPL_QZ) / F.col("n_tokens")
-    flagged = (
-        F.when(
-            (lp < F.col("t1"))
-            | ((lp == F.col("t1")) & (F.col("doc_id") <= F.col("t1_doc"))),
-            0,
-        )
-        .otherwise(1)
-        .cast("bigint")
-    )
+    scored = _capped_lm_arrivals(spark, sf_dir, ks=[_conf_k])
+    flagged = F.when(_ppl_le("t1"), 0).otherwise(1).cast("bigint")
     # the r12 milli funnel convention — see q_stream_perplexity_gate
     agg = (
         scored.select(
@@ -2213,9 +2073,8 @@ def q_stream_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         bin_of=lambda v: log_bin(v + F.lit(1)),
     )
     # O(langs) model deploy — the bounded-collect convention
-    consts = spark.createDataFrame(
-        [(t.lang, int(t.q1), int(t.q1_key)) for t in thr.collect()],
-        "lang string, t1 bigint, t1_key bigint",
+    consts = finalize_bounded(
+        thr.select("lang", F.col("q1").alias("t1"), F.col("q1_key").alias("t1_key"))
     )
 
     arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))

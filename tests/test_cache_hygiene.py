@@ -125,6 +125,22 @@ def test_finalize_bounded_enforces_row_budget(spark, sf_dir, monkeypatch):
     assert not os.path.exists(spill)
 
 
+def test_finalize_bounded_releases_cache_on_failure(spark):
+    """A failing final collect must still release the persisted inputs:
+    the capped-LM gates hand their pre-pass caches to finalize_bounded
+    and hold no try/finally of their own."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    import azurestorage_blueprints_spark.queries as Q
+
+    spark.catalog.clearCache()
+    cached = spark.range(10).persist()
+    with pytest.raises(Exception, match="boom"):
+        Q.finalize_bounded(cached.select(F.raise_error(F.lit("boom"))), cached)
+    assert _cache_empty(spark), "failed finalize_bounded leaked its cache"
+
+
 def test_semdedup_family_routes_through_finalize_bounded():
     """The corpus-proportional report class (SemDeDup family) must go
     through finalize_bounded — a registered query in that class that

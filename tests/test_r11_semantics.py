@@ -325,6 +325,7 @@ def test_ppl_thresholds_adversarial_cases(spark):
                     kk = [-(-n // 3), -(-2 * n // 3)]
                 else:
                     kk = [min(math.ceil((n + 1) * 9 / 10.0), n)]
+                assert got[lang].n_cal == n, (label, lang)
                 for name, k in zip(names, kk):
                     exp_lp, exp_doc = vals[k - 1]
                     r = got[lang]

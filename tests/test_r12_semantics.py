@@ -129,7 +129,7 @@ def test_topv_selection_plan_has_no_lang_only_window(spark, sf_dir):
     assert len(specs) >= 2, "expected the two bounded windows in the plan"
     for spec in specs:
         if "lang" in spec:
-            assert "cbin" in spec, f"lang-only vocab window survived: {spec}"
+            assert "_qbin" in spec, f"lang-only vocab window survived: {spec}"
 
 
 def test_span_start_hash_is_64bit_on_long_documents(spark):
