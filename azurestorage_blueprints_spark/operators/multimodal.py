@@ -26,6 +26,14 @@ real and tested. Decode support is tiered:
 - ``fake_decode_meta`` parses a tiny deterministic fake header
   (magic + width + height), exercising the same batch path in tests.
 
+The codec rungs share three more pieces from here: the ``VID0`` video
+container (``encode_video``/``decode_video``: magic, frame count, then
+length-prefixed frames — the rungs store 4x4 PPM frames, and
+``sample_frames`` reads it), the half-up 8-bit gray quantizer
+``gray8`` and the clamped 16-bit PCM quantizer ``pcm16``. Both
+quantizers use ``floor(x + 0.5)``, the form the DuckDB oracles
+reproduce exactly.
+
 Scale notes: payload columns ride Arrow between JVM and Python in
 column batches — with ``binaryFile`` sources, set
 ``spark.sql.files.maxPartitionBytes`` so a partition of payloads fits
@@ -1564,16 +1572,53 @@ def extract_features(
 RESIZED_SCHEMA = "content_id bigint, content binary, width int, height int"
 FRAME_SCHEMA = "content_id bigint, frame_idx int, frame binary"
 
-#: fake video container: magic 'FVID' + uint32 frame count, then
-#: fixed-size frames (each a fake image payload)
-FAKE_VIDEO_MAGIC = b"FVID"
-_FRAME_BYTES = 16
+#: video container: magic 'VID0' + uint32 frame count (BE), then each
+#: frame as a uint32 length (BE) + its bytes (the rungs store PPM frames)
+VIDEO_MAGIC = b"VID0"
 
 
-def pack_fake_video(frames: list[bytes]) -> bytes:
-    """Deterministic fake video: frames padded/truncated to 16 bytes."""
-    body = b"".join((f + b"\x00" * _FRAME_BYTES)[:_FRAME_BYTES] for f in frames)
-    return FAKE_VIDEO_MAGIC + struct.pack(">I", len(frames)) + body
+def encode_video(frames: list[bytes]) -> bytes:
+    """Pack frames of any length into the length-prefixed container."""
+    parts = [VIDEO_MAGIC, struct.pack(">I", len(frames))]
+    for f in frames:
+        parts += [struct.pack(">I", len(f)), f]
+    return b"".join(parts)
+
+
+def decode_video(b: bytes) -> list[bytes]:
+    """Inverse of encode_video; a payload without the magic raises."""
+    if b[:4] != VIDEO_MAGIC:
+        raise ValueError("not a VID0 container")
+    frames, off = [], 8
+    for _ in range(int.from_bytes(b[4:8], "big")):
+        ln = int.from_bytes(b[off : off + 4], "big")
+        if off + 4 + ln > len(b):
+            raise ValueError("truncated VID0 container")
+        frames.append(b[off + 4 : off + 4 + ln])
+        off += 4 + ln
+    return frames
+
+
+def gray8(a) -> "object":
+    """Min-max quantize a vector to 8-bit gray with the portable half-up
+    formula ``floor(x + 0.5)`` (the SQL oracles' twin; numpy's banker's
+    ``np.round`` would differ on exact halves). A flat vector is all 0."""
+    import numpy as np
+
+    a = np.asarray(a, dtype=np.float64)
+    lo, hi = float(a.min()), float(a.max())
+    if hi > lo:
+        return np.floor((a - lo) * (255.0 / (hi - lo)) + 0.5).astype(np.uint8)
+    return np.zeros(len(a), dtype=np.uint8)
+
+
+def pcm16(a) -> "object":
+    """Quantize a vector to 16-bit PCM: ``floor(x * 1e4 + 0.5)`` clamped
+    to the int16 rails, little-endian as WAV stores it."""
+    import numpy as np
+
+    a = np.asarray(a, dtype=np.float64)
+    return np.clip(np.floor(a * 10000.0 + 0.5), -32768, 32767).astype("<i2")
 
 
 def resize_image(
@@ -1635,10 +1680,10 @@ def sample_frames(
     id_col: str = "content_id",
     content_col: str = "content",
 ) -> DataFrame:
-    """Sample every k-th frame from fake-video payloads — the exploding
-    mapInPandas shape (one input row → many output rows) a real
-    video-frame extractor uses; frame decode itself would be the
-    injected codec."""
+    """Sample every k-th frame from ``encode_video`` payloads — the
+    exploding mapInPandas shape (one input row → many output rows) a
+    real video-frame extractor uses. Payloads that are not a container
+    contribute no frames."""
 
     def worker(batches: Iterator) -> Iterator:
         import pandas as pd
@@ -1646,15 +1691,14 @@ def sample_frames(
         for pdf in batches:
             ids, idxs, frames = [], [], []
             for cid, payload in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(payload or b"")
-                if len(b) < 8 or b[:4] != FAKE_VIDEO_MAGIC:
+                try:
+                    fs = decode_video(bytes(payload or b""))
+                except ValueError:
                     continue
-                (n,) = struct.unpack(">I", b[4:8])
-                body = b[8:]
-                for i in range(0, n, every_k):
+                for i in range(0, len(fs), every_k):
                     ids.append(cid)
                     idxs.append(i)
-                    frames.append(body[i * _FRAME_BYTES : (i + 1) * _FRAME_BYTES])
+                    frames.append(fs[i])
             yield pd.DataFrame(
                 {"content_id": ids, "frame_idx": idxs, "frame": frames}
             )

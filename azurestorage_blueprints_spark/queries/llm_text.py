@@ -490,73 +490,41 @@ def q_naive_bayes_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return finalize_bounded(out, cnt)
 
 
-@register(
-    "q_multimodal_gif_roundtrip",
-    oracle="""
-    WITH g AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    stats AS (
-      SELECT vec_id, v,
-             list_min(v) AS lo, list_max(v) AS hi
-      FROM g
-    )
-    SELECT vec_id, 8 AS width, 8 AS height,
-           CAST(3 * list_sum(list_transform(v, x ->
-                 CASE WHEN hi > lo
-                      THEN CAST(floor((x - lo) * (255.0 / (hi - lo)) + 0.5) AS BIGINT)
-                      ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS px_checksum
-    FROM stats
-    """,
-    doc="End-to-end GIF codec round-trip as an ORACLE-CHECKED query — "
-    "the multimodal tier's proof that a compressed binary column "
-    "survives encode -> store -> decode bit-exactly: embeddings "
-    "quantize to 8x8 grayscale (floor(x+0.5) half-up — the repo's "
-    "portable quantizer, NOT numpy banker's rounding), compress "
-    "through the real hand-rolled GIF LZW encoder, decode back through "
-    "the decode_image dispatch (operators/multimodal.py decode_gif), "
-    "and report per-image RGB checksums that DuckDB reproduces "
-    "ARITHMETICALLY from the embeddings — any codec bug (palette "
-    "order, LZW width bump, sub-block framing) breaks the hash. All "
-    "three Python stages are Arrow-batched mapInPandas; the codec "
-    "module ships to workers by value (cloudpickle "
-    "register_pickle_by_value) exactly as a production job ships its "
-    "UDF library. Per-image work is O(pixels); no shuffle anywhere — "
-    "embarrassingly parallel over payload partitions at 100 TB.",
-)
-def q_multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ship_mm():
+    """The codec module ``operators/multimodal.py``, registered with
+    cloudpickle to pickle by value. A plain driver session has no repo
+    on the workers' ``sys.path``, so worker closures that call codec
+    functions carry the module with them — the standard way to ship a
+    small UDF library without an ``sc.addPyFile`` step."""
     import azurestorage_blueprints_spark.operators.multimodal as MM
-
-    # plain driver sessions don't ship the repo to Python workers; the
-    # codec module rides the closure by value instead (standard way to
-    # ship a small UDF library without an sc.addPyFile deployment step)
     from pyspark import cloudpickle
 
     cloudpickle.register_pickle_by_value(MM)
-    encode_gif = MM.encode_gif
+    return MM
 
-    e = table(spark, sf_dir, "embeddings")
+
+def _encode_stage(e: DataFrame, payload) -> DataFrame:
+    """One Arrow-batched pass over ``embeddings``: each vector ``a``
+    becomes the binary ``content`` ``payload(a)``."""
 
     def enc(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
-            out = []
-            for vec in pdf["embedding"]:
-                a = np.asarray(vec, dtype=np.float64)
-                lo, hi = float(a.min()), float(a.max())
-                if hi > lo:
-                    g = np.floor((a - lo) * (255.0 / (hi - lo)) + 0.5).astype(np.uint8)
-                else:
-                    g = np.zeros(len(a), dtype=np.uint8)
-                out.append(encode_gif(8, 8, np.repeat(g, 3).tobytes()))
+            out = [payload(a) for a in pdf["embedding"]]
             yield pd.DataFrame({"vec_id": pdf["vec_id"], "content": out})
 
-    gifs = e.mapInPandas(enc, "vec_id long, content binary")
-    decoded = MM.decode_image(gifs, id_col="vec_id")
+    return e.mapInPandas(enc, "vec_id long, content binary")
+
+
+def _image_roundtrip(spark: SparkSession, sf_dir: str, encoder: str) -> DataFrame:
+    """Each embedding as an 8x8 gray image through ``MM.<encoder>``,
+    decoded back by ``MM.decode_image``, reported as dimensions plus the
+    RGB byte sum: three Arrow-batched stages and no shuffle."""
+    MM = _ship_mm()
+    gray8, encode = MM.gray8, getattr(MM, encoder)
+    e = table(spark, sf_dir, "embeddings")
+    images = _encode_stage(e, lambda a: encode(8, 8, gray8(a).repeat(3).tobytes()))
 
     def checksum(batches):
         import numpy as np
@@ -578,9 +546,116 @@ def q_multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    return decoded.mapInPandas(
+    return MM.decode_image(images, id_col="vec_id").mapInPandas(
         checksum, "vec_id long, width int, height int, px_checksum long"
     )
+
+
+def _jpeg_gate(spark: SparkSession, sf_dir: str, encoder: str, verdict: str) -> DataFrame:
+    """One Arrow-batched pass: each embedding's 8x8 gray image through
+    both the baseline ``encode_jpeg`` and ``MM.<encoder>``, each decoded
+    by ``decode_jpeg``; the ``verdict`` column says whether both decodes
+    agree bit for bit."""
+    MM = _ship_mm()
+    gray8, dec = MM.gray8, MM.decode_jpeg
+    enc_base, enc_other = MM.encode_jpeg, getattr(MM, encoder)
+
+    e = table(spark, sf_dir, "embeddings")
+
+    def gate(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = []
+            for vid, vec in zip(pdf["vec_id"], pdf["embedding"]):
+                rgb = gray8(vec).repeat(3).tobytes()
+                base = dec(enc_base(8, 8, rgb))
+                w, h, px = dec(enc_other(8, 8, rgb))
+                rows.append((int(vid), w, h, base == (w, h, px)))
+            yield pd.DataFrame(rows, columns=["vec_id", "width", "height", verdict])
+
+    return e.mapInPandas(
+        gate, f"vec_id long, width int, height int, {verdict} boolean"
+    ).orderBy("vec_id")
+
+
+def _video_codec(MM):
+    """Per-row video functions of the video rungs and the ingest gate:
+    ``pack(a)`` splits a vector into four 16-dim frames, quantizes each
+    with ``gray8`` and stores it as a 4x4 PPM in the ``VID0`` container;
+    ``ahash(frame)`` decodes one PPM frame and returns its 16-bit
+    average hash (bit i set when pixel i is above the frame mean)."""
+    import numpy as np
+
+    gray8, encode_ppm, decode_ppm = MM.gray8, MM.encode_ppm, MM.decode_ppm
+    encode_video = MM.encode_video
+
+    def pack(a):
+        frames = [gray8(a[f * 16 : (f + 1) * 16]).repeat(3).tobytes() for f in range(4)]
+        return encode_video([encode_ppm(4, 4, rgb) for rgb in frames])
+
+    def ahash(frame):
+        g = np.frombuffer(decode_ppm(frame)[2], dtype=np.uint8)[::3].astype(np.float64)
+        bits = (g > g.mean()).astype(np.uint64)
+        return int((bits << np.arange(16, dtype=np.uint64)).sum())
+
+    return pack, ahash
+
+
+#: oracle of the lossless gray-image round-trips (GIF, PNG, BMP): the
+#: RGB checksum is three times the sum of the half-up gray quantization
+_GRAY_CHECKSUM_SQL = """
+    WITH g AS (
+      SELECT vec_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      FROM embeddings
+    ),
+    stats AS (
+      SELECT vec_id, v,
+             list_min(v) AS lo, list_max(v) AS hi
+      FROM g
+    )
+    SELECT vec_id, 8 AS width, 8 AS height,
+           CAST(3 * list_sum(list_transform(v, x ->
+                 CASE WHEN hi > lo
+                      THEN CAST(floor((x - lo) * (255.0 / (hi - lo)) + 0.5) AS BIGINT)
+                      ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS px_checksum
+    FROM stats
+    """
+
+#: the WAV rungs' ``s`` CTE: each embedding as clamped half-up 16-bit
+#: PCM, the SQL twin of ``MM.pcm16``
+_PCM_CTE = """
+    WITH s AS (
+      SELECT vec_id,
+             list_transform(embedding, x ->
+               CAST(greatest(-32768.0, least(32767.0,
+                    floor(CAST(x AS DOUBLE) * 10000.0 + 0.5))) AS BIGINT)) AS pcm
+      FROM embeddings
+    )"""
+
+
+@register(
+    "q_multimodal_gif_roundtrip",
+    oracle=_GRAY_CHECKSUM_SQL,
+    doc="End-to-end GIF codec round-trip as an ORACLE-CHECKED query — "
+    "the multimodal tier's proof that a compressed binary column "
+    "survives encode -> store -> decode bit-exactly: embeddings "
+    "quantize to 8x8 grayscale (floor(x+0.5) half-up — the repo's "
+    "portable quantizer, NOT numpy banker's rounding), compress "
+    "through the real hand-rolled GIF LZW encoder, decode back through "
+    "the decode_image dispatch (operators/multimodal.py decode_gif), "
+    "and report per-image RGB checksums that DuckDB reproduces "
+    "ARITHMETICALLY from the embeddings — any codec bug (palette "
+    "order, LZW width bump, sub-block framing) breaks the hash. All "
+    "three Python stages are Arrow-batched mapInPandas; the codec "
+    "module ships to workers by value (cloudpickle "
+    "register_pickle_by_value) exactly as a production job ships its "
+    "UDF library. Per-image work is O(pixels); no shuffle anywhere — "
+    "embarrassingly parallel over payload partitions at 100 TB.",
+)
+def q_multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _image_roundtrip(spark, sf_dir, "encode_gif")
 
 
 @register(
@@ -631,14 +706,7 @@ def q_text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_multimodal_wav_roundtrip",
-    oracle="""
-    WITH s AS (
-      SELECT vec_id,
-             list_transform(embedding, x ->
-               CAST(greatest(-32768.0, least(32767.0,
-                    floor(CAST(x AS DOUBLE) * 10000.0 + 0.5))) AS BIGINT)) AS pcm
-      FROM embeddings
-    )
+    oracle=f"""{_PCM_CTE}
     SELECT vec_id,
            8000 AS sample_rate,
            1 AS n_channels,
@@ -666,30 +734,10 @@ def q_text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     "anywhere — embarrassingly parallel over payload partitions.",
 )
 def q_multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import azurestorage_blueprints_spark.operators.multimodal as MM
-
-    # ship the codec module to workers by value (plain driver sessions
-    # have no repo on worker sys.path — same route as the GIF twin)
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(MM)
-    encode_wav = MM.encode_wav
-
+    MM = _ship_mm()
+    encode_wav, pcm16 = MM.encode_wav, MM.pcm16
     e = table(spark, sf_dir, "embeddings")
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for vec in pdf["embedding"]:
-                a = np.asarray(vec, dtype=np.float64)
-                pcm = np.clip(np.floor(a * 10000.0 + 0.5), -32768, 32767).astype("<i2")
-                out.append(encode_wav(8000, pcm))
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "content": out})
-
-    wavs = e.mapInPandas(enc, "vec_id long, content binary")
+    wavs = _encode_stage(e, lambda a: encode_wav(8000, pcm16(a)))
     feats = MM.extract_audio_features(wavs, id_col="vec_id")
     return feats.select(
         F.col("content_id").alias("vec_id"),
@@ -798,64 +846,23 @@ def q_compression_ratio_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow-batched and partition-local at any corpus size.",
 )
 def q_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = table(spark, sf_dir, "embeddings")
-
-    def pack(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for vec in pdf["embedding"]:
-                a = np.asarray(vec, dtype=np.float64)
-                payload = bytearray(b"VID0" + len(a).to_bytes(4, "big"))
-                frames = []
-                for f in range(4):
-                    fv = a[f * 16 : (f + 1) * 16]
-                    lo, hi = float(fv.min()), float(fv.max())
-                    if hi > lo:
-                        g = np.floor((fv - lo) * (255.0 / (hi - lo)) + 0.5).astype(
-                            np.uint8
-                        )
-                    else:
-                        g = np.zeros(16, dtype=np.uint8)
-                    frames.append(b"P6\n4 4\n255\n" + np.repeat(g, 3).tobytes())
-                payload += len(frames).to_bytes(4, "big")
-                for fr in frames:
-                    payload += len(fr).to_bytes(4, "big") + fr
-                out.append(bytes(payload))
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "content": out})
-
-    vids = e.mapInPandas(pack, "vec_id long, content binary")
+    MM = _ship_mm()
+    pack, ahash = _video_codec(MM)
+    decode_video = MM.decode_video
+    vids = _encode_stage(table(spark, sf_dir, "embeddings"), pack)
 
     def sample_and_hash(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
             ids, idxs, hashes = [], [], []
             for vid, b in zip(pdf["vec_id"], pdf["content"]):
-                b = bytes(b)
-                if b[:4] != b"VID0":
-                    continue
-                n_frames = int.from_bytes(b[8:12], "big")
-                off = 12
-                for f in range(n_frames):
-                    ln = int.from_bytes(b[off : off + 4], "big")
-                    frame = b[off + 4 : off + 4 + ln]
-                    off += 4 + ln
+                for f, frame in enumerate(decode_video(bytes(b))):
                     if f % 2 != 0:  # sample every 2nd frame
                         continue
-                    if frame[:2] != b"P6":
-                        raise ValueError("not a P6 frame")
-                    hdr_end = frame.index(b"255\n") + 4
-                    g = np.frombuffer(
-                        frame[hdr_end : hdr_end + 48], dtype=np.uint8
-                    )[::3].astype(np.float64)
-                    bits = (g > g.mean()).astype(np.uint64)
                     ids.append(vid)
                     idxs.append(f)
-                    hashes.append(int((bits << np.arange(16, dtype=np.uint64)).sum()))
+                    hashes.append(ahash(frame))
             yield pd.DataFrame(
                 {
                     "vec_id": ids,
@@ -956,14 +963,7 @@ _WAV_FRAME = 16
 
 @register(
     "q_multimodal_wav_frame_energy",
-    oracle=f"""
-    WITH s AS (
-      SELECT vec_id,
-             list_transform(embedding, x ->
-               CAST(greatest(-32768.0, least(32767.0,
-                    floor(CAST(x AS DOUBLE) * 10000.0 + 0.5))) AS BIGINT)) AS pcm
-      FROM embeddings
-    ),
+    oracle=f"""{_PCM_CTE},
     f AS (
       SELECT vec_id,
              list_transform(
@@ -997,30 +997,12 @@ _WAV_FRAME = 16
     "anywhere — embarrassingly parallel over payload partitions.",
 )
 def q_multimodal_wav_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import azurestorage_blueprints_spark.operators.multimodal as MM
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(MM)
-    encode_wav = MM.encode_wav
-    decode_wav = MM.decode_wav
+    MM = _ship_mm()
+    encode_wav, decode_wav, pcm16 = MM.encode_wav, MM.decode_wav, MM.pcm16
     frame = _WAV_FRAME
 
     e = table(spark, sf_dir, "embeddings")
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for vec in pdf["embedding"]:
-                a = np.asarray(vec, dtype=np.float64)
-                pcm = np.clip(np.floor(a * 10000.0 + 0.5), -32768, 32767).astype("<i2")
-                out.append(encode_wav(8000, pcm))
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "content": out})
-
-    wavs = e.mapInPandas(enc, "vec_id long, content binary")
+    wavs = _encode_stage(e, lambda a: encode_wav(8000, pcm16(a)))
 
     def energies(batches):
         import numpy as np
@@ -1083,57 +1065,7 @@ def q_multimodal_wav_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame
     "twins.",
 )
 def q_multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import azurestorage_blueprints_spark.operators.multimodal as MM
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(MM)
-    encode_jpeg = MM.encode_jpeg
-
-    e = table(spark, sf_dir, "embeddings")
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for vec in pdf["embedding"]:
-                a = np.asarray(vec, dtype=np.float64)
-                lo, hi = float(a.min()), float(a.max())
-                if hi > lo:
-                    g = np.floor((a - lo) * (255.0 / (hi - lo)) + 0.5).astype(np.uint8)
-                else:
-                    g = np.zeros(len(a), dtype=np.uint8)
-                out.append(encode_jpeg(8, 8, np.repeat(g, 3).tobytes()))
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "content": out})
-
-    jpegs = e.mapInPandas(enc, "vec_id long, content binary")
-    decoded = MM.decode_image(jpegs, id_col="vec_id")
-
-    def checksum(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            s = [
-                int(np.frombuffer(bytes(px), dtype=np.uint8).astype(np.int64).sum())
-                if ok
-                else None
-                for px, ok in zip(pdf["pixels"], pdf["ok"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["content_id"],
-                    "width": pdf["width"],
-                    "height": pdf["height"],
-                    "px_checksum": pd.array(s, dtype="Int64"),
-                }
-            )
-
-    return decoded.mapInPandas(
-        checksum, "vec_id long, width int, height int, px_checksum long"
-    )
+    return _image_roundtrip(spark, sf_dir, "encode_jpeg")
 
 
 @register(
@@ -1159,38 +1091,7 @@ def q_multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "embarrassingly parallel over payload partitions at 100 TB.",
 )
 def q_multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import azurestorage_blueprints_spark.operators.multimodal as MM
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(MM)
-    enc_base, enc_prog, dec = MM.encode_jpeg, MM.encode_jpeg_progressive, MM.decode_jpeg
-
-    e = table(spark, sf_dir, "embeddings")
-
-    def gate(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for vid, vec in zip(pdf["vec_id"], pdf["embedding"]):
-                a = np.asarray(vec, dtype=np.float64)
-                lo, hi = float(a.min()), float(a.max())
-                if hi > lo:
-                    g = np.floor((a - lo) * (255.0 / (hi - lo)) + 0.5).astype(np.uint8)
-                else:
-                    g = np.zeros(len(a), dtype=np.uint8)
-                rgb = np.repeat(g, 3).tobytes()
-                wb, hb, pb = dec(enc_base(8, 8, rgb))
-                wp, hp, pp = dec(enc_prog(8, 8, rgb))
-                rows.append((int(vid), wp, hp, (wb, hb, pb) == (wp, hp, pp)))
-            yield pd.DataFrame(
-                rows, columns=["vec_id", "width", "height", "prog_equals_baseline"]
-            )
-
-    return e.mapInPandas(
-        gate, "vec_id long, width int, height int, prog_equals_baseline boolean"
-    ).orderBy("vec_id")
+    return _jpeg_gate(spark, sf_dir, "encode_jpeg_progressive", "prog_equals_baseline")
 
 
 @register(
@@ -1221,60 +1122,12 @@ def q_multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame
     "embarrassingly parallel over payload partitions at 100 TB.",
 )
 def q_multimodal_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import azurestorage_blueprints_spark.operators.multimodal as MM
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(MM)
-    enc_base, enc_arith, dec = MM.encode_jpeg, MM.encode_jpeg_arith, MM.decode_jpeg
-
-    e = table(spark, sf_dir, "embeddings")
-
-    def gate(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for vid, vec in zip(pdf["vec_id"], pdf["embedding"]):
-                a = np.asarray(vec, dtype=np.float64)
-                lo, hi = float(a.min()), float(a.max())
-                if hi > lo:
-                    g = np.floor((a - lo) * (255.0 / (hi - lo)) + 0.5).astype(np.uint8)
-                else:
-                    g = np.zeros(len(a), dtype=np.uint8)
-                rgb = np.repeat(g, 3).tobytes()
-                wb, hb, pb = dec(enc_base(8, 8, rgb))
-                wa, ha, pa = dec(enc_arith(8, 8, rgb))
-                rows.append((int(vid), wa, ha, (wb, hb, pb) == (wa, ha, pa)))
-            yield pd.DataFrame(
-                rows, columns=["vec_id", "width", "height", "arith_equals_baseline"]
-            )
-
-    return e.mapInPandas(
-        gate, "vec_id long, width int, height int, arith_equals_baseline boolean"
-    ).orderBy("vec_id")
+    return _jpeg_gate(spark, sf_dir, "encode_jpeg_arith", "arith_equals_baseline")
 
 
 @register(
     "q_multimodal_png_roundtrip",
-    oracle="""
-    WITH g AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    stats AS (
-      SELECT vec_id, v,
-             list_min(v) AS lo, list_max(v) AS hi
-      FROM g
-    )
-    SELECT vec_id, 8 AS width, 8 AS height,
-           CAST(3 * list_sum(list_transform(v, x ->
-                 CASE WHEN hi > lo
-                      THEN CAST(floor((x - lo) * (255.0 / (hi - lo)) + 0.5) AS BIGINT)
-                      ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS px_checksum
-    FROM stats
-    """,
+    oracle=_GRAY_CHECKSUM_SQL,
     doc="End-to-end PNG codec round-trip as an ORACLE-CHECKED query — "
     "the DEFLATE member of the codec trio beside GIF (LZW) and WAV "
     "(PCM): embeddings quantize to 8x8 grayscale with the portable "
@@ -1290,57 +1143,7 @@ def q_multimodal_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     "payload partitions at 100 TB.",
 )
 def q_multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import azurestorage_blueprints_spark.operators.multimodal as MM
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(MM)
-    encode_png = MM.encode_png
-
-    e = table(spark, sf_dir, "embeddings")
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for vec in pdf["embedding"]:
-                a = np.asarray(vec, dtype=np.float64)
-                lo, hi = float(a.min()), float(a.max())
-                if hi > lo:
-                    g = np.floor((a - lo) * (255.0 / (hi - lo)) + 0.5).astype(np.uint8)
-                else:
-                    g = np.zeros(len(a), dtype=np.uint8)
-                out.append(encode_png(8, 8, np.repeat(g, 3).tobytes()))
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "content": out})
-
-    pngs = e.mapInPandas(enc, "vec_id long, content binary")
-    decoded = MM.decode_image(pngs, id_col="vec_id")
-
-    def checksum(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            s = [
-                int(np.frombuffer(bytes(px), dtype=np.uint8).astype(np.int64).sum())
-                if ok
-                else None
-                for px, ok in zip(pdf["pixels"], pdf["ok"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["content_id"],
-                    "width": pdf["width"],
-                    "height": pdf["height"],
-                    "px_checksum": pd.array(s, dtype="Int64"),
-                }
-            )
-
-    return decoded.mapInPandas(
-        checksum, "vec_id long, width int, height int, px_checksum long"
-    )
+    return _image_roundtrip(spark, sf_dir, "encode_png")
 
 
 @register(
@@ -1987,14 +1790,7 @@ def q_eval_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_multimodal_wav_zcr",
-    oracle="""
-    WITH s AS (
-      SELECT vec_id,
-             list_transform(embedding, x ->
-               CAST(greatest(-32768.0, least(32767.0,
-                    floor(CAST(x AS DOUBLE) * 10000.0 + 0.5))) AS BIGINT)) AS pcm
-      FROM embeddings
-    )
+    oracle=f"""{_PCM_CTE}
     SELECT vec_id,
            CAST(len(pcm) AS BIGINT) AS n_samples,
            CAST(list_sum(list_transform(range(1, len(pcm)),
@@ -2022,13 +1818,8 @@ def q_eval_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow-batched mapInPandas, partition-local, zero shuffles.",
 )
 def q_multimodal_wav_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import azurestorage_blueprints_spark.operators.multimodal as MM
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(MM)
-    encode_wav = MM.encode_wav
-    decode_wav = MM.decode_wav
+    MM = _ship_mm()
+    encode_wav, decode_wav, pcm16 = MM.encode_wav, MM.decode_wav, MM.pcm16
 
     e = table(spark, sf_dir, "embeddings")
 
@@ -2039,9 +1830,7 @@ def q_multimodal_wav_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for vid, vec in zip(pdf["vec_id"], pdf["embedding"]):
-                a = np.asarray(vec, dtype=np.float64)
-                pcm = np.clip(np.floor(a * 10000.0 + 0.5), -32768, 32767).astype("<i2")
-                _rate, _nch, samples = decode_wav(bytes(encode_wav(8000, pcm)))
+                _rate, _nch, samples = decode_wav(bytes(encode_wav(8000, pcm16(vec))))
                 ch0 = samples[:, 0].astype(np.int64)
                 n = len(ch0)
                 crossings = int(np.sum(ch0[:-1] * ch0[1:] < 0))
@@ -2172,10 +1961,15 @@ def q_text_unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: strictly above this flags a cut (16-bit hashes; 8 = half the bits)
 _SCENE_CUT_BITS = 8
 
-_SCENE_CUT_SQL = f"""
+def _frame_hash_ctes(where: str = "") -> str:
+    """DuckDB CTEs ``e`` ... ``hashed``: the 16-bit average hash ``h`` of
+    each (vec_id, frame_idx) of the four-frame video every embedding
+    packs into — the SQL twin of ``_video_codec``. ``where`` filters
+    the embeddings table."""
+    return f"""
     WITH e AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
+      FROM embeddings {where}
     ),
     frames AS (
       SELECT vec_id, CAST(unnest([0, 1, 2, 3]) AS BIGINT) AS frame_idx, v
@@ -2201,7 +1995,10 @@ _SCENE_CUT_SQL = f"""
                             THEN CAST(2 AS BIGINT) ** (i - 1)
                             ELSE 0 END)) AS BIGINT) AS h
       FROM quant
-    ),
+    )"""
+
+
+_SCENE_CUT_SQL = f"""{_frame_hash_ctes()},
     deltas AS (
       SELECT vec_id, frame_idx,
              bit_count(xor(h, lead(h) OVER (PARTITION BY vec_id
@@ -2244,62 +2041,21 @@ _SCENE_CUT_SQL = f"""
 def q_multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    e = table(spark, sf_dir, "embeddings")
-
-    def pack(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for vec in pdf["embedding"]:
-                a = np.asarray(vec, dtype=np.float64)
-                payload = bytearray(b"VID0" + len(a).to_bytes(4, "big"))
-                frames = []
-                for f in range(4):
-                    fv = a[f * 16 : (f + 1) * 16]
-                    lo, hi = float(fv.min()), float(fv.max())
-                    if hi > lo:
-                        g = np.floor((fv - lo) * (255.0 / (hi - lo)) + 0.5).astype(
-                            np.uint8
-                        )
-                    else:
-                        g = np.zeros(16, dtype=np.uint8)
-                    frames.append(b"P6\n4 4\n255\n" + np.repeat(g, 3).tobytes())
-                payload += len(frames).to_bytes(4, "big")
-                for fr in frames:
-                    payload += len(fr).to_bytes(4, "big") + fr
-                out.append(bytes(payload))
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "content": out})
-
-    vids = e.mapInPandas(pack, "vec_id long, content binary")
+    MM = _ship_mm()
+    pack, ahash = _video_codec(MM)
+    decode_video = MM.decode_video
+    vids = _encode_stage(table(spark, sf_dir, "embeddings"), pack)
 
     def hash_all_frames(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
             ids, idxs, hashes = [], [], []
             for vid, b in zip(pdf["vec_id"], pdf["content"]):
-                b = bytes(b)
-                if b[:4] != b"VID0":
-                    continue
-                n_frames = int.from_bytes(b[8:12], "big")
-                off = 12
-                for f in range(n_frames):
-                    ln = int.from_bytes(b[off : off + 4], "big")
-                    frame = b[off + 4 : off + 4 + ln]
-                    off += 4 + ln
-                    if frame[:2] != b"P6":
-                        raise ValueError("not a P6 frame")
-                    hdr_end = frame.index(b"255\n") + 4
-                    g = np.frombuffer(
-                        frame[hdr_end : hdr_end + 48], dtype=np.uint8
-                    )[::3].astype(np.float64)
-                    bits = (g > g.mean()).astype(np.uint64)
+                for f, frame in enumerate(decode_video(bytes(b))):
                     ids.append(vid)
                     idxs.append(f)
-                    hashes.append(int((bits << np.arange(16, dtype=np.uint64)).sum()))
+                    hashes.append(ahash(frame))
             yield pd.DataFrame(
                 {
                     "vec_id": ids,
@@ -2864,24 +2620,7 @@ def q_eval_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_multimodal_bmp_roundtrip",
-    oracle="""
-    WITH g AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    stats AS (
-      SELECT vec_id, v,
-             list_min(v) AS lo, list_max(v) AS hi
-      FROM g
-    )
-    SELECT vec_id, 8 AS width, 8 AS height,
-           CAST(3 * list_sum(list_transform(v, x ->
-                 CASE WHEN hi > lo
-                      THEN CAST(floor((x - lo) * (255.0 / (hi - lo)) + 0.5) AS BIGINT)
-                      ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS px_checksum
-    FROM stats
-    """,
+    oracle=_GRAY_CHECKSUM_SQL,
     doc="End-to-end BMP codec round-trip, ORACLE-CHECKED — the "
     "NO-compression member of the codec family beside PNG (DEFLATE), "
     "GIF (LZW), WAV (PCM) and JPEG (DCT): embeddings quantize to 8x8 "
@@ -2900,53 +2639,4 @@ def q_eval_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow-batched mapInPandas; zero shuffles.",
 )
 def q_multimodal_bmp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import azurestorage_blueprints_spark.operators.multimodal as MM
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(MM)
-    encode_bmp = MM.encode_bmp
-
-    e = table(spark, sf_dir, "embeddings")
-
-    def enc(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for vec in pdf["embedding"]:
-                a = np.asarray(vec, dtype=np.float64)
-                lo, hi = float(a.min()), float(a.max())
-                if hi > lo:
-                    g = np.floor((a - lo) * (255.0 / (hi - lo)) + 0.5).astype(np.uint8)
-                else:
-                    g = np.zeros(len(a), dtype=np.uint8)
-                out.append(encode_bmp(8, 8, np.repeat(g, 3).tobytes()))
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "content": out})
-
-    bmps = e.mapInPandas(enc, "vec_id long, content binary")
-    decoded = MM.decode_image(bmps, id_col="vec_id")
-
-    def checksum(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            s = [
-                int(np.frombuffer(bytes(px), dtype=np.uint8).astype(np.int64).sum())
-                if ok
-                else None
-                for px, ok in zip(pdf["pixels"], pdf["ok"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["content_id"],
-                    "width": pdf["width"],
-                    "height": pdf["height"],
-                    "px_checksum": pd.array(s, dtype="Int64"),
-                }
-            )
-
-    return decoded.mapInPandas(
-        checksum, "vec_id long, width int, height int, px_checksum long"
-    )
+    return _image_roundtrip(spark, sf_dir, "encode_bmp")

@@ -1761,38 +1761,12 @@ def q_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_mm_oracle() -> str:
-    from azurestorage_blueprints_spark.queries.llm_text import _SCENE_CUT_BITS
+    from azurestorage_blueprints_spark.queries.llm_text import (
+        _SCENE_CUT_BITS,
+        _frame_hash_ctes,
+    )
 
-    return f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE vec_id % 10 = 0
-    ),
-    frames AS (
-      SELECT vec_id, CAST(unnest([0, 1, 2, 3]) AS BIGINT) AS frame_idx, v
-      FROM e
-    ),
-    sliced AS (
-      SELECT vec_id, frame_idx, v[frame_idx * 16 + 1 : frame_idx * 16 + 16] AS fv
-      FROM frames
-    ),
-    quant AS (
-      SELECT vec_id, frame_idx,
-             CASE WHEN list_max(fv) > list_min(fv)
-                  THEN list_transform(fv, x -> CAST(floor(
-                         (x - list_min(fv)) * (255.0 / (list_max(fv) - list_min(fv)))
-                         + 0.5) AS BIGINT))
-                  ELSE list_transform(fv, x -> CAST(0 AS BIGINT)) END AS g
-      FROM sliced
-    ),
-    hashed AS (
-      SELECT vec_id, frame_idx,
-             CAST(list_sum(list_transform(range(1, 17),
-                  i -> CASE WHEN g[i] > CAST(list_sum(g) AS DOUBLE) / 16.0
-                            THEN CAST(2 AS BIGINT) ** (i - 1)
-                            ELSE 0 END)) AS BIGINT) AS h
-      FROM quant
-    ),
+    return f"""{_frame_hash_ctes("WHERE vec_id % 10 = 0")},
     deltas AS (
       SELECT vec_id,
              bit_count(xor(h, lead(h) OVER (PARTITION BY vec_id
@@ -1842,53 +1816,27 @@ _MM_GATE_MAX_CUTS = 1
     "in-row fold; state is O(2).",
 )
 def q_stream_multimodal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from azurestorage_blueprints_spark.queries.llm_text import _SCENE_CUT_BITS
+    from azurestorage_blueprints_spark.queries.llm_text import (
+        _SCENE_CUT_BITS,
+        _ship_mm,
+        _video_codec,
+    )
 
+    MM = _ship_mm()
+    pack, ahash = _video_codec(MM)
+    decode_video = MM.decode_video
     arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "vectors"))
 
     def pack_decode_hash(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
             ids, rows = [], []
             for vid, vec in zip(pdf["vec_id"], pdf["embedding"]):
-                a = np.asarray(vec, dtype=np.float64)
-                payload = bytearray(b"VID0" + len(a).to_bytes(4, "big"))
-                frames = []
-                for f in range(4):
-                    fv = a[f * 16 : (f + 1) * 16]
-                    lo, hi = float(fv.min()), float(fv.max())
-                    if hi > lo:
-                        g = np.floor((fv - lo) * (255.0 / (hi - lo)) + 0.5).astype(
-                            np.uint8
-                        )
-                    else:
-                        g = np.zeros(16, dtype=np.uint8)
-                    frames.append(b"P6\n4 4\n255\n" + np.repeat(g, 3).tobytes())
-                payload += len(frames).to_bytes(4, "big")
-                for fr in frames:
-                    payload += len(fr).to_bytes(4, "big") + fr
-                b = bytes(payload)
                 # decode back through the container walk (round-trip:
                 # the gate scores what it would STORE, not the input)
-                n_frames = int.from_bytes(b[8:12], "big")
-                off = 12
-                hs = []
-                for _ in range(n_frames):
-                    ln = int.from_bytes(b[off : off + 4], "big")
-                    frame = b[off + 4 : off + 4 + ln]
-                    off += 4 + ln
-                    if frame[:2] != b"P6":
-                        raise ValueError("not a P6 frame")
-                    hdr_end = frame.index(b"255\n") + 4
-                    g = np.frombuffer(
-                        frame[hdr_end : hdr_end + 48], dtype=np.uint8
-                    )[::3].astype(np.float64)
-                    bits = (g > g.mean()).astype(np.uint64)
-                    hs.append(int((bits << np.arange(16, dtype=np.uint64)).sum()))
                 ids.append(vid)
-                rows.append(hs)
+                rows.append([ahash(frame) for frame in decode_video(pack(vec))])
             yield pd.DataFrame({"vec_id": ids, "hs": rows})
 
     hashed = arrivals.mapInPandas(pack_decode_hash, "vec_id long, hs array<long>")

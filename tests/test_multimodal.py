@@ -71,8 +71,8 @@ def test_resize_rewrites_header_and_scales_payload(payloads, spark):
 def test_sample_frames_explodes_every_kth(spark):
     vids = spark.createDataFrame(
         [
-            (1, MM.pack_fake_video([b"frame-%d" % i for i in range(6)])),
-            (2, MM.pack_fake_video([b"only-one"])),
+            (1, MM.encode_video([b"frame-%d" % i for i in range(6)])),
+            (2, MM.encode_video([b"only-one"])),
             (3, b"not-a-video"),
         ],
         "content_id bigint, content binary",
@@ -85,6 +85,68 @@ def test_sample_frames_explodes_every_kth(spark):
     assert by_vid[1][0][1].startswith(b"frame-0")
     assert [i for i, _ in by_vid[2]] == [0]
     assert 3 not in by_vid  # invalid container contributes no frames
+
+
+
+def test_video_container_round_trips_frames_of_any_length():
+    frames = [b"", b"a", b"P6\n4 4\n255\n" + bytes(48), b"xyz" * 100]
+    assert MM.decode_video(MM.encode_video(frames)) == frames
+    assert MM.decode_video(MM.encode_video([])) == []
+    with pytest.raises(ValueError):
+        MM.decode_video(b"FVID" + MM.encode_video(frames)[4:])
+    with pytest.raises(ValueError):
+        MM.decode_video(MM.encode_video(frames)[:-1])
+
+
+def test_gray8_is_half_up_and_flat_vectors_are_zero():
+    import numpy as np
+
+    # 253 * 255 / 510 = 126.5 exactly: half-up gives 127 where numpy's
+    # banker's np.round would give 126
+    assert MM.gray8([0, 253, 510]).tolist() == [0, 127, 255]
+    assert MM.gray8([0, 253, 510]).dtype == np.uint8
+    assert MM.gray8([0.25] * 5).tolist() == [0] * 5
+
+
+def test_pcm16_clamps_at_both_rails():
+    out = MM.pcm16([-10.0, -3.27685, -0.00005, 0.00005, 3.27675, 10.0])
+    assert out.dtype.str == "<i2"
+    assert out.tolist() == [-32768, -32768, 0, 1, 32767, 32767]
+
+
+def test_codec_pieces_have_one_copy():
+    """Source-level pin of the one codec path: the numpy gray-8 and PCM
+    quantizers and the video magic live only in operators/multimodal.py
+    (the vectorised ``np.round`` quantizer of q_multimodal_image_ahash
+    is the one other gray quantizer), and only llm_text._ship_mm
+    registers the codec module to pickle by value."""
+    import ast
+    import pathlib
+    import re
+
+    import azurestorage_blueprints_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    gray, pcm, magic, ship = [], [], [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        src = path.read_text()
+        gray += [rel] * len(re.findall(r"np\.\w+\(\(\w+ - lo\) \* \(255\.0 /", src))
+        pcm += [rel] * len(re.findall(r"np\.clip\(.*32767", src))
+        magic += [rel] * src.count('b"VID0"')
+        for fn in ast.parse(src).body:
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and getattr(node.func, "attr", "") == "register_pickle_by_value"
+                    and (rel == "queries/llm_text.py" or ast.unparse(node.args[0]) == "MM")
+                ):
+                    ship.append(f"{rel}::{fn.name}")
+    assert gray == ["operators/multimodal.py", "queries/dedup.py"]
+    assert "np.round((a - lo)" in (root / "queries/dedup.py").read_text()
+    assert pcm == ["operators/multimodal.py"]
+    assert magic == ["operators/multimodal.py"]
+    assert ship == ["queries/llm_text.py::_ship_mm"]
 
 
 def _gradient_ppm(w, h):
