@@ -67,7 +67,6 @@ REGISTRY: dict[str, Query] = {}
 #: bench.py). Everything else must leave the cache empty on return;
 #: tests/test_cache_hygiene.py enforces both halves.
 PERSIST_THROUGH_RETURN: frozenset[str] = frozenset({
-    "q_multimodal_image_ahash",
     # r11: the per-document CE table feeds the two threshold-selection
     # phases AND the final verdict scan; the output is corpus-scale
     # (one row per document), so finalize_bounded's collect route

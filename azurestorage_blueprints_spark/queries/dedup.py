@@ -8,10 +8,25 @@ The dedup ladder a training-data pipeline runs, cheapest first:
 4. SimHash      — Hamming-distance fingerprints for near-dup text
 5. embedding    — cosine near-duplicates in representation space
 
-1, 2 and 5 are fully deterministic and oracle-checked. 3 and 4 depend
-on the engine's hash function (Spark murmur3 vs DuckDB's) so they are
-declared rows-only — their *candidate recall* is instead validated in
-tests/test_ann_recall.py against the exact Jaccard computation.
+1, 2 and 5 are fully deterministic and oracle-checked. The production
+forms of 3 and 4 (``q_dedup_minhash_lsh``, ``q_dedup_simhash``) hash
+with Spark's murmur3/xxhash64, so they are rows-only; their recall is
+pinned in tests/test_ann_recall.py. Each has an oracle-checked twin
+built from portable polynomial folds: ``q_dedup_minhash_portable``
+(with the incremental, decontamination, audit and calibration rungs
+over the same signatures) and ``q_dedup_simhash_portable`` (with
+``q_dedup_simhash_audit``).
+
+Every sketch has one body, and its wide stages are SQL text (one parse
+instead of a Column tree of py4j calls per bit):
+
+- ``_simhash_votes`` — the per-bit SimHash vote agg and signature sum,
+  for the xxhash64 and the portable 62-bit signatures;
+- ``simhash_pairs`` — the occupancy-capped chunk-blocked Hamming join
+  with the identical-signature rescue, for SimHash, sign-LSH and aHash
+  signatures;
+- ``_mhp_match_sql`` — the portable MinHash agreement count, on both
+  engines, over the candidates of ``_band_pairs``.
 
 Scale notes: exact dedup is one shuffle on the key. Jaccard uses an
 inverted-index (explode → equi-join on token) so work is bounded by
@@ -38,6 +53,19 @@ _MH_PRIME = 2147483647
 # derived from the permutation index, not sampled at runtime)
 _MH_A = [2 * i + 1 for i in range(1, _MH_PERMS + 1)]
 _MH_B = [3 * i + 7 for i in range(_MH_PERMS)]
+
+
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """(a_id, b_id), a_id < b_id, once per pair: the documents of a
+    (doc_id, band, bh) table that share a band bucket."""
+    a = bands.select(F.col("doc_id").alias("a_id"), "band", "bh")
+    b = bands.select(F.col("doc_id").alias("b_id"), "band", "bh")
+    return (
+        a.join(b, ["band", "bh"])
+        .filter(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id")
+        .distinct()
+    )
 
 
 register_sql(
@@ -194,17 +222,10 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = sig.select(
         "doc_id", "sig", F.expr(f"explode(array({band_structs})) AS bs")
     ).select("doc_id", "sig", "bs.band", "bs.bh")
-    a = bands.select(F.col("doc_id").alias("a_id"), "band", "bh")
-    b = bands.select(F.col("doc_id").alias("b_id"), "band", "bh")
     # dedup candidate PAIRS first (cheap: two longs), then join the
     # signatures back — shuffling 64-element arrays through the
     # distinct would dominate the runtime
-    cand = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
+    cand = _band_pairs(bands)
     sig_a = sig.select(F.col("doc_id").alias("a_id"), F.col("sig").alias("a_sig"))
     sig_b = sig.select(F.col("doc_id").alias("b_id"), F.col("sig").alias("b_sig"))
     est = (
@@ -279,6 +300,34 @@ def _ident_pairs(sig: DataFrame, id_col: str, sig_col: str) -> DataFrame:
     return full.unionAll(star)
 
 
+def _simhash_votes(th: DataFrame, bits: list[str]) -> DataFrame:
+    """(doc_id, simhash) from a per-token hash stream ``th`` (doc_id
+    and hash columns, one row per distinct token of a document): bit j
+    is set when more of the document's tokens have ``bits[j]`` = 1 than
+    0, and bit 63 carries -2^63.
+
+    The votes are integer conditional sums in ONE map-side-combined
+    hash-agg (fully codegen'd, and the exchange carries one row of
+    vote sums per document); the signature is one bigint sum. Both are
+    SQL text: one parse per column instead of a Column tree of several
+    py4j round-trips per bit."""
+    votes = th.groupBy("doc_id").agg(
+        *[F.expr(f"sum(CASE WHEN {b} = 1 THEN 1 ELSE -1 END) AS v{j}") for j, b in enumerate(bits)]
+    )
+    # bits 0..62 sum below 2^63, so adding bit 63's -2^63 last never
+    # overflows the signed accumulator
+    sim = " + ".join(
+        f"CASE WHEN v{j} > 0 THEN {-(1 << 63) if j == 63 else 1 << j}L ELSE 0L END"
+        for j in range(len(bits))
+    )
+    return votes.selectExpr("doc_id", f"{sim} AS simhash")
+
+
+def _distinct_tokens(d: DataFrame) -> DataFrame:
+    """(doc_id, tok): each document's distinct tokens, one row each."""
+    return d.select("doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("tok"))
+
+
 def simhash_signatures(d: DataFrame) -> DataFrame:
     """(doc_id, simhash): 64-bit SimHash from the sign of per-bit
     token-hash votes — bit i = sign of sum over distinct tokens of
@@ -292,55 +341,40 @@ def simhash_signatures(d: DataFrame) -> DataFrame:
     # old row-local form ran 64 higher-order F.aggregate vote folds per
     # document — HOF lambdas execute OUTSIDE whole-stage codegen,
     # ~interpreted per element. This form explodes the distinct-token
-    # stream once, hashes with the NATIVE xxhash64 expression, and
-    # takes all 64 per-bit votes as conditional-sum aggregate columns
-    # in ONE map-side-combined hash-agg — fully codegen'd integer ops,
-    # and the exchange carries one 64-int row per document (tokens of a
-    # document stay in their scan partition, so the partial agg
-    # collapses before the shuffle). Votes are the same order-free
-    # integer sums over the same distinct-token set — signature values
-    # are bit-identical to the fold form.
-    tokd = d.select(
-        "doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("tok")
-    )
-    th = tokd.select("doc_id", F.xxhash64("tok").alias("h"))
-    votes = th.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), i).bitwiseAND(1) == 1, 1).otherwise(-1)
-            ).alias(f"v{i}")
-            for i in range(64)
-        ]
-    )
-    sim = None
-    for i in range(64):
-        # bit 63 via bitwise OR of shifted sign contribution would
-        # overflow a positive accumulator; build the signed 64-bit
-        # value directly: sum of 2^i for i<63, minus 2^63 via the
-        # two's-complement identity (x | sign-bit == x - 2^63 here
-        # because the running sum never sets bit 63 on its own)
-        contrib = F.when(
-            F.col(f"v{i}") > 0, F.lit(1 << i if i < 63 else -(1 << 63)).cast("bigint")
-        )
-        bit = contrib.otherwise(F.lit(0).cast("bigint"))
-        sim = bit if sim is None else sim + bit
-    return votes.select("doc_id", sim.alias("simhash"))
+    # stream once and hashes with the NATIVE xxhash64 expression
+    # (tokens of a document stay in their scan partition, so the
+    # partial vote agg collapses before the shuffle). Votes are the
+    # same order-free integer sums over the same distinct-token set —
+    # signature values are bit-identical to the fold form.
+    th = _distinct_tokens(d).selectExpr("doc_id", "xxhash64(tok) AS h")
+    return _simhash_votes(th, [f"shiftright(h, {j}) & 1" for j in range(64)])
+
+
+#: (offset, width) blocking chunks of the 64-bit xxhash64 SimHash
+_SIMHASH_CHUNKS = tuple((16 * i, 16) for i in range(4))
 
 
 def simhash_pairs(
-    sig: DataFrame, max_hamming: int = 3, bucket_cap: int = _SIMHASH_BUCKET_CAP
+    sig: DataFrame,
+    max_hamming: int = 3,
+    bucket_cap: int = _SIMHASH_BUCKET_CAP,
+    chunks: tuple[tuple[int, int], ...] = _SIMHASH_CHUNKS,
+    id_col: str = "doc_id",
+    sig_col: str = "simhash",
 ) -> DataFrame:
-    """Near-dup pairs within ``max_hamming`` from 64-bit SimHash
-    signatures.
+    """(a_id, b_id, hamming BIGINT) pairs within ``max_hamming`` from
+    64-bit signatures (``sig_col``, keyed by ``id_col``) — the one
+    pair join of the SimHash, sign-LSH and aHash rungs.
 
-    Blocking: the signature splits into 4 disjoint 16-bit chunks; by
-    pigeonhole, any pair within Hamming distance 3 agrees on at least
-    one whole chunk, so an equi-join on (chunk_index, chunk_value)
-    finds every such pair while comparing only same-bucket docs.
-    Buckets larger than ``bucket_cap`` are excluded from the BLOCKING
-    join (the _CONTAIN_DF_CAP discipline): they are dense identical
-    clusters or degenerate chunks, and skipping them there bounds
-    candidates at O(N * cap) — the property that keeps
+    Blocking: the signature splits into disjoint ``chunks`` ((offset,
+    width) bit ranges); by pigeonhole, any pair within Hamming distance
+    len(chunks) - 1 agrees on at least one whole chunk, so an
+    equi-join on (chunk_index, chunk_value) finds every such pair
+    while comparing only same-bucket docs. Buckets larger than
+    ``bucket_cap`` are excluded from the BLOCKING join (the
+    _CONTAIN_DF_CAP discipline): they are dense identical clusters or
+    degenerate chunks, and skipping them there bounds candidates at
+    O(N * cap) — the property that keeps
     this rung linear across a 100x scale-up instead of Theta(N^2 /
     constant-bucket-space). Docs inside over-cap buckets are NOT
     dropped outright (r8 verdict task 1): identical-signature groups
@@ -353,18 +387,20 @@ def simhash_pairs(
     distinct shuffles two longs per row.
     """
     # the signature table feeds the chunk explode, the occupancy gate,
-    # and both sides of the candidate rejoin — checkpoint it (one long
-    # per doc) so the 64-fold vote pipeline runs ONCE, not per consumer
-    # (the q_decontaminate staging discipline; measured 2x on the
-    # audit rung)
+    # the rescue and both sides of the candidate rejoin — checkpoint it
+    # (one long per doc) so the signature pipeline runs ONCE, not per
+    # consumer (the q_decontaminate staging discipline; measured 2x on
+    # the audit rung)
     sig = sig.localCheckpoint(eager=False)
-    chunks = ",".join(
-        f"struct({i} AS ci, pmod(shiftright(simhash, {16 * i}), 65536) AS cv)"
-        for i in range(4)
+    # pmod(x >> off, 2^w) is bits [off, off + w) of x, whatever its
+    # sign, while off + w <= 64
+    structs = ",".join(
+        f"struct({i} AS ci, pmod(shiftright({sig_col}, {off}), {1 << w}) AS cv)"
+        for i, (off, w) in enumerate(chunks)
     )
     blocked = sig.select(
-        "doc_id", F.expr(f"explode(array({chunks})) AS c")
-    ).select("doc_id", "c.ci", "c.cv")
+        id_col, F.expr(f"explode(array({structs})) AS c")
+    ).select(id_col, "c.ci", "c.cv")
     # occupancy gate: one map-side-combined agg over (ci, cv) — tiny
     # relative to the pair join it bounds
     ok = (
@@ -374,22 +410,21 @@ def simhash_pairs(
         .select("ci", "cv")
     )
     capped = blocked.join(ok, ["ci", "cv"])
-    a = capped.select(F.col("doc_id").alias("a_id"), "ci", "cv")
-    b = capped.select(F.col("doc_id").alias("b_id"), "ci", "cv")
+    a = capped.select(F.col(id_col).alias("a_id"), "ci", "cv")
+    b = capped.select(F.col(id_col).alias("b_id"), "ci", "cv")
     cand = (
         a.join(b, ["ci", "cv"])
         .filter(F.col("a_id") < F.col("b_id"))
         .select("a_id", "b_id")
-        .unionAll(_ident_pairs(sig, "doc_id", "simhash"))
+        .unionAll(_ident_pairs(sig, id_col, sig_col))
         .distinct()
     )
-    sig_a = sig.select(F.col("doc_id").alias("a_id"), F.col("simhash").alias("a_sim"))
-    sig_b = sig.select(F.col("doc_id").alias("b_id"), F.col("simhash").alias("b_sim"))
-    ham = F.bit_count(F.expr("a_sim ^ b_sim"))
+    sig_a = sig.select(F.col(id_col).alias("a_id"), F.col(sig_col).alias("a_sim"))
+    sig_b = sig.select(F.col(id_col).alias("b_id"), F.col(sig_col).alias("b_sim"))
     return (
         cand.join(sig_a, "a_id")
         .join(sig_b, "b_id")
-        .select("a_id", "b_id", ham.alias("hamming"))
+        .selectExpr("a_id", "b_id", "CAST(bit_count(a_sim ^ b_sim) AS BIGINT) AS hamming")
         .filter(F.col("hamming") <= max_hamming)
     )
 
@@ -801,8 +836,8 @@ def q_dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     "already share a chunk by luck, so tighten to <=7 when the "
     "guarantee matters. The equi-join on (chunk, value) compares only "
     "same-bucket images — never |images|^2 — and buckets over the "
-    "shared occupancy cap are excluded (r8, the simhash_pairs "
-    "discipline), bounding candidates at O(N*cap) despite the "
+    "shared occupancy cap are excluded (r8; the rung calls "
+    "simhash_pairs), bounding candidates at O(N*cap) despite the "
     "constant 8-bit chunk space; identical-ahash groups are paired "
     "directly via the r9 _ident_pairs rescue so the cap never costs "
     "Hamming-0 recall). Both Python stages are "
@@ -879,54 +914,11 @@ def q_multimodal_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
             out = hv.view(np.int64)  # two's-complement reinterpret
             yield pd.DataFrame({"vec_id": pdf["vec_id"], "ahash": pd.array(out, dtype="int64")})
 
-    # the signature table feeds the chunk explode AND both sides of the
-    # candidate rejoin — persist so the two Python stages run once.
-    # The final pair output is UNBOUNDED (O(near-dup pairs)), so the
-    # finalize_bounded materialize-and-release pattern cannot apply;
-    # this query is in PERSIST_THROUGH_RETURN and relies on the
-    # standard per-query teardown (catalog.clearCache() before the next
-    # query — __spark_entry__/bench.py) to release the 16-byte/row cache
-    sig = imgs.mapInPandas(ahash, "vec_id long, ahash long").persist()
-
-    chunks = ",".join(
-        f"struct({i} AS ci, pmod(shiftrightunsigned(ahash, {8 * i}), 256) AS cv)"
-        for i in range(8)
-    )
-    blocked = sig.select("vec_id", F.expr(f"explode(array({chunks})) AS c")).select(
-        "vec_id", "c.ci", "c.cv"
-    )
-    # same occupancy discipline as simhash_pairs (r8): an over-cap
-    # (chunk, value) bucket is a dense identical-render cluster or a
-    # degenerate low-entropy chunk; skipping it bounds the candidate
-    # join at O(N * cap) instead of Theta(N^2 / 2048-bucket-space)
-    ok = (
-        blocked.groupBy("ci", "cv")
-        .agg(F.count(F.lit(1)).alias("bn"))
-        .filter(F.col("bn") <= _SIMHASH_BUCKET_CAP)
-        .select("ci", "cv")
-    )
-    capped = blocked.join(ok, ["ci", "cv"])
-    a = capped.select(F.col("vec_id").alias("a_id"), "ci", "cv")
-    b = capped.select(F.col("vec_id").alias("b_id"), "ci", "cv")
-    # identical-ahash rescue (r8 verdict task 1, shared with
-    # simhash_pairs): images whose every chunk bucket is over cap are
-    # dense identical-render clusters — pair them directly inside the
-    # hash group so the cap costs throughput headroom, never Hamming-0
-    # recall
-    cand = (
-        a.join(b, ["ci", "cv"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .unionAll(_ident_pairs(sig, "vec_id", "ahash"))
-        .distinct()
-    )
-    sa = sig.select(F.col("vec_id").alias("a_id"), F.col("ahash").alias("a_h"))
-    sb = sig.select(F.col("vec_id").alias("b_id"), F.col("ahash").alias("b_h"))
-    return (
-        cand.join(sa, "a_id")
-        .join(sb, "b_id")
-        .select("a_id", "b_id", F.bit_count(F.expr("a_h ^ b_h")).alias("hamming"))
-        .filter(F.col("hamming") <= 16)
+    # 8 chunks of 8 bits: the shared pair join's checkpoint runs the
+    # two Python stages once for every consumer of the signature table
+    sig = imgs.mapInPandas(ahash, "vec_id long, ahash long")
+    return simhash_pairs(
+        sig, 16, chunks=tuple((8 * i, 8) for i in range(8)), id_col="vec_id", sig_col="ahash"
     )
 
 
@@ -1267,51 +1259,38 @@ def _mhp_bands(sig: DataFrame) -> DataFrame:
     )
 
 
+def _mhp_match_sql(a: str, b: str) -> str:
+    """The number of signature components on which the rows aliased
+    ``a`` and ``b`` agree — one text for both engines."""
+    return " + ".join(
+        f"CASE WHEN {a}.s{i} = {b}.s{i} THEN 1 ELSE 0 END" for i in range(_MHP_PERMS)
+    )
+
+
+#: the estimated Jaccard of an ``_mhp_agree`` row: agreeing components / perms
+_MHP_EST = f"cast(({_mhp_match_sql('sa', 'sb')}) as double) / {_MHP_PERMS}.0"
+
+
+def _mhp_agree(cand: DataFrame, sig: DataFrame, a_id: str, b_id: str) -> DataFrame:
+    """``cand`` joined to the signatures of its ``a_id`` and ``b_id``
+    documents, aliased ``sa`` and ``sb`` for :func:`_mhp_match_sql`."""
+    return cand.join(sig.alias("sa"), F.col(a_id) == F.col("sa.doc_id")).join(
+        sig.alias("sb"), F.col(b_id) == F.col("sb.doc_id")
+    )
+
+
 @register(
     "q_dedup_minhash_portable",
     oracle=f"""
-    WITH th AS (
-      SELECT doc_id,
-             list_transform(
-               list_filter(string_split(text, ' '), t -> t <> ''),
-               t -> list_reduce(
-                      list_prepend(CAST(0 AS BIGINT),
-                        list_transform(string_split(t, ''),
-                                       c -> CAST(ascii(c) AS BIGINT))),
-                      (h, c) -> (h * 31 + c) % {_MHP_M})) AS hs
-      FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             unnest(CASE WHEN len(hs) >= 3 THEN
-                      list_transform(range(1, len(hs) - 1),
-                        i -> ((hs[i] * 31 + hs[i + 1]) % {_MHP_M} * 31
-                              + hs[i + 2]) % {_MHP_M})
-                    ELSE
-                      [((hs[1] * 31 + coalesce(hs[2], 0)) % {_MHP_M} * 31
-                        + coalesce(hs[3], 0)) % {_MHP_M}]
-                    END) AS h
-      FROM th WHERE len(hs) > 0
-    ),
-    sig AS (
-      SELECT doc_id,
-             {", ".join(f"CAST(min(({_MH_A[i]} * h + {_MH_B[i]}) % {_MHP_M}) AS BIGINT) AS s{i}" for i in range(_MHP_PERMS))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-          f"SELECT doc_id, {bi} AS band, "
-          f"CAST({_mhp_band_hash([f's{bi * _MHP_ROWS + r}' for r in range(_MHP_ROWS)])} AS BIGINT) AS bh, "
-          f"{', '.join(f's{i}' for i in range(_MHP_PERMS))} FROM sig"
-          for bi in range(_MHP_BANDS))}
-    ),
+    WITH {_mhp_sig_sql()},
+    bands AS ({_mhp_bands_sql("sig")}),
     cand AS (
       SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
     )
     SELECT c.a_id, c.b_id,
-           CAST(({" + ".join(f"CASE WHEN sa.s{i} = sb.s{i} THEN 1 ELSE 0 END" for i in range(_MHP_PERMS))})
+           CAST(({_mhp_match_sql("sa", "sb")})
                 AS DOUBLE) / {_MHP_PERMS}.0 AS est_jaccard
     FROM cand c
     JOIN sig sa ON c.a_id = sa.doc_id
@@ -1340,30 +1319,10 @@ def q_dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # portable per-token hash (the rolling-fingerprint fold) computed
     # ONCE per token, shingles via lead, 16 min-aggs — shared helper
     sig = _mhp_sig(d)
-    bands = _mhp_bands(sig)
-    a = bands.select(F.col("doc_id").alias("a_id"), "band", "bh")
-    b = bands.select(F.col("doc_id").alias("b_id"), "band", "bh")
-    cand = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    sig_a = sig.select(
-        F.col("doc_id").alias("a_id"), *[F.col(f"s{i}").alias(f"sa{i}") for i in range(_MHP_PERMS)]
-    )
-    sig_b = sig.select(
-        F.col("doc_id").alias("b_id"), *[F.col(f"s{i}").alias(f"sb{i}") for i in range(_MHP_PERMS)]
-    )
-    est = F.expr(
-        "cast(("
-        + " + ".join(f"CASE WHEN sa{i} = sb{i} THEN 1 ELSE 0 END" for i in range(_MHP_PERMS))
-        + f") as double) / {_MHP_PERMS}.0"
-    )
+    cand = _band_pairs(_mhp_bands(sig))
     return (
-        cand.join(sig_a, "a_id")
-        .join(sig_b, "b_id")
-        .select("a_id", "b_id", est.alias("est_jaccard"))
+        _mhp_agree(cand, sig, "a_id", "b_id")
+        .selectExpr("a_id", "b_id", f"{_MHP_EST} AS est_jaccard")
         .orderBy("a_id", "b_id")
     )
 
@@ -1480,92 +1439,23 @@ def _shp_pairs_sql() -> str:
 def _shp_sig(d: DataFrame) -> DataFrame:
     """Spark twin of _shp_sig_sql: (doc_id, simhash) — 62-bit portable
     SimHash from two polynomial token folds."""
-    # r12 rewrite (guide §4.1/§2.3, the _emb_lsh_sig precedent and the
-    # simhash_signatures shape): the per-TOKEN polynomial char-folds
-    # stay higher-order (they are the hash definition), but the 62
-    # per-bit vote folds over the token array — previously 62 HOF
-    # F.aggregate calls per document, interpreted outside codegen — are
-    # now conditional-sum aggregate columns in ONE map-side-combined
-    # hash-agg over the exploded distinct-token stream. Same order-free
-    # integer votes over the same token set: signatures bit-identical.
-    codes = lambda t: F.transform(F.split(t, ""), lambda c: F.ascii(c).cast("bigint"))  # noqa: E731
-
-    def fold(tok, mult: int):
-        return F.aggregate(
-            codes(tok),
-            F.lit(0).cast("bigint"),
-            lambda h, c: (h * mult + c) % F.lit(_MHP_M).cast("bigint"),
-        )
-
-    tokd = d.select(
-        "doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("tok")
-    )
-    th = tokd.select(
-        "doc_id",
-        fold(F.col("tok"), _SHP_MULTS[0]).alias("h0"),
-        fold(F.col("tok"), _SHP_MULTS[1]).alias("h1"),
-    )
-    vote_cols = []
-    for f_i in range(2):
-        for i in range(_SHP_BITS_PER_FOLD):
-            vote_cols.append(
-                F.sum(
-                    F.when(
-                        F.shiftright(F.col(f"h{f_i}"), i).bitwiseAND(1) == 1, 1
-                    ).otherwise(-1)
-                ).alias(f"v{f_i}_{i}")
-            )
-    votes = th.groupBy("doc_id").agg(*vote_cols)
-    sim = None
-    for f_i in range(2):
-        for i in range(_SHP_BITS_PER_FOLD):
-            w = 1 << (f_i * _SHP_BITS_PER_FOLD + i)
-            bit = F.when(F.col(f"v{f_i}_{i}") > 0, F.lit(w).cast("bigint")).otherwise(
-                F.lit(0).cast("bigint")
-            )
-            sim = bit if sim is None else sim + bit
-    return votes.select("doc_id", sim.alias("simhash"))
-
-
-def _shp_pairs(sig: DataFrame) -> DataFrame:
-    """Spark twin of _shp_pairs_sql: blocking + occupancy cap +
-    identical-signature rescue + Hamming filter over portable
-    signatures."""
-    # same staging as simhash_pairs: the 62-fold portable vote pipeline
-    # must run once, not once per consumer
-    sig = sig.localCheckpoint(eager=False)
-    chunks = ",".join(
-        f"struct({i} AS ci, pmod(shiftright(simhash, {off}), {1 << w}) AS cv)"
-        for i, (off, w) in enumerate(_SHP_CHUNKS)
-    )
-    blocked = sig.select(
-        "doc_id", F.expr(f"explode(array({chunks})) AS c")
-    ).select("doc_id", "c.ci", "c.cv")
-    ok = (
-        blocked.groupBy("ci", "cv")
-        .agg(F.count(F.lit(1)).alias("bn"))
-        .filter(F.col("bn") <= _SIMHASH_BUCKET_CAP)
-        .select("ci", "cv")
-    )
-    capped = blocked.join(ok, ["ci", "cv"])
-    a = capped.select(F.col("doc_id").alias("a_id"), "ci", "cv")
-    b = capped.select(F.col("doc_id").alias("b_id"), "ci", "cv")
-    cand = (
-        a.join(b, ["ci", "cv"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .unionAll(_ident_pairs(sig, "doc_id", "simhash"))
-        .distinct()
-    )
-    sig_a = sig.select(F.col("doc_id").alias("a_id"), F.col("simhash").alias("a_sim"))
-    sig_b = sig.select(F.col("doc_id").alias("b_id"), F.col("simhash").alias("b_sim"))
-    ham = F.bit_count(F.expr("a_sim ^ b_sim")).cast("bigint")
-    return (
-        cand.join(sig_a, "a_id")
-        .join(sig_b, "b_id")
-        .select("a_id", "b_id", ham.alias("hamming"))
-        .filter(F.col("hamming") <= _SHP_HAMMING)
-        .orderBy("a_id", "b_id")
+    # the per-TOKEN polynomial char-folds stay higher-order (they are
+    # the hash definition); the 62 per-bit votes are the shared
+    # map-side-combined hash-agg over the distinct-token stream — the
+    # same order-free integer votes as the oracle's per-document folds
+    folds = [
+        "aggregate(transform(split(tok, ''), c -> cast(ascii(c) as bigint)), "
+        f"cast(0 as bigint), (h, c) -> (h * {mult} + c) % {_MHP_M}) AS h{f_i}"
+        for f_i, mult in enumerate(_SHP_MULTS)
+    ]
+    th = _distinct_tokens(d).selectExpr("doc_id", *folds)
+    return _simhash_votes(
+        th,
+        [
+            f"shiftright(h{f_i}, {i}) & 1"
+            for f_i in range(len(_SHP_MULTS))
+            for i in range(_SHP_BITS_PER_FOLD)
+        ],
     )
 
 
@@ -1597,7 +1487,7 @@ def _shp_pairs(sig: DataFrame) -> DataFrame:
 )
 def q_dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    return _shp_pairs(_shp_sig(d))
+    return simhash_pairs(_shp_sig(d), _SHP_HAMMING, chunks=_SHP_CHUNKS).orderBy("a_id", "b_id")
 
 
 #: portable sign-LSH geometry for q_dedup_embedding_lsh: 62 integer
@@ -1727,7 +1617,7 @@ def _emb_lsh_sig(e: DataFrame) -> DataFrame:
 )
 def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-    pairs = _shp_pairs(_emb_lsh_sig(e))
+    pairs = simhash_pairs(_emb_lsh_sig(e), _SHP_HAMMING, chunks=_SHP_CHUNKS)
     en = e.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
@@ -1769,7 +1659,7 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(measured 182.5 s at 200k vectors vs 21.6 s for the LSH form — a "
     "365x blow-up for a 100x scale-up). The blocking key is now "
     "DERIVED FROM THE DATA: the shared 62-bit sign-LSH signature and "
-    "the full _shp_pairs machinery (4-chunk pigeonhole, occupancy cap, "
+    "the full simhash_pairs machinery (4-chunk pigeonhole, occupancy cap, "
     "identical-signature rescue) that q_dedup_embedding_lsh uses — "
     "label survives only as an output annotation on the a-side vector. "
     "Candidates verify with the exact clamped cosine at the rung's "
@@ -1783,7 +1673,7 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-    pairs = _shp_pairs(_emb_lsh_sig(e))
+    pairs = simhash_pairs(_emb_lsh_sig(e), _SHP_HAMMING, chunks=_SHP_CHUNKS)
     en = e.select(
         "vec_id",
         "label",
@@ -1887,7 +1777,7 @@ def q_dedup_embedding_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture = (
         base.unionAll(ident).unionAll(pert).select("vec_id", F.col("v").alias("embedding"))
     )
-    pairs = _shp_pairs(_emb_lsh_sig(fixture))
+    pairs = simhash_pairs(_emb_lsh_sig(fixture), _SHP_HAMMING, chunks=_SHP_CHUNKS)
     en = fixture.select(
         "vec_id", F.col("embedding").alias("v"), norm(F.col("embedding")).alias("nrm")
     )
@@ -1991,7 +1881,7 @@ def q_dedup_simhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(" zqx7veil")).alias("text"),
     )
     fixture = d.select("doc_id", "text").unionAll(same_set).unionAll(one_tok)
-    pairs = _shp_pairs(_shp_sig(fixture))
+    pairs = simhash_pairs(_shp_sig(fixture), _SHP_HAMMING, chunks=_SHP_CHUNKS)
     pair_type = (
         F.when(
             (F.col("a_id") < _SHA_SLICE)
@@ -2037,7 +1927,7 @@ _INC_DUP_EST = 0.5  # >= 8 of 16 matching components → duplicate
     ),
     scored AS (
       SELECT cd.a_id, cd.c_id,
-             CAST(({" + ".join(f"CASE WHEN sa.s{i} = sc.s{i} THEN 1 ELSE 0 END" for i in range(_MHP_PERMS))})
+             CAST(({_mhp_match_sql("sa", "sc")})
                   AS DOUBLE) / {_MHP_PERMS}.0 AS est_jaccard
       FROM cand cd
       JOIN sig sa ON cd.a_id = sa.doc_id
@@ -2089,23 +1979,8 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("c_id"), "band", "bh"
     )
     cand = arrb.join(corb, ["band", "bh"]).select("a_id", "c_id").distinct()
-    sig_a = sig.select(
-        F.col("doc_id").alias("a_id"),
-        *[F.col(f"s{i}").alias(f"sa{i}") for i in range(_MHP_PERMS)],
-    )
-    sig_c = sig.select(
-        F.col("doc_id").alias("c_id"),
-        *[F.col(f"s{i}").alias(f"sc{i}") for i in range(_MHP_PERMS)],
-    )
-    est = F.expr(
-        "cast(("
-        + " + ".join(f"CASE WHEN sa{i} = sc{i} THEN 1 ELSE 0 END" for i in range(_MHP_PERMS))
-        + f") as double) / {_MHP_PERMS}.0"
-    )
-    scored = (
-        cand.join(sig_a, "a_id")
-        .join(sig_c, "c_id")
-        .select("a_id", "c_id", est.alias("est_jaccard"))
+    scored = _mhp_agree(cand, sig, "a_id", "c_id").selectExpr(
+        "a_id", "c_id", f"{_MHP_EST} AS est_jaccard"
     )
     rn = F.row_number().over(
         W.partitionBy("a_id").orderBy(F.desc("est_jaccard"), F.asc("c_id"))
@@ -2150,7 +2025,7 @@ _DECON_EVAL_REM = 0
     ),
     scored AS (
       SELECT cd.e_id,
-             CAST(({" + ".join(f"CASE WHEN sa.s{i} = sc.s{i} THEN 1 ELSE 0 END" for i in range(_MHP_PERMS))})
+             CAST(({_mhp_match_sql("sa", "sc")})
                   AS DOUBLE) / {_MHP_PERMS}.0 AS est_jaccard
       FROM cand cd
       JOIN sig sa ON cd.e_id = sa.doc_id
@@ -2191,8 +2066,6 @@ _DECON_EVAL_REM = 0
     "and the report is one small agg keyed by source.",
 )
 def q_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W  # noqa: F401  (parallel to siblings)
-
     from azurestorage_blueprints_spark.queries import finalize_bounded
 
     d = table(spark, sf_dir, "documents")
@@ -2205,23 +2078,9 @@ def q_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("t_id"), "band", "bh"
     )
     cand = evb.join(trb, ["band", "bh"]).select("e_id", "t_id").distinct()
-    sig_e = sig.select(
-        F.col("doc_id").alias("e_id"),
-        *[F.col(f"s{i}").alias(f"sa{i}") for i in range(_MHP_PERMS)],
-    )
-    sig_t = sig.select(
-        F.col("doc_id").alias("t_id"),
-        *[F.col(f"s{i}").alias(f"sc{i}") for i in range(_MHP_PERMS)],
-    )
-    est = F.expr(
-        "cast(("
-        + " + ".join(f"CASE WHEN sa{i} = sc{i} THEN 1 ELSE 0 END" for i in range(_MHP_PERMS))
-        + f") as double) / {_MHP_PERMS}.0"
-    )
     best = (
-        cand.join(sig_e, "e_id")
-        .join(sig_t, "t_id")
-        .select("e_id", est.alias("est_jaccard"))
+        _mhp_agree(cand, sig, "e_id", "t_id")
+        .selectExpr("e_id", f"{_MHP_EST} AS est_jaccard")
         .groupBy("e_id")
         .agg(F.max("est_jaccard").alias("best_est"))
     )
@@ -2318,48 +2177,10 @@ def q_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    sig = _mhp_sig(d)
-    bands = _mhp_bands(sig)
-    a = bands.select(F.col("doc_id").alias("a_id"), "band", "bh")
-    b = bands.select(F.col("doc_id").alias("b_id"), "band", "bh")
-    cand = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
+    cand = _band_pairs(_mhp_bands(_mhp_sig(d)))
     # exact ground truth over the SAME portable 3-gram shingles the
     # signatures minhash — distinct per doc, inverted-index join
-    toked = d.select("doc_id", tokens(F.col("text")).alias("tk"))
-    p = toked.select("doc_id", F.posexplode("tk").alias("pos", "tok"))
-    codes = F.transform(F.split(F.col("tok"), ""), lambda c: F.ascii(c).cast("bigint"))
-    th = F.aggregate(
-        codes,
-        F.lit(0).cast("bigint"),
-        lambda h, c: (h * 31 + c) % F.lit(_MHP_M).cast("bigint"),
-    )
-    hp = p.select("doc_id", "pos", th.alias("h0"))
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("doc_id").orderBy("pos")
-    shd = (
-        hp.select(
-            "doc_id",
-            "pos",
-            "h0",
-            F.lead("h0", 1).over(w).alias("h1"),
-            F.lead("h0", 2).over(w).alias("h2"),
-        )
-        .filter(F.col("h2").isNotNull() | (F.col("pos") == 0))
-        .select(
-            "doc_id",
-            F.expr(
-                f"((h0 * 31 + coalesce(h1, 0)) % {_MHP_M} * 31"
-                f" + coalesce(h2, 0)) % {_MHP_M}"
-            ).alias("h"),
-        )
-        .distinct()
-    )
+    shd = _mhp_posting(d).distinct()
     sizes = shd.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     ia = shd.select(F.col("doc_id").alias("a_id"), "h")
     ib = shd.select(F.col("doc_id").alias("b_id"), "h")
@@ -2769,7 +2590,7 @@ _MHP_CALIB_SQL = f"""
         ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
     mt AS (
       SELECT c.a_id, c.b_id,
-             CAST(({" + ".join(f"CASE WHEN sa.s{i} = sb.s{i} THEN 1 ELSE 0 END" for i in range(_MHP_PERMS))})
+             CAST(({_mhp_match_sql("sa", "sb")})
                   AS BIGINT) AS n_match
       FROM cand c
       JOIN sig sa ON c.a_id = sa.doc_id
@@ -2828,23 +2649,9 @@ def q_dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = _mhp_sig(d)
     post = _mhp_posting(d).distinct()
     v = post.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("v"))
-    bands = _mhp_bands(sig)
-    a = bands.select(F.col("doc_id").alias("a_id"), "band", "bh")
-    b = bands.select(F.col("doc_id").alias("b_id"), "band", "bh")
-    cand = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    match_expr = sum(
-        F.when(F.col(f"sa.s{i}") == F.col(f"sb.s{i}"), 1).otherwise(0)
-        for i in range(_MHP_PERMS)
-    )
-    mt = (
-        cand.join(sig.alias("sa"), F.col("a_id") == F.col("sa.doc_id"))
-        .join(sig.alias("sb"), F.col("b_id") == F.col("sb.doc_id"))
-        .select("a_id", "b_id", match_expr.cast("bigint").alias("n_match"))
+    cand = _band_pairs(_mhp_bands(sig))
+    mt = _mhp_agree(cand, sig, "a_id", "b_id").selectExpr(
+        "a_id", "b_id", f"CAST(({_mhp_match_sql('sa', 'sb')}) AS BIGINT) AS n_match"
     )
     pa = post.select(F.col("doc_id").alias("a_id"), "h")
     pb = post.select(F.col("doc_id").alias("b_id"), "h")

@@ -514,7 +514,7 @@ def _encode_stage(e: DataFrame, payload) -> DataFrame:
             out = [payload(a) for a in pdf["embedding"]]
             yield pd.DataFrame({"vec_id": pdf["vec_id"], "content": out})
 
-    return e.mapInPandas(enc, "vec_id long, content binary")
+    return e.select("vec_id", "embedding").mapInPandas(enc, "vec_id long, content binary")
 
 
 def _image_roundtrip(spark: SparkSession, sf_dir: str, encoder: str) -> DataFrame:
@@ -574,7 +574,7 @@ def _jpeg_gate(spark: SparkSession, sf_dir: str, encoder: str, verdict: str) -> 
                 rows.append((int(vid), w, h, base == (w, h, px)))
             yield pd.DataFrame(rows, columns=["vec_id", "width", "height", verdict])
 
-    return e.mapInPandas(
+    return e.select("vec_id", "embedding").mapInPandas(
         gate, f"vec_id long, width int, height int, {verdict} boolean"
     ).orderBy("vec_id")
 
@@ -1856,7 +1856,7 @@ def q_multimodal_wav_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    return e.mapInPandas(
+    return e.select("vec_id", "embedding").mapInPandas(
         profile,
         "vec_id long, n_samples long, n_crossings long, peak_abs long, "
         "n_clipped long, zcr double",

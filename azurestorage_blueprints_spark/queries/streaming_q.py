@@ -531,8 +531,6 @@ def q_stream_json_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ONE streaming plan: stateless projections → band explode →
 # stream-static equi-join → a single aggregation.
 
-_SIG_M = 2147483647
-
 
 def _rowlocal_bands(df: DataFrame) -> DataFrame:
     """(doc_id, text) → (doc_id, band, bh) with NO window and NO
@@ -542,11 +540,12 @@ def _rowlocal_bands(df: DataFrame) -> DataFrame:
     from azurestorage_blueprints_spark.queries.dedup import (
         _MH_A,
         _MH_B,
+        _MHP_M,
         _MHP_PERMS,
         _mhp_bands,
     )
 
-    m = _SIG_M
+    m = _MHP_M
     hs = df.selectExpr(
         "doc_id",
         "transform(filter(split(text, ' '), t -> t != ''), "

@@ -34,13 +34,6 @@ from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.queries.relational import _dec, _dsum
 from azurestorage_blueprints_spark.tables import table
 
-_TS = "timestamp_ntz"
-
-
-def _ts(s: str) -> F.Column:
-    return F.lit(s).cast(_TS)
-
-
 register_sql(
     "q02_best_supplier_per_nation",
     oracle="""

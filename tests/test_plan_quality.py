@@ -1121,6 +1121,31 @@ def test_bmp_roundtrip_is_shuffle_free(spark, sf_dir):
     assert "rangepartitioning" not in plan.lower()
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_multimodal_gif_roundtrip",
+        "q_multimodal_png_roundtrip",
+        "q_multimodal_bmp_roundtrip",
+        "q_multimodal_jpeg_roundtrip",
+        "q_multimodal_jpeg_progressive",
+        "q_multimodal_jpeg_arith",
+        "q_multimodal_wav_roundtrip",
+        "q_multimodal_wav_frame_energy",
+        "q_multimodal_wav_zcr",
+        "q_multimodal_video_frames",
+        "q_multimodal_video_scene_cuts",
+    ],
+)
+def test_codec_rungs_scan_only_the_columns_they_encode(spark, sf_dir, name):
+    # a mapInPandas stage ships, and makes the scan read, every column
+    # it is handed: the codec stages see vec_id and embedding only
+    plan = _plan(spark, name, sf_dir)
+    reads = [line for line in plan.split("\n") if "ReadSchema:" in line]
+    assert reads
+    assert not [r for r in reads if "label" in r], reads
+
+
 def test_hits_rounds_are_joins_with_broadcast_norms(spark, sf_dir):
     # per half-round: one equi-join of the score vector to the edge
     # list + one far-side sum + an O(1) max broadcast back; returned

@@ -5,6 +5,8 @@ every run whatever the data size. The DSIR ingest gate once spent about
 11,000 of them deploying a 256-entry model as Column literals; it now
 deploys the fitted model as one folded SQL expression. A SQL-form query
 (``register_sql``) builds its whole plan with one ``spark.sql`` call.
+The SimHash rungs build their 62-64 per-bit votes and signature sum as
+SQL text; as Column trees they sent about 10,200-10,800.
 These gates keep that tax from creeping back.
 """
 
@@ -26,6 +28,9 @@ _DSIR_GATE_BUDGET = 2_000
 #: replaced sent about 875
 _SQL_BUILD_BUDGET = 25
 
+#: py4j commands a SimHash rung may send to build its plan at sf0.001
+_SIMHASH_BUILD_BUDGET = 2_500
+
 
 @pytest.fixture
 def py4j_calls(spark, monkeypatch):
@@ -43,6 +48,14 @@ def py4j_calls(spark, monkeypatch):
     return calls
 
 
+def _round_trips(calls: list[str]) -> list[str]:
+    """``calls`` without proxy detaches: those are garbage from earlier
+    tests, released by py4j whenever the collector runs, not round-trips
+    the build makes."""
+    detach = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+    return [c for c in calls if not c.startswith(detach)]
+
+
 def test_stream_dsir_gate_stays_within_py4j_budget(spark, sf_dir, py4j_calls):
     rows = REGISTRY["q_stream_dsir_gate"].fn(spark, sf_dir).collect()
     assert rows
@@ -51,8 +64,14 @@ def test_stream_dsir_gate_stays_within_py4j_budget(spark, sf_dir, py4j_calls):
 
 def test_sql_form_query_builds_within_py4j_budget(spark, sf_dir, py4j_calls):
     REGISTRY["q01_pricing_summary"].fn(spark, sf_dir)
-    # proxy detaches are garbage from earlier tests, released by py4j
-    # whenever the collector runs, not round-trips the build makes
-    detach = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
-    calls = [c for c in py4j_calls if not c.startswith(detach)]
+    calls = _round_trips(py4j_calls)
     assert len(calls) <= _SQL_BUILD_BUDGET, len(calls)
+
+
+@pytest.mark.parametrize(
+    "name", ["q_dedup_simhash", "q_dedup_simhash_portable", "q_dedup_simhash_audit"]
+)
+def test_simhash_rung_builds_within_py4j_budget(spark, sf_dir, py4j_calls, name):
+    REGISTRY[name].fn(spark, sf_dir)
+    calls = _round_trips(py4j_calls)
+    assert len(calls) < _SIMHASH_BUILD_BUDGET, len(calls)
