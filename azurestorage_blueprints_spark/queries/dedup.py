@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from azurestorage_blueprints_spark.functions.text import tokens, word_shingles
-from azurestorage_blueprints_spark.functions.vectors import clamp_sim, dot, norm
+from azurestorage_blueprints_spark.functions.vectors import cosine_normed, int8, norm
 from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
@@ -1511,6 +1511,15 @@ _EMB_LSH_PLANES = [
 _EMB_LSH_MIN_COS = 0.8
 
 
+#: DuckDB int8 quantization of a DOUBLE list ``v`` (the oracle twin of
+#: ``functions.vectors.int8``): components scaled by the max-abs and
+#: rounded half-up as ``floor(x + 0.5)``, DOUBLE elements
+_Q8_SQL = (
+    "list_transform(v, x -> floor(x * 127.0"
+    " / greatest(list_max(list_transform(v, y -> abs(y))), 1e-12) + 0.5))"
+)
+
+
 def _emb_lsh_sig_sql(src: str = "embeddings") -> str:
     """SQL CTE chain ``e/q8/sig``: ``src`` (vec_id, embedding) → int8
     quantization (the q_knn_int8 formula) → 62-bit sign-LSH signature.
@@ -1526,11 +1535,7 @@ def _emb_lsh_sig_sql(src: str = "embeddings") -> str:
     return f"""e AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
       FROM {src}),
-    q8 AS (
-      SELECT vec_id, v,
-             list_transform(v, x -> floor(x * 127.0
-               / greatest(list_max(list_transform(v, y -> abs(y))), 1e-12) + 0.5)) AS v8
-      FROM e),
+    q8 AS (SELECT vec_id, v, {_Q8_SQL} AS v8 FROM e),
     sig AS (SELECT vec_id AS doc_id, {terms} AS simhash FROM q8)"""
 
 
@@ -1551,15 +1556,7 @@ def _emb_lsh_sig(e: DataFrame) -> DataFrame:
     vector; exactness also makes the agg order-free, so the signature
     is deterministic at any parallelism — same values as the fold
     formulation bit-for-bit (parity-verified), same DuckDB oracle."""
-    scale = F.greatest(
-        F.array_max(F.transform("embedding", lambda x: F.abs(x.cast("double")))),
-        F.lit(1e-12),
-    )
-    v8 = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * 127.0 / scale + 0.5).cast("double"),
-    )
-    q8 = e.select(F.col("vec_id").alias("doc_id"), v8.alias("v8"))
+    q8 = e.selectExpr("vec_id AS doc_id", f"{int8('embedding')} AS v8")
     pos = q8.select("doc_id", F.posexplode("v8").alias("d", "x"))
     planes = e.sparkSession.createDataFrame(
         [
@@ -1578,6 +1575,19 @@ def _emb_lsh_sig(e: DataFrame) -> DataFrame:
         F.col("p") > 0, F.expr("shiftleft(cast(1 as bigint), k)")
     ).otherwise(F.lit(0).cast("bigint"))
     return proj.groupBy("doc_id").agg(F.sum(bit).cast("bigint").alias("simhash"))
+
+
+def _emb_pair_sides(en: DataFrame, *extra: str) -> tuple[DataFrame, DataFrame]:
+    """The a and b sides of the verify join over ``en`` (vec_id, v,
+    nrm, *extra): (a_id, *extra, a_v, a_n) and (b_id, b_v, b_n)."""
+    ea = en.selectExpr("vec_id AS a_id", *extra, "v AS a_v", "nrm AS a_n")
+    eb = en.selectExpr("vec_id AS b_id", "v AS b_v", "nrm AS b_n")
+    return ea, eb
+
+
+#: the verify score of a candidate pair: the exact clamped cosine of
+#: the original vectors over their hoisted norms
+_EMB_PAIR_SIM = cosine_normed("a_v", "b_v", "a_n", "b_n")
 
 
 @register(
@@ -1618,22 +1628,13 @@ def _emb_lsh_sig(e: DataFrame) -> DataFrame:
 def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     pairs = simhash_pairs(_emb_lsh_sig(e), _SHP_HAMMING, chunks=_SHP_CHUNKS)
-    en = e.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    ).select("vec_id", "v", norm(F.col("v")).alias("nrm"))
-    ea = en.select(
-        F.col("vec_id").alias("a_id"), F.col("v").alias("a_v"), F.col("nrm").alias("a_n")
-    )
-    eb = en.select(
-        F.col("vec_id").alias("b_id"), F.col("v").alias("b_v"), F.col("nrm").alias("b_n")
-    )
-    sim = clamp_sim(dot(F.col("a_v"), F.col("b_v")) / (F.col("a_n") * F.col("b_n")))
+    en = e.selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
+    ea, eb = _emb_pair_sides(en.selectExpr("vec_id", "v", f"{norm('v')} AS nrm"))
     return (
         pairs.join(ea, "a_id")
         .join(eb, "b_id")
-        .select("a_id", "b_id", "hamming", sim.alias("sim"))
-        .filter(F.col("sim") >= _EMB_LSH_MIN_COS)
+        .selectExpr("a_id", "b_id", "hamming", f"{_EMB_PAIR_SIM} AS sim")
+        .filter(f"sim >= {_EMB_LSH_MIN_COS}D")
         .orderBy("a_id", "b_id")
     )
 
@@ -1674,30 +1675,19 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     pairs = simhash_pairs(_emb_lsh_sig(e), _SHP_HAMMING, chunks=_SHP_CHUNKS)
-    en = e.select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    ).select("vec_id", "label", "v", norm(F.col("v")).alias("nrm"))
-    ea = en.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("label"),
-        F.col("v").alias("a_v"),
-        F.col("nrm").alias("a_n"),
-    )
-    eb = en.select(
-        F.col("vec_id").alias("b_id"), F.col("v").alias("b_v"), F.col("nrm").alias("b_n")
+    en = e.selectExpr("vec_id", "label", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
+    ea, eb = _emb_pair_sides(
+        en.selectExpr("vec_id", "label", "v", f"{norm('v')} AS nrm"), "label"
     )
     # clamped (clamp_sim): identical vectors — absent at the gate SFs,
     # abundant in any real corpus — overflow to 1+ulp in the raw fold
     # while the oracle's list_cosine_similarity is exactly 1.0 (the
     # r7 sf1 sweep lesson)
-    sim = clamp_sim(dot(F.col("a_v"), F.col("b_v")) / (F.col("a_n") * F.col("b_n")))
     return (
         pairs.join(ea, "a_id")
         .join(eb, "b_id")
-        .select("a_id", "b_id", "label", sim.alias("sim"))
-        .filter(F.col("sim") >= 0.4)
+        .selectExpr("a_id", "b_id", "label", f"{_EMB_PAIR_SIM} AS sim")
+        .filter("sim >= 0.4D")
         .orderBy("a_id", "b_id")
     )
 
@@ -1778,16 +1768,9 @@ def q_dedup_embedding_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.unionAll(ident).unionAll(pert).select("vec_id", F.col("v").alias("embedding"))
     )
     pairs = simhash_pairs(_emb_lsh_sig(fixture), _SHP_HAMMING, chunks=_SHP_CHUNKS)
-    en = fixture.select(
-        "vec_id", F.col("embedding").alias("v"), norm(F.col("embedding")).alias("nrm")
+    ea, eb = _emb_pair_sides(
+        fixture.selectExpr("vec_id", "embedding AS v", f"{norm('embedding')} AS nrm")
     )
-    ea = en.select(
-        F.col("vec_id").alias("a_id"), F.col("v").alias("a_v"), F.col("nrm").alias("a_n")
-    )
-    eb = en.select(
-        F.col("vec_id").alias("b_id"), F.col("v").alias("b_v"), F.col("nrm").alias("b_n")
-    )
-    sim = clamp_sim(dot(F.col("a_v"), F.col("b_v")) / (F.col("a_n") * F.col("b_n")))
     pair_type = (
         F.when(
             (F.col("a_id") < _ELA_SLICE)
@@ -1804,8 +1787,14 @@ def q_dedup_embedding_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pairs.join(ea, "a_id")
         .join(eb, "b_id")
-        .select("a_id", "b_id", "hamming", sim.alias("sim"), pair_type.alias("pair_type"))
-        .filter(F.col("sim") >= _EMB_LSH_MIN_COS)
+        .select(
+            "a_id",
+            "b_id",
+            "hamming",
+            F.expr(_EMB_PAIR_SIM).alias("sim"),
+            pair_type.alias("pair_type"),
+        )
+        .filter(f"sim >= {_EMB_LSH_MIN_COS}D")
         .orderBy("a_id", "b_id")
     )
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from azurestorage_blueprints_spark.functions.vectors import dot
 from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
@@ -700,21 +701,16 @@ def q_json_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
            len(list_filter(embedding, x -> x > 0)) AS n_positive
     FROM embeddings
     """,
-    doc="Higher-order array functions (transform/filter/aggregate) with an explicit "
+    doc="Higher-order array functions (zip_with/filter/aggregate) with an explicit "
     "left-fold so the double accumulation order matches the oracle exactly.",
 )
 def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-    sq = F.aggregate(
-        F.transform(F.col("embedding"), lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return e.select(
         "vec_id",
         F.size("embedding").alias("dim"),
         F.element_at("embedding", 1).cast("double").alias("first_elem"),
-        sq.alias("sq_norm"),
+        F.expr(dot("embedding", "embedding")).alias("sq_norm"),
         F.size(F.filter(F.col("embedding"), lambda x: x > 0)).alias("n_positive"),
     )
 

@@ -16,6 +16,10 @@
 Scale posture: brute-force is O(Q x N) and exists as the correctness
 oracle; both ANN variants turn the cross join into an equi-join on a
 bucket key, which is the only join shape that survives 100 TB.
+
+The vector arithmetic is the SQL text of ``functions/vectors.py``; the
+per-query top-k tail (``_top_k``), the IVF probe (``_ivf_probe``) and
+the int8 vectors (``_q8``) are each built in one place.
 """
 
 from __future__ import annotations
@@ -24,14 +28,84 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from azurestorage_blueprints_spark.functions.vectors import clamp_sim, cosine, dot, norm
+from azurestorage_blueprints_spark.functions.vectors import (
+    cosine,
+    cosine_normed,
+    dot,
+    int8,
+    l2sq,
+    norm,
+)
 from azurestorage_blueprints_spark.queries import finalize_bounded, register
+from azurestorage_blueprints_spark.queries.dedup import _Q8_SQL
 from azurestorage_blueprints_spark.tables import table
 
 _N_QUERIES = 10  # deterministic query set: vec_id < 10
 _TOP_K = 5
 _LSH_BITS = 4  # per table; coarse buckets keep candidate lists non-empty
 _LSH_TABLES = 2  # OR-amplification: union of candidates across tables
+
+
+def _ranked(scored: DataFrame, by: str = "q_id") -> DataFrame:
+    """``scored`` with ``rnk``: the row's place in its ``by`` group by
+    (sim DESC, n_id) — the deterministic tie-break of every kNN oracle."""
+    return scored.withColumn(
+        "rnk", F.expr(f"row_number() OVER (PARTITION BY {by} ORDER BY sim DESC, n_id)")
+    )
+
+
+def _top_k(scored: DataFrame, *cols: str, by: str = "q_id") -> DataFrame:
+    """The per-query top-k tail: the first ``_TOP_K`` rows of each
+    ``by`` group of ``scored`` (q_id, n_id, sim, ...) as ``cols``."""
+    return _ranked(scored, by).filter(f"rnk <= {_TOP_K}").selectExpr(*cols)
+
+
+def _queries(e: DataFrame, *cols: str) -> DataFrame:
+    """The deterministic query set (vec_id < _N_QUERIES) as (q_id, *cols)."""
+    return e.filter(f"vec_id < {_N_QUERIES}").selectExpr("vec_id AS q_id", *cols)
+
+
+def _with_norm(e: DataFrame, id_col: str, v_col: str, n_col: str) -> DataFrame:
+    """(id_col, v_col, n_col): ``e``'s vectors with their norms."""
+    return e.selectExpr(
+        f"vec_id AS {id_col}", f"embedding AS {v_col}", f"{norm('embedding')} AS {n_col}"
+    )
+
+
+def _exact_scored(e: DataFrame) -> DataFrame:
+    """(q_id, n_id, sim): every query scored against every other corpus
+    vector by the clamped float cosine, norms hoisted out of the
+    O(Q x N) cross join."""
+    q = _with_norm(e.filter(f"vec_id < {_N_QUERIES}"), "q_id", "qv", "q_nrm")
+    return (
+        _with_norm(e, "n_id", "v", "n_nrm")
+        .crossJoin(F.broadcast(q))
+        .filter("n_id != q_id")
+        .selectExpr("q_id", "n_id", f"{cosine_normed('qv', 'v', 'q_nrm', 'n_nrm')} AS sim")
+    )
+
+
+def _q8(e: DataFrame, *cols: str) -> DataFrame:
+    """(*cols, v8, nrm): int8-quantized vectors with their norms. The
+    integer components make every dot product over ``v8`` exact inside
+    a double, so int8 scores are order-free on both engines."""
+    return e.selectExpr(*cols, f"{int8('embedding')} AS v8").withColumn(
+        "nrm", F.expr(f"sqrt({dot('v8', 'v8')})")
+    )
+
+
+def _int8_scored(e: DataFrame) -> DataFrame:
+    """(q_id, n_id, sim): every query scored against every other corpus
+    vector by the int8 cosine."""
+    q8 = _q8(e, "vec_id")
+    q = q8.filter(f"vec_id < {_N_QUERIES}").selectExpr(
+        "vec_id AS q_id", "v8 AS qv", "nrm AS qv_nrm"
+    )
+    return (
+        q8.crossJoin(F.broadcast(q))
+        .filter("vec_id != q_id")
+        .selectExpr("q_id", "vec_id AS n_id", f"{dot('qv', 'v8')} / (qv_nrm * nrm) AS sim")
+    )
 
 
 @register(
@@ -56,39 +130,7 @@ _LSH_TABLES = 2  # OR-amplification: union of candidates across tables
 )
 def q_knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-    # norms are precomputed ONCE per row (query side and corpus side)
-    # before the pairwise cross join, so the per-pair work is a single
-    # dot-product fold + one divide — same fold order and division
-    # expression as before, so the IEEE result (and the oracle hash)
-    # is unchanged, but 2/3 of the higher-order-function evaluations
-    # disappear from the O(Q x N) hot loop
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qv"),
-        norm(F.col("embedding")).alias("q_nrm"),
-    )
-    corpus = e.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("v"),
-        norm(F.col("embedding")).alias("n_nrm"),
-    )
-    scored = (
-        corpus.crossJoin(F.broadcast(q))
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "n_id",
-            clamp_sim(
-                dot(F.col("qv"), F.col("v")) / (F.col("q_nrm") * F.col("n_nrm"))
-            ).alias("sim"),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("q_id", "n_id", "sim", "rnk")
-    )
+    return _top_k(_exact_scored(e), "q_id", "n_id", "sim", "rnk")
 
 
 @register(
@@ -137,74 +179,44 @@ def q_knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
 
-    def _proj(plane: int):
+    def plane(p: int) -> str:
         # pseudo-random hyperplane component for (dim i, plane p): the
         # portable multiplicative hash mapped to [-0.5, 0.5) — same for
         # every row, computed JVM-side, mirrored in the DuckDB oracle
         # (bigint-safe: key < 2^20, key * 2654435761 < 2^51)
-        return lambda x, i: x.cast("double") * (
-            (
-                (i.cast("bigint") * 8191 + F.lit(plane))
-                * F.lit(2654435761).cast("bigint")
-                % F.lit(2147483648).cast("bigint")
-                % 1000
-                - 500
-            ).cast("double")
-            / 1000.0
+        return (
+            "transform(sequence(0, size(embedding) - 1), i -> CAST((CAST(i AS BIGINT) * 8191"
+            f" + {p}) * 2654435761 % 2147483648 % 1000 - 500 AS DOUBLE) / 1000.0D)"
         )
 
-    def bucket(col, tbl: int):
-        bits = None
-        for p in range(_LSH_BITS):
-            proj = F.aggregate(
-                F.zip_with(col, F.sequence(F.lit(0), F.size(col) - 1), _proj(tbl * _LSH_BITS + p)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bit = F.when(proj > 0, F.lit(2**p)).otherwise(F.lit(0))
-            bits = bit if bits is None else bits + bit
+    def bucket(tbl: int) -> str:
+        bits = " + ".join(
+            f"CASE WHEN {dot('embedding', plane(tbl * _LSH_BITS + p))} > 0 THEN {2**p} ELSE 0 END"
+            for p in range(_LSH_BITS)
+        )
         # tag with the table index so buckets from different tables never merge
-        return bits + F.lit(tbl * (2**_LSH_BITS))
+        return f"{bits} + {tbl * 2**_LSH_BITS}"
 
     # one bucket id per table per vector → explode: (vec, table, bucket)
-    tagged = e.select(
-        "vec_id",
-        "embedding",
-        F.explode(
-            F.array(*[bucket(F.col("embedding"), t) for t in range(_LSH_TABLES)])
-        ).alias("bucket"),
-    )
-    q_buckets = tagged.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), "bucket"
-    )
+    buckets = ", ".join(bucket(t) for t in range(_LSH_TABLES))
+    tagged = e.selectExpr("vec_id", "embedding", f"explode(array({buckets})) AS bucket")
+    q_buckets = tagged.filter(f"vec_id < {_N_QUERIES}").selectExpr("vec_id AS q_id", "bucket")
     # OR across tables: dedup candidate ID PAIRS first (two longs per
     # row), THEN rejoin the embedding arrays — a distinct over full
     # vectors would shuffle every embedding once per bucket hit
     cand_ids = (
         tagged.select("vec_id", "bucket")
         .join(F.broadcast(q_buckets), "bucket")
-        .filter(F.col("vec_id") != F.col("q_id"))
+        .filter("vec_id != q_id")
         .select("q_id", "vec_id")
         .distinct()
     )
-    qv = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
     scored = (
         cand_ids.join(e.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qv), "q_id")
-        .select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            cosine(F.col("qv"), F.col("embedding")).alias("sim"),
-        )
+        .join(F.broadcast(_queries(e, "embedding AS qv")), "q_id")
+        .selectExpr("q_id", "vec_id AS n_id", f"{cosine('qv', 'embedding')} AS sim")
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("q_id", "n_id", "sim", "rnk")
-    )
+    return _top_k(scored, "q_id", "n_id", "sim", "rnk")
 
 
 #: exact-centroid quantization for the oracle-checked IVF family (the
@@ -308,34 +320,37 @@ def _ivf_probe_cte_sql(nprobe: int) -> str:
     "list key touching 1/k of the corpus per query.",
 )
 def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = table(spark, sf_dir, "embeddings")
+    return _ivf_knn(spark, sf_dir, 1)
+
+
+def _ivf_probe(spark: SparkSession, sf_dir: str, e: DataFrame, nprobe: int) -> DataFrame:
+    """(q_id, qv, label, rl): each query's ``nprobe`` nearest coarse
+    lists by clamped cosine to the persisted exact centroids, ties to
+    the lower label; ``rl`` is the list's probe rank."""
     centroids = _persisted_model(
         spark, sf_dir, "ivf_centroids_exact", lambda: _ivf_exact_centroids(e)
     )
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
-    # assign each query to its nearest centroid (probe = 1 list)
-    qc = (
-        q.crossJoin(F.broadcast(centroids))
-        .select("q_id", "qv", "label", cosine(F.col("qv"), F.col("centroid")).alias("csim"))
-        .withColumn(
-            "rn", F.row_number().over(W.partitionBy("q_id").orderBy(F.desc("csim"), "label"))
-        )
-        .filter(F.col("rn") <= 1)  # nprobe=1
-        .select("q_id", "qv", "label")
-    )
-    cand = e.join(F.broadcast(qc), "label").filter(F.col("vec_id") != F.col("q_id"))
-    scored = cand.select(
-        "q_id", F.col("vec_id").alias("n_id"), "label",
-        cosine(F.col("qv"), F.col("embedding")).alias("sim"),
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
     return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("q_id", "n_id", "label", "sim", "rnk")
+        _queries(e, "embedding AS qv")
+        .crossJoin(F.broadcast(centroids))
+        .selectExpr("q_id", "qv", "label", f"{cosine('qv', 'centroid')} AS csim")
+        .withColumn("rl", F.expr("row_number() OVER (PARTITION BY q_id ORDER BY csim DESC, label)"))
+        .filter(f"rl <= {nprobe}")
+        .select("q_id", "qv", "label", "rl")
     )
+
+
+def _ivf_knn(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
+    """IVF top-k: score the corpus vectors of each query's ``nprobe``
+    probed lists (one broadcast equi-join on the list key)."""
+    e = table(spark, sf_dir, "embeddings")
+    qc = _ivf_probe(spark, sf_dir, e, nprobe)
+    scored = (
+        e.join(F.broadcast(qc), "label")
+        .filter("vec_id != q_id")
+        .selectExpr("q_id", "vec_id AS n_id", "label", f"{cosine('qv', 'embedding')} AS sim")
+    )
+    return _top_k(scored, "q_id", "n_id", "label", "sim", "rnk")
 
 
 #: shared int8-cosine oracle (r12): q_knn_int8 AND q_knn_pandas_vectorized
@@ -345,10 +360,7 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KNN_INT8_SQL = f"""
     WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                FROM embeddings),
-    q8 AS (SELECT vec_id,
-                  list_transform(v, x -> floor(x * 127.0
-                      / greatest(list_max(list_transform(v, y -> abs(y))), 1e-12) + 0.5)) AS v8
-           FROM e),
+    q8 AS (SELECT vec_id, {_Q8_SQL} AS v8 FROM e),
     q AS (SELECT vec_id AS q_id, v8 AS qv FROM q8 WHERE vec_id < {_N_QUERIES}),
     scored AS (
       SELECT q.q_id, c.vec_id AS n_id,
@@ -379,45 +391,7 @@ _KNN_INT8_SQL = f"""
 )
 def q_knn_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-
-    def quantize(col):
-        scale = F.greatest(
-            F.array_max(F.transform(col, lambda x: F.abs(x.cast("double")))),
-            F.lit(1e-12),
-        )
-        return F.transform(
-            col,
-            lambda x: F.floor(x.cast("double") * 127.0 / scale + 0.5).cast("double"),
-        )
-
-    # norms are hoisted out of the O(Q x N) pair projection and computed
-    # once per vector (same sqrt-of-dot expression, so the IEEE value and
-    # the oracle hash are unchanged) — mirrors q_knn_brute_force, which
-    # got 4x from the same rewrite
-    q8 = e.select(
-        "vec_id",
-        quantize(F.col("embedding")).alias("v8"),
-    ).withColumn("v8_nrm", F.sqrt(dot(F.col("v8"), F.col("v8"))))
-    q = q8.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v8").alias("qv"),
-        F.col("v8_nrm").alias("qv_nrm"),
-    )
-    scored = (
-        q8.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            (dot(F.col("qv"), F.col("v8")) / (F.col("qv_nrm") * F.col("v8_nrm"))).alias("sim"),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("q_id", "n_id", "sim", "rnk")
-    )
+    return _top_k(_int8_scored(e), "q_id", "n_id", "sim", "rnk")
 
 
 @register(
@@ -436,11 +410,11 @@ def q_knn_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-    n = norm(F.col("embedding"))
+    n = norm("embedding")
     return e.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_vectors"),
-        F.min(n).alias("min_norm"),
-        F.max(n).alias("max_norm"),
+        F.expr("count(1) AS n_vectors"),
+        F.expr(f"min({n}) AS min_norm"),
+        F.expr(f"max({n}) AS max_norm"),
     )
 
 
@@ -459,13 +433,10 @@ def q_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_vector_dot_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-    a = e.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("a_id"), F.col("embedding").alias("av")
-    )
-    b = e.select(F.col("vec_id").alias("b_id"), F.col("embedding").alias("bv"))
-    return (
-        a.join(b, F.col("b_id") == F.col("a_id") + 1)
-        .select("a_id", "b_id", dot(F.col("av"), F.col("bv")).alias("dot"))
+    a = e.filter("vec_id % 50 = 0").selectExpr("vec_id AS a_id", "embedding AS av")
+    b = e.selectExpr("vec_id AS b_id", "embedding AS bv")
+    return a.join(b, F.expr("b_id = a_id + 1")).selectExpr(
+        "a_id", "b_id", f"{dot('av', 'bv')} AS dot"
     )
 
 
@@ -532,14 +503,9 @@ def q_knn_pandas_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         e.select("vec_id", "embedding")
         .mapInPandas(score, schema="q_id long, n_id long, sim double")
-        .filter(F.col("n_id") != F.col("q_id"))
+        .filter("n_id != q_id")
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("q_id", "n_id", "sim", "rnk")
-    )
+    return _top_k(scored, "q_id", "n_id", "sim", "rnk")
 
 
 _N_SEEDS = 8  # deterministic seed centroids: vec_id < 8
@@ -580,25 +546,30 @@ _N_SEEDS = 8  # deterministic seed centroids: vec_id < 8
 )
 def q_embed_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-    seeds = e.filter(F.col("vec_id") < _N_SEEDS).select(
-        F.col("vec_id").alias("seed_id"), F.col("embedding").alias("sv")
+    return _seed_assign(e).groupBy(F.col("seed_id").alias("cluster_id")).agg(
+        F.count(F.lit(1)).alias("n_members"),
+        F.min("vec_id").alias("min_member"),
+        F.max("vec_id").alias("max_member"),
+        F.min("sim").alias("min_sim"),
+        F.max("sim").alias("max_sim"),
     )
-    # clamp to [-1, 1]: DuckDB's list_cosine_similarity clamps, and the
-    # raw fold yields 1 + 2ulp for self-similarity (seeds score themselves)
-    sim = F.least(F.lit(1.0), F.greatest(F.lit(-1.0), cosine(F.col("embedding"), F.col("sv"))))
-    scored = e.crossJoin(F.broadcast(seeds)).select("vec_id", "seed_id", sim.alias("sim"))
-    w = W.partitionBy("vec_id").orderBy(F.desc("sim"), "seed_id")
+
+
+#: each vector's rank of the seeds it was scored against (1 = nearest)
+_NEAREST_SEED = "row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, seed_id)"
+
+
+def _seed_assign(e: DataFrame) -> DataFrame:
+    """(vec_id, seed_id, sim, rn): each vector's nearest of the
+    ``_N_SEEDS`` seed vectors by clamped cosine (seeds score themselves
+    1 + 2 ulp unclamped), ties to the lower seed id. Only id triples
+    cross the vec_id ranking exchange; callers rejoin the arrays."""
+    seeds = e.filter(f"vec_id < {_N_SEEDS}").selectExpr("vec_id AS seed_id", "embedding AS sv")
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .groupBy(F.col("seed_id").alias("cluster_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.min("vec_id").alias("min_member"),
-            F.max("vec_id").alias("max_member"),
-            F.min("sim").alias("min_sim"),
-            F.max("sim").alias("max_sim"),
-        )
+        e.crossJoin(F.broadcast(seeds))
+        .selectExpr("vec_id", "seed_id", f"{cosine('embedding', 'sv')} AS sim")
+        .withColumn("rn", F.expr(_NEAREST_SEED))
+        .filter("rn = 1")
     )
 
 
@@ -643,23 +614,7 @@ def q_embed_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_embed_centroid_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-    seeds = e.filter(F.col("vec_id") < _N_SEEDS).select(
-        F.col("vec_id").alias("seed_id"), F.col("embedding").alias("sv")
-    )
-    sim = F.least(F.lit(1.0), F.greatest(F.lit(-1.0), cosine(F.col("embedding"), F.col("sv"))))
-    w = W.partitionBy("vec_id").orderBy(F.desc("sim"), "seed_id")
-    # rank (vec_id, seed_id, sim) triples only — the ranking window
-    # shuffles on vec_id, and dragging the embedding array through that
-    # exchange would replicate every vector once per seed; rejoin the
-    # arrays after the argmax instead (same id-first discipline as
-    # q_knn_lsh's candidate dedup)
-    assigned = (
-        e.crossJoin(F.broadcast(seeds))
-        .select("vec_id", "seed_id", sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .join(e.select("vec_id", "embedding"), "vec_id")
-    )
+    assigned = _seed_assign(e).join(e.select("vec_id", "embedding"), "vec_id")
     exploded = assigned.select(
         F.col("seed_id").alias("cluster_id"),
         F.posexplode(F.col("embedding")).alias("dim", "val"),
@@ -1029,51 +984,36 @@ def build_semdedup(spark: SparkSession, sf_dir: str):
     # metadata-cheap count derives the centroid budget, so a 100× corpus
     # gets 100× clusters and the per-cluster pair fan-out stays constant
     k = _sem_k(_embeddings_rows(spark, sf_dir))
-    en = e.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
+    en = _with_norm(e, "vec_id", "embedding", "nrm")
+    seeds = _with_norm(e.filter(f"vec_id < {k}"), "seed_id", "sv", "snrm")
     # seed norms hoisted like the brute-force kNN fix: the E-step fold
-    # count drops from 3 per pair to 1 (dot only); dot/(nrm*snrm) is the
-    # exact expression cosine() expands to, so the IEEE values — and the
-    # oracle hash — are unchanged
-    seeds = e.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("seed_id"),
-        F.col("embedding").alias("sv"),
-        norm(F.col("embedding")).alias("snrm"),
-    )
-    # clamped like q_embed_cluster_assign: seeds score themselves 1+2ulp
-    sim = F.least(
-        F.lit(1.0),
-        F.greatest(
-            F.lit(-1.0),
-            dot(F.col("embedding"), F.col("sv")) / (F.col("nrm") * F.col("snrm")),
-        ),
-    )
-    scored = en.crossJoin(F.broadcast(seeds)).select("vec_id", "seed_id", sim.alias("sim"))
-    rn = F.row_number().over(W.partitionBy("vec_id").orderBy(F.desc("sim"), "seed_id"))
+    # count drops from 3 per pair to 1 (dot only); clamped like
+    # q_embed_cluster_assign: seeds score themselves 1+2ulp
     assigned = (
-        scored.withColumn("rn", rn)
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("seed_id").alias("cluster_id"))
+        en.crossJoin(F.broadcast(seeds))
+        .selectExpr(
+            "vec_id", "seed_id", f"{cosine_normed('embedding', 'sv', 'nrm', 'snrm')} AS sim"
+        )
+        .withColumn("rn", F.expr(_NEAREST_SEED))
+        .filter("rn = 1")
+        .selectExpr("vec_id", "seed_id AS cluster_id")
     )
     # the E-step feeds BOTH sides of the pair self-join and the member
     # count — persist so the crossJoin+window assignment runs once, not
     # three times (spills to disk at scale; same plan otherwise)
     mem = assigned.join(en, "vec_id").persist()
-    a = mem.select(
-        "cluster_id",
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("a_v"),
-        F.col("nrm").alias("a_n"),
-    )
-    b = mem.select(
-        F.col("cluster_id").alias("cl2"),
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("b_v"),
-        F.col("nrm").alias("b_n"),
-    )
-    psim = dot(F.col("a_v"), F.col("b_v")) / (F.col("a_n") * F.col("b_n"))
+    return _sem_report(mem), mem
+
+
+def _sem_report(mem: DataFrame) -> DataFrame:
+    """Per cluster of the member table ``mem`` (vec_id, cluster_id,
+    embedding, nrm): members, within-cluster near-dup pairs (cosine >=
+    0.4, each pair scored once) and dropped higher-id members."""
+    a = mem.selectExpr("cluster_id", "vec_id AS a_id", "embedding AS a_v", "nrm AS a_n")
+    b = mem.selectExpr("cluster_id AS cl2", "vec_id AS b_id", "embedding AS b_v", "nrm AS b_n")
     pairs = (
-        a.join(b, (F.col("cluster_id") == F.col("cl2")) & (F.col("a_id") < F.col("b_id")))
-        .filter(psim >= 0.4)
+        a.join(b, F.expr("cluster_id = cl2 AND a_id < b_id"))
+        .filter(f"{dot('a_v', 'b_v')} / (a_n * b_n) >= 0.4D")
         .select("cluster_id", "a_id", "b_id")
     )
     pc = pairs.groupBy("cluster_id").agg(
@@ -1081,13 +1021,12 @@ def build_semdedup(spark: SparkSession, sf_dir: str):
         F.countDistinct("b_id").cast("bigint").alias("n_dropped"),
     )
     mc = mem.groupBy("cluster_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_members"))
-    out = mc.join(pc, "cluster_id", "left").select(
+    return mc.join(pc, "cluster_id", "left").select(
         "cluster_id",
         "n_members",
         F.coalesce("n_pairs", F.lit(0).cast("bigint")).alias("n_pairs"),
         F.coalesce("n_dropped", F.lit(0).cast("bigint")).alias("n_dropped"),
     )
-    return out, mem
 
 
 #: product quantization geometry: _PQ_DIM dims = _PQ_DIM/_PQ_D
@@ -1287,12 +1226,8 @@ def q_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return finalize_bounded(out, codebook, codes)
 
 
-#: shared subspace slice / distance expressions for the PQ helpers
+#: shared subspace slice expression for the PQ helpers
 _PQ_SUB = f"slice(embedding, s * {_PQ_D} + 1, {_PQ_D})"
-_PQ_L2SQ = (
-    "aggregate(zip_with(sv, cw, (a, b) -> (CAST(a AS DOUBLE) - CAST(b AS DOUBLE))"
-    " * (CAST(a AS DOUBLE) - CAST(b AS DOUBLE))), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-)
 
 
 def _pq_corpus_sub(e: DataFrame) -> DataFrame:
@@ -1307,15 +1242,12 @@ def _pq_corpus_sub(e: DataFrame) -> DataFrame:
 def _pq_assign(src: DataFrame, cb: DataFrame) -> DataFrame:
     """Per (vector, subspace): the nearest codeword index, argmin over
     exact IEEE distances with deterministic tie-break."""
-    l2sq = F.expr(
-        "aggregate(zip_with(sv, cw, (a, b) -> (CAST(a AS DOUBLE) - CAST(b AS DOUBLE))"
-        " * (CAST(a AS DOUBLE) - CAST(b AS DOUBLE))), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    return (
+        src.join(F.broadcast(cb), "s")
+        .selectExpr("vec_id", "s", "j", "sv", f"{l2sq('sv', 'cw')} AS d")
+        .withColumn("rn", F.expr("row_number() OVER (PARTITION BY vec_id, s ORDER BY d, j)"))
+        .filter("rn = 1")
     )
-    rn = F.row_number().over(W.partitionBy("vec_id", "s").orderBy("d", "j"))
-    scored = src.join(F.broadcast(cb), "s").select(
-        "vec_id", "s", "j", "sv", l2sq.alias("d")
-    )
-    return scored.withColumn("rn", rn).filter(F.col("rn") == 1)
 
 
 def _pq_codebook_train(e: DataFrame) -> DataFrame:
@@ -1636,12 +1568,8 @@ def q_knn_model_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook = _persisted_model(
         spark, sf_dir, "pq_codebook", lambda: _pq_codebook_train(e)
     )
-    l2sq = F.expr(
-        "aggregate(zip_with(sv, cw, (a, b) -> (CAST(a AS DOUBLE) - CAST(b AS DOUBLE))"
-        " * (CAST(a AS DOUBLE) - CAST(b AS DOUBLE))), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
-    scored = _pq_corpus_sub(e).join(F.broadcast(codebook), "s").select(
-        "vec_id", "s", l2sq.alias("d")
+    scored = _pq_corpus_sub(e).join(F.broadcast(codebook), "s").selectExpr(
+        "vec_id", "s", f"{l2sq('sv', 'cw')} AS d"
     )
     best = scored.groupBy("vec_id", "s").agg(F.min("d").alias("dmin"))
     micro = F.expr(f"cast(floor(dmin * {_PQ_DRIFT_QZ} + 0.5) as bigint)")
@@ -1685,7 +1613,7 @@ def _pq_adc(e: DataFrame, codebook: DataFrame) -> DataFrame:
         "q_id",
         "s",
         "j",
-        F.expr(f"cast(floor(({_PQ_L2SQ}) * {_PQ_ADC_QZ} + 0.5) as bigint)").alias("tq"),
+        F.expr(f"cast(floor(({l2sq('sv', 'cw')}) * {_PQ_ADC_QZ} + 0.5) as bigint)").alias("tq"),
     )
 
 
@@ -1748,21 +1676,7 @@ def build_knn_ivf_pq(spark: SparkSession, sf_dir: str):
     adc = _pq_adc(e, codebook)
     # coarse stage (q_knn_ivf shape): exact nano-quantized centroids
     # from the model table, queries probe their nprobe nearest lists
-    centroids = _persisted_model(
-        spark, sf_dir, "ivf_centroids_exact", lambda: _ivf_exact_centroids(e)
-    )
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
-    probed = (
-        q.crossJoin(F.broadcast(centroids))
-        .select("q_id", "label", cosine(F.col("qv"), F.col("centroid")).alias("csim"))
-        .withColumn(
-            "rn", F.row_number().over(W.partitionBy("q_id").orderBy(F.desc("csim"), "label"))
-        )
-        .filter(F.col("rn") <= _IVFPQ_NPROBE)
-        .select("q_id", "label")
-    )
+    probed = _ivf_probe(spark, sf_dir, e, _IVFPQ_NPROBE).select("q_id", "label")
     cand = (
         e.select("vec_id", "label")
         .join(F.broadcast(probed), "label")
@@ -1885,84 +1799,45 @@ def build_semdedup_hier(spark: SparkSession, sf_dir: str):
     and — above :data:`_SEM_FLAT_MAX` — by ``q_semdedup`` itself."""
     e = table(spark, sf_dir, "embeddings")
     k = _sem_k(_embeddings_rows(spark, sf_dir))
-    s = _sem_super(k)
-    en = e.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-    seeds = e.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("seed_id"),
-        F.col("embedding").alias("sv"),
-        norm(F.col("embedding")).alias("snrm"),
-    )
-    supers = e.filter(F.col("vec_id") < s).select(
-        F.col("vec_id").alias("super_id"),
-        F.col("embedding").alias("uv"),
-        norm(F.col("embedding")).alias("unrm"),
-    )
-
-    def clamp(c):
-        return F.least(F.lit(1.0), F.greatest(F.lit(-1.0), c))
-
+    en = _with_norm(e, "vec_id", "embedding", "nrm")
+    seeds = _with_norm(e.filter(f"vec_id < {k}"), "seed_id", "sv", "snrm")
+    supers = _with_norm(e.filter(f"vec_id < {_sem_super(k)}"), "super_id", "uv", "unrm")
+    rank = "row_number() OVER (PARTITION BY {} ORDER BY {} DESC, {})"
     # route the SEEDS (k x s tiny)
-    ssim = clamp(dot(F.col("sv"), F.col("uv")) / (F.col("snrm") * F.col("unrm")))
-    srn = F.row_number().over(W.partitionBy("seed_id").orderBy(F.desc("ssim"), "super_id"))
     seed_group = (
         seeds.crossJoin(F.broadcast(supers))
-        .select("seed_id", "sv", "snrm", "super_id", ssim.alias("ssim"))
-        .withColumn("rn", srn)
-        .filter(F.col("rn") == 1)
+        .selectExpr(
+            "seed_id", "sv", "snrm", "super_id",
+            f"{cosine_normed('sv', 'uv', 'snrm', 'unrm')} AS ssim",
+        )
+        .withColumn("rn", F.expr(rank.format("seed_id", "ssim", "super_id")))
+        .filter("rn = 1")
         .select("seed_id", "sv", "snrm", "super_id")
     )
     # route the VECTORS (N x s — the sqrt(k)-wide broadcast pass)
-    vsim = clamp(dot(F.col("embedding"), F.col("uv")) / (F.col("nrm") * F.col("unrm")))
-    vrn = F.row_number().over(W.partitionBy("vec_id").orderBy(F.desc("vsim"), "super_id"))
     vec_group = (
         en.crossJoin(F.broadcast(supers))
-        .select("vec_id", "embedding", "nrm", "super_id", vsim.alias("vsim"))
-        .withColumn("rn", vrn)
-        .filter(F.col("rn") == 1)
+        .selectExpr(
+            "vec_id", "embedding", "nrm", "super_id",
+            f"{cosine_normed('embedding', 'uv', 'nrm', 'unrm')} AS vsim",
+        )
+        .withColumn("rn", F.expr(rank.format("vec_id", "vsim", "super_id")))
+        .filter("rn = 1")
         .select("vec_id", "embedding", "nrm", "super_id")
     )
     # fine assignment: only the seeds in the vector's super-group
     # (N x E[k/s] — broadcast equi-join on super_id, never a cross join)
-    fsim = clamp(dot(F.col("embedding"), F.col("sv")) / (F.col("nrm") * F.col("snrm")))
-    frn = F.row_number().over(W.partitionBy("vec_id").orderBy(F.desc("fsim"), "seed_id"))
     assigned = (
         vec_group.join(F.broadcast(seed_group), "super_id")
-        .select("vec_id", "seed_id", fsim.alias("fsim"))
-        .withColumn("rn", frn)
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("seed_id").alias("cluster_id"))
+        .selectExpr(
+            "vec_id", "seed_id", f"{cosine_normed('embedding', 'sv', 'nrm', 'snrm')} AS fsim"
+        )
+        .withColumn("rn", F.expr(rank.format("vec_id", "fsim", "seed_id")))
+        .filter("rn = 1")
+        .selectExpr("vec_id", "seed_id AS cluster_id")
     )
     mem = assigned.join(en, "vec_id").persist()
-    a = mem.select(
-        "cluster_id",
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("a_v"),
-        F.col("nrm").alias("a_n"),
-    )
-    b = mem.select(
-        F.col("cluster_id").alias("cl2"),
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("b_v"),
-        F.col("nrm").alias("b_n"),
-    )
-    psim = dot(F.col("a_v"), F.col("b_v")) / (F.col("a_n") * F.col("b_n"))
-    pairs = (
-        a.join(b, (F.col("cluster_id") == F.col("cl2")) & (F.col("a_id") < F.col("b_id")))
-        .filter(psim >= 0.4)
-        .select("cluster_id", "a_id", "b_id")
-    )
-    pc = pairs.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        F.countDistinct("b_id").cast("bigint").alias("n_dropped"),
-    )
-    mc = mem.groupBy("cluster_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_members"))
-    out = mc.join(pc, "cluster_id", "left").select(
-        "cluster_id",
-        "n_members",
-        F.coalesce("n_pairs", F.lit(0).cast("bigint")).alias("n_pairs"),
-        F.coalesce("n_dropped", F.lit(0).cast("bigint")).alias("n_dropped"),
-    )
-    return out, mem
+    return _sem_report(mem), mem
 
 
 #: outlier rule: squared distance to the label centroid exceeds 4x the
@@ -2117,37 +1992,11 @@ _RANGE_TAU = 0.35
 )
 def q_knn_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qv"),
-        norm(F.col("embedding")).alias("q_nrm"),
-    )
-    corpus = e.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("v"),
-        norm(F.col("embedding")).alias("n_nrm"),
-    )
-    hits = (
-        corpus.crossJoin(F.broadcast(q))
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "n_id",
-            clamp_sim(
-                dot(F.col("qv"), F.col("v")) / (F.col("q_nrm") * F.col("n_nrm"))
-            ).alias("sim"),
-        )
-        .filter(F.col("sim") >= _RANGE_TAU)
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    return (
-        hits.withColumn("rnk", F.row_number().over(w))
-        .groupBy("q_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_matches"),
-            F.min(F.when(F.col("rnk") == 1, F.col("n_id"))).alias("best_id"),
-            F.min(F.when(F.col("rnk") == 1, F.col("sim"))).alias("best_sim"),
-        )
+    hits = _exact_scored(e).filter(f"sim >= {_RANGE_TAU}D")
+    return _ranked(hits).groupBy("q_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_matches"),
+        F.expr("min(CASE WHEN rnk = 1 THEN n_id END) AS best_id"),
+        F.expr("min(CASE WHEN rnk = 1 THEN sim END) AS best_sim"),
     )
 
 
@@ -2185,38 +2034,7 @@ def q_knn_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "they read back bit-identical, so the oracle still matches.",
 )
 def q_knn_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = table(spark, sf_dir, "embeddings")
-    centroids = _persisted_model(
-        spark, sf_dir, "ivf_centroids_exact", lambda: _ivf_exact_centroids(e)
-    )
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
-    qc = (
-        q.crossJoin(F.broadcast(centroids))
-        .select(
-            "q_id", "qv", "label", cosine(F.col("qv"), F.col("centroid")).alias("csim")
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(W.partitionBy("q_id").orderBy(F.desc("csim"), "label")),
-        )
-        .filter(F.col("rn") <= 2)
-        .select("q_id", "qv", "label")
-    )
-    cand = e.join(F.broadcast(qc), "label").filter(F.col("vec_id") != F.col("q_id"))
-    scored = cand.select(
-        "q_id",
-        F.col("vec_id").alias("n_id"),
-        "label",
-        cosine(F.col("qv"), F.col("embedding")).alias("sim"),
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("q_id", "n_id", "label", "sim", "rnk")
-    )
+    return _ivf_knn(spark, sf_dir, 2)
 
 
 #: probe widths the tuning instrument sweeps (1..4 of the ~10 lists)
@@ -2284,69 +2102,26 @@ _NPROBE_SWEEP = (1, 2, 3, 4)
 )
 def q_knn_nprobe_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-    centroids = _persisted_model(
-        spark, sf_dir, "ivf_centroids_exact", lambda: _ivf_exact_centroids(e)
-    )
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
-    # ground truth: exact top-k per query (the brute-force baseline)
-    ex_scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            cosine(F.col("qv"), F.col("embedding")).alias("sim"),
-        )
-    )
-    wex = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
+    # ground truth: exact top-k per query (the brute-force baseline).
     # r12 (guide §2.4): the O(queries x k) ground-truth table feeds the
     # count AND the hits join — checkpointed so the brute-force scoring
     # pass runs once (the simhash_pairs sig discipline)
-    exact = (
-        ex_scored.withColumn("rnk", F.row_number().over(wex))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("q_id", "n_id")
-        .localCheckpoint(eager=False)
-    )
+    exact = _top_k(_exact_scored(e), "q_id", "n_id").localCheckpoint(eager=False)
     exn = exact.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
     # per-(query, list) probe rank, candidates bounded to the widest probe
-    pr = (
-        q.crossJoin(F.broadcast(centroids))
-        .select("q_id", "qv", "label", cosine(F.col("qv"), F.col("centroid")).alias("csim"))
-        .withColumn(
-            "rl", F.row_number().over(W.partitionBy("q_id").orderBy(F.desc("csim"), "label"))
-        )
-        .filter(F.col("rl") <= max(_NPROBE_SWEEP))
-        .select("q_id", "qv", "label", "rl")
-    )
+    pr = _ivf_probe(spark, sf_dir, e, max(_NPROBE_SWEEP))
     cand = (
         e.join(F.broadcast(pr), "label")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            "rl",
-            cosine(F.col("qv"), F.col("embedding")).alias("sim"),
-        )
+        .filter("vec_id != q_id")
+        .selectExpr("q_id", "vec_id AS n_id", "rl", f"{cosine('qv', 'embedding')} AS sim")
     )
     # one scored table, four probe widths: explode the width axis and
     # keep candidates whose list rank fits the width
-    cp = cand.withColumn(
-        "nprobe",
-        F.explode(F.array(*[F.lit(p).cast("bigint") for p in _NPROBE_SWEEP])),
-    ).filter(F.col("rl") <= F.col("nprobe"))
-    wp = W.partitionBy("nprobe", "q_id").orderBy(F.desc("sim"), "vec_id")
-    ivftop = (
-        cp.withColumn("rnk", F.row_number().over(wp))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("nprobe", "q_id", "vec_id")
-    )
+    sweep = ", ".join(f"CAST({p} AS BIGINT)" for p in _NPROBE_SWEEP)
+    cp = cand.withColumn("nprobe", F.expr(f"explode(array({sweep}))")).filter("rl <= nprobe")
     hits = (
-        ivftop.join(
-            exact.select("q_id", F.col("n_id").alias("vec_id")), ["q_id", "vec_id"]
-        )
+        _top_k(cp, "nprobe", "q_id", "n_id", by="nprobe, q_id")
+        .join(exact, ["q_id", "n_id"])
         .groupBy("nprobe")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_hits"))
     )
@@ -2449,7 +2224,7 @@ def q_knn_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
 
     def _cos(a: list, b: list) -> float:
-        # the EXACT arithmetic of functions.vectors.cosine: sequential
+        # the EXACT arithmetic of the cosine text: sequential
         # double folds, dot / (sqrt(na) * sqrt(nb)), clamp — python
         # floats ARE IEEE doubles, so the router ranks identically to
         # the in-plan expression
@@ -2474,26 +2249,13 @@ def q_knn_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # their probed lists within the pruned scan
     idx = _ivf_index(spark, sf_dir).filter(F.col("label").isin(probe_labels))
     probed = spark.createDataFrame(probes, "q_id bigint, label int")
-    qdf = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
-    cand = (
+    scored = (
         idx.join(F.broadcast(probed), "label")
-        .join(F.broadcast(qdf), "q_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
+        .join(F.broadcast(_queries(e, "embedding AS qv")), "q_id")
+        .filter("vec_id != q_id")
+        .selectExpr("q_id", "vec_id AS n_id", "label", f"{cosine('qv', 'embedding')} AS sim")
     )
-    scored = cand.select(
-        "q_id",
-        F.col("vec_id").alias("n_id"),
-        "label",
-        cosine(F.col("qv"), F.col("embedding")).alias("sim"),
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("q_id", "n_id", "label", "sim", "rnk")
-    )
+    return _top_k(scored, "q_id", "n_id", "label", "sim", "rnk")
 
 
 # ---------------------------------------------------------------------------
@@ -2510,10 +2272,7 @@ def q_knn_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH e AS (SELECT vec_id, label,
                       list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                FROM embeddings),
-    q8 AS (SELECT vec_id, label,
-                  list_transform(v, x -> floor(x * 127.0
-                      / greatest(list_max(list_transform(v, y -> abs(y))), 1e-12) + 0.5)) AS v8
-           FROM e),
+    q8 AS (SELECT vec_id, label, {_Q8_SQL} AS v8 FROM e),
     n8 AS (SELECT vec_id, label, v8, sqrt(list_dot_product(v8, v8)) AS nrm FROM q8),
     pairs AS (
       SELECT a.label AS label, a.vec_id AS a_id, b.vec_id AS b_id,
@@ -2555,58 +2314,7 @@ def q_knn_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_knn_graph_mutual(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-
-    def quantize(col):
-        scale = F.greatest(
-            F.array_max(F.transform(col, lambda x: F.abs(x.cast("double")))),
-            F.lit(1e-12),
-        )
-        return F.transform(
-            col,
-            lambda x: F.floor(x.cast("double") * 127.0 / scale + 0.5).cast("double"),
-        )
-
-    n8 = e.select(
-        "vec_id",
-        "label",
-        quantize(F.col("embedding")).alias("v8"),
-    ).withColumn("nrm", F.sqrt(dot(F.col("v8"), F.col("v8"))))
-    a = n8.select(
-        "label",
-        F.col("vec_id").alias("a_id"),
-        F.col("v8").alias("av"),
-        F.col("nrm").alias("a_nrm"),
-    )
-    b = n8.select(
-        "label",
-        F.col("vec_id").alias("b_id"),
-        F.col("v8").alias("bv"),
-        F.col("nrm").alias("b_nrm"),
-    )
-    pairs = (
-        a.join(b, "label")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select(
-            "label",
-            "a_id",
-            "b_id",
-            (dot(F.col("av"), F.col("bv")) / (F.col("a_nrm") * F.col("b_nrm"))).alias("sim"),
-        )
-    )
-    # r12 (guide §2.4): both edge directions come from ONE explode of
-    # the pair stream instead of a self-union whose branches each
-    # re-ran the within-block pairwise join — half the pair work, same
-    # rows bit-for-bit (sim is computed once per pair either way)
-    directed = pairs.select(
-        "label",
-        "sim",
-        F.explode(
-            F.array(
-                F.struct(F.col("a_id").alias("src"), F.col("b_id").alias("dst")),
-                F.struct(F.col("b_id").alias("src"), F.col("a_id").alias("dst")),
-            )
-        ).alias("e"),
-    ).select("label", F.col("e.src").alias("src"), F.col("e.dst").alias("dst"), "sim")
+    directed = _int8_edges(_q8(e, "vec_id", "label"))
     w = W.partitionBy("src").orderBy(F.desc("sim"), "dst")
     # checkpoint the O(k*N) top-k edge table: the mutual self-join
     # references it twice, and each reference otherwise re-runs the
@@ -2630,6 +2338,28 @@ def q_knn_graph_mutual(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank_ba",
         )
         .orderBy("a_id", "b_id")
+    )
+
+
+def _int8_edges(n8: DataFrame) -> DataFrame:
+    """(label, src, dst, sim): both directions of every within-label
+    pair of the int8 vectors ``n8`` (vec_id, label, v8, nrm). Each
+    unordered pair is scored once and both directions come from ONE
+    explode of the pair stream (r12, guide §2.4) — a self-union's
+    branches each re-ran the within-block pairwise join."""
+    a = n8.selectExpr("label", "vec_id AS a_id", "v8 AS av", "nrm AS a_nrm")
+    b = n8.selectExpr("label", "vec_id AS b_id", "v8 AS bv", "nrm AS b_nrm")
+    return (
+        a.join(b, "label")
+        .filter("a_id < b_id")
+        .selectExpr("label", "a_id", "b_id", f"{dot('av', 'bv')} / (a_nrm * b_nrm) AS sim")
+        .selectExpr(
+            "label",
+            "sim",
+            "explode(array(named_struct('src', a_id, 'dst', b_id),"
+            " named_struct('src', b_id, 'dst', a_id))) AS e",
+        )
+        .selectExpr("label", "e.src AS src", "e.dst AS dst", "sim")
     )
 
 
@@ -2658,10 +2388,7 @@ _NDCG_IDEAL = "10.271924937667158"  # sum((6-i)/log2(i+1), i=1..5)
     oracle=f"""
     WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                FROM embeddings),
-    q8 AS (SELECT vec_id,
-                  list_transform(v, x -> floor(x * 127.0
-                      / greatest(list_max(list_transform(v, y -> abs(y))), 1e-12) + 0.5)) AS v8
-           FROM e),
+    q8 AS (SELECT vec_id, {_Q8_SQL} AS v8 FROM e),
     q AS (SELECT vec_id AS q_id, v8 AS qv FROM q8 WHERE vec_id < {_N_QUERIES}),
     sys AS (
       SELECT q_id, n_id, rnk FROM (
@@ -2716,61 +2443,8 @@ _NDCG_IDEAL = "10.271924937667158"  # sum((6-i)/log2(i+1), i=1..5)
 )
 def q_eval_ndcg_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-
-    def quantize(col):
-        scale = F.greatest(
-            F.array_max(F.transform(col, lambda x: F.abs(x.cast("double")))),
-            F.lit(1e-12),
-        )
-        return F.transform(
-            col,
-            lambda x: F.floor(x.cast("double") * 127.0 / scale + 0.5).cast("double"),
-        )
-
-    q8 = e.select("vec_id", quantize(F.col("embedding")).alias("v8")).withColumn(
-        "v8_nrm", F.sqrt(dot(F.col("v8"), F.col("v8")))
-    )
-    qi = q8.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v8").alias("qv"),
-        F.col("v8_nrm").alias("qv_nrm"),
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    sys_rank = (
-        q8.crossJoin(F.broadcast(qi))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            (dot(F.col("qv"), F.col("v8")) / (F.col("qv_nrm") * F.col("v8_nrm"))).alias("sim"),
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("q_id", "n_id", "rnk")
-    )
-    fq = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qv"),
-        norm(F.col("embedding")).alias("q_nrm"),
-    )
-    corpus = e.select(
-        F.col("vec_id").alias("n_id"), F.col("embedding").alias("v"),
-        norm(F.col("embedding")).alias("n_nrm"),
-    )
-    tru = (
-        corpus.crossJoin(F.broadcast(fq))
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "n_id",
-            clamp_sim(dot(F.col("qv"), F.col("v")) / (F.col("q_nrm") * F.col("n_nrm"))).alias(
-                "sim"
-            ),
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("q_id", "n_id", F.col("rnk").alias("true_rank"))
-    )
+    sys_rank = _top_k(_int8_scored(e), "q_id", "n_id", "rnk")
+    tru = _top_k(_exact_scored(e), "q_id", "n_id", "rnk AS true_rank")
     g = sys_rank.join(tru, ["q_id", "n_id"], "left").select(
         "q_id",
         "rnk",
@@ -2820,10 +2494,7 @@ def q_eval_ndcg_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH e AS (SELECT vec_id, label,
                       list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                FROM embeddings),
-    q8 AS (SELECT vec_id, label,
-                  list_transform(v, x -> floor(x * 127.0
-                      / greatest(list_max(list_transform(v, y -> abs(y))), 1e-12) + 0.5)) AS v8
-           FROM e),
+    q8 AS (SELECT vec_id, label, {_Q8_SQL} AS v8 FROM e),
     n8 AS (SELECT vec_id, label, v8, sqrt(list_dot_product(v8, v8)) AS nrm FROM q8),
     upairs AS (
       SELECT a.vec_id AS x_id, b.vec_id AS y_id,
@@ -2891,59 +2562,16 @@ def q_eval_ndcg_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_embed_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-
-    def quantize(col):
-        scale = F.greatest(
-            F.array_max(F.transform(col, lambda x: F.abs(x.cast("double")))),
-            F.lit(1e-12),
-        )
-        return F.transform(
-            col,
-            lambda x: F.floor(x.cast("double") * 127.0 / scale + 0.5).cast("double"),
-        )
-
-    n8 = e.select("vec_id", "label", quantize(F.col("embedding")).alias("v8")).withColumn(
-        "nrm", F.sqrt(dot(F.col("v8"), F.col("v8")))
-    )
-    a = n8.select(
-        "label",
-        F.col("vec_id").alias("a_id"),
-        F.col("v8").alias("av"),
-        F.col("nrm").alias("a_nrm"),
-    )
-    b = n8.select(
-        "label",
-        F.col("vec_id").alias("b_id"),
-        F.col("v8").alias("bv"),
-        F.col("nrm").alias("b_nrm"),
-    )
-    sim = dot(F.col("av"), F.col("bv")) / (F.col("a_nrm") * F.col("b_nrm"))
-    # compute each unordered pair's sim ONCE, then union both
-    # directions — the q_knn_graph_mutual shape, which (unlike the
+    n8 = _q8(e, "vec_id", "label")
+    # each unordered pair's sim is computed ONCE, then both directions
+    # ride the ranking — the q_knn_graph_mutual shape, which (unlike the
     # naive a != b enumeration) stays skinny through the rank window
     # and survived the sf1 sweep where the naive form OOM'd DuckDB
-    upairs = (
-        a.join(b, "label")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select(F.col("a_id").alias("x_id"), F.col("b_id").alias("y_id"), sim.alias("sim"))
-    )
-    # r12 (guide §2.4): both directions from ONE explode of the pair
-    # stream — the self-union's branches each re-ran the within-block
-    # pairwise join; same rows bit-for-bit
-    directed = upairs.select(
-        "sim",
-        F.explode(
-            F.array(
-                F.struct(F.col("x_id").alias("a_id"), F.col("y_id").alias("p_id")),
-                F.struct(F.col("y_id").alias("a_id"), F.col("x_id").alias("p_id")),
-            )
-        ).alias("e"),
-    ).select(F.col("e.a_id").alias("a_id"), F.col("e.p_id").alias("p_id"), "sim")
-    wp = W.partitionBy("a_id").orderBy(F.desc("sim"), "p_id")
     pos = (
-        directed.withColumn("rnk", F.row_number().over(wp))
-        .filter(F.col("rnk") == 1)
-        .select("a_id", "p_id", F.col("sim").alias("p_sim"))
+        _int8_edges(n8)
+        .withColumn("rnk", F.expr("row_number() OVER (PARTITION BY src ORDER BY sim DESC, dst)"))
+        .filter("rnk = 1")
+        .selectExpr("src AS a_id", "dst AS p_id", "sim AS p_sim")
     )
     # portable hash-rank (r11): the _PQ_SAMPLE_MASK convention — vec_id
     # masked to 31 bits BEFORE the multiply (overflow-safe on both
@@ -2995,11 +2623,7 @@ def q_embed_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     neg = ra.join(
         rb,
         (F.col("b_label") == F.col("nxt_label")) & (F.col("b_hr") == F.col("tgt_hr")),
-    ).select(
-        "a_id",
-        "n_id",
-        (dot(F.col("av"), F.col("bv")) / (F.col("a_nrm") * F.col("b_nrm"))).alias("n_sim"),
-    )
+    ).selectExpr("a_id", "n_id", f"{dot('av', 'bv')} / (a_nrm * b_nrm) AS n_sim")
     lab = e.select(F.col("vec_id").alias("a_id"), "label")
     t = (
         pos.join(neg, "a_id")
@@ -3110,6 +2734,7 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cluster_id"), F.col("embedding").alias("cv")
     )
     cent = None
+    argmax = "max(named_struct('sim', sim, 'negcid', -cluster_id, 'v', embedding)) AS m"
     for _r in range(_KM_ROUNDS):
         # E-step as ONE map-side-combined argmax aggregate (r12
         # optimization round 1; the LPA/k-center convention): the
@@ -3132,26 +2757,10 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         # already vec_id-contiguous output.
         asgv = (
             e.crossJoin(F.broadcast(centv))
-            .select(
-                "vec_id",
-                "cluster_id",
-                cosine(F.col("embedding"), F.col("cv")).alias("sim"),
-                "embedding",
-            )
+            .selectExpr("vec_id", "cluster_id", f"{cosine('embedding', 'cv')} AS sim", "embedding")
             .groupBy("vec_id")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("sim"),
-                        (-F.col("cluster_id")).alias("negcid"),
-                        F.col("embedding").alias("v"),
-                    )
-                ).alias("m")
-            )
-            .select(
-                (-F.col("m.negcid")).alias("cluster_id"),
-                F.col("m.v").alias("embedding"),
-            )
+            .agg(F.expr(argmax))
+            .selectExpr("-m.negcid AS cluster_id", "m.v AS embedding")
         )
         comp = asgv.select(
             "cluster_id", F.posexplode("embedding").alias("pos0", "x")
@@ -3169,13 +2778,10 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         centv = (
             cent.groupBy("cluster_id")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "qs", "n"))).alias("pc"))
-            .select(
+            .selectExpr(
                 "cluster_id",
-                F.transform(
-                    "pc",
-                    lambda s: s["qs"].cast("double")
-                    / (s["n"].cast("double") * F.lit(float(_KM_QZ))),
-                ).alias("cv"),
+                "transform(pc, s -> CAST(s.qs AS DOUBLE)"
+                f" / (CAST(s.n AS DOUBLE) * {_KM_QZ}.0D)) AS cv",
             )
         )
     return cent.select(
@@ -3250,36 +2856,19 @@ _DIM_TRUNC_SQL = f"""
 )
 def q_knn_dim_truncation(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
     dims = spark.createDataFrame([(d,) for d in _DIM_SWEEP], "dim bigint")
     pairs = (
-        e.select(F.col("vec_id").alias("n_id"), F.col("embedding").alias("v"))
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("n_id") != F.col("q_id"))
+        e.selectExpr("vec_id AS n_id", "embedding AS v")
+        .crossJoin(F.broadcast(_queries(e, "embedding AS qv")))
+        .filter("n_id != q_id")
         .crossJoin(F.broadcast(dims))
-        .select(
-            "dim",
-            "q_id",
-            "n_id",
-            F.slice(F.col("qv"), F.lit(1), F.col("dim")).alias("qs"),
-            F.slice(F.col("v"), F.lit(1), F.col("dim")).alias("vs"),
-        )
+        .selectExpr("dim", "q_id", "n_id", "slice(qv, 1, dim) AS qs", "slice(v, 1, dim) AS vs")
     )
-    scored = pairs.select(
-        "dim", "q_id", "n_id", cosine(F.col("qs"), F.col("vs")).alias("sim")
-    )
-    wd = W.partitionBy("dim", "q_id").orderBy(F.desc("sim"), "n_id")
+    scored = pairs.selectExpr("dim", "q_id", "n_id", f"{cosine('qs', 'vs')} AS sim")
     # r12 (guide §2.4): the O(dims x queries x k) top table feeds the
     # exact slice, its count, and the hits join — checkpointed so the
     # sliced-cosine scoring sweep runs once instead of three times
-    top = (
-        scored.withColumn("rnk", F.row_number().over(wd))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("dim", "q_id", "n_id")
-        .localCheckpoint(eager=False)
-    )
+    top = _top_k(scored, "dim", "q_id", "n_id", by="dim, q_id").localCheckpoint(eager=False)
     exact = top.filter(F.col("dim") == max(_DIM_SWEEP)).select("q_id", "n_id")
     exn = exact.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
     hits = (
@@ -3365,35 +2954,21 @@ _FILT_SQL = f"""
 )
 def q_knn_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("qv"),
-    )
+    q = _queries(e, "label AS q_label", "embedding AS qv")
     scored = (
-        e.select(F.col("vec_id").alias("n_id"), "label", F.col("embedding").alias("v"))
+        e.selectExpr("vec_id AS n_id", "label", "embedding AS v")
         .crossJoin(F.broadcast(q))
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "q_label",
-            "n_id",
-            "label",
-            cosine(F.col("qv"), F.col("v")).alias("sim"),
-        )
+        .filter("n_id != q_id")
+        .selectExpr("q_id", "q_label", "n_id", "label", f"{cosine('qv', 'v')} AS sim")
     )
-    wq = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    pre_top = (
-        scored.filter(F.col("label") == F.col("q_label"))
-        .withColumn("rnk", F.row_number().over(wq))
-        .filter(F.col("rnk") <= _TOP_K)
-    )
-    pre_n = pre_top.groupBy("q_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_exact")
+    pre_n = (
+        _top_k(scored.filter("label = q_label"), "q_id")
+        .groupBy("q_id")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
     )
     post_found = (
-        scored.withColumn("rnk", F.row_number().over(wq))
-        .filter((F.col("rnk") <= _FILT_POSTK) & (F.col("label") == F.col("q_label")))
+        _ranked(scored)
+        .filter(f"rnk <= {_FILT_POSTK} AND label = q_label")
         .groupBy("q_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("in_budget"))
     )
@@ -3438,11 +3013,8 @@ def _pca2_oracle() -> str:
     parts = [f"""
     WITH e AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                FROM embeddings),
-    q8 AS MATERIALIZED (SELECT vec_id,
-                  list_transform(v, x -> CAST(floor(x * 127.0
-                      / greatest(list_max(list_transform(v, y -> abs(y))), 1e-12)
-                      + 0.5) AS BIGINT)) AS v8
-           FROM e),
+    q8 AS MATERIALIZED (
+      SELECT vec_id, list_transform({_Q8_SQL}, x -> CAST(x AS BIGINT)) AS v8 FROM e),
     cells AS MATERIALIZED (
       SELECT ii.i AS i, jj.j AS j,
              CAST(sum(v8[ii.i + 1] * v8[jj.j + 1]) AS BIGINT) AS sxy
@@ -3515,17 +3087,8 @@ def q_embed_pca_var_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     e = table(spark, sf_dir, "embeddings")
-
-    def quantize(col):
-        scale = F.greatest(
-            F.array_max(F.transform(col, lambda x: F.abs(x.cast("double")))),
-            F.lit(1e-12),
-        )
-        return F.transform(
-            col, lambda x: F.floor(x.cast("double") * 127.0 / scale + 0.5)
-        )
-
-    q8 = e.select("vec_id", quantize(F.col("embedding")).alias("v8"))
+    # BIGINT components: the moment sums below are exact int64 at any N
+    q8 = e.selectExpr("vec_id", f"transform({int8('embedding')}, x -> CAST(x AS BIGINT)) AS v8")
     a = q8.select("vec_id", F.posexplode("v8").alias("i", "xi"))
     b = q8.select(
         F.col("vec_id").alias("vid2"), F.posexplode("v8").alias("j", "xj")
@@ -3800,13 +3363,12 @@ _JL_HMOD = 2147483648
 @register(
     "q_embed_jl_projection",
     oracle=f"""
-    WITH q8 AS (
+    WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+               FROM embeddings),
+    q8 AS (
       SELECT vec_id, CAST(label AS BIGINT) AS label,
-             list_transform(embedding, x -> CAST(floor(
-               CAST(x AS DOUBLE) * 127.0 /
-               greatest(list_max(list_transform(embedding,
-                 y -> abs(CAST(y AS DOUBLE)))), 1e-12) + 0.5) AS BIGINT)) AS v
-      FROM embeddings),
+             list_transform({_Q8_SQL}, x -> CAST(x AS BIGINT)) AS v
+      FROM e),
     proj AS (
       SELECT vec_id, label, v,
              list_transform(range(0, {_JL_K}), j ->
@@ -3864,70 +3426,28 @@ _JL_HMOD = 2147483648
 )
 def q_embed_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-
-    def quantize(col):
-        scale = F.greatest(
-            F.array_max(F.transform(col, lambda x: F.abs(x.cast("double")))),
-            F.lit(1e-12),
-        )
-        return F.transform(
-            col, lambda x: F.floor(x.cast("double") * 127.0 / scale + 0.5)
-        )
-
-    q8 = e.select(
-        "vec_id",
-        F.col("label").cast("bigint").alias("label"),
-        quantize(F.col("embedding")).alias("v"),
+    q8 = e.selectExpr("vec_id", "CAST(label AS BIGINT) AS label", f"{int8('embedding')} AS v")
+    # bit 15 of the masked multiplicative hash of i*K + j + 1 as a +/-1
+    # sign; h < 2^31 and 32768 = 2^15, so h / 32768.0 is exact in double
+    # and floor-division agrees with DuckDB's integer //
+    sign = (
+        f"(CAST(1 AS BIGINT) - 2 * (CAST(floor((CAST(i AS BIGINT) * {_JL_K} + CAST(j AS BIGINT)"
+        f" + 1) * 2654435761 % {_JL_HMOD} / 32768.0D) AS BIGINT) % 2))"
     )
-
-    def _sign(i, j):
-        # bit 15 of the masked multiplicative hash of i*K + j + 1;
-        # h < 2^31 and 32768 = 2^15, so h / 32768.0 is exact in double
-        # and floor-division agrees with DuckDB's integer //
-        h = (
-            (i.cast("bigint") * _JL_K + j.cast("bigint") + 1)
-            * F.lit(2654435761).cast("bigint")
-        ) % F.lit(_JL_HMOD).cast("bigint")
-        return F.lit(1).cast("bigint") - 2 * (
-            F.floor(h / F.lit(32768.0)).cast("bigint") % 2
-        )
-
-    y = F.transform(
-        F.sequence(F.lit(0), F.lit(_JL_K - 1)),
-        lambda j: F.aggregate(
-            F.sequence(F.lit(0), F.size(F.col("v")) - 1),
-            F.lit(0).cast("bigint"),
-            lambda acc, i: acc
-            + F.element_at(F.col("v"), (i + 1).cast("int")).cast("bigint")
-            * _sign(i, j),
-        ),
+    y = (
+        f"transform(sequence(0, {_JL_K - 1}), j -> aggregate(sequence(0, size(v) - 1), "
+        "CAST(0 AS BIGINT), (acc, i) -> acc + CAST(element_at(v, CAST(i + 1 AS INT)) AS BIGINT)"
+        f" * {sign}))"
     )
-    proj = q8.select("vec_id", "label", "v", y.alias("y"))
-
-    b = proj.select(
-        (F.col("vec_id") - 1).alias("pair_id"),
-        F.col("v").alias("vb"),
-        F.col("y").alias("yb"),
-    )
-    a = proj.filter(F.col("vec_id") % 2 == 0).select(
-        F.col("vec_id").alias("pair_id"), "label", "v", "y"
-    )
-
-    def _sq_dist(lhs, rhs, init):
-        return F.aggregate(
-            F.zip_with(lhs, rhs, lambda x, z: (x - z) * (x - z)),
-            init,
-            lambda acc, t: acc + t,
-        )
-
-    pairs = a.join(b, "pair_id").select(
+    proj = q8.selectExpr("vec_id", "label", "v", f"{y} AS y")
+    b = proj.selectExpr("vec_id - 1 AS pair_id", "v AS vb", "y AS yb")
+    a = proj.filter("vec_id % 2 = 0").selectExpr("vec_id AS pair_id", "label", "v", "y")
+    # integer components, so both squared distances are exact in a
+    # double (< 2^53) and the BIGINT cast loses nothing
+    pairs = a.join(b, "pair_id").selectExpr(
         "label",
-        _sq_dist(F.col("v"), F.col("vb"), F.lit(0).cast("bigint")).alias(
-            "d2_orig"
-        ),
-        _sq_dist(F.col("y"), F.col("yb"), F.lit(0).cast("bigint")).alias(
-            "d2_proj"
-        ),
+        f"CAST({l2sq('v', 'vb')} AS BIGINT) AS d2_orig",
+        f"CAST({l2sq('y', 'yb')} AS BIGINT) AS d2_proj",
     )
     milli = pairs.filter(F.col("d2_orig") > 0).select(
         "label",
@@ -3976,12 +3496,9 @@ def _kc_d2(prefix_p: str, prefix_c: str) -> str:
 
 def _kcenter_oracle() -> str:
     parts = [
-        """e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        f"""e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                FROM embeddings),
-    q8 AS (SELECT vec_id,
-                  list_transform(v, x -> floor(x * 127.0
-                      / greatest(list_max(list_transform(v, y -> abs(y))), 1e-12) + 0.5)) AS v8
-           FROM e),
+    q8 AS (SELECT vec_id, {_Q8_SQL} AS v8 FROM e),
     c0 AS (SELECT vec_id AS cid, v8 AS cv FROM q8 WHERE vec_id = 0),
     m0 AS MATERIALIZED (
       SELECT p.vec_id, p.v8, CAST(""" + _kc_d2("p", "c") + """ AS BIGINT) AS mind
@@ -4045,36 +3562,23 @@ def _kcenter_oracle() -> str:
 )
 def q_kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
+    q8 = _q8(e, "vec_id")
 
-    def quantize(col):
-        scale = F.greatest(
-            F.array_max(F.transform(col, lambda x: F.abs(x.cast("double")))),
-            F.lit(1e-12),
-        )
-        return F.transform(
-            col,
-            lambda x: F.floor(x.cast("double") * 127.0 / scale + 0.5).cast("double"),
-        )
+    def d2(c: str) -> str:
+        return f"CAST({dot('v8', 'v8')} - {dot('v8', c)} * 2.0D + {dot(c, c)} AS BIGINT)"
 
-    q8 = e.select("vec_id", quantize(F.col("embedding")).alias("v8"))
-
-    def d2(p, c):
-        return (dot(p, p) - 2.0 * dot(p, c) + dot(c, c)).cast("bigint")
-
-    c0 = q8.filter(F.col("vec_id") == 0).select(F.col("v8").alias("cv"))
+    c0 = q8.filter("vec_id = 0").selectExpr("v8 AS cv")
     st = (
         q8.crossJoin(F.broadcast(c0))
-        .select("vec_id", "v8", d2(F.col("v8"), F.col("cv")).alias("mind"))
+        .selectExpr("vec_id", "v8", f"{d2('cv')} AS mind")
         .localCheckpoint()
     )
-    out_rows = [
-        st.sparkSession.range(1).select(
-            F.lit(0).cast("int").alias("round"),
-            F.lit(0).cast("bigint").alias("center_id"),
-            F.lit(0).cast("bigint").alias("radius_sq"),
-            F.lit(0).cast("bigint").alias("sum_d2"),
-        )
-    ]
+    out = spark.range(1).selectExpr(
+        "CAST(0 AS INT) AS round",
+        "CAST(0 AS BIGINT) AS center_id",
+        "CAST(0 AS BIGINT) AS radius_sq",
+        "CAST(0 AS BIGINT) AS sum_d2",
+    )
     for r in range(1, _KC_K):
         # r12 (guide §2.4): the new center's VECTOR rides the argmax
         # struct — (mind, nid) is already unique per row, so the
@@ -4082,48 +3586,29 @@ def q_kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the selection is unchanged; this drops the per-round
         # re-scan + re-quantize + join that previously fetched cv
         selmx = st.agg(
-            F.max(
-                F.struct(
-                    F.col("mind"),
-                    (-F.col("vec_id")).alias("nid"),
-                    F.col("v8").alias("cv"),
-                )
-            ).alias("mx"),
-            F.sum("mind").cast("bigint").alias("sum_d2"),
+            F.expr("max(named_struct('mind', mind, 'nid', -vec_id, 'cv', v8)) AS mx"),
+            F.expr("CAST(sum(mind) AS BIGINT) AS sum_d2"),
         )
-        sel = selmx.select(
-            F.lit(r).cast("int").alias("round"),
-            (-F.col("mx.nid")).cast("bigint").alias("center_id"),
-            F.col("mx.mind").cast("bigint").alias("radius_sq"),
-            "sum_d2",
-        )
-        cent = selmx.select(F.col("mx.cv").alias("cv"))
-        st = (
-            st.crossJoin(F.broadcast(cent))
-            .select(
-                "vec_id",
-                "v8",
-                F.least(F.col("mind"), d2(F.col("v8"), F.col("cv"))).alias(
-                    "mind"
-                ),
+        out = out.unionByName(
+            selmx.selectExpr(
+                f"CAST({r} AS INT) AS round",
+                "CAST(-mx.nid AS BIGINT) AS center_id",
+                "CAST(mx.mind AS BIGINT) AS radius_sq",
+                "sum_d2",
             )
+        )
+        st = (
+            st.crossJoin(F.broadcast(selmx.selectExpr("mx.cv AS cv")))
+            .selectExpr("vec_id", "v8", f"least(mind, {d2('cv')}) AS mind")
             .localCheckpoint()
         )
-        out_rows.append(sel)
     final = st.agg(
-        F.max("mind").cast("bigint").alias("radius_sq"),
-        F.sum("mind").cast("bigint").alias("sum_d2"),
-    ).select(
-        F.lit(_KC_K).cast("int").alias("round"),
-        F.lit(-1).cast("bigint").alias("center_id"),
-        "radius_sq",
-        "sum_d2",
+        F.expr("CAST(max(mind) AS BIGINT) AS radius_sq"),
+        F.expr("CAST(sum(mind) AS BIGINT) AS sum_d2"),
+    ).selectExpr(
+        f"CAST({_KC_K} AS INT) AS round", "CAST(-1 AS BIGINT) AS center_id", "radius_sq", "sum_d2"
     )
-    out_rows.append(final)
-    out = out_rows[0]
-    for s in out_rows[1:]:
-        out = out.unionByName(s)
-    return out.orderBy("round")
+    return out.unionByName(final).orderBy("round")
 
 
 # ---------------------------------------------------------------------------
@@ -4180,10 +3665,7 @@ def _rrf_oracle() -> str:
       FROM lex_top),
     e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
           FROM embeddings),
-    q8 AS (SELECT vec_id,
-                  list_transform(v, x -> floor(x * 127.0
-                      / greatest(list_max(list_transform(v, y -> abs(y))), 1e-12) + 0.5)) AS v8
-           FROM e),
+    q8 AS (SELECT vec_id, {_Q8_SQL} AS v8 FROM e),
     qv AS (SELECT v8 AS q FROM q8 WHERE vec_id = {_RRF_QDOC}),
     vec_top AS (
       SELECT c.vec_id AS doc_id,
@@ -4278,33 +3760,12 @@ def q_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(W.orderBy(F.desc("s"), "doc_id")).cast("bigint"),
     ).select("doc_id", "r_lex")
 
-    e = table(spark, sf_dir, "embeddings")
-
-    def quantize(col):
-        scale = F.greatest(
-            F.array_max(F.transform(col, lambda x: F.abs(x.cast("double")))),
-            F.lit(1e-12),
-        )
-        return F.transform(
-            col,
-            lambda x: F.floor(x.cast("double") * 127.0 / scale + 0.5).cast("double"),
-        )
-
-    q8 = e.select("vec_id", quantize(F.col("embedding")).alias("v8"))
-    qv = q8.filter(F.col("vec_id") == _RRF_QDOC).select(F.col("v8").alias("q"))
+    q8 = _q8(table(spark, sf_dir, "embeddings"), "vec_id")
+    qv = q8.filter(f"vec_id = {_RRF_QDOC}").selectExpr("v8 AS q", "nrm AS q_nrm")
     vec_top = (
-        q8.filter(F.col("vec_id") != _RRF_QDOC)
+        q8.filter(f"vec_id != {_RRF_QDOC}")
         .crossJoin(F.broadcast(qv))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            (
-                dot(F.col("q"), F.col("v8"))
-                / (
-                    F.sqrt(dot(F.col("q"), F.col("q")))
-                    * F.sqrt(dot(F.col("v8"), F.col("v8")))
-                )
-            ).alias("sim"),
-        )
+        .selectExpr("vec_id AS doc_id", f"{dot('q', 'v8')} / (q_nrm * nrm) AS sim")
         .orderBy(F.desc("sim"), "doc_id")
         .limit(_RRF_TOPK)
     )

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from azurestorage_blueprints_spark.functions.vectors import cosine, l2sq
 from azurestorage_blueprints_spark.queries import finalize_bounded, register
 from azurestorage_blueprints_spark.queries.relational import _dec
 from azurestorage_blueprints_spark.streaming.windows import (
@@ -1015,41 +1016,20 @@ def q_stream_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "cbm array<array<array<double>>>, centm array<struct<l:int,c:array<double>>>",
     )
-    # cosine text identical to functions.vectors.cosine (clamped
-    # sequential folds), inlined so the routing fold can reuse it
-    def cos_sql(b: str) -> str:
-        dot = (
-            f"aggregate(zip_with(v, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
-            "cast(0.0 as double), (acc, x) -> acc + x)"
-        )
-        nv = (
-            "sqrt(aggregate(transform(v, x -> cast(x as double) * cast(x as double)), "
-            "cast(0.0 as double), (acc, x) -> acc + x))"
-        )
-        nb = (
-            f"sqrt(aggregate(transform({b}, x -> cast(x as double) * cast(x as double)), "
-            "cast(0.0 as double), (acc, x) -> acc + x))"
-        )
-        return (
-            f"least(cast(1.0 as double), greatest(cast(-1.0 as double), "
-            f"{dot} / ({nv} * {nb})))"
-        )
-
     # row-local coarse routing: fold over the ascending-label centroid
     # array with strict > = the (csim DESC, label) tie-break of the
     # batch probe
     route = F.expr(
         "aggregate(centm, "
         "named_struct('l', cast(-1 as int), 's', cast('-Infinity' as double)), "
-        f"(acc, ct) -> if({cos_sql('ct.c')} > acc.s, "
-        f"named_struct('l', ct.l, 's', {cos_sql('ct.c')}), acc)).l"
+        f"(acc, ct) -> if({cosine('v', 'ct.c')} > acc.s, "
+        f"named_struct('l', ct.l, 's', {cosine('v', 'ct.c')}), acc)).l"
     )
     # row-local ADC table: 8x16 micro-quantized cells against the
-    # codebook column (the _PQ_L2SQL fold, term for term)
+    # codebook column (the batch rungs' L2^2 fold)
     adcm = F.expr(
         "transform(cbm, (scb, s) -> transform(scb, cw -> "
-        f"cast(floor(aggregate(zip_with(slice(v, s * {_PQ_D} + 1, {_PQ_D}), cw, "
-        "(a, b) -> (a - b) * (a - b)), cast(0.0 as double), (acc, x) -> acc + x) "
+        f"cast(floor({l2sq(f'slice(v, s * {_PQ_D} + 1, {_PQ_D})', 'cw')} "
         f"* {_PQ_ADC_QZ} + 0.5) as bigint)))"
     )
     routed = (
@@ -1159,8 +1139,7 @@ def q_stream_model_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_s = F.expr(
         "transform(cbm, (scb, s) -> "
         "cast(floor(aggregate(scb, cast('Infinity' as double), (acc, cw) -> "
-        f"least(acc, aggregate(zip_with(slice(v, s * {_PQ_D} + 1, {_PQ_D}), cw, "
-        "(a, b) -> (a - b) * (a - b)), cast(0.0 as double), (acc2, x2) -> acc2 + x2))) "
+        f"least(acc, {l2sq(f'slice(v, s * {_PQ_D} + 1, {_PQ_D})', 'cw')})) "
         f"* {_PQ_DRIFT_QZ} + 0.5) as bigint))"
     )
     exploded = (

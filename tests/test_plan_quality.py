@@ -767,26 +767,10 @@ def test_kmeans_round_assignment_broadcasts_centroids(spark, sf_dir):
     )
     asgv = (
         e.crossJoin(F.broadcast(centv))
-        .select(
-            "vec_id",
-            "cluster_id",
-            cosine(F.col("embedding"), F.col("cv")).alias("sim"),
-            "embedding",
-        )
+        .selectExpr("vec_id", "cluster_id", f"{cosine('embedding', 'cv')} AS sim", "embedding")
         .groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("sim"),
-                    (-F.col("cluster_id")).alias("negcid"),
-                    F.col("embedding").alias("v"),
-                )
-            ).alias("m")
-        )
-        .select(
-            (-F.col("m.negcid")).alias("cluster_id"),
-            F.col("m.v").alias("embedding"),
-        )
+        .agg(F.expr("max(named_struct('sim', sim, 'negcid', -cluster_id, 'v', embedding)) AS m"))
+        .selectExpr("-m.negcid AS cluster_id", "m.v AS embedding")
     )
     plan = _plan_of(spark, asgv)
     assert "Broadcast" in plan

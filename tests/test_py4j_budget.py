@@ -6,7 +6,8 @@ every run whatever the data size. The DSIR ingest gate once spent about
 deploys the fitted model as one folded SQL expression. A SQL-form query
 (``register_sql``) builds its whole plan with one ``spark.sql`` call.
 The SimHash rungs build their 62-64 per-bit votes and signature sum as
-SQL text; as Column trees they sent about 10,200-10,800.
+SQL text; as Column trees they sent about 10,200-10,800. The similarity
+rungs build dot, norm, cosine, int8 and L2² folds as SQL text too.
 These gates keep that tax from creeping back.
 """
 
@@ -30,6 +31,17 @@ _SQL_BUILD_BUDGET = 25
 
 #: py4j commands a SimHash rung may send to build its plan at sf0.001
 _SIMHASH_BUILD_BUDGET = 2_500
+
+#: py4j commands each similarity rung may send to build its plan at
+#: sf0.001, about 110% of its count with the vector vocabulary as SQL
+#: text; the Column-tree helpers sent 2,027-5,788 for these rungs
+_SIMILARITY_BUILD_BUDGETS = {
+    "q_eval_ndcg_knn": 735,
+    "q_kcenter_sample": 465,
+    "q_kmeans_train": 1_135,
+    "q_knn_lsh": 135,
+    "q_knn_nprobe_tradeoff": 475,
+}
 
 
 @pytest.fixture
@@ -75,3 +87,10 @@ def test_simhash_rung_builds_within_py4j_budget(spark, sf_dir, py4j_calls, name)
     REGISTRY[name].fn(spark, sf_dir)
     calls = _round_trips(py4j_calls)
     assert len(calls) < _SIMHASH_BUILD_BUDGET, len(calls)
+
+
+@pytest.mark.parametrize("name", sorted(_SIMILARITY_BUILD_BUDGETS))
+def test_similarity_rung_builds_within_py4j_budget(spark, sf_dir, py4j_calls, name):
+    REGISTRY[name].fn(spark, sf_dir)
+    calls = _round_trips(py4j_calls)
+    assert len(calls) < _SIMILARITY_BUILD_BUDGETS[name], len(calls)
