@@ -1231,12 +1231,15 @@ _DSIR_LR_SQL = (
     f" * {_DSIR_QZ}.0D) AS BIGINT)"
 )
 
-# shared CTE prefix: per-document hashed-bigram features and the
-# milli-quantized per-bucket log importance ratio (DuckDB dialect;
-# the Spark side mirrors it expression-for-expression in DataFrame API
-# because the feature stage needs list higher-order functions, which
-# have no dialect-common SQL spelling)
-_DSIR_PREFIX_SQL = f"""
+
+def _dsir_prefix_sql(train: str = "") -> str:
+    """Shared CTE prefix: per-document hashed-bigram features (``feats``,
+    every document) and the milli-quantized per-bucket log importance
+    ratio trained on ``feats{train}`` — ``train`` is a WHERE clause
+    naming the training slice, empty for the whole corpus (DuckDB
+    dialect; the Spark side mirrors it in :func:`_dsir_token_hashes`,
+    :data:`_DSIR_BK_SQL` and :func:`_dsir_model`)."""
+    return f"""
     WITH toked AS (
       SELECT doc_id, lang,
              list_filter(string_split(text, ' '), t -> t <> '') AS tk
@@ -1260,7 +1263,7 @@ _DSIR_PREFIX_SQL = f"""
              CAST(count(*) AS BIGINT) AS c_r,
              CAST(sum(CASE WHEN lang = '{_DSIR_TARGET}' THEN 1 ELSE 0 END)
                   AS BIGINT) AS c_t
-      FROM feats GROUP BY bucket),
+      FROM feats{train} GROUP BY bucket),
     tots AS (
       SELECT CAST(sum(c_r) AS BIGINT) AS n_r,
              CAST(sum(c_t) AS BIGINT) AS n_t
@@ -1279,13 +1282,14 @@ _DSIR_PREFIX_SQL = f"""
       GROUP BY f.doc_id, f.lang)
 """
 
-_DSIR_IMPORTANCE_SQL = f"""{_DSIR_PREFIX_SQL}
+
+_DSIR_IMPORTANCE_SQL = f"""{_dsir_prefix_sql()}
     SELECT doc_id, lang, n_feats, imp_milli,
            CAST(imp_milli AS DOUBLE) / {_DSIR_QZ}.0 AS log_importance
     FROM imp
 """
 
-_DSIR_RESAMPLE_SQL = f"""{_DSIR_PREFIX_SQL},
+_DSIR_RESAMPLE_SQL = f"""{_dsir_prefix_sql()},
     seeded AS (
       SELECT doc_id, lang, imp_milli,
              ((doc_id % 2147483648) * 2654435761 + {_DSIR_GUMBEL_SALT})
@@ -1315,18 +1319,27 @@ _DSIR_RESAMPLE_SQL = f"""{_DSIR_PREFIX_SQL},
 """
 
 
-def _dsir_feats(docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, text) → exploded (doc_id, lang, bucket) hashed-bigram
-    feature stream, mirroring the ``feats`` CTE of ``_DSIR_PREFIX_SQL``
-    expression-for-expression. Documents under 2 tokens have no bigram
-    and are dropped on both engines."""
+#: the hashed-bigram bucket array of a token-hash column ``th`` (the
+#: ``feats`` CTE's list): the batch rungs explode it, the ingest gate
+#: folds it
+_DSIR_BK_SQL = (
+    f"transform(sequence(1, size(th) - 1),"
+    f" i -> ((element_at(th, i) * {_DSIR_BIGRAM_MULT}"
+    f" + element_at(th, i + 1)) % 2147483647) % {_DSIR_BUCKETS})"
+)
+
+
+def _dsir_token_hashes(docs: DataFrame) -> DataFrame:
+    """(doc_id, lang, text) → (doc_id, lang, th): the per-token
+    polynomial char fold of every document with at least 2 tokens (the
+    ``toked``/``th`` CTEs of :func:`_dsir_prefix_sql`); shorter
+    documents have no bigram and are dropped on both engines."""
     toked = docs.select("doc_id", "lang", F.expr(_TOKS).alias("tk")).filter(
         F.size("tk") >= 2
     )
-    # per-token polynomial char fold — tk is a MATERIALIZED column (the
-    # word_shingles rule: inline children of higher-order functions
-    # re-evaluate per element)
-    th = toked.select(
+    # tk is a MATERIALIZED column (the word_shingles rule: inline
+    # children of higher-order functions re-evaluate per element)
+    return toked.select(
         "doc_id",
         "lang",
         F.expr(
@@ -1335,22 +1348,19 @@ def _dsir_feats(docs: DataFrame) -> DataFrame:
             " CAST(0 AS BIGINT), (h, c) -> (h * 31 + c) % 2147483647))"
         ).alias("th"),
     )
-    return th.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size(th) - 1),"
-                f" i -> ((element_at(th, i) * {_DSIR_BIGRAM_MULT}"
-                f" + element_at(th, i + 1)) % 2147483647) % {_DSIR_BUCKETS})"
-            )
-        ).alias("bucket"),
+
+
+def _dsir_feats(docs: DataFrame) -> DataFrame:
+    """(doc_id, lang, text) → exploded (doc_id, lang, bucket) hashed-bigram
+    feature stream, the ``feats`` CTE of :func:`_dsir_prefix_sql`."""
+    return _dsir_token_hashes(docs).select(
+        "doc_id", "lang", F.explode(F.expr(_DSIR_BK_SQL)).alias("bucket")
     )
 
 
 def _dsir_model(docs: DataFrame) -> tuple[list[tuple[int, str]], str]:
     """Fit the DSIR model over a document set, mirroring the ``counts``/
-    ``tots``/``lr`` CTEs of ``_DSIR_PREFIX_SQL``. BOTH multinomials
+    ``tots``/``lr`` CTEs of :func:`_dsir_prefix_sql`. BOTH multinomials
     come out of ONE map-side-combined agg on the bucket key, collected
     once (bounded: ≤ _DSIR_BUCKETS integer rows — the documented
     driver-side model deploy, like the ppl gate's LM map); the totals
@@ -1378,7 +1388,7 @@ def _dsir_model(docs: DataFrame) -> tuple[list[tuple[int, str]], str]:
 
 def _dsir_importance_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document DSIR log importance weight (milli-quantized bigint),
-    mirroring ``_DSIR_PREFIX_SQL`` expression-for-expression."""
+    mirroring :func:`_dsir_prefix_sql` expression-for-expression."""
     d = table(spark, sf_dir, "documents")
     entries, _ = _dsir_model(d)
     # O(_DSIR_BUCKETS) literal rows at ANY corpus size, evaluated into

@@ -554,7 +554,19 @@ def q_text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WATERFALL_ORACLE = f"""
+def _waterfall_oracle(src: str) -> str:
+    """DuckDB twin of :func:`_waterfall_funnel` over the relation ``src``
+    (columns ``lang``, ``text``, ``n_chars``): the batch waterfall reads
+    ``documents``, the ingest gate its arrival slice."""
+    from azurestorage_blueprints_spark.queries.corpus_ops import (
+        _MAX_CHARS_PER_TOK,
+        _MAX_TOK_LEN,
+        _MIN_TOKENS,
+    )
+    from azurestorage_blueprints_spark.queries.llm_text import _sql_lang_guess
+
+    qc_score = _pct_apply_score_sql("list_filter(string_split(text, ' '), t -> t <> '')")
+    return f"""
     WITH ints AS (
       SELECT lang, text, n_chars,
              CAST(len(list_filter(string_split(text, ' '), t -> t <> '')) AS BIGINT)
@@ -573,14 +585,14 @@ _WATERFALL_ORACLE = f"""
              CAST(len(list_filter(string_split(text, ' '),
                                   t -> list_contains([{_STOP_LIST}], t))) AS BIGINT)
                AS n_stop
-      FROM documents
+      FROM {src}
     ),
     flags AS (
-      SELECT (n_tokens >= {{C4_MIN}} AND max_tok_len <= {{C4_MAXTOK}}
-              AND n_chars <= {{C4_RATIO}} * n_tokens) AS c4,
+      SELECT (n_tokens >= {_MIN_TOKENS} AND max_tok_len <= {_MAX_TOK_LEN}
+              AND n_chars <= {_MAX_CHARS_PER_TOK} * n_tokens) AS c4,
              {_GOPHER_PASS} AS gopher,
-             ({{LANG_GUESS}}) = lang AS lang_ok,
-             ({{QC_SCORE}}) > 0 AS qc
+             ({_sql_lang_guess()}) = lang AS lang_ok,
+             ({qc_score}) > 0 AS qc
       FROM ints
     )
     SELECT CAST(count(*) AS BIGINT) AS n_all,
@@ -606,36 +618,20 @@ _WATERFALL_ORACLE = f"""
 """
 
 
-@register(
-    "q_curation_waterfall",
-    oracle=None,  # bound below after the sibling-module constants load
-    doc="Curation-pipeline waterfall report: the survival counts a "
-    "corpus team watches as filters stack — all documents, then C4 "
-    "rule survivors, then C4+Gopher survivors, then C4+Gopher+"
-    "language-routing-agreement survivors, then (r9) the trained "
-    "quality-classifier keeps — with per-stage retention rates. Every "
-    "per-document verdict is the EXACT rule expression of its "
-    "standalone query (q_text_c4_filters, q_text_gopher_rules, "
-    "q_text_langid shared SQL texts, q_quality_classifier_apply's "
-    "frozen-weight score), so the waterfall cannot drift from the "
-    "filters it summarizes. ONE codegen scan computes all four "
-    "verdicts row-locally and a single map-side-combined "
-    "aggregate emits the one-row report — at 100 TB this costs "
-    "exactly one pass over the corpus, which is why waterfalls are "
-    "reported this way rather than by materializing each stage.",
-)
-def q_curation_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _waterfall_funnel(docs: DataFrame) -> DataFrame:
+    """One-row survival funnel over ``docs`` (``lang``, ``text``,
+    ``n_chars``): the C4, Gopher, language-agreement and classifier
+    verdicts per row, then one aggregate of stage counts and retentions.
+    The batch waterfall and the ingest gate both call it."""
     from azurestorage_blueprints_spark.functions import text as X
-    from azurestorage_blueprints_spark.functions.text import word_set_occurrences
     from azurestorage_blueprints_spark.queries.corpus_ops import (
         _MAX_CHARS_PER_TOK,
         _MAX_TOK_LEN,
         _MIN_TOKENS,
     )
 
-    d = table(spark, sf_dir, "documents")
     tk = tokens(F.col("text"))
-    ints = d.select(
+    ints = docs.select(
         "lang",
         "text",
         "n_chars",
@@ -689,34 +685,38 @@ def q_curation_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bind_waterfall_oracle() -> None:
-    """Fill the waterfall oracle with the sibling modules' constants and
-    the shared langid SQL, then swap it into the registry entry (the
-    Query dataclass is frozen, so replace the entry)."""
-    from azurestorage_blueprints_spark.queries import REGISTRY, Query
-    from azurestorage_blueprints_spark.queries.corpus_ops import (
-        _MAX_CHARS_PER_TOK,
-        _MAX_TOK_LEN,
-        _MIN_TOKENS,
-    )
-    from azurestorage_blueprints_spark.queries.llm_text import _sql_lang_guess
+@register(
+    "q_curation_waterfall",
+    oracle=None,  # bound at the end of the module (_bind_waterfall_oracle)
+    doc="Curation-pipeline waterfall report: the survival counts a "
+    "corpus team watches as filters stack — all documents, then C4 "
+    "rule survivors, then C4+Gopher survivors, then C4+Gopher+"
+    "language-routing-agreement survivors, then (r9) the trained "
+    "quality-classifier keeps — with per-stage retention rates. Every "
+    "per-document verdict is the EXACT rule expression of its "
+    "standalone query (q_text_c4_filters, q_text_gopher_rules, "
+    "q_text_langid shared SQL texts, q_quality_classifier_apply's "
+    "frozen-weight score), so the waterfall cannot drift from the "
+    "filters it summarizes. ONE codegen scan computes all four "
+    "verdicts row-locally and a single map-side-combined "
+    "aggregate emits the one-row report — at 100 TB this costs "
+    "exactly one pass over the corpus, which is why waterfalls are "
+    "reported this way rather than by materializing each stage.",
+)
+def q_curation_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _waterfall_funnel(table(spark, sf_dir, "documents"))
 
-    sql = _WATERFALL_ORACLE.replace("{C4_MIN}", str(_MIN_TOKENS))
-    sql = sql.replace("{C4_MAXTOK}", str(_MAX_TOK_LEN))
-    sql = sql.replace("{C4_RATIO}", str(_MAX_CHARS_PER_TOK))
-    sql = sql.replace("{LANG_GUESS}", _sql_lang_guess())
-    sql = sql.replace(
-        "{QC_SCORE}",
-        _pct_apply_score_sql("list_filter(string_split(text, ' '), t -> t <> '')"),
-    )
+
+def _bind_waterfall_oracle() -> None:
+    """Swap the waterfall oracle into the registry entry once the
+    classifier score's ``_PCT_*`` constants exist (the Query dataclass
+    is frozen, so replace the entry)."""
+    from azurestorage_blueprints_spark.queries import REGISTRY, Query
+
     q = REGISTRY["q_curation_waterfall"]
     REGISTRY["q_curation_waterfall"] = Query(
-        name=q.name, fn=q.fn, oracle=sql, doc=q.doc
+        name=q.name, fn=q.fn, oracle=_waterfall_oracle("documents"), doc=q.doc
     )
-
-
-# bound at the END of the module: the classifier-stage score needs the
-# _PCT_* constants and _pct_apply_score_sql defined further down
 
 
 # ---------------------------------------------------------------------------

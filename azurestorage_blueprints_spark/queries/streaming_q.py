@@ -1,21 +1,43 @@
 """Structured Streaming queries as first-class registry entries.
 
-Each entry replays the ``events`` table through a REAL streaming
-pipeline — ``readStream`` file source → watermark + windowed/stateful
-transformation → memory sink — then returns the materialized result as
-a static DataFrame, so the driver's correctness gate sees streaming
-execution, not a batch stand-in.
+Every entry runs a REAL streaming pipeline — ``readStream`` file source
+→ stateful or windowed transformation → memory sink — and returns the
+materialized result as a static DataFrame, so the driver's correctness
+gate sees streaming execution, not a batch stand-in.
+
+Sources. :func:`_stage_source` writes each replay source once per
+process as 4 key-ordered parquet chunks, and :func:`_file_stream`
+replays them one file per micro-batch:
+
+- ``events``: every event, in 4 equal ``ts`` spans (the windowed and
+  watermarked entries);
+- ``documents``: the arrival slice ``doc_id % 10 == 0`` (the text
+  ingest gates);
+- ``vectors``: the arrival slice ``vec_id % 10 == 0`` of
+  ``embeddings`` (the ANN serving and model-drift gates).
+
+Swapping the file source for Kafka/EventHubs changes those two
+functions.
+
+Ingest gates. Each gate is the streaming form of a batch rung and
+keeps only its streaming code: stage the arrivals, score each row with
+the batch twin's scorer (``curation._waterfall_funnel``,
+``corpus_ops._dsir_token_hashes`` and ``_DSIR_BK_SQL``, the capped LM),
+join the static side (the metadata store or a frozen model, deployed
+as one constants table through ``finalize_bounded``) and hold ONE
+complete-mode aggregate. The gate's oracle is the batch twin's SQL
+over the arrival slice.
 
 Oracle strategy: a finite replay in ``complete`` output mode must
 equal the batch computation over the same rows, so the windowed
 aggregations reuse the SAME DuckDB oracles as their batch twins in
-queries/timeseries.py — a much stronger check than rows-only. The
-append-mode watermark pipeline (late-data finalization) is inherently
-about emission timing, not final values, so it stays rows-only.
+queries/timeseries.py. The append-mode watermark pipeline (late-data
+finalization) is about emission timing, not final values, so it stays
+rows-only.
 
 Scale posture: watermarks bound state; ``maxFilesPerTrigger`` paces
-replay; swapping the file source for Kafka/EventHubs touches only
-``_file_stream``.
+replay; persisted static sides are released by ``run_to_memory`` when
+the replay ends.
 """
 
 from __future__ import annotations
@@ -29,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from azurestorage_blueprints_spark.functions.vectors import cosine, l2sq
+from azurestorage_blueprints_spark.functions.vectors import cosine_normed, l2sq, norm
 from azurestorage_blueprints_spark.queries import finalize_bounded, register
 from azurestorage_blueprints_spark.queries.relational import _dec
 from azurestorage_blueprints_spark.streaming.windows import (
@@ -707,70 +729,12 @@ def q_stream_substring_incremental(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 def _stream_curation_oracle() -> str:
-    from azurestorage_blueprints_spark.queries.corpus_ops import (
-        _MAX_CHARS_PER_TOK,
-        _MAX_TOK_LEN,
-        _MIN_TOKENS,
-    )
-    from azurestorage_blueprints_spark.queries.curation import (
-        _GOPHER_PASS,
-        _STOP_LIST,
-        _pct_apply_score_sql,
-    )
-    from azurestorage_blueprints_spark.queries.llm_text import _sql_lang_guess
+    from azurestorage_blueprints_spark.queries.curation import _waterfall_oracle
 
-    qc_score = _pct_apply_score_sql("list_filter(string_split(text, ' '), t -> t <> '')")
-    return f"""
-    WITH ints AS (
-      SELECT text, lang,
-             CAST(length(text) AS BIGINT) AS n_chars,
-             CAST(len(list_filter(string_split(text, ' '), t -> t <> '')) AS BIGINT)
-               AS n_tokens,
-             CAST(coalesce(list_max(list_transform(
-               list_filter(string_split(text, ' '), t -> t <> ''),
-               x -> len(x))), 0) AS BIGINT) AS max_tok_len,
-             CAST(coalesce(list_aggregate(
-               list_transform(list_filter(string_split(text, ' '), t -> t <> ''),
-                              t -> length(t)), 'sum'), 0) AS BIGINT) AS sum_len,
-             CAST(len(list_filter(string_split(text, ' '),
-                                  t -> t <> '' AND regexp_matches(t, '[A-Za-z]')))
-               AS BIGINT) AS n_alpha,
-             CAST((length(text) - length(replace(text, '#', '')))
-                  + (len(string_split(text, '...')) - 1) AS BIGINT) AS n_symbols,
-             CAST(len(list_filter(string_split(text, ' '),
-                                  t -> list_contains([{_STOP_LIST}], t))) AS BIGINT)
-               AS n_stop
-      FROM documents WHERE doc_id % 10 = 0
-    ),
-    flags AS (
-      SELECT (n_tokens >= {_MIN_TOKENS} AND max_tok_len <= {_MAX_TOK_LEN}
-              AND n_chars <= {_MAX_CHARS_PER_TOK} * n_tokens) AS c4,
-             {_GOPHER_PASS} AS gopher,
-             ({_sql_lang_guess()}) = lang AS lang_ok,
-             ({qc_score}) > 0 AS qc
-      FROM ints
+    return _waterfall_oracle(
+        "(SELECT lang, text, CAST(length(text) AS BIGINT) AS n_chars"
+        " FROM documents WHERE doc_id % 10 = 0) AS arr"
     )
-    SELECT CAST(count(*) AS BIGINT) AS n_all,
-           CAST(sum(CASE WHEN c4 THEN 1 ELSE 0 END) AS BIGINT) AS n_after_c4,
-           CAST(sum(CASE WHEN c4 AND gopher THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_after_gopher,
-           CAST(sum(CASE WHEN c4 AND gopher AND lang_ok THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_after_langid,
-           CAST(sum(CASE WHEN c4 AND gopher AND lang_ok AND qc THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_after_classifier,
-           CAST(sum(CASE WHEN c4 THEN 1 ELSE 0 END) AS DOUBLE)
-             / CAST(count(*) AS BIGINT) AS c4_retention,
-           CAST(sum(CASE WHEN c4 AND gopher THEN 1 ELSE 0 END) AS DOUBLE)
-             / CAST(sum(CASE WHEN c4 THEN 1 ELSE 0 END) AS DOUBLE) AS gopher_retention,
-           CAST(sum(CASE WHEN c4 AND gopher AND lang_ok THEN 1 ELSE 0 END) AS DOUBLE)
-             / CAST(sum(CASE WHEN c4 AND gopher THEN 1 ELSE 0 END) AS DOUBLE)
-             AS langid_retention,
-           CAST(sum(CASE WHEN c4 AND gopher AND lang_ok AND qc THEN 1 ELSE 0 END)
-                AS DOUBLE)
-             / CAST(sum(CASE WHEN c4 AND gopher AND lang_ok THEN 1 ELSE 0 END)
-                    AS DOUBLE) AS classifier_retention
-    FROM flags
-    """
 
 
 @register(
@@ -793,99 +757,68 @@ def _stream_curation_oracle() -> str:
     "broadcast hint — the metadata side is corpus-scale). The funnel "
     "now carries all five batch stages in the batch order "
     "(c4 → gopher → langid → classifier). All counts are exact "
-    "integers and every rule expression is shared verbatim with the "
-    "batch rungs (q_text_c4_filters / q_text_gopher_rules / "
-    "q_text_langid / q_quality_classifier_apply), so DuckDB reproduces "
+    "integers; the flags, the funnel and the oracle are "
+    "q_curation_waterfall's own (curation._waterfall_funnel and "
+    "_waterfall_oracle over the arrival relation), so DuckDB reproduces "
     "the funnel bit-for-bit from the arrival split. Shape (100 TB "
     "ingest): per-arrival work is one codegen scan plus one keyed "
     "metadata lookup; state is ONE row of counters; no shuffle wider "
     "than the join key.",
 )
 def q_stream_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from azurestorage_blueprints_spark.functions import text as X
-    from azurestorage_blueprints_spark.functions.text import (
-        STOPWORDS,
-        tokens,
-        word_set_occurrences,
-    )
-    from azurestorage_blueprints_spark.queries.corpus_ops import (
-        _MAX_CHARS_PER_TOK,
-        _MAX_TOK_LEN,
-        _MIN_TOKENS,
-    )
-    from azurestorage_blueprints_spark.queries.curation import (
-        _GOPHER_PASS,
-        _pct_apply_score_col,
-    )
+    from azurestorage_blueprints_spark.queries.curation import _waterfall_funnel
 
     arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))
-    tk = tokens(F.col("text"))
-    ints = arrivals.select(
-        "doc_id",
-        "text",
-        F.length("text").cast("bigint").alias("n_chars"),
-        F.size(tk).cast("bigint").alias("n_tokens"),
-        F.coalesce(F.array_max(F.transform(tk, F.length)), F.lit(0))
-        .cast("bigint")
-        .alias("max_tok_len"),
-        F.aggregate(tk, F.lit(0).cast("bigint"), lambda a, t: a + F.length(t)).alias(
-            "sum_len"
-        ),
-        F.size(F.filter(tk, lambda t: t.rlike("[A-Za-z]"))).cast("bigint").alias("n_alpha"),
-        (
-            (F.length("text") - F.length(F.replace(F.col("text"), F.lit("#"), F.lit(""))))
-            + (F.size(F.split(F.col("text"), r"\.\.\.", -1)) - 1)
-        )
-        .cast("bigint")
-        .alias("n_symbols"),
-        word_set_occurrences(F.col("text"), STOPWORDS).cast("bigint").alias("n_stop"),
-    )
     # stream-static metadata lookup (r10): the stored language of each
     # arrival doc_id comes from the documents table acting as the
     # metadata store — joined per micro-batch, NO broadcast hint (the
     # static side is corpus-scale)
     lang_store = table(spark, sf_dir, "documents").select("doc_id", "lang")
-    withlang = ints.join(lang_store, "doc_id")
-    c4 = F.expr(
-        f"n_tokens >= {_MIN_TOKENS} AND max_tok_len <= {_MAX_TOK_LEN}"
-        f" AND n_chars <= {_MAX_CHARS_PER_TOK} * n_tokens"
+    docs = arrivals.join(lang_store, "doc_id").select(
+        "lang", "text", F.length("text").cast("bigint").alias("n_chars")
     )
-    flags = withlang.select(
-        c4.alias("c4"),
-        F.expr(_GOPHER_PASS).alias("gopher"),
-        (X.lang_guess(F.col("text")) == F.col("lang")).alias("lang_ok"),
-        (_pct_apply_score_col() > 0).alias("qc"),
-    )
-    n = F.count(F.lit(1)).cast("bigint")
-    s1 = F.sum(F.when(F.col("c4"), 1).otherwise(0)).cast("bigint")
-    s2 = F.sum(F.when(F.col("c4") & F.col("gopher"), 1).otherwise(0)).cast("bigint")
-    s3 = F.sum(
-        F.when(F.col("c4") & F.col("gopher") & F.col("lang_ok"), 1).otherwise(0)
-    ).cast("bigint")
-    s4 = F.sum(
-        F.when(F.col("c4") & F.col("gopher") & F.col("lang_ok") & F.col("qc"), 1)
-        .otherwise(0)
-    ).cast("bigint")
-    agg = flags.agg(
-        n.alias("n_all"),
-        s1.alias("n_after_c4"),
-        s2.alias("n_after_gopher"),
-        s3.alias("n_after_langid"),
-        s4.alias("n_after_classifier"),
-        (s1.cast("double") / n).alias("c4_retention"),
-        (s2.cast("double") / s1.cast("double")).alias("gopher_retention"),
-        (s3.cast("double") / s2.cast("double")).alias("langid_retention"),
-        (s4.cast("double") / s3.cast("double")).alias("classifier_retention"),
-    )
-    return run_to_memory(agg, output_mode="complete")
+    return run_to_memory(_waterfall_funnel(docs), output_mode="complete")
+
+
+def _deploy_pq_consts(codebook: DataFrame, centroids: DataFrame | None = None) -> DataFrame:
+    """Deploy the frozen PQ models as ONE constants row, built in the
+    engine from the persisted model tables and materialized by
+    finalize_bounded: ``cbm[s][j]`` is the codeword of subspace s, code
+    j, and with ``centroids``, ``centm`` holds the exact IVF centroids
+    in label order with their norms (``l``, ``c``, ``n``). Both tables
+    feed one aggregate over a single partition (collect_list skips the
+    other table's NULL cells), so the deploy is one job and no shuffle.
+
+    The constants ride a one-row broadcast table, not plan literals: a
+    2,048-literal expression tree costs ~25 s of analysis/codegen PER
+    MICRO-BATCH (measured — 4 batches pushed the serving rung past
+    110 s), while a 1-row cross join carries the same values as DATA
+    and the scoring expressions stay tiny HOF folds over the model
+    columns."""
+    from azurestorage_blueprints_spark.queries.similarity import _PQ_M
+
+    rows = codebook.selectExpr("struct(s, j, cw) AS cell", "NULL AS cent")
+    aggs = ["array_sort(collect_list(cell)) AS cells"]
+    cols = [
+        f"transform(sequence(0, {_PQ_M - 1}), s -> "
+        "transform(filter(cells, t -> t.s = s), t -> t.cw)) AS cbm"
+    ]
+    if centroids is not None:
+        rows = rows.unionByName(
+            centroids.selectExpr(
+                "NULL AS cell",
+                f"struct(label AS l, centroid AS c, {norm('centroid')} AS n) AS cent",
+            )
+        )
+        aggs.append("array_sort(collect_list(cent)) AS centm")
+        cols.append("centm")
+    return finalize_bounded(rows.coalesce(1).selectExpr(*aggs).selectExpr(*cols))
 
 
 def _stream_ann_oracle() -> str:
     from azurestorage_blueprints_spark.queries.similarity import (
         _PQ_ADC_QZ,
-        _PQ_D,
         _PQ_L2_SQL,
-        _PQ_M,
         _ivf_cent_cte_sql,
         _pq_codebook_cte_sql,
         _pq_scoring_cte_sql,
@@ -958,8 +891,6 @@ def q_stream_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     from azurestorage_blueprints_spark.queries.similarity import (
         _PQ_ADC_QZ,
         _PQ_D,
-        _PQ_K,
-        _PQ_M,
         _ivf_exact_centroids,
         _persisted_model,
         _pq_assign,
@@ -974,11 +905,7 @@ def q_stream_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = _persisted_model(
         spark, sf_dir, "ivf_centroids_exact", lambda: _ivf_exact_centroids(e)
     )
-    # serving constants: the frozen models are 128 + ~10 rows — collect
-    # them ONCE and ship as literals (the bounded-collect convention;
-    # this is how a scorer deploys a model, not a distributed join)
-    cb = {(r.s, r.j): [float(x) for x in r.cw] for r in codebook.collect()}
-    cents = sorted((r.label, [float(x) for x in r.centroid]) for r in centroids.collect())
+    consts = _deploy_pq_consts(codebook, centroids)
 
     # the ANN index (static side): packed per-vector codes + list key
     codes = _pq_assign(_pq_corpus_sub(e), codebook).select(
@@ -996,34 +923,21 @@ def q_stream_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "vectors"))
-    arr = arrivals.select(
-        F.col("vec_id").alias("q_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    arr = arrivals.selectExpr(
+        "vec_id AS q_id",
+        "transform(embedding, x -> CAST(x AS DOUBLE)) AS v",
+        f"{norm('embedding')} AS nv",
     )
-
-    # The serving constants ride a ONE-ROW broadcast table, not plan
-    # literals: a 2,048-literal expression tree costs ~25 s of
-    # analysis/codegen PER MICRO-BATCH (measured — 4 batches pushed the
-    # rung past 110 s), while a 1-row cross join carries the same
-    # values as DATA and the scoring expressions stay tiny HOF folds
-    # over the model columns.
-    consts = spark.createDataFrame(
-        [
-            (
-                [[cb[(s, j)] for j in range(_PQ_K)] for s in range(_PQ_M)],
-                [{"l": int(lab), "c": cvec} for lab, cvec in cents],
-            )
-        ],
-        "cbm array<array<array<double>>>, centm array<struct<l:int,c:array<double>>>",
-    )
-    # row-local coarse routing: fold over the ascending-label centroid
-    # array with strict > = the (csim DESC, label) tie-break of the
-    # batch probe
+    # row-local coarse routing: one cosine per centroid over the hoisted
+    # norms, then a fold over the ascending-label array with strict > =
+    # the (csim DESC, label) tie-break of the batch probe. The coalesce
+    # makes the label non-null, so the optimizer infers no
+    # isnotnull(label) join filter that would run the fold again.
     route = F.expr(
-        "aggregate(centm, "
+        "coalesce(aggregate(transform(centm, ct -> named_struct('l', ct.l, "
+        f"'s', {cosine_normed('v', 'ct.c', 'nv', 'ct.n')})), "
         "named_struct('l', cast(-1 as int), 's', cast('-Infinity' as double)), "
-        f"(acc, ct) -> if({cosine('v', 'ct.c')} > acc.s, "
-        f"named_struct('l', ct.l, 's', {cosine('v', 'ct.c')}), acc)).l"
+        "(acc, x) -> if(x.s > acc.s, x, acc)).l, -1)"
     )
     # row-local ADC table: 8x16 micro-quantized cells against the
     # codebook column (the batch rungs' L2^2 fold)
@@ -1052,9 +966,7 @@ def q_stream_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"cast(b.l2q as double) / {_PQ_ADC_QZ}").alias("approx_l2sq"),
         "n_candidates",
     )
-    result = run_to_memory(out, output_mode="complete")
-    wide.unpersist()
-    return result
+    return run_to_memory(out, "complete", wide)
 
 
 def _stream_drift_oracle() -> str:
@@ -1113,20 +1025,13 @@ def q_stream_model_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from azurestorage_blueprints_spark.queries.similarity import (
         _PQ_D,
         _PQ_DRIFT_QZ,
-        _PQ_K,
-        _PQ_M,
         _persisted_model,
         _pq_codebook_train,
     )
 
     e = table(spark, sf_dir, "embeddings")
-    codebook = _persisted_model(
-        spark, sf_dir, "pq_codebook", lambda: _pq_codebook_train(e)
-    )
-    cb = {(r.s, r.j): [float(x) for x in r.cw] for r in codebook.collect()}
-    consts = spark.createDataFrame(
-        [([[cb[(s, j)] for j in range(_PQ_K)] for s in range(_PQ_M)],)],
-        "cbm array<array<array<double>>>",
+    consts = _deploy_pq_consts(
+        _persisted_model(spark, sf_dir, "pq_codebook", lambda: _pq_codebook_train(e))
     )
     arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "vectors"))
     arr = arrivals.select(
@@ -1568,58 +1473,18 @@ def q_stream_conformal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stream_dsir_oracle() -> str:
     from azurestorage_blueprints_spark.queries.corpus_ops import (
-        _DSIR_BIGRAM_MULT,
         _DSIR_BUCKETS,
         _DSIR_QZ,
-        _DSIR_TARGET,
+        _dsir_prefix_sql,
     )
 
-    return f"""
-    WITH toked AS (
-      SELECT doc_id, lang,
-             list_filter(string_split(text, ' '), t -> t <> '') AS tk
-      FROM documents),
-    th AS (
-      SELECT doc_id, lang,
-             list_transform(tk, t -> list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(string_split(t, ''),
-                                c -> CAST(ascii(c) AS BIGINT))),
-               (h, c) -> (h * 31 + c) % 2147483647)) AS th
-      FROM toked WHERE len(tk) >= 2),
-    sfeats AS (
-      SELECT doc_id, lang,
-             unnest(list_transform(range(1, len(th)),
-               i -> ((th[i] * {_DSIR_BIGRAM_MULT} + th[i + 1])
-                     % 2147483647) % {_DSIR_BUCKETS})) AS bucket
-      FROM th WHERE doc_id % 10 <> 0),
-    counts AS (
-      SELECT bucket,
-             CAST(count(*) AS BIGINT) AS c_r,
-             CAST(sum(CASE WHEN lang = '{_DSIR_TARGET}' THEN 1 ELSE 0 END)
-                  AS BIGINT) AS c_t
-      FROM sfeats GROUP BY bucket),
-    tots AS (
-      SELECT CAST(sum(c_r) AS BIGINT) AS n_r,
-             CAST(sum(c_t) AS BIGINT) AS n_t
-      FROM counts),
-    lr AS (
-      SELECT bucket,
-             CAST(round((ln((c_t + 1.0) / (n_t + {_DSIR_BUCKETS}.0))
-                       - ln((c_r + 1.0) / (n_r + {_DSIR_BUCKETS}.0)))
-                  * {_DSIR_QZ}.0) AS BIGINT) AS lr_milli
-      FROM counts CROSS JOIN tots),
+    return f"""{_dsir_prefix_sql(" WHERE doc_id % 10 <> 0")},
     unseen AS (
       SELECT CAST(round((ln(1.0 / (n_t + {_DSIR_BUCKETS}.0))
                        - ln(1.0 / (n_r + {_DSIR_BUCKETS}.0)))
                   * {_DSIR_QZ}.0) AS BIGINT) AS u
       FROM tots),
-    afeats AS (
-      SELECT doc_id, lang,
-             unnest(list_transform(range(1, len(th)),
-               i -> ((th[i] * {_DSIR_BIGRAM_MULT} + th[i + 1])
-                     % 2147483647) % {_DSIR_BUCKETS})) AS bucket
-      FROM th WHERE doc_id % 10 = 0),
+    afeats AS (SELECT * FROM feats WHERE doc_id % 10 = 0),
     adoc AS (
       SELECT f.doc_id, f.lang,
              CAST(count(*) AS BIGINT) AS n_feats,
@@ -1671,10 +1536,10 @@ def _stream_dsir_oracle() -> str:
 )
 def q_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from azurestorage_blueprints_spark.queries.corpus_ops import (
-        _DSIR_BIGRAM_MULT,
-        _DSIR_BUCKETS,
+        _DSIR_BK_SQL,
         _DSIR_QZ,
         _dsir_model,
+        _dsir_token_hashes,
     )
 
     d = table(spark, sf_dir, "documents")
@@ -1687,27 +1552,7 @@ def q_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))
     # stored language from the metadata store (stream-static, no hint)
     arr = arrivals.join(d.select("doc_id", "lang"), "doc_id")
-    tk = arr.select(
-        "doc_id", "lang", F.expr("filter(split(text, ' '), t -> t != '')").alias("tk")
-    ).filter(F.size("tk") >= 2)
-    th = tk.select(
-        "doc_id",
-        "lang",
-        F.expr(
-            "transform(tk, t -> aggregate("
-            "transform(split(t, ''), c -> CAST(ascii(c) AS BIGINT)),"
-            " CAST(0 AS BIGINT), (h, c) -> (h * 31 + c) % 2147483647))"
-        ).alias("th"),
-    )
-    bk = th.select(
-        "doc_id",
-        "lang",
-        F.expr(
-            f"transform(sequence(1, size(th) - 1),"
-            f" i -> ((element_at(th, i) * {_DSIR_BIGRAM_MULT}"
-            f" + element_at(th, i + 1)) % 2147483647) % {_DSIR_BUCKETS})"
-        ).alias("bk"),
-    )
+    bk = _dsir_token_hashes(arr).select("doc_id", "lang", F.expr(_DSIR_BK_SQL).alias("bk"))
     imp = F.aggregate(
         F.col("bk"),
         F.lit(0).cast("bigint"),
@@ -2123,6 +1968,4 @@ def q_stream_decontamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame
         .otherwise(F.lit("clean"))
         .alias("verdict"),
     )
-    result = run_to_memory(verdicted, output_mode="complete")
-    eval_sh.unpersist()
-    return result
+    return run_to_memory(verdicted, "complete", eval_sh)

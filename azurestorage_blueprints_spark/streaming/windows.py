@@ -68,10 +68,17 @@ STREAM_CKPT_BASE = os.environ.get(
 )
 
 
-def run_to_memory(stream_df: DataFrame, output_mode: str = "append") -> DataFrame:
+def run_to_memory(
+    stream_df: DataFrame, output_mode: str = "append", *cached: DataFrame
+) -> DataFrame:
     """Drive a streaming DataFrame to completion against its current
     source contents; results land in a uniquely named in-memory table.
     Returns the materialized batch DataFrame.
+
+    ``cached`` are the persisted static sides of the stream; they are
+    released once the replay ends, a failed replay included (the
+    :func:`~azurestorage_blueprints_spark.queries.finalize_bounded`
+    convention).
 
     The session's shuffle-partition count is lowered to
     :data:`STREAM_SHUFFLE_PARTITIONS` for the duration of the stream
@@ -112,6 +119,8 @@ def run_to_memory(stream_df: DataFrame, output_mode: str = "append") -> DataFram
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         if ckpt:
             shutil.rmtree(ckpt, ignore_errors=True)
+        for df in cached:
+            df.unpersist()
     return spark.sql(f"SELECT * FROM {name}")
 
 

@@ -141,6 +141,28 @@ def test_finalize_bounded_releases_cache_on_failure(spark):
     assert _cache_empty(spark), "failed finalize_bounded leaked its cache"
 
 
+def test_run_to_memory_releases_cache_on_failure(spark, sf_dir, monkeypatch):
+    """A failing replay must still release the stream's persisted static
+    side: the decontamination and ANN serving gates hand it to
+    run_to_memory and hold no try/finally of their own."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from azurestorage_blueprints_spark.queries import streaming_q
+
+    replay = streaming_q._file_stream
+
+    def failing_replay(spark, staged):
+        text = F.raise_error(F.lit("boom")).cast("string")
+        return replay(spark, staged).withColumn("text", text)
+
+    monkeypatch.setattr(streaming_q, "_file_stream", failing_replay)
+    spark.catalog.clearCache()
+    with pytest.raises(Exception, match="boom"):
+        REGISTRY["q_stream_decontamination_gate"].fn(spark, sf_dir)
+    assert _cache_empty(spark), "failed replay leaked the gate's cache"
+
+
 def test_semdedup_family_routes_through_finalize_bounded():
     """The corpus-proportional report class (SemDeDup family) must go
     through finalize_bounded — a registered query in that class that

@@ -44,6 +44,13 @@ _SIMILARITY_BUILD_BUDGETS = {
 }
 
 
+#: py4j commands ``q_stream_ann_serving`` may send to build and replay
+#: at sf0.001 once its arrivals are staged, about 110% of its count with
+#: the serving constants built in the engine (611); the Python deploy
+#: (collect, rebuild, createDataFrame) sent 656
+_ANN_GATE_BUDGET = 672
+
+
 @pytest.fixture
 def py4j_calls(spark, monkeypatch):
     """A list of every py4j command the driver sends while the test
@@ -94,3 +101,13 @@ def test_similarity_rung_builds_within_py4j_budget(spark, sf_dir, py4j_calls, na
     REGISTRY[name].fn(spark, sf_dir)
     calls = _round_trips(py4j_calls)
     assert len(calls) < _SIMILARITY_BUILD_BUDGETS[name], len(calls)
+
+
+def test_stream_ann_gate_stays_within_py4j_budget(spark, sf_dir, py4j_calls):
+    fn = REGISTRY["q_stream_ann_serving"].fn
+    fn(spark, sf_dir)  # stages the arrivals and any missing model table
+    spark.catalog.clearCache()
+    py4j_calls.clear()
+    fn(spark, sf_dir)
+    calls = _round_trips(py4j_calls)
+    assert len(calls) < _ANN_GATE_BUDGET, len(calls)
