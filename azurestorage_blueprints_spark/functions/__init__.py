@@ -1,7 +1,7 @@
-"""Column-expression function library (JVM-side, codegen-friendly).
+"""Expression library (JVM-side, codegen-friendly).
 
 Submodules:
 - ``paths``   — the reference's name/path projections (P1-P6) as Columns
-- ``text``    — tokenization, language-ID scoring, quality metrics
+- ``text``    — tokenizer, char fold, language ID, quality metrics as Spark SQL text
 - ``vectors`` — dot / norm / cosine / int8 / L2² as Spark SQL text
 """

@@ -5,8 +5,8 @@ sampling, heavy-hitter vocabulary, inverted-index construction, URL
 canonicalization, and positional token explosion.
 
 All token work uses the whitespace tokenizer shared with llm_text
-(``filter(split(text,' '), t -> t <> '')``) so rule thresholds compose
-across modules. Determinism: counts are bigint, ratios are one
+(``functions.text.tokens``) so rule thresholds compose across
+modules. Determinism: counts are bigint, ratios are one
 int→double cast + one divide per output row (IEEE per-row, safe), and
 sampling keys are pure integer multiplicative hashes — no engine RNG.
 
@@ -27,12 +27,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from azurestorage_blueprints_spark.functions.text import (
+    char_fold,
+    doc_ints,
+    token_count,
+    tokens,
+    word_shingles,
+)
 from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
-
-#: whitespace tokenizer (Spark column expr) — twin of the DuckDB
-#: ``list_filter(string_split(text, ' '), t -> t <> '')``
-_TOKS = "filter(split(text, ' '), t -> t <> '')"
 
 
 @register(
@@ -71,7 +74,7 @@ _TOKS = "filter(split(text, ' '), t -> t <> '')"
 def q_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     tri = (
-        d.select(F.expr(_TOKS).alias("t"))
+        d.select(F.expr(tokens()).alias("t"))
         .filter(F.expr("size(t) >= 3"))
         .select(
             F.explode(
@@ -139,11 +142,11 @@ _MAX_CHARS_PER_TOK = 15
 )
 def q_text_c4_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
+    ints = doc_ints()
     scored = d.select(
         "source",
         "n_chars",
-        F.expr(f"size({_TOKS})").alias("n_tokens"),
-        F.expr(f"array_max(transform({_TOKS}, x -> length(x)))").alias("max_tok_len"),
+        *[F.expr(ints[k]).alias(k) for k in ("n_tokens", "max_tok_len")],
     )
     flagged = scored.select(
         "source",
@@ -202,7 +205,7 @@ _TOKEN_BUDGET = 2000
 )
 def q_mixture_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    toks = d.select("source", "doc_id", F.expr(f"size({_TOKS})").alias("n_tokens"))
+    toks = d.select("source", "doc_id", F.expr(token_count()).alias("n_tokens"))
     w = Window.partitionBy("source").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -300,7 +303,7 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     cnt = (
-        d.select(F.explode(F.expr(_TOKS)).alias("token"))
+        d.select(F.explode(F.expr(tokens())).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -354,7 +357,7 @@ _POSTINGS_CAP = 10
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     pairs = (
-        d.select("doc_id", F.explode(F.expr(_TOKS)).alias("token")).distinct()
+        d.select("doc_id", F.explode(F.expr(tokens())).alias("token")).distinct()
     )
     return (
         pairs.groupBy("token")
@@ -445,7 +448,7 @@ def q_posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     return (
         d.filter(F.col("doc_id") < 50)
-        .select("doc_id", F.posexplode(F.expr(_TOKS)).alias("pos", "token"))
+        .select("doc_id", F.posexplode(F.expr(tokens())).alias("pos", "token"))
         .select("doc_id", F.col("pos").cast("bigint").alias("pos"), "token")
     )
 
@@ -485,7 +488,7 @@ _BPE_TOP_PAIRS = 30
 def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     words = (
-        d.select(F.explode(F.expr(_TOKS)).alias("tok"))
+        d.select(F.explode(F.expr(tokens())).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).cast("bigint").alias("wc"))
         .filter(F.length("tok") >= 2)
@@ -543,13 +546,11 @@ def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the one wide shuffle carries 8-byte keys.",
 )
 def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from azurestorage_blueprints_spark.functions.text import tokens, word_shingles
-
     d = table(spark, sf_dir, "documents")
-    toked = d.select("source", tokens(F.col("text")).alias("tk"))
+    toked = d.select("source", F.expr(tokens()).alias("tk"))
     posting = toked.select(
         "source",
-        F.explode(word_shingles(F.col("tk"), k=5)).alias("shingle"),
+        F.explode(F.expr(word_shingles("tk", 5))).alias("shingle"),
     )
     # one wide shuffle: the per-shingle source set (dedup happens inside
     # the aggregate, and partial sets are capped at |sources|);
@@ -687,16 +688,14 @@ register_sql(
     "string (string form kept here for the cross-engine oracle).",
 )
 def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from azurestorage_blueprints_spark.functions.text import tokens, word_shingles
-
     d = table(spark, sf_dir, "documents")
-    toked = d.select("doc_id", tokens(F.col("text")).alias("tk"))
+    toked = d.select("doc_id", F.expr(tokens()).alias("tk"))
     # zero-token documents are excluded on BOTH sides: Spark's
     # whole-span fallback shingles them to [""] while DuckDB's
     # string_agg yields [NULL] (dropped by list_distinct) — an
     # empty doc would otherwise be a row-count divergence
     docs = toked.filter(F.size("tk") > 0).select(
-        "doc_id", F.array_distinct(word_shingles(F.col("tk"), k=3)).alias("shingles")
+        "doc_id", F.array_distinct(F.expr(word_shingles("tk", 3))).alias("shingles")
     )
     posting = docs.select("doc_id", F.explode("shingles").alias("sh"))
     first_seen = posting.groupBy("sh").agg(F.min("doc_id").cast("bigint").alias("first_doc"))
@@ -766,10 +765,8 @@ _HEAPS_BUCKETS = 50
 def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from azurestorage_blueprints_spark.functions.text import tokens as _tokens
-
     d = table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("t"))
+    tok = d.select("doc_id", F.explode(F.expr(tokens())).alias("t"))
     per_tok = tok.groupBy("t").agg(
         F.min("doc_id").cast("bigint").alias("first_doc"),
         F.count(F.lit(1)).cast("bigint").alias("n_occ"),
@@ -893,7 +890,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     wf = (
-        d.select(F.explode(F.expr("filter(split(lower(text), ' '), t -> t <> '')")).alias("w"))
+        d.select(F.explode(F.expr(tokens("lower(text)"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("wc"))
     )
@@ -1049,7 +1046,7 @@ _PMI_TOP_K = 20
 )
 def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    toked = d.select(F.expr(_TOKS).alias("t"))
+    toked = d.select(F.expr(tokens()).alias("t"))
     # r12 (guide §2.4/§5): uni (vocab-scale) feeds both PMI joins and
     # the token total; bi_all (bigram-type-scale) feeds the floor
     # filter and the bigram total — persisted so each corpus-scale
@@ -1334,20 +1331,12 @@ def _dsir_token_hashes(docs: DataFrame) -> DataFrame:
     polynomial char fold of every document with at least 2 tokens (the
     ``toked``/``th`` CTEs of :func:`_dsir_prefix_sql`); shorter
     documents have no bigram and are dropped on both engines."""
-    toked = docs.select("doc_id", "lang", F.expr(_TOKS).alias("tk")).filter(
+    toked = docs.select("doc_id", "lang", F.expr(tokens()).alias("tk")).filter(
         F.size("tk") >= 2
     )
     # tk is a MATERIALIZED column (the word_shingles rule: inline
     # children of higher-order functions re-evaluate per element)
-    return toked.select(
-        "doc_id",
-        "lang",
-        F.expr(
-            "transform(tk, t -> aggregate("
-            "transform(split(t, ''), c -> CAST(ascii(c) AS BIGINT)),"
-            " CAST(0 AS BIGINT), (h, c) -> (h * 31 + c) % 2147483647))"
-        ).alias("th"),
-    )
+    return toked.selectExpr("doc_id", "lang", f"transform(tk, t -> {char_fold('t')}) AS th")
 
 
 def _dsir_feats(docs: DataFrame) -> DataFrame:
@@ -1636,7 +1625,7 @@ def q_mixture_doremi_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     d = table(spark, sf_dir, "documents")
-    tok = d.select("source", F.explode(F.expr(_TOKS)).alias("token"))
+    tok = d.select("source", F.explode(F.expr(tokens())).alias("token"))
     # r12 (guide §2.4/§5): the (source, token) count table (vocab-scale,
     # sublinear) fans out into the global counts, the per-source totals
     # and the CE scoring join — persisted so the corpus-scale
@@ -1820,7 +1809,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     vocab = (
-        d.select(F.explode(F.expr(_TOKS)).alias("token"))
+        d.select(F.explode(F.expr(tokens())).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
@@ -1938,7 +1927,7 @@ _UNIMAX_BUDGET_DEN = 10
 def q_mixture_unimax(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     caps = d.select(
-        "source", F.size(F.expr(_TOKS)).cast("bigint").alias("d_tok")
+        "source", F.expr(token_count()).cast("bigint").alias("d_tok")
     ).groupBy("source").agg(F.sum("d_tok").cast("bigint").alias("n_tok"))
     tot = caps.agg(
         F.sum("n_tok").cast("bigint").alias("n_total"),

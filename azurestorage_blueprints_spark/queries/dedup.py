@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from azurestorage_blueprints_spark.functions.text import tokens, word_shingles
+from azurestorage_blueprints_spark.functions.text import char_fold, poly_fold, tokens, word_shingles
 from azurestorage_blueprints_spark.functions.vectors import cosine_normed, int8, norm
 from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
@@ -131,7 +131,7 @@ def q_dedup_exact_content(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    docs = d.select("doc_id", F.array_distinct(tokens(F.col("text"))).alias("toks"))
+    docs = d.select("doc_id", F.array_distinct(F.expr(tokens())).alias("toks"))
     sizes = docs.select("doc_id", F.size("toks").alias("n"))
     posting = docs.select("doc_id", F.explode("toks").alias("tok"))
     a = posting.select(F.col("doc_id").alias("a_id"), "tok")
@@ -179,7 +179,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MIN aggregation is duplicate-insensitive, and the window's
     # doc_id partitioning is exactly the signature agg's key, so the
     # agg below adds no exchange.
-    toked = d.select("doc_id", tokens(F.col("text")).alias("tk"))
+    toked = d.select("doc_id", F.expr(tokens()).alias("tk"))
     p = toked.select("doc_id", F.posexplode("tk").alias("pos", "t0"))
     w = W.partitionBy("doc_id").orderBy("pos")
     # keep (t2 IS NOT NULL) OR (pos = 0): the second disjunct is the
@@ -325,7 +325,7 @@ def _simhash_votes(th: DataFrame, bits: list[str]) -> DataFrame:
 
 def _distinct_tokens(d: DataFrame) -> DataFrame:
     """(doc_id, tok): each document's distinct tokens, one row each."""
-    return d.select("doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("tok"))
+    return d.select("doc_id", F.explode(F.array_distinct(F.expr(tokens()))).alias("tok"))
 
 
 def simhash_signatures(d: DataFrame) -> DataFrame:
@@ -651,9 +651,9 @@ _CONTAIN_DF_CAP = 64
 )
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    toked = d.select("doc_id", tokens(F.col("text")).alias("tk"))
+    toked = d.select("doc_id", F.expr(tokens()).alias("tk"))
     docs = toked.select(
-        "doc_id", F.array_distinct(word_shingles(F.col("tk"), k=3)).alias("toks")
+        "doc_id", F.array_distinct(F.expr(word_shingles("tk", 3))).alias("toks")
     )
     posting = docs.select("doc_id", F.explode("toks").alias("tok"))
     # ONE wide shuffle: group the posting list per shingle, drop
@@ -794,7 +794,7 @@ _DUP_FRAC = "(CAST(n_dup AS DOUBLE) / CAST(n_segments AS DOUBLE))"
 )
 def q_dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    toked = d.select("doc_id", tokens(F.col("text")).alias("tk")).filter(
+    toked = d.select("doc_id", F.expr(tokens()).alias("tk")).filter(
         F.size("tk") >= _SEG_W
     )
     # sequence(0, n-1) is inclusive and descends when n-1 < 0 — the
@@ -997,7 +997,7 @@ _TFIDF_COS_ORACLE = f"""
 )
 def q_dedup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < _TFIDF_DOC_BOUND)
-    tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
+    tok = d.select("doc_id", F.explode(F.expr(tokens())).alias("token"))
     tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     n = d.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
@@ -1100,10 +1100,10 @@ def q_dedup_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     survivors = d.groupBy("text").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
     toked = d.join(survivors, "doc_id").select(
-        "doc_id", tokens(F.col("text")).alias("tk")
+        "doc_id", F.expr(tokens()).alias("tk")
     )
     docs = toked.filter(F.size("tk") > 0).select(
-        "doc_id", F.array_distinct(word_shingles(F.col("tk"), k=3)).alias("shingles")
+        "doc_id", F.array_distinct(F.expr(word_shingles("tk", 3))).alias("shingles")
     )
     posting = docs.select("doc_id", F.explode("shingles").alias("sh"))
     first_seen = posting.groupBy("sh").agg(F.min("doc_id").alias("first_doc"))
@@ -1207,15 +1207,9 @@ def _mhp_posting(d: DataFrame) -> DataFrame:
     multiplicity; ``distinct()`` it for set semantics)."""
     from pyspark.sql import Window as W
 
-    toked = d.select("doc_id", tokens(F.col("text")).alias("tk"))
+    toked = d.select("doc_id", F.expr(tokens()).alias("tk"))
     p = toked.select("doc_id", F.posexplode("tk").alias("pos", "tok"))
-    codes = F.transform(F.split(F.col("tok"), ""), lambda c: F.ascii(c).cast("bigint"))
-    th = F.aggregate(
-        codes,
-        F.lit(0).cast("bigint"),
-        lambda h, c: (h * 31 + c) % F.lit(_MHP_M).cast("bigint"),
-    )
-    hp = p.select("doc_id", "pos", th.alias("h0"))
+    hp = p.selectExpr("doc_id", "pos", f"{char_fold('tok', _MHP_M)} AS h0")
     w = W.partitionBy("doc_id").orderBy("pos")
     return (
         hp.select(
@@ -1444,9 +1438,7 @@ def _shp_sig(d: DataFrame) -> DataFrame:
     # map-side-combined hash-agg over the distinct-token stream — the
     # same order-free integer votes as the oracle's per-document folds
     folds = [
-        "aggregate(transform(split(tok, ''), c -> cast(ascii(c) as bigint)), "
-        f"cast(0 as bigint), (h, c) -> (h * {mult} + c) % {_MHP_M}) AS h{f_i}"
-        for f_i, mult in enumerate(_SHP_MULTS)
+        f"{char_fold('tok', _MHP_M, mult)} AS h{f_i}" for f_i, mult in enumerate(_SHP_MULTS)
     ]
     th = _distinct_tokens(d).selectExpr("doc_id", *folds)
     return _simhash_votes(
@@ -1857,9 +1849,9 @@ _SHA_ONE_OFF = 2_000_000
 )
 def q_dedup_simhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < _SHA_SLICE)
-    first_tok = F.element_at(F.filter(F.split(F.col("text"), " "), lambda t: t != ""), 1)
+    first_tok = F.element_at(F.expr(tokens()), 1)
     same_set = (
-        d.filter(F.size(F.filter(F.split(F.col("text"), " "), lambda t: t != "")) > 0)
+        d.filter(F.size(F.expr(tokens())) > 0)
         .select(
             (F.col("doc_id") + _SHA_SAME_OFF).alias("doc_id"),
             F.concat(F.col("text"), F.lit(" "), first_tok).alias("text"),
@@ -2316,37 +2308,17 @@ def _xsub_win_of(d: DataFrame) -> DataFrame:
     expression is ROW-LOCAL (select/filter/explode, no window, no
     aggregation), so the same pipeline is streaming-legal — the
     property q_stream_substring_incremental rides."""
-    toked = d.select("doc_id", tokens(F.col("text")).alias("tk")).filter(
+    toked = d.select("doc_id", F.expr(tokens()).alias("tk")).filter(
         F.size("tk") >= _XSUB_W
     )
-    codes = lambda t: F.transform(F.split(t, ""), lambda c: F.ascii(c).cast("bigint"))  # noqa: E731
-    tok_h = F.transform(
-        "tk",
-        lambda t: F.aggregate(
-            codes(t),
-            F.lit(0).cast("bigint"),
-            lambda h, c: (h * 31 + c) % F.lit(_MHP_M).cast("bigint"),
-        ),
+    hashed = toked.selectExpr(
+        "doc_id", "tk", f"transform(tk, t -> {char_fold('t', _MHP_M)}) AS hs"
     )
-    hashed = toked.select("doc_id", "tk", tok_h.alias("hs"))
-    win_fold = lambda i: F.aggregate(  # noqa: E731
-        F.slice("hs", i, _XSUB_W),
-        F.lit(0).cast("bigint"),
-        lambda a, x: (a * 31 + x) % F.lit(_MHP_M).cast("bigint"),
-    )
-    return hashed.select(
+    return hashed.selectExpr(
         "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("tk") - (_XSUB_W - 1)),
-                lambda i: F.struct(
-                    i.cast("bigint").alias("pos"),
-                    win_fold(i).alias("wh"),
-                    F.element_at("tk", i).alias("t0"),
-                    F.element_at("tk", i + (_XSUB_W - 1)).alias("t1"),
-                ),
-            )
-        ).alias("w"),
+        f"explode(transform(sequence(1, size(tk) - {_XSUB_W - 1}), i -> struct("
+        f"CAST(i AS BIGINT) AS pos, {poly_fold(f'slice(hs, i, {_XSUB_W})', _MHP_M)} AS wh,"
+        f" element_at(tk, i) AS t0, element_at(tk, i + {_XSUB_W - 1}) AS t1))) AS w",
     ).select("doc_id", "w.pos", "w.wh", "w.t0", "w.t1")
 
 

@@ -3,9 +3,10 @@
 Language-ID, quality scoring, token counting, and document
 fingerprinting — the per-document scoring passes an LLM training-data
 pipeline runs before filtering/dedup. Everything is built from
-``azurestorage_blueprints_spark.functions.text`` column expressions
-(JVM-side, codegen); nothing collects to the driver, so each query is
-a single scan + narrow projection (or one hash-agg) at any scale.
+``azurestorage_blueprints_spark.functions.text``'s Spark SQL text (one
+py4j command per expression, JVM-side codegen); nothing collects to
+the driver, so each query is a single scan + narrow projection (or one
+hash-agg) at any scale.
 """
 
 from __future__ import annotations
@@ -15,18 +16,12 @@ from pyspark.sql import functions as F
 
 from azurestorage_blueprints_spark.functions import text as X
 from azurestorage_blueprints_spark.queries import register, register_sql
+from azurestorage_blueprints_spark.queries.curation import (
+    _sql_lang_guess,
+    _sql_lang_score,
+    _sql_word_set_count,
+)
 from azurestorage_blueprints_spark.tables import table
-
-
-def _sql_word_set_count(words: tuple[str, ...]) -> str:
-    """DuckDB expression: count tokens equal to any word in ``words`` —
-    the twin of ``text.word_set_occurrences`` (token-equality semantics,
-    adjacent repeats each count)."""
-    lst = ", ".join(f"'{w}'" for w in words)
-    return (
-        f"CAST(len(list_filter(string_split(text, ' '), "
-        f"t -> list_contains([{lst}], t))) AS INT)"
-    )
 
 
 @register(
@@ -44,7 +39,7 @@ def _sql_word_set_count(words: tuple[str, ...]) -> str:
 )
 def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    tc = X.token_count(F.col("text"))
+    tc = F.expr(X.token_count())
     return d.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(tc).alias("total_tokens"),
@@ -72,34 +67,17 @@ def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    tc = X.token_count(F.col("text"))
+    tc = F.expr(X.token_count())
     return d.select(
         "doc_id",
         F.length("text").alias("n_chars_actual"),
         tc.alias("n_tokens"),
-        X.punct_ratio(F.col("text")).alias("punct_ratio"),
-        X.stopword_ratio(F.col("text")).alias("stopword_ratio"),
+        F.expr(X.punct_ratio()).alias("punct_ratio"),
+        F.expr(X.stopword_ratio()).alias("stopword_ratio"),
         (F.length("text").cast("double") / F.greatest(tc, F.lit(1)).cast("double")).alias(
             "chars_per_token"
         ),
     )
-
-
-def _sql_lang_score(lang: str) -> str:
-    return _sql_word_set_count(X.LANG_MARKERS[lang])
-
-
-def _sql_lang_guess() -> str:
-    """Mirror lang_guess's fold: iterate languages lexicographically,
-    strict > replaces the running best."""
-    langs = sorted(X.LANG_MARKERS)
-    expr = f"'{langs[0]}'"
-    best = f"({_sql_lang_score(langs[0])})"
-    for lang in langs[1:]:
-        s = f"({_sql_lang_score(lang)})"
-        expr = f"CASE WHEN {s} > {best} THEN '{lang}' ELSE {expr} END"
-        best = f"CASE WHEN {s} > {best} THEN {s} ELSE {best} END"
-    return expr
 
 
 @register(
@@ -116,14 +94,13 @@ def _sql_lang_guess() -> str:
     "point — the operator shape is.)",
 )
 def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    scores = X.lang_scores(F.col("text"))
-    return d.select(
+    scores = X.lang_scores()
+    return table(spark, sf_dir, "documents").selectExpr(
         "doc_id",
-        F.col("lang").alias("labeled_lang"),
-        X.lang_guess(F.col("text")).alias("guessed_lang"),
-        scores["en"].alias("score_en"),
-        scores["de"].alias("score_de"),
+        "lang AS labeled_lang",
+        f"{X.lang_guess()} AS guessed_lang",
+        f"{scores['en']} AS score_en",
+        f"{scores['de']} AS score_de",
     )
 
 
@@ -143,7 +120,7 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    return d.select("doc_id", X.rolling_fingerprint(F.col("text")).alias("fingerprint"))
+    return d.select("doc_id", F.expr(X.char_fold("text")).alias("fingerprint"))
 
 
 @register(
@@ -161,7 +138,7 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_text_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    toks = X.tokens(F.col("text"))
+    toks = F.expr(X.tokens())
     uniq = F.size(F.array_distinct(toks))
     n = F.size(toks)
     return d.select(
@@ -219,7 +196,7 @@ def q_multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_doc_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     posting = (
-        d.select("doc_id", X.tokens(F.col("text")).alias("tk"))
+        d.select("doc_id", F.expr(X.tokens()).alias("tk"))
         .select("doc_id", F.explode(F.array_distinct("tk")).alias("term"))
     )
     n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -257,11 +234,11 @@ def q_text_doc_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    toked = d.select("doc_id", X.tokens(F.col("text")).alias("tk")).filter(
+    toked = d.select("doc_id", F.expr(X.tokens()).alias("tk")).filter(
         F.size("tk") >= 2
     )
     bigrams = toked.select(
-        F.explode(X.word_shingles(F.col("tk"), k=2)).alias("bigram")
+        F.explode(F.expr(X.word_shingles("tk", 2))).alias("bigram")
     )
     return (
         bigrams.groupBy("bigram")
@@ -300,11 +277,11 @@ def q_text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    tc = X.token_count(F.col("text"))
+    tc = F.expr(X.token_count())
     scored = d.select(
         "doc_id", "source", "text",
         tc.alias("n_tokens"),
-        X.punct_ratio(F.col("text")).alias("punct_ratio"),
+        F.expr(X.punct_ratio()).alias("punct_ratio"),
     )
     quality = scored.filter((F.col("n_tokens") >= 10) & (F.col("punct_ratio") <= 0.10))
     # dedup key is a 64-bit content fingerprint, never the document itself:
@@ -344,8 +321,8 @@ def q_pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    ws = X.token_count(F.col("text"))
-    bpe = F.size(X.bpe_ish_tokens(F.col("text")))
+    ws = F.expr(X.token_count())
+    bpe = F.size(F.expr(X.bpe_ish_tokens()))
     return d.groupBy("lang").agg(
         F.sum(ws).alias("ws_tokens"),
         F.sum(bpe).alias("bpe_ish_tokens"),
@@ -384,7 +361,7 @@ def q_text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = table(spark, sf_dir, "documents")
-    toked = d.select("doc_id", F.explode(X.tokens(F.col("text"))).alias("term"))
+    toked = d.select("doc_id", F.explode(F.expr(X.tokens())).alias("term"))
     tf = toked.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -454,7 +431,7 @@ def q_naive_bayes_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = table(spark, sf_dir, "documents")
-    tok = d.select("source", F.explode(X.tokens(F.col("text"))).alias("tok"))
+    tok = d.select("source", F.explode(F.expr(X.tokens())).alias("tok"))
     # the (source, token) count table feeds THREE consumers (totals,
     # vocabulary, ranking); persist it so the scan+tokenize+explode
     # runs once — it is the map-side-combined reduction of the token
@@ -690,7 +667,7 @@ def q_text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         d.select(
             F.col("lang").alias("labeled_lang"),
-            X.lang_guess(F.col("text")).alias("guessed_lang"),
+            F.expr(X.lang_guess()).alias("guessed_lang"),
         )
         .groupBy("labeled_lang", "guessed_lang")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
@@ -929,15 +906,9 @@ _FEAT_HASH_BUCKETS = 512
 )
 def q_text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    tok = d.select(F.explode(X.tokens(F.col("text"))).alias("tok"))
-    codes = F.transform(F.split(F.col("tok"), ""), lambda c: F.ascii(c).cast("bigint"))
-    h = F.aggregate(
-        codes,
-        F.lit(0).cast("bigint"),
-        lambda acc, c: (acc * 31 + c) % F.lit(2147483647).cast("bigint"),
-    )
+    tok = d.select(F.explode(F.expr(X.tokens())).alias("tok"))
     b = (
-        tok.select("tok", (h % _FEAT_HASH_BUCKETS).alias("bucket"))
+        tok.selectExpr("tok", f"{X.char_fold('tok')} % {_FEAT_HASH_BUCKETS} AS bucket")
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
@@ -1187,7 +1158,7 @@ def q_multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_eval_langid_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    pred = d.select(F.col("lang").alias("y"), X.lang_guess(F.col("text")).alias("yhat"))
+    pred = d.select(F.col("lang").alias("y"), F.expr(X.lang_guess()).alias("yhat"))
     cells = pred.groupBy("y", "yhat").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     classes = pred.select(F.col("y").alias("cls")).distinct()
     per_class = (
@@ -1339,7 +1310,7 @@ _KAPPA_SQL_BODY = """
 )
 def q_eval_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    pred = d.select(F.col("lang").alias("y"), X.lang_guess(F.col("text")).alias("yhat"))
+    pred = d.select(F.col("lang").alias("y"), F.expr(X.lang_guess()).alias("yhat"))
     pred.createOrReplaceTempView("pred")
     return spark.sql("WITH " + _KAPPA_SQL_BODY)
 
@@ -1430,7 +1401,7 @@ def q_text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     w = d.select(
         "source",
-        F.explode(F.filter(F.split(F.lower(F.col("text")), " "), lambda t: t != "")).alias("w"),
+        F.explode(F.expr(X.tokens("lower(text)"))).alias("w"),
     )
     spaced = "(' ' || array_join(split(w, ''), ' ') || ' ')"
     seg = w.select(
@@ -1514,8 +1485,8 @@ def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = table(spark, sf_dir, "documents")
-    tc = X.token_count(F.col("text")).cast("bigint")
-    nstop = X.word_set_occurrences(F.col("text"), X.STOPWORDS).cast("bigint")
+    tc = F.expr(X.token_count()).cast("bigint")
+    nstop = F.expr(X.word_set_occurrences("text", X.STOPWORDS)).cast("bigint")
     s = (
         d.select(
             (F.col("lang") == "en").cast("int").alias("pos"),
@@ -1622,8 +1593,8 @@ def q_eval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = table(spark, sf_dir, "documents")
-    tc = X.token_count(F.col("text")).cast("bigint")
-    nstop = X.word_set_occurrences(F.col("text"), X.STOPWORDS).cast("bigint")
+    tc = F.expr(X.token_count()).cast("bigint")
+    nstop = F.expr(X.word_set_occurrences("text", X.STOPWORDS)).cast("bigint")
     s = (
         d.select(
             (F.col("lang") == "en").cast("int").alias("pos"),
@@ -1736,8 +1707,8 @@ def q_eval_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = table(spark, sf_dir, "documents")
-    tc = X.token_count(F.col("text")).cast("bigint")
-    nstop = X.word_set_occurrences(F.col("text"), X.STOPWORDS).cast("bigint")
+    tc = F.expr(X.token_count()).cast("bigint")
+    nstop = F.expr(X.word_set_occurrences("text", X.STOPWORDS)).cast("bigint")
     s = (
         d.select(
             (F.col("lang") == "en").cast("int").alias("pos"),
@@ -1915,7 +1886,7 @@ _ENTROPY_SQL = """
 )
 def q_text_unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(X.tokens(F.col("text"))).alias("token"))
+    tok = d.select("doc_id", F.explode(F.expr(X.tokens())).alias("token"))
     ct = tok.groupBy("doc_id", "token").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
@@ -2129,13 +2100,11 @@ _LANG_MARGIN_SQL = f"""
 )
 def q_text_langid_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    scores = X.lang_scores(F.col("text"))
-    s = F.sort_array(
-        F.array(*[scores[lang] for lang in sorted(X.LANG_MARKERS)]), asc=False
-    )
+    scores = X.lang_scores()
+    s = F.expr(f"sort_array(array({', '.join(scores[lang] for lang in sorted(scores))}), false)")
     top1 = F.element_at(s, 1).cast("bigint")
     top2 = F.element_at(s, 2).cast("bigint")
-    guessed = X.lang_guess(F.col("text"))
+    guessed = F.expr(X.lang_guess())
     return d.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
@@ -2218,7 +2187,7 @@ def q_text_langid_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_eval_rouge_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", "lang", X.tokens(F.col("text")).alias("tk")
+        "doc_id", "lang", F.expr(X.tokens()).alias("tk")
     ).filter(F.size("tk") >= 2)
 
     c = tok.filter(F.col("doc_id") % 2 == 0).select(
@@ -2240,14 +2209,14 @@ def q_eval_rouge_n(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cg = (
         pairs.select(
-            "pair_id", F.explode(X.word_shingles(F.col("ctk"), k=2)).alias("g")
+            "pair_id", F.explode(F.expr(X.word_shingles("ctk", 2))).alias("g")
         )
         .groupBy("pair_id", "g")
         .agg(F.count(F.lit(1)).alias("cc"))
     )
     rg = (
         pairs.select(
-            "pair_id", F.explode(X.word_shingles(F.col("rtk"), k=2)).alias("g")
+            "pair_id", F.explode(F.expr(X.word_shingles("rtk", 2))).alias("g")
         )
         .groupBy("pair_id", "g")
         .agg(F.count(F.lit(1)).alias("rc"))
@@ -2388,7 +2357,7 @@ _BP_EXPR = (
 def q_eval_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", "lang", X.tokens(F.col("text")).alias("tk")
+        "doc_id", "lang", F.expr(X.tokens()).alias("tk")
     ).filter(F.size("tk") >= 2)
     c = tok.filter(F.col("doc_id") % 2 == 0).select(
         F.col("doc_id").alias("pair_id"),
@@ -2409,23 +2378,20 @@ def q_eval_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stages. Released by finalize_bounded (output is O(langs)).
     pairs = c.join(r, "pair_id").persist()
 
-    def tagged(tk_col):
-        return F.concat(
-            F.transform(tk_col, lambda g: F.struct(F.lit(1).alias("n"), g.alias("g"))),
-            F.transform(
-                X.word_shingles(tk_col, k=2),
-                lambda g: F.struct(F.lit(2).alias("n"), g.alias("g")),
-            ),
+    def tagged(tk: str) -> str:
+        return (
+            f"explode(concat(transform({tk}, g -> struct(1 AS n, g AS g)),"
+            f" transform({X.word_shingles(tk, 2)}, g -> struct(2 AS n, g AS g)))) AS t"
         )
 
     cg = (
-        pairs.select("pair_id", F.explode(tagged(F.col("ctk"))).alias("t"))
+        pairs.selectExpr("pair_id", tagged("ctk"))
         .select("pair_id", "t.n", "t.g")
         .groupBy("pair_id", "n", "g")
         .agg(F.count(F.lit(1)).alias("cc"))
     )
     rg = (
-        pairs.select("pair_id", F.explode(tagged(F.col("rtk"))).alias("t"))
+        pairs.selectExpr("pair_id", tagged("rtk"))
         .select("pair_id", "t.n", "t.g")
         .groupBy("pair_id", "n", "g")
         .agg(F.count(F.lit(1)).alias("rc"))
@@ -2517,16 +2483,8 @@ def _char_score(lang: str, dialect: str) -> str:
 
 
 def _char_guess(dialect: str) -> str:
-    """The char-marker argmax with the SAME lexicographic strict->
-    fold as _sql_lang_guess, so ties resolve identically."""
-    langs = sorted(X.LANG_MARKERS)
-    expr = f"'{langs[0]}'"
-    best = _char_score(langs[0], dialect)
-    for lang in langs[1:]:
-        sc = _char_score(lang, dialect)
-        expr = f"CASE WHEN {sc} > {best} THEN '{lang}' ELSE {expr} END"
-        best = f"CASE WHEN {sc} > {best} THEN {sc} ELSE {best} END"
-    return expr
+    """The char-marker argmax, with the tie-break of _sql_lang_guess."""
+    return X.argmax_label({lang: _char_score(lang, dialect) for lang in X.LANG_MARKERS})
 
 
 @register(
@@ -2578,7 +2536,7 @@ def _char_guess(dialect: str) -> str:
 )
 def q_eval_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    a_ok = F.when(X.lang_guess(F.col("text")) == F.col("lang"), 1).otherwise(0)
+    a_ok = F.when(F.expr(X.lang_guess()) == F.col("lang"), 1).otherwise(0)
     b_ok = F.when(
         F.expr(_char_guess("spark")) == F.col("lang"), 1
     ).otherwise(0)

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from azurestorage_blueprints_spark.functions.text import tokens
 from azurestorage_blueprints_spark.queries import register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
@@ -196,9 +197,7 @@ register_sql(
 )
 def q_token_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", F.explode(F.expr("filter(split(text, ' '), t -> t <> '')")).alias("token")
-    )
+    tok = d.select("doc_id", F.explode(F.expr(tokens())).alias("token"))
     vocab = tok.groupBy("token").agg(F.count(F.lit(1)).alias("global_cnt"))
     scored = (
         tok.join(F.broadcast(vocab), "token")

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from azurestorage_blueprints_spark.functions.text import char_fold, token_count, tokens
 from azurestorage_blueprints_spark.queries import finalize_bounded, register, register_sql
 from azurestorage_blueprints_spark.tables import table
 
@@ -371,7 +372,7 @@ def q_udtf_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     "I/O beyond the scan.",
 )
 def q_provenance_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.select(
             F.regexp_extract(F.col("_metadata.file_path"), r"[^/]+$", 0).alias("file_name"),
@@ -474,9 +475,7 @@ def q_pandas_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         return x / (1.0 + x.abs())
 
     d = table(spark, sf_dir, "documents")
-    from azurestorage_blueprints_spark.functions.text import tokens
-
-    nt = F.size(tokens(F.col("text"))).cast("bigint")
+    nt = F.expr(token_count()).cast("bigint")
     return d.select(
         "doc_id", nt.alias("n_tokens"), squash(nt).alias("length_score")
     )
@@ -503,8 +502,6 @@ _CMS_D, _CMS_W = 4, 1024
     "gate the overcount against the theoretical bound.",
 )
 def q_sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from azurestorage_blueprints_spark.functions.text import tokens
-
     d = table(spark, sf_dir, "documents")
     # ONE map-side-combined pass reduces the token stream to the
     # O(vocab) count table; BOTH the sketch (counters = sums of counts
@@ -512,7 +509,7 @@ def q_sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     # top-20 derive from it, so what persists is vocab-sized, never the
     # corpus token stream (released via finalize_bounded)
     toks = (
-        d.select(F.explode(tokens(F.col("text"))).alias("tok"))
+        d.select(F.explode(F.expr(tokens())).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).cast("bigint").alias("exact_cnt"))
         .persist()
@@ -720,21 +717,12 @@ _CMSP_BUCKET_CASE = "CASE d " + " ".join(
     "corpus size, broadcast-sized probe join.",
 )
 def q_sketch_count_min_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from azurestorage_blueprints_spark.functions.text import tokens
-    from azurestorage_blueprints_spark.queries import finalize_bounded
-
     d = table(spark, sf_dir, "documents")
-    codes = F.transform(F.split(F.col("tok"), ""), lambda c: F.ascii(c).cast("bigint"))
-    poly = F.aggregate(
-        codes,
-        F.lit(0).cast("bigint"),
-        lambda h, c: (h * 31 + c) % F.lit(_CMSP_M).cast("bigint"),
-    )
     toks = (
-        d.select(F.explode(tokens(F.col("text"))).alias("tok"))
+        d.select(F.explode(F.expr(tokens())).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).cast("bigint").alias("exact_cnt"))
-        .select("tok", "exact_cnt", poly.alias("h"))
+        .selectExpr("tok", "exact_cnt", f"{char_fold('tok', _CMSP_M)} AS h")
         .persist()
     )
     seeds = F.explode(F.sequence(F.lit(0), F.lit(_CMS_D - 1))).alias("d")

@@ -3625,39 +3625,13 @@ _RRF_QDOC = 0
 
 
 def _rrf_oracle() -> str:
-    from azurestorage_blueprints_spark.queries.curation import (
-        _B,
-        _BM25_TERMS,
-        _K1,
-    )
+    from azurestorage_blueprints_spark.queries.curation import _BM25_CTES
 
-    tf_cols = ", ".join(
-        f"len(list_filter(tk, x -> x = '{t}')) AS tf{i}"
-        for i, t in enumerate(_BM25_TERMS)
-    )
-    df_cols = ", ".join(
-        f"sum(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS df{i}"
-        for i in range(len(_BM25_TERMS))
-    )
-    score = " + ".join(
-        f"ln((n - df{i} + 0.5) / (df{i} + 0.5) + 1.0)"
-        f" * (tf{i} * ({_K1} + 1.0))"
-        f" / (tf{i} + {_K1} * (1.0 - {_B} + {_B} * dl / avgdl))"
-        for i in range(len(_BM25_TERMS))
-    )
     return f"""
-    WITH toked AS (
-      SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-      FROM documents),
-    base AS (
-      SELECT doc_id, len(tk) AS dl, {tf_cols} FROM toked),
-    stats AS (
-      SELECT count(*) AS n, CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl,
-             {df_cols}
-      FROM base),
+    WITH {_BM25_CTES},
     lex_top AS (
-      SELECT doc_id, round({score}, 6) AS s
-      FROM base, stats WHERE {score} > 0
+      SELECT doc_id, round(raw, 6) AS s
+      FROM scored WHERE raw > 0
       ORDER BY s DESC, doc_id LIMIT {_RRF_TOPK}),
     lex AS (
       SELECT doc_id,
@@ -3714,43 +3688,13 @@ def _rrf_oracle() -> str:
     "corpus; the fusion join is 50x50.",
 )
 def q_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from azurestorage_blueprints_spark.functions.text import tokens as _tokens
-    from azurestorage_blueprints_spark.queries.curation import (
-        _B,
-        _BM25_TERMS,
-        _K1,
-        _term_eq,
-    )
+    from azurestorage_blueprints_spark.queries.curation import _BM25_RAW, _bm25_scored
 
     d = table(spark, sf_dir, "documents")
-    base = d.select("doc_id", _tokens(F.col("text")).alias("tk")).select(
-        "doc_id",
-        F.size("tk").alias("dl"),
-        *[
-            F.size(F.filter("tk", _term_eq(t))).alias(f"tf{i}")
-            for i, t in enumerate(_BM25_TERMS)
-        ],
-    )
-    glob = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        *[
-            F.sum((F.col(f"tf{i}") > 0).cast("long")).alias(f"df{i}")
-            for i in range(len(_BM25_TERMS))
-        ],
-    )
-    scored = base.crossJoin(F.broadcast(glob))
-    raw = None
-    for i in range(len(_BM25_TERMS)):
-        tf, df = F.col(f"tf{i}"), F.col(f"df{i}")
-        idf = F.log((F.col("n") - df + 0.5) / (df + 0.5) + 1.0)
-        part = idf * (tf * (_K1 + 1.0)) / (
-            tf + _K1 * (1.0 - _B + _B * F.col("dl") / F.col("avgdl"))
-        )
-        raw = part if raw is None else raw + part
     lex_top = (
-        scored.withColumn("s", F.round(raw, 6))
-        .filter(raw > 0)
+        _bm25_scored(d)
+        .withColumn("s", F.expr(f"round({_BM25_RAW}, 6)"))
+        .filter(f"{_BM25_RAW} > 0")
         .select("doc_id", "s")
         .orderBy(F.desc("s"), "doc_id")
         .limit(_RRF_TOPK)

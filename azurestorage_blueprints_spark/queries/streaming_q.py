@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from azurestorage_blueprints_spark.functions.text import char_fold, tokens, word_shingles
 from azurestorage_blueprints_spark.functions.vectors import cosine_normed, l2sq, norm
 from azurestorage_blueprints_spark.queries import finalize_bounded, register
 from azurestorage_blueprints_spark.queries.relational import _dec
@@ -570,10 +571,7 @@ def _rowlocal_bands(df: DataFrame) -> DataFrame:
 
     m = _MHP_M
     hs = df.selectExpr(
-        "doc_id",
-        "transform(filter(split(text, ' '), t -> t != ''), "
-        "t -> aggregate(transform(split(t, ''), c -> cast(ascii(c) as bigint)), "
-        f"cast(0 as bigint), (h, c) -> (h * 31 + c) % {m})) AS hs",
+        "doc_id", f"transform({tokens()}, t -> {char_fold('t', m)}) AS hs"
     ).filter("size(hs) > 0")
     sh = hs.selectExpr(
         "doc_id",
@@ -1179,7 +1177,6 @@ def _capped_lm_arrivals(spark: SparkSession, sf_dir: str, ks=None) -> DataFrame:
     is corpus-scale) and folds its per-token surprisal row-locally with
     element_at against the LM map; UNSEEN tokens take the add-one OOV
     mass ln(N_lang+V_lang)."""
-    from azurestorage_blueprints_spark.functions.text import tokens
     from azurestorage_blueprints_spark.queries.curation import _ppl_thresholds
 
     d, s_dep, oovtbl, docce, caches = _capped_lm_parts(spark, sf_dir)
@@ -1193,7 +1190,7 @@ def _capped_lm_arrivals(spark: SparkSession, sf_dir: str, ks=None) -> DataFrame:
     arr = arrivals.join(d.select("doc_id", "lang"), "doc_id").join(
         F.broadcast(consts), "lang"
     )
-    tk = tokens(F.col("text"))
+    tk = F.expr(tokens())
     ce = F.aggregate(
         tk,
         F.lit(0).cast("bigint"),
@@ -1927,13 +1924,11 @@ def _stream_decon_oracle() -> str:
     "benchmark manifest; state is one counter per in-flight arrival.",
 )
 def q_stream_decontamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from azurestorage_blueprints_spark.functions.text import tokens, word_shingles
-
     arrivals = _file_stream(spark, _stage_source(spark, sf_dir, "documents"))
     a_sh = arrivals.select(
         "doc_id",
         F.explode(
-            F.array_distinct(word_shingles(tokens(F.col("text")), k=5))
+            F.array_distinct(F.expr(word_shingles(tokens(), 5)))
         ).alias("shingle"),
     )
     # the static side is PERSISTED (r12 optimization, guide §2.4): a
@@ -1948,7 +1943,7 @@ def q_stream_decontamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter((F.col("doc_id") % 10 != 0) & (F.col("doc_id") % 97 == 0))
         .select(
             F.explode(
-                F.array_distinct(word_shingles(tokens(F.col("text")), k=5))
+                F.array_distinct(F.expr(word_shingles(tokens(), 5)))
             ).alias("shingle")
         )
         .distinct()

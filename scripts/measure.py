@@ -8,7 +8,9 @@ Per query: one untimed warm-up, then N traced samples of the benchmark's
 timer (``perfbench/workloads.time_query``), with ``bench.py``'s cache and
 GC hygiene. ``--all`` is ``bench.py``'s headline; the core count comes
 from ``SPARK_GRAFT_CPUS``. ``--plan`` writes a fresh build's formatted
-plan to ``DIR/<name>.txt``. A query that raises is recorded as ``{"err"}``.
+plan to ``DIR/<name>.txt``; for a streaming query that is the plan of
+each streaming DataFrame handed to ``run_to_memory``, not of the memory
+table it returns. A query that raises is recorded as ``{"err"}``.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ import json
 import os
 import statistics
 import sys
+from unittest import mock
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [p for p in (ROOT, os.path.join(ROOT, "perfbench")) if p not in sys.path]
@@ -27,11 +30,28 @@ sys.path[:0] = [p for p in (ROOT, os.path.join(ROOT, "perfbench")) if p not in s
 import bench  # noqa: E402
 import tracing  # noqa: E402
 import workloads  # noqa: E402
-from azurestorage_blueprints_spark.queries import load_all  # noqa: E402
+from azurestorage_blueprints_spark.queries import load_all, streaming_q  # noqa: E402
 from azurestorage_blueprints_spark.session import get_spark  # noqa: E402
 
 #: one send_command wrapper per session, however often ``main`` runs
 _py4j_counter = functools.cache(tracing.Py4jCounter)
+
+
+def write_plan(spark, fn, sf_dir: str, path: str) -> None:
+    """Write the formatted plan of a fresh ``fn(spark, sf_dir)``; a
+    streaming query's plans are those of the streams it replays."""
+    streams = []
+    replay = streaming_q.run_to_memory
+
+    def capture(stream_df, *args, **kwargs):
+        streams.append(stream_df)
+        return replay(stream_df, *args, **kwargs)
+
+    with mock.patch.object(streaming_q, "run_to_memory", capture):
+        df = fn(spark, sf_dir)
+    with open(path, "w") as f, contextlib.redirect_stdout(f):
+        for plan_df in streams or [df]:
+            plan_df.explain("formatted")
 
 
 def measure(ctx: workloads.Context, name: str, runs: int, plan_dir: str | None) -> dict:
@@ -40,8 +60,7 @@ def measure(ctx: workloads.Context, name: str, runs: int, plan_dir: str | None) 
     spark.catalog.clearCache()
     if plan_dir:
         os.makedirs(plan_dir, exist_ok=True)
-        with open(os.path.join(plan_dir, f"{name}.txt"), "w") as f, contextlib.redirect_stdout(f):
-            fn(spark, ctx.sf_dir).explain("formatted")
+        write_plan(spark, fn, ctx.sf_dir, os.path.join(plan_dir, f"{name}.txt"))
         spark.catalog.clearCache()
     samples = []
     for _ in range(runs):

@@ -56,8 +56,8 @@ def test_minhash_estimates_track_exact_jaccard(spark, sf_dir):
     cand = REGISTRY["q_dedup_minhash_lsh"].fn(spark, sf_dir).limit(50)
     docs = (
         table(spark, sf_dir, "documents")
-        .select("doc_id", tokens(F.col("text")).alias("tk"))
-        .select("doc_id", F.array_distinct(word_shingles(F.col("tk"))).alias("toks"))
+        .select("doc_id", F.expr(tokens()).alias("tk"))
+        .select("doc_id", F.array_distinct(F.expr(word_shingles("tk"))).alias("toks"))
     )
     a = docs.select(F.col("doc_id").alias("a_id"), F.col("toks").alias("a_toks"))
     b = docs.select(F.col("doc_id").alias("b_id"), F.col("toks").alias("b_toks"))

@@ -53,3 +53,11 @@ def test_gate_profile_reports_true_median_batches_and_layers(measure_env, tmp_pa
     assert all(run for run in rec["batches_ms"])
     assert rec["layers"]["queries.py4j_calls"] > 0
     assert rec["layers"]["queries.exec_s"] > 0
+
+
+def test_gate_plan_is_the_streaming_plan(measure_env, tmp_path):
+    """``--plan`` on a streaming gate writes the plan of the stream it
+    replays (its file source), not the scan of the memory table."""
+    assert measure.main(["q_stream_forget_gate", "--runs", "1", "--plan", str(tmp_path)]) == 0
+    plan = (tmp_path / "q_stream_forget_gate.txt").read_text()
+    assert "StreamingRelation" in plan and "FileSource[" in plan, plan[:2000]

@@ -7,8 +7,9 @@ deploys the fitted model as one folded SQL expression. A SQL-form query
 (``register_sql``) builds its whole plan with one ``spark.sql`` call.
 The SimHash rungs build their 62-64 per-bit votes and signature sum as
 SQL text; as Column trees they sent about 10,200-10,800. The similarity
-rungs build dot, norm, cosine, int8 and L2² folds as SQL text too.
-These gates keep that tax from creeping back.
+rungs build dot, norm, cosine, int8 and L2² folds as SQL text too, and
+the text rungs their tokenizer, language scores, classifier indicators
+and BM25 scorer. These gates keep that tax from creeping back.
 """
 
 from __future__ import annotations
@@ -41,6 +42,18 @@ _SIMILARITY_BUILD_BUDGETS = {
     "q_kmeans_train": 1_135,
     "q_knn_lsh": 135,
     "q_knn_nprobe_tradeoff": 475,
+}
+
+
+#: py4j commands each text rung may send to build its plan at sf0.001
+#: (second build), about 110% of its count with the text vocabulary as
+#: SQL text; as Column trees they sent 497-4,965
+_TEXT_BUILD_BUDGETS = {
+    "q_curation_waterfall": 86,
+    "q_quality_classifier_train": 378,
+    "q_retrieval_rrf": 468,
+    "q_text_bm25": 125,
+    "q_text_langid": 22,
 }
 
 
@@ -111,3 +124,14 @@ def test_stream_ann_gate_stays_within_py4j_budget(spark, sf_dir, py4j_calls):
     fn(spark, sf_dir)
     calls = _round_trips(py4j_calls)
     assert len(calls) < _ANN_GATE_BUDGET, len(calls)
+
+
+@pytest.mark.parametrize("name", sorted(_TEXT_BUILD_BUDGETS))
+def test_text_rung_builds_within_py4j_budget(spark, sf_dir, py4j_calls, name):
+    fn = REGISTRY[name].fn
+    fn(spark, sf_dir)
+    spark.catalog.clearCache()
+    py4j_calls.clear()
+    fn(spark, sf_dir)
+    calls = _round_trips(py4j_calls)
+    assert len(calls) < _TEXT_BUILD_BUDGETS[name], len(calls)

@@ -29,7 +29,7 @@ def _standing_vocab_sizes(spark, sf_dir):
     from azurestorage_blueprints_spark.functions.text import tokens
 
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 0)
-    tok = d.select("lang", F.explode(tokens(F.col("text"))).alias("token"))
+    tok = d.select("lang", F.explode(F.expr(tokens())).alias("token"))
     return {
         r.lang: r.v
         for r in tok.groupBy("lang").agg(F.countDistinct("token").alias("v")).collect()

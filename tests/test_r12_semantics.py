@@ -39,7 +39,7 @@ def _standing_vocab(spark, sf_dir):
     from azurestorage_blueprints_spark.functions.text import tokens
 
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 0)
-    tok = d.select("lang", F.explode(tokens(F.col("text"))).alias("token"))
+    tok = d.select("lang", F.explode(F.expr(tokens())).alias("token"))
     return tok.groupBy("lang", "token").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
@@ -1178,7 +1178,7 @@ def test_simhash_vote_hashagg_matches_per_doc_fold(spark, sf_dir):
         d.select(
             "doc_id",
             F.transform(
-                F.array_distinct(tokens(F.col("text"))), lambda t: F.xxhash64(t)
+                F.array_distinct(F.expr(tokens())), lambda t: F.xxhash64(t)
             ).alias("hs"),
         )
         .filter(F.size("hs") > 0)
