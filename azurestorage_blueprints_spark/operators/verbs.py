@@ -18,6 +18,18 @@ execute phase (distributed):   ``mapInPandas`` over the planned catalog —
                                becomes task parallelism; a million-blob
                                namespace yields a handful of driver rows).
 
+The file operations run in at most one wave of task slots: ``_execute``
+coalesces the planned catalog to ``defaultParallelism`` partitions
+before ``mapInPandas``. The ``binaryFile`` scan packs files by
+``openCostInBytes`` (4 MB each) into 128 MB splits, so a tree of a few
+hundred small files becomes several splits per slot, and each wave of
+Python tasks costs a fixed start-up time whatever bytes it moves (400
+files on 4 cores: 13 splits, four waves per verb, 7.4 s per four-verb
+pass; in one wave 3.5 s, ``VERBS_ONE_WAVE_AB.json``). ``coalesce``
+merges the byte-balanced splits without a shuffle, so bytes per task
+stay balanced; at 100 TB each task holds about N/slots files, and the
+cost is that a retried task redoes that many files.
+
 Per-verb semantic matrix preserved from the reference (SURVEY.md §2.1):
 
 | verb     | overwrite        | empty-match policy      | enumeration (regex path)     |
@@ -145,6 +157,7 @@ def _execute(plan: DataFrame, op: str, dest_root: str | None) -> DataFrame:
         )
 
     def worker(batches):
+        import errno as _errno
         import os as _os
         import shutil as _shutil
 
@@ -163,16 +176,30 @@ def _execute(plan: DataFrame, op: str, dest_root: str | None) -> DataFrame:
                     ) as fout:
                         _shutil.copyfileobj(fin, fout)
                 elif op == "download":
-                    with open(src, "rb") as fin, open(dst, "wb") as fout:
-                        _shutil.copyfileobj(fin, fout)
+                    # write a temporary sibling and replace dst with it, so
+                    # a failed copy never leaves a truncated dst behind
+                    tmp = _os.path.join(
+                        _os.path.dirname(dst) or ".", f".dl-{_os.urandom(8).hex()}"
+                    )
+                    fd = _os.open(tmp, _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY, 0o666)
+                    try:
+                        with open(fd, "wb") as fout, open(src, "rb") as fin:
+                            _shutil.copyfileobj(fin, fout)
+                        _os.replace(tmp, dst)
+                    except BaseException:
+                        _os.remove(tmp)
+                        raise
                 elif op == "move":
                     # metadata-only rename first (the reference's move
                     # never streams data through the client,
-                    # move_file.py:97); EXDEV → copy+delete fallback
+                    # move_file.py:97); only a cross-device rename falls
+                    # back to copy+delete
                     try:
                         _os.rename(src, dst)
                         return (src, dst, "ok", "renamed")
-                    except OSError:
+                    except OSError as ex:
+                        if ex.errno != _errno.EXDEV:
+                            raise
                         _shutil.copy(src, dst)
                         _os.remove(src)
                         return (src, dst, "ok", "copied")
@@ -189,18 +216,26 @@ def _execute(plan: DataFrame, op: str, dest_root: str | None) -> DataFrame:
             ]
             yield pd.DataFrame(out, columns=["source_path", "dest_path", "status", "detail"])
 
-    return plan_cols.select("path", *(["dest_path"] if op != "delete" else [])).mapInPandas(
-        worker, schema=_STATUS_SCHEMA
+    # one wave of tasks: the binaryFile scan splits a tree into more
+    # partitions than there are slots, and each extra wave of Python
+    # tasks costs more than the file operations it carries
+    slots = plan_cols.sparkSession.sparkContext.defaultParallelism
+    return (
+        plan_cols.select("path", *(["dest_path"] if op != "delete" else []))
+        .coalesce(slots)
+        .mapInPandas(worker, schema=_STATUS_SCHEMA)
     )
 
 
 def _summarize(status: DataFrame) -> VerbResult:
     """Aggregate the status stream distributedly.
 
-    ONE job: per-partition combine of status counts plus a bounded
-    failure/exists sample riding the same pass (collect_list over a
-    slice), so the driver receives at most one row per distinct status —
-    not one per file.
+    One pass over the statuses: per-partition combine of status counts
+    plus a bounded failure/exists sample riding the same aggregate
+    (collect_list over a slice), so the driver receives at most one row
+    per distinct status — not one per file. Under AQE the ``groupBy``
+    shuffle runs as its own job, so a verb launches two jobs: the file
+    operations with the map side, then the reduce.
     """
     rows = (
         status.groupBy("status")

@@ -14,9 +14,11 @@ import os
 
 import pytest
 
+from azurestorage_blueprints_spark.catalog import scan
 from azurestorage_blueprints_spark.errors import (
     AlreadyExistsError,
     EngineError,
+    MoveError,
     NoMatchesFoundError,
 )
 from azurestorage_blueprints_spark.operators import verbs
@@ -96,6 +98,17 @@ def test_download_overwrites(spark, tree):
     assert (dst / "report.csv").read_bytes() == b"csv-data-1"
 
 
+def test_download_onto_directory_errors_without_leftovers(spark, tree):
+    # download writes a temporary sibling and renames it over dst; when
+    # the rename fails the temporary file is removed again
+    src, dst = tree
+    (dst / "report.csv").mkdir()
+    with pytest.raises(MoveError):
+        verbs.download(spark, str(src), "report.csv", "exact_match", str(dst))
+    assert os.listdir(dst) == ["report.csv"]
+    assert os.listdir(dst / "report.csv") == []
+
+
 def test_download_matches_relative_not_absolute(spark, tree):
     src, dst = tree
     # an absolute-path exact pattern must NOT match for download —
@@ -143,6 +156,20 @@ def test_move_multi_match_enumerates_and_deletes_sources(spark, tree):
     assert (dst / "m_2.csv").read_bytes() == b"csv-data-2"
     assert not (src / "report.csv").exists()
     assert not (src / "report_old.csv").exists()
+
+
+def test_move_onto_directory_errors_and_keeps_source(spark, tree):
+    # only a cross-device rename falls back to copy+delete; a directory at
+    # the destination name is an error, not a copy into that directory
+    src, dst = tree
+    (dst / "kept.tar.gz").mkdir()
+    with pytest.raises(MoveError):
+        verbs.move(
+            spark, str(src), "archive.tar.gz", "exact_match", str(dst),
+            destination_file_name="kept.tar.gz",
+        )
+    assert (src / "archive.tar.gz").read_bytes() == b"tarball"
+    assert os.listdir(dst / "kept.tar.gz") == []
 
 
 def test_move_empty_match_errors(spark, tree):
@@ -233,3 +260,37 @@ def test_exact_match_no_enumeration(spark, tree):
     src, dst = tree
     verbs.download(spark, str(src), "noext", "exact_match", str(dst))
     assert (dst / "noext").read_bytes() == b"raw"
+
+
+def test_verbs_run_one_wave_of_tasks(spark, tmp_path):
+    # 320 files of 4 MB open cost each split into more partitions than
+    # there are slots; every stage a verb runs must still fit one wave
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    src, store, dl, moved = (tmp_path / d for d in ("src", "store", "dl", "moved"))
+    src.mkdir()
+    for i in range(320):
+        (src / f"f{i:04d}.bin").write_bytes(b"x" * (1 + i % 7))
+    runs = [
+        ("upload", (str(src), r"\.bin$", "regex_match", str(store)), src, 320),
+        ("download", (str(store), r"\.bin$", "regex_match", str(dl)), store, 320),
+        ("move", (str(store), r"f\d{3}0\.bin$", "regex_match", str(moved)), store, 32),
+        ("delete", (str(store), r"\.bin$", "regex_match"), store, 288),
+    ]
+    try:
+        for verb, args, root, n in runs:
+            assert scan(spark, str(root)).rdd.getNumPartitions() > slots, verb
+            group = f"one-wave-{verb}-{tmp_path.name}"
+            sc.setJobGroup(group, verb)
+            result = getattr(verbs, verb)(spark, *args)
+            assert result.total == result.ok == n, verb
+            tracker = sc.statusTracker()
+            tasks = [
+                tracker.getStageInfo(stage).numTasks
+                for job in tracker.getJobIdsForGroup(group)
+                for stage in tracker.getJobInfo(job).stageIds
+            ]
+            assert tasks and max(tasks) <= slots, (verb, tasks)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(os.listdir(dl)) == 320 and not any(store.rglob("*.bin"))
