@@ -9,26 +9,40 @@ plan phase (lazy, Catalyst):   scan → match predicate → destination-name
                                enumeration window (X1/X2)
 execute phase (distributed):   ``mapInPandas`` over the planned catalog —
                                each executor performs its partition's file
-                               operations and emits a status row; the
-                               driver aggregates the statuses DISTRIBUTED
-                               (counts + a bounded failure sample) and
-                               never holds one row per file in Python
-                               memory (100 TB posture: the reference's
-                               per-file loop, ``upload_file.py:215``,
-                               becomes task parallelism; a million-blob
-                               namespace yields a handful of driver rows).
+                               operations and counts the statuses itself,
+                               emitting one row per status per partition
+                               (count + a bounded failure sample); the
+                               driver collects those few rows and never
+                               holds one row per file in Python memory
+                               (100 TB posture: the reference's per-file
+                               loop, ``upload_file.py:215``, becomes task
+                               parallelism; a million-blob namespace
+                               yields at most slots × 3 driver rows).
 
-The file operations run in at most one wave of task slots: ``_execute``
-coalesces the planned catalog to ``defaultParallelism`` partitions
-before ``mapInPandas``. The ``binaryFile`` scan packs files by
-``openCostInBytes`` (4 MB each) into 128 MB splits, so a tree of a few
-hundred small files becomes several splits per slot, and each wave of
-Python tasks costs a fixed start-up time whatever bytes it moves (400
-files on 4 cores: 13 splits, four waves per verb, 7.4 s per four-verb
-pass; in one wave 3.5 s, ``VERBS_ONE_WAVE_AB.json``). ``coalesce``
-merges the byte-balanced splits without a shuffle, so bytes per task
-stay balanced; at 100 TB each task holds about N/slots files, and the
-cost is that a retried task redoes that many files.
+A verb is one Python stage and one Spark job. The file operations run
+in at most one wave of task slots: ``_execute`` coalesces the planned
+catalog to ``defaultParallelism`` partitions before ``mapInPandas``.
+The ``binaryFile`` scan packs files by ``openCostInBytes`` (4 MB each)
+into 128 MB splits, so a tree of a few hundred small files becomes
+several splits per slot, and each wave of Python tasks costs a fixed
+start-up time whatever bytes it moves (400 files on 4 cores: 13
+splits, four waves per verb, 7.4 s per four-verb pass; in one wave
+3.5 s, ``VERBS_ONE_WAVE_AB.json``). ``coalesce`` merges the
+byte-balanced splits without a shuffle, so bytes per task stay
+balanced; at 100 TB each task holds about N/slots files, and the cost
+is that a retried task redoes that many files. The statuses are
+counted in the same tasks, so no ``groupBy`` shuffle and no second job
+follow (a regex verb with ``destination_file_name`` still adds the
+enumeration window's single-partition exchange ahead of the stage).
+
+Each file-operation task first drops the cached zip-archive finders
+(:func:`_drop_zip_finders`). PySpark's worker calls
+``importlib.invalidate_caches()`` before every task, and on CPython
+3.11 each ``zipimport.zipimporter`` in ``sys.path_importer_cache``
+re-reads its whole archive directory when invalidated: a reused worker
+holds one per package loaded from ``pyspark.zip``, 0.15-0.25 s of CPU
+per task. With both changes a four-verb pass on 4 cores fell from
+3.1 s to 1.8 s (``VERBS_ONE_JOB_AB.json``).
 
 Per-verb semantic matrix preserved from the reference (SURVEY.md §2.1):
 
@@ -61,6 +75,7 @@ orderBy(path)) so results are deterministic under distribution.
 
 from __future__ import annotations
 
+import sys
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -78,8 +93,13 @@ from azurestorage_blueprints_spark.functions.paths import (
     determine_destination_full_path,
 )
 
-_STATUS_SCHEMA = "source_path string, dest_path string, status string, detail string"
-#: max per-file failure rows brought to the driver
+#: one row per status per task: its count and up to ``_FAILURE_SAMPLE``
+#: of its files
+_STATUS_SCHEMA = (
+    "status string, n long, "
+    "sample array<struct<source_path:string,dest_path:string,detail:string>>"
+)
+#: max per-file rows per status brought to the driver
 _FAILURE_SAMPLE = 5
 
 
@@ -87,7 +107,9 @@ _FAILURE_SAMPLE = 5
 class VerbResult:
     """Distributed execution summary: counts per status, never a row per
     file (the round-1 per-file ``collect()`` is a driver OOM at
-    reference-scale namespaces)."""
+    reference-scale namespaces). The verb's one Spark job brings at most
+    slots × 3 rows to the driver: one per status (ok, exists, error)
+    per file-operation task."""
 
     total: int
     counts: dict[str, int] = field(default_factory=dict)
@@ -138,13 +160,50 @@ def _plan(
     return cat.withColumn("dest_path", dest)
 
 
+def _drop_zip_finders() -> None:
+    """Drop every ``zipimport.zipimporter`` from ``sys.path_importer_cache``.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before each
+    task (``pyspark/worker_util.py``, ``setup_spark_files``), and on
+    CPython 3.11 every cached zip finder re-reads its archive's whole
+    directory then (``zipimport.zipimporter.invalidate_caches``). A
+    reused worker holds one per package loaded from ``pyspark.zip``
+    (16 after a first task): 0.15-0.25 s of CPU between two no-op tasks
+    on ``local[1]``, 0.03-0.05 s without them. The dict is a documented
+    cache; the import system rebuilds an entry from ``sys.path_hooks``
+    when an import needs it, reusing ``zipimport``'s parsed-directory
+    cache. Stdlib only, so the worker carries it by value
+    (:func:`_ship_zip_step`).
+    """
+    import sys
+    import zipimport
+
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
+        cache.pop(path, None)
+
+
+def _ship_zip_step():
+    """:func:`_drop_zip_finders`, with this module registered with
+    cloudpickle to pickle by value (the ``llm_text._ship_mm`` route), so
+    a worker closure that calls it needs no repo on the executors'
+    ``sys.path``."""
+    from pyspark import cloudpickle
+
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    return _drop_zip_finders
+
+
 def _execute(plan: DataFrame, op: str, dest_root: str | None) -> DataFrame:
-    """The distributed execute stage: one status row per file operation.
+    """The distributed execute stage: per task, one row per status with
+    its count and a sample of at most ``_FAILURE_SAMPLE`` files.
 
     The worker is a self-contained nested closure (stdlib imports only)
-    so cloudpickle serializes it by value — executors do not need this
-    package importable on their own ``sys.path``.
+    so cloudpickle serializes it by value, :func:`_drop_zip_finders`
+    included — executors do not need this package importable on their
+    own ``sys.path``.
     """
+    drop_zip_finders = _ship_zip_step()
     plan_cols = plan
     if dest_root is not None:
         plan_cols = plan.withColumn(
@@ -157,6 +216,7 @@ def _execute(plan: DataFrame, op: str, dest_root: str | None) -> DataFrame:
         )
 
     def worker(batches):
+        drop_zip_finders()
         import errno as _errno
         import os as _os
         import shutil as _shutil
@@ -209,12 +269,20 @@ def _execute(plan: DataFrame, op: str, dest_root: str | None) -> DataFrame:
             except OSError as ex:
                 return (src, dst, "error", str(ex))
 
+        counts: dict = {}
+        samples: dict = {}
         for pdf in batches:
-            out = [
-                run_one(r["path"], r.get("dest_path"))
-                for r in pdf.to_dict("records")
-            ]
-            yield pd.DataFrame(out, columns=["source_path", "dest_path", "status", "detail"])
+            for r in pdf.to_dict("records"):
+                src, dst, status, detail = run_one(r["path"], r.get("dest_path"))
+                counts[status] = counts.get(status, 0) + 1
+                sample = samples.setdefault(status, [])
+                if len(sample) < _FAILURE_SAMPLE:
+                    sample.append((src, dst, detail))
+        if counts:
+            yield pd.DataFrame(
+                {"status": list(counts), "n": list(counts.values()),
+                 "sample": [samples[k] for k in counts]}
+            )
 
     # one wave of tasks: the binaryFile scan splits a tree into more
     # partitions than there are slots, and each extra wave of Python
@@ -228,38 +296,24 @@ def _execute(plan: DataFrame, op: str, dest_root: str | None) -> DataFrame:
 
 
 def _summarize(status: DataFrame) -> VerbResult:
-    """Aggregate the status stream distributedly.
+    """Merge the per-task status rows on the driver.
 
-    One pass over the statuses: per-partition combine of status counts
-    plus a bounded failure/exists sample riding the same aggregate
-    (collect_list over a slice), so the driver receives at most one row
-    per distinct status — not one per file. Under AQE the ``groupBy``
-    shuffle runs as its own job, so a verb launches two jobs: the file
-    operations with the map side, then the reduce.
+    Each file-operation task has already counted its statuses, so this
+    is the verb's one Spark job: one ``collect()`` of at most slots × 3
+    rows (one per status per task), each carrying at most
+    ``_FAILURE_SAMPLE`` files, merged here in Python. No ``groupBy``
+    shuffle runs, so the driver holds no row per file and no second job
+    starts.
     """
-    rows = (
-        status.groupBy("status")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.slice(
-                F.collect_list(F.struct("source_path", "dest_path", "detail")),
-                1,
-                _FAILURE_SAMPLE,
-            ).alias("sample"),
-        )
-        .collect()
-    )
-    counts = {r["status"]: r["n"] for r in rows}
-    failures = []
-    exists_example = None
-    for r in rows:
-        if r["status"] == "error":
-            failures = [(s["source_path"], s["dest_path"], s["detail"]) for s in r["sample"]]
-        elif r["status"] == "exists" and r["sample"]:
-            s = r["sample"][0]
-            exists_example = (s["source_path"], s["dest_path"])
+    counts: dict[str, int] = {}
+    samples: dict[str, list] = {}
+    for r in status.collect():
+        counts[r["status"]] = counts.get(r["status"], 0) + r["n"]
+        samples.setdefault(r["status"], []).extend(tuple(s) for s in r["sample"])
+    exists = samples.get("exists")
     return VerbResult(total=sum(counts.values()), counts=counts,
-                      failures=failures, exists_example=exists_example)
+                      failures=samples.get("error", [])[:_FAILURE_SAMPLE],
+                      exists_example=exists[0][:2] if exists else None)
 
 
 def _check_empty(result: VerbResult, on_empty: str) -> None:

@@ -262,15 +262,23 @@ def test_exact_match_no_enumeration(spark, tree):
     assert (dst / "noext").read_bytes() == b"raw"
 
 
+def _split_tree(root, n=320):
+    # n files of 4 MB open cost each: the binaryFile scan splits them
+    # into more partitions than the test session has slots
+    root.mkdir()
+    for i in range(n):
+        (root / f"f{i:04d}.bin").write_bytes(b"x" * (1 + i % 7))
+    return n
+
+
 def test_verbs_run_one_wave_of_tasks(spark, tmp_path):
-    # 320 files of 4 MB open cost each split into more partitions than
-    # there are slots; every stage a verb runs must still fit one wave
+    # each verb is one Spark job of one stage, and that stage fits one
+    # wave of task slots: the statuses are counted inside the
+    # file-operation tasks, so no aggregate job follows
     sc = spark.sparkContext
     slots = sc.defaultParallelism
     src, store, dl, moved = (tmp_path / d for d in ("src", "store", "dl", "moved"))
-    src.mkdir()
-    for i in range(320):
-        (src / f"f{i:04d}.bin").write_bytes(b"x" * (1 + i % 7))
+    _split_tree(src)
     runs = [
         ("upload", (str(src), r"\.bin$", "regex_match", str(store)), src, 320),
         ("download", (str(store), r"\.bin$", "regex_match", str(dl)), store, 320),
@@ -285,12 +293,96 @@ def test_verbs_run_one_wave_of_tasks(spark, tmp_path):
             result = getattr(verbs, verb)(spark, *args)
             assert result.total == result.ok == n, verb
             tracker = sc.statusTracker()
-            tasks = [
-                tracker.getStageInfo(stage).numTasks
-                for job in tracker.getJobIdsForGroup(group)
-                for stage in tracker.getJobInfo(job).stageIds
-            ]
-            assert tasks and max(tasks) <= slots, (verb, tasks)
+            jobs = tracker.getJobIdsForGroup(group)
+            assert len(jobs) == 1, (verb, jobs)
+            stages = tracker.getJobInfo(jobs[0]).stageIds
+            assert len(stages) == 1, (verb, stages)
+            tasks = tracker.getStageInfo(stages[0]).numTasks
+            assert 0 < tasks <= slots, (verb, tasks)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(os.listdir(dl)) == 320 and not any(store.rglob("*.bin"))
+
+
+def test_summary_merges_statuses_across_partitions(spark, tmp_path):
+    # more scan partitions than slots, so every file-operation task
+    # brings its own counts and samples; the driver merges them
+    src, store, dl = (tmp_path / d for d in ("src", "store", "dl"))
+    n = _split_tree(src)
+    assert scan(spark, str(src)).rdd.getNumPartitions() > spark.sparkContext.defaultParallelism
+    args = (str(src), r"\.bin$", "regex_match", str(store))
+    assert verbs.upload(spark, *args).ok == n
+    with pytest.raises(AlreadyExistsError) as info:
+        verbs.upload(spark, *args)
+    # one example destination, named in full
+    named = [f for f in os.listdir(store) if str(store / f) in str(info.value)]
+    assert len(named) == 1, str(info.value)
+
+    # a download where every target is a directory fails every file
+    dl.mkdir()
+    for f in os.listdir(store):
+        (dl / f).mkdir()
+    plan = verbs._plan(
+        spark, str(store), r"\.bin$", "regex_match", None, None,
+        enumerate_always=True, match_on="rel_path",
+    )
+    result = verbs._summarize(verbs._execute(plan, "download", str(dl)))
+    assert result.total == result.counts["error"] == n
+    assert len(result.failures) == verbs._FAILURE_SAMPLE
+    assert all(os.path.isdir(dst) and detail for _, dst, detail in result.failures)
+    with pytest.raises(MoveError):
+        verbs.download(spark, str(store), r"\.bin$", "regex_match", str(dl))
+
+
+def test_zip_finder_step_runs_in_a_python_task(spark):
+    # the step the file-operation worker runs first: afterwards no zip
+    # finder is cached, and a pyspark submodule the worker has not
+    # loaded yet still imports (its finder is rebuilt on demand)
+    step = verbs._ship_zip_step()
+    candidates = ("pyspark.find_spark_home", "pyspark.install", "pyspark.sql.avro.functions")
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        def zip_finders():
+            return sum(
+                isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+            )
+
+        for _ in batches:
+            pass
+        before = zip_finders()
+        step()
+        left = zip_finders()
+        name = next(m for m in candidates if m not in sys.modules)
+        module = importlib.import_module(name)
+        yield pd.DataFrame({
+            "before": [before], "left": [left], "name": [name],
+            "file": [module.__file__], "pyspark": [sys.modules["pyspark"].__file__],
+        })
+
+    (row,) = spark.range(1, numPartitions=1).mapInPandas(
+        probe, "before long, left long, name string, file string, pyspark string"
+    ).collect()
+    assert row["left"] == 0, row
+    # the submodule came from the same place as the worker's pyspark
+    assert row["file"].startswith(row["pyspark"].rsplit("/pyspark/", 1)[0]), row
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="the binaryFile scan does not list zero-length files, so every verb skips them",
+)
+def test_verbs_see_zero_length_files(spark, tmp_path):
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    src.mkdir()
+    (src / "a.bin").write_bytes(b"a")
+    (src / "b.bin").write_bytes(b"")
+    (src / "c.bin").write_bytes(b"c")
+    result = verbs.upload(spark, str(src), r"\.bin$", "regex_match", str(dst))
+    assert result.total == result.ok == 3
+    assert (dst / "b.bin").read_bytes() == b""
